@@ -37,6 +37,11 @@ def _read_archive(path: str) -> dict:
 
 
 def _archive_metadata(path: str) -> dict:
+    from ..sources import archives as ar
+
+    if path.endswith(".proto") or path.endswith(".pb"):
+        # the stream's finish entry carries the metadata
+        return ar.read_proto_archive(path)[1]
     if path.endswith(".mbtiles"):
         con = sqlite3.connect(path)
         try:
@@ -48,7 +53,7 @@ def _archive_metadata(path: str) -> dict:
         with open(path, "rb") as f:
             head = f.read(127)
             # spec v3 header: json metadata offset/length at bytes 24/32
-            # (archives.py:276 writes the same layout)
+            # (archives.write_pmtiles writes the same layout)
             json_off = int.from_bytes(head[24:32], "little")
             json_len = int.from_bytes(head[32:40], "little")
             f.seek(json_off)

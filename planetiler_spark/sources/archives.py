@@ -13,11 +13,15 @@ Reference parity (SURVEY §2.2):
   - CSV / JSON stream archives (stream/WriteableCsvArchive.java:68,
     WriteableJsonStreamArchive.java:32): df.write, fully parallel.
 
-The single-file writers drain `toLocalIterator()` on the driver — mirroring
-the reference's dedicated ordered writer thread (TileArchiveWriter.java:128);
-the upstream DataFrame arrives already tile-ordered, so the driver never holds
-more than a partition. The parallel formats (files/csv/json) write from
-executors.
+The single-file writers (MBTiles, PMTiles, proto stream) drain on the driver
+— mirroring the reference's dedicated ordered writer thread
+(TileArchiveWriter.java:128) — through one path, `_drain`: executors frame
+each partition's record batches, in order, as Arrow IPC chunks of about
+`_CHUNK_BYTES`, and the driver reads them with `toLocalIterator` (the next
+partition computed while this one is written). The writers work on whole
+column arrays per batch; only the content-dedup maps touch one tile at a
+time. The driver holds at most a partition's worth of chunks. The parallel
+formats (files/csv/json) write from executors.
 """
 
 from __future__ import annotations
@@ -33,14 +37,74 @@ import numpy as np
 from ..kernels import tile_math as tm
 
 
+# Arrow IPC bytes per drained chunk: large enough that the per-chunk costs
+# (one Row, one IPC open) vanish, small enough that a chunk is a small share
+# of driver memory.
+_CHUNK_BYTES = 8 << 20
+
+
+def _ipc_chunks(cap: int):
+    """mapInArrow function: re-frame a partition's record batches, in order,
+    as Arrow IPC streams of at most about `cap` bytes, one binary cell each
+    (a batch larger than `cap` is sliced by rows)."""
+    def frame(batches):
+        import pyarrow as pa
+
+        pending, size = [], 0
+
+        def flush():
+            sink = pa.BufferOutputStream()
+            with pa.ipc.new_stream(sink, pending[0].schema) as w:
+                for b in pending:
+                    w.write_batch(b)
+            buf = sink.getvalue()
+            ends = pa.py_buffer(np.array([0, buf.size], dtype=np.int32))
+            cell = pa.Array.from_buffers(pa.binary(), 1, [None, ends, buf])
+            return pa.RecordBatch.from_arrays([cell], ["chunk"])
+
+        for batch in batches:
+            step = max(1, cap * batch.num_rows // max(batch.nbytes, 1))
+            for i in range(0, batch.num_rows, step):
+                piece = batch.slice(i, step)
+                if pending and size + piece.nbytes > cap:
+                    yield flush()
+                    pending, size = [], 0
+                pending.append(piece)
+                size += piece.nbytes
+        if pending:
+            yield flush()
+    return frame
+
+
+def _drain(df):
+    """df's record batches on the driver, in partition order and row order
+    within a partition. The cap is read here, on the driver, so it travels
+    with the closure."""
+    import pyarrow as pa
+
+    chunks = df.mapInArrow(_ipc_chunks(_CHUNK_BYTES), "chunk binary")
+    for row in chunks.toLocalIterator(prefetchPartitions=True):
+        yield from pa.ipc.open_stream(pa.py_buffer(row[0]))
+
+
+def _binary_values(arr):
+    """(end offsets, contiguous value bytes) of a pyarrow binary array."""
+    ends = np.frombuffer(arr.buffers()[1], dtype=np.int32,
+                         count=len(arr) + 1, offset=4 * arr.offset)
+    lo, hi = int(ends[0]), int(ends[-1])
+    data = arr.buffers()[2]
+    return ends, (data.slice(lo, hi - lo) if hi > lo else b"")
+
+
 # ---------------------------------------------------------------------------
 # MBTiles
 # ---------------------------------------------------------------------------
 
 def write_mbtiles(tiles_df, path: str, metadata: dict | None = None,
                   normalized: bool = True) -> dict:
-    """tiles_df: (tile_id, zoom, x, y, tile_bytes, content_hash) -> sqlite.
-    normalized=True dedups identical tile contents (ocean tiles stored once)."""
+    """tiles_df: (zoom, x, y, tile_bytes[, content_hash]) -> sqlite, one
+    executemany per drained batch. normalized=True dedups identical tile
+    contents by content_hash (ocean tiles stored once)."""
     if os.path.exists(path):
         os.remove(path)
     con = sqlite3.connect(path)
@@ -48,6 +112,7 @@ def write_mbtiles(tiles_df, path: str, metadata: dict | None = None,
     cur.execute("PRAGMA journal_mode=OFF")
     cur.execute("PRAGMA synchronous=OFF")
     cur.execute("CREATE TABLE metadata (name text, value text)")
+    cols = ["zoom", "x", "y", "tile_bytes"] + (["content_hash"] if normalized else [])
     n = 0
     uniq = 0
     if normalized:
@@ -62,28 +127,34 @@ def write_mbtiles(tiles_df, path: str, metadata: dict | None = None,
         cur.execute("""CREATE VIEW tiles AS
                        SELECT zoom_level, tile_column, tile_row, tile_data
                        FROM tiles_shallow JOIN tiles_data USING (tile_data_id)""")
-        hash_to_id: dict[str, int] = {}
-        for r in tiles_df.toLocalIterator():
-            tid = hash_to_id.get(r.content_hash)
-            if tid is None:
-                tid = len(hash_to_id) + 1
-                hash_to_id[r.content_hash] = tid
-                cur.execute("INSERT INTO tiles_data VALUES (?, ?)",
-                            (tid, bytes(r.tile_bytes)))
-                uniq += 1
-            row = (1 << r.zoom) - 1 - r.y  # TMS flip (Mbtiles.java tileRow)
-            cur.execute("INSERT INTO tiles_shallow VALUES (?, ?, ?, ?)",
-                        (r.zoom, r.x, row, tid))
-            n += 1
     else:
         cur.execute("""CREATE TABLE tiles
                        (zoom_level integer, tile_column integer, tile_row integer,
                         tile_data blob)""")
-        for r in tiles_df.toLocalIterator():
-            row = (1 << r.zoom) - 1 - r.y
-            cur.execute("INSERT INTO tiles VALUES (?, ?, ?, ?)",
-                        (r.zoom, r.x, row, bytes(r.tile_bytes)))
-            n += 1
+    hash_to_id: dict[str, int] = {}
+    for b in _drain(tiles_df.select(*cols)):
+        z = b.column(0).to_numpy().astype(np.int64)
+        rows = (1 << z) - 1 - b.column(2).to_numpy()  # TMS flip (Mbtiles.java tileRow)
+        keys = (z.tolist(), b.column(1).to_pylist(), rows.tolist())
+        if normalized:
+            ids, fresh = [], []
+            for i, h in enumerate(b.column(4).to_pylist()):
+                tid = hash_to_id.get(h)
+                if tid is None:
+                    tid = hash_to_id[h] = len(hash_to_id) + 1
+                    fresh.append(i)
+                ids.append(tid)
+            blobs = b.column(3).take(np.asarray(fresh, dtype=np.int64)).to_pylist()
+            cur.executemany("INSERT INTO tiles_data VALUES (?, ?)",
+                            zip([ids[i] for i in fresh], blobs))
+            cur.executemany("INSERT INTO tiles_shallow VALUES (?, ?, ?, ?)",
+                            zip(*keys, ids))
+            uniq += len(fresh)
+        else:
+            cur.executemany("INSERT INTO tiles VALUES (?, ?, ?, ?)",
+                            zip(*keys, b.column(3).to_pylist()))
+        n += b.num_rows
+    if not normalized:
         cur.execute("CREATE UNIQUE INDEX tile_index ON tiles "
                     "(zoom_level, tile_column, tile_row)")
         uniq = n
@@ -190,78 +261,114 @@ def write_pmtiles(tiles_df, path: str, metadata: dict | None = None,
     and root+leaf directories. tiles_df must carry (zoom, x, y, tile_bytes,
     content_hash).
 
-    STREAMING: tile bytes never accumulate on the driver. The cluster sorts
-    globally by hilbert id (repartitionByRange + sortWithinPartitions — the
-    shuffle IS the sort), the driver drains toLocalIterator() one partition at
-    a time (the same ordered-writer-thread shape as write_mbtiles /
-    TileArchiveWriter.java:128) and appends blobs to a temp data file; only
-    the directory entries (4 ints per run) and a bounded content-dedup map
-    stay in memory. Directories follow the public PMTiles v3 spec
-    (pmtiles/Pmtiles.java:82-119): entries beyond max_dir_entries spill into
-    leaf directories with root pointer entries."""
-    import os as _os
+    STREAMING: tile bytes never accumulate on the driver. One mapInArrow
+    computes each tile's Hilbert id and its analytic range token
+    (operators/partitioning.py), so a plain hash exchange on the token plus
+    sortWithinPartitions is a total Hilbert order — no sampling job and no
+    cache of the tileset. The driver drains the sorted partitions as Arrow
+    chunks (`_drain`, the ordered-writer-thread shape of
+    TileArchiveWriter.java:128): run-length entries come from whole-array
+    comparisons, each batch's new blobs go to a temp data file as one slice,
+    and only the directory entries (4 ints per run) and a bounded
+    content-dedup map stay in memory. Directories follow the public PMTiles
+    v3 spec (pmtiles/Pmtiles.java:82-119): entries beyond max_dir_entries
+    spill into leaf directories with root pointer entries."""
     from pyspark.sql import functions as F
-    from ..functions.geo import hilbert_of_tile
 
-    if "tile_id" in tiles_df.columns:
-        df = (tiles_df.select("tile_id", "zoom", "tile_bytes", "content_hash")
-              .withColumn("hilbert_id", hilbert_of_tile("tile_id")))
-    else:
-        @F.pandas_udf("long")
-        def _h(zoom, x, y):
-            import pandas as pd
-            return pd.Series(tm.hilbert_encode(
-                x.to_numpy(np.int64), y.to_numpy(np.int64), zoom.to_numpy(np.int64)))
-        df = (tiles_df.select("zoom", "x", "y", "tile_bytes", "content_hash")
-              .withColumn("hilbert_id", _h("zoom", "x", "y")))
-    # materialize BEFORE the range exchange: repartitionByRange samples its
-    # child to pick boundaries, which re-executes the entire upstream plan
-    # (a full tileset pipeline) in a separate job. A single-file sink is an
-    # inherent materialization point anyway (the ordered-writer drains it
-    # once), so one persist turns the sampling pass into a cache read.
-    df = df.persist()
-    ordered = (df.repartitionByRange("hilbert_id")
-               .sortWithinPartitions("hilbert_id"))
+    from ..operators import partitioning as pt
+
+    spark = tiles_df.sparkSession
+    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # the writer cannot know its input's zooms, so buckets span every legal
+    # zoom; their balance sets only the sort's parallelism, never the order
+    boundaries, pid = pt.tile_range_partitioning(0, tm.MAX_MAXZOOM, p)
+    bucket_tok = pt.partition_tokens(spark, p)[pid]
+    tok = pt.token_col(p)
+
+    def keyed(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            hid = tm.hilbert_encode(b.column(1).to_numpy(),
+                                    b.column(2).to_numpy(),
+                                    b.column(0).to_numpy())
+            bk = np.searchsorted(boundaries, hid, side="right") - 1
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(hid, pa.int64()), b.column(0), b.column(3),
+                 b.column(4), pa.array(bucket_tok[bk], pa.int64())],
+                ["hilbert_id", "zoom", "tile_bytes", "content_hash", tok])
+
+    ordered = (tiles_df
+               .select(F.col("zoom").cast("int"), F.col("x").cast("long"),
+                       F.col("y").cast("long"), "tile_bytes", "content_hash")
+               .mapInArrow(keyed, "hilbert_id long, zoom int, tile_bytes binary, "
+                                  f"content_hash string, {tok} long")
+               .repartition(p, tok)
+               .sortWithinPartitions("hilbert_id")
+               .drop(tok))
 
     tmp_data = path + ".data.tmp"
-    # entries live in a flat array('q') — 32 bytes per [tid, off, len, run]
-    # run instead of ~250 for a Python list-of-lists, so a planet-scale
-    # O(10^7-10^8)-entry directory stays a few GB -> a few hundred MB of
-    # driver memory (the reference holds the same compact longs,
+    # entries live in (k, 4) int64 blocks — 32 bytes per [tid, off, len, run]
+    # run, so a planet-scale O(10^7-10^8)-entry directory stays a few hundred
+    # MB of driver memory (the reference holds the same compact longs,
     # WriteablePmtiles; bounded-memory test in test_archives)
-    import array as _array
-    entries = _array.array("q")                # flat [tid, off, len, run] * N
+    blocks: list[np.ndarray] = []
     offsets: dict[str, tuple[int, int]] = {}   # content dedup (bounded)
+    last = None                                # (tid, off, len) of the last tile
     n_tiles = 0
     data_len = 0
     minz = maxz = None
-    try:
-      with open(tmp_data, "wb") as dataf:
-        for r in ordered.toLocalIterator():
-            tid = int(r.hilbert_id)
-            blob = bytes(r.tile_bytes)
-            minz = r.zoom if minz is None else min(minz, r.zoom)
-            maxz = r.zoom if maxz is None else max(maxz, r.zoom)
-            got = offsets.get(r.content_hash)
-            if got is None:
-                got = (data_len, len(blob))
-                if len(offsets) < dedup_cap:  # bounded driver memory; dedup
-                    offsets[r.content_hash] = got  # beyond cap just stores dup
-                dataf.write(blob)
-                data_len += len(blob)
-            off, ln = got
-            n_tiles += 1
-            if entries and entries[-4] + entries[-1] == tid and \
-                    entries[-3] == off and entries[-2] == ln:
-                entries[-1] += 1  # run-length of identical consecutive tiles
-            else:
-                entries.extend((tid, off, ln, 1))
-    finally:
-        df.unpersist()  # even on a failed drain: don't pin the tileset cache
+    with open(tmp_data, "wb") as dataf:
+        for b in _drain(ordered):
+            n = b.num_rows
+            if not n:
+                continue
+            tid = b.column(0).to_numpy()
+            zoom = b.column(1).to_numpy()
+            blobs = b.column(2)
+            ends, _ = _binary_values(blobs)
+            offs, lens, fresh = [], [], []
+            for i, (h, size) in enumerate(zip(b.column(3).to_pylist(),
+                                              np.diff(ends).tolist())):
+                got = offsets.get(h)
+                if got is None:
+                    got = (data_len, size)
+                    if len(offsets) < dedup_cap:  # bounded driver memory; dedup
+                        offsets[h] = got          # beyond cap just stores dup
+                    fresh.append(i)
+                    data_len += size
+                offs.append(got[0])
+                lens.append(got[1])
+            if fresh:
+                new = blobs if len(fresh) == n else \
+                    blobs.take(np.asarray(fresh, dtype=np.int64))
+                dataf.write(_binary_values(new)[1])
+            off = np.asarray(offs, dtype=np.int64)
+            ln = np.asarray(lens, dtype=np.int64)
+            # a tile continues the current run when it is the next Hilbert id
+            # with the same blob; the first tile compares with the last one
+            # of the previous batch, so runs merge across chunks and partitions
+            cont = np.empty(n, dtype=bool)
+            cont[1:] = (tid[1:] == tid[:-1] + 1) & (off[1:] == off[:-1]) \
+                & (ln[1:] == ln[:-1])
+            cont[0] = last is not None and \
+                (int(tid[0]), int(off[0]), int(ln[0])) == (last[0] + 1, last[1], last[2])
+            starts = np.flatnonzero(~cont)
+            lead = int(starts[0]) if len(starts) else n
+            if lead:
+                blocks[-1][-1, 3] += lead
+            if len(starts):
+                blocks.append(np.stack([tid[starts], off[starts], ln[starts],
+                                        np.diff(starts, append=n)], axis=1))
+            last = (int(tid[-1]), int(off[-1]), int(ln[-1]))
+            n_tiles += n
+            bz_lo, bz_hi = int(zoom.min()), int(zoom.max())
+            minz = bz_lo if minz is None else min(minz, bz_lo)
+            maxz = bz_hi if maxz is None else max(maxz, bz_hi)
 
     n_contents = len(offsets)
-    entries_np = np.frombuffer(entries, dtype=np.int64).reshape(-1, 4) \
-        if len(entries) else np.empty((0, 4), dtype=np.int64)
+    entries_np = np.concatenate(blocks) if blocks \
+        else np.empty((0, 4), dtype=np.int64)
     root, leaves, n_leaves = _pm_build_dirs(entries_np, max_dir_entries)
     meta_bytes = gzip.compress(json.dumps(metadata or {}).encode(), mtime=0)
 
@@ -295,65 +402,76 @@ def write_pmtiles(tiles_df, path: str, metadata: dict | None = None,
                 if not chunk:
                     break
                 f.write(chunk)
-    _os.remove(tmp_data)
+    os.remove(tmp_data)
     return {"tiles": n_tiles, "entries": len(entries_np),
             "unique_blobs": n_contents, "n_leaves": n_leaves,
             "bytes": data_off + data_len}
 
 
+def _pm_varints(raw: bytes) -> np.ndarray:
+    """Every LEB128 varint of `raw`, decoded with whole-array passes (the
+    inverse of _pm_varints_flat)."""
+    b = np.frombuffer(raw, dtype=np.uint8)
+    ends = np.flatnonzero(b < 0x80)
+    if len(b) and (not len(ends) or ends[-1] != len(b) - 1):
+        raise ValueError("truncated varint stream")
+    if not len(ends):
+        return np.empty(0, dtype=np.int64)
+    starts = np.concatenate(([0], ends[:-1] + 1))
+    shift = (np.arange(len(b)) - np.repeat(starts, ends - starts + 1)) * 7
+    if shift.max() > 63:
+        raise ValueError("varint wider than 64 bits")
+    vals = (b & 0x7F).astype(np.uint64) << shift.astype(np.uint64)
+    return np.add.reduceat(vals, starts).astype(np.int64)
+
+
 def _pm_parse_dir(comp: bytes):
-    """Decompress + parse one serialized directory -> (tids, runs, lens, offs).
-    run == 0 marks a leaf-pointer entry (offset into the leaf section)."""
-    raw = gzip.decompress(comp)
-    pos = 0
-
-    def rv():
-        nonlocal pos
-        out = shift = 0
-        while True:
-            b = raw[pos]
-            pos += 1
-            out |= (b & 0x7F) << shift
-            if not b & 0x80:
-                return out
-            shift += 7
-
-    n = rv()
-    tids = []
-    last = 0
-    for _ in range(n):
-        last += rv()
-        tids.append(last)
-    runs = [rv() for _ in range(n)]
-    lens = [rv() for _ in range(n)]
-    offs = []
-    for i in range(n):
-        v = rv()
-        offs.append(offs[-1] + lens[i - 1] if v == 0 else v - 1)
+    """Decompress + parse one serialized directory -> (tids, runs, lens, offs)
+    int64 arrays. run == 0 marks a leaf-pointer entry (offset into the leaf
+    section)."""
+    v = _pm_varints(gzip.decompress(comp))
+    n = int(v[0])
+    if len(v) != 1 + 4 * n:
+        raise ValueError("directory length mismatch")
+    tids = np.cumsum(v[1:1 + n])
+    runs, lens, raw = v[1 + n:1 + 2 * n], v[1 + 2 * n:1 + 3 * n], v[1 + 3 * n:]
+    if n and raw[0] == 0:
+        raise ValueError("first directory entry has no offset")
+    # raw offset 0 = previous offset + previous length: chain each entry
+    # from the last entry with an explicit offset
+    idx = np.arange(n)
+    anchor = np.maximum.accumulate(np.where(raw != 0, idx, 0))
+    clen = np.concatenate(([0], np.cumsum(lens)))
+    offs = raw[anchor] - 1 + clen[idx] - clen[anchor]
     return tids, runs, lens, offs
 
 
 def read_pmtiles(path: str) -> dict:
-    """{(z, x, y): bytes} — verification reader; follows leaf directories."""
+    """{(z, x, y): bytes} — verification reader; follows leaf directories.
+    Each directory is decoded whole and all tile ids go through one batched
+    hilbert_decode."""
     with open(path, "rb") as f:
         buf = f.read()
     assert buf[:7] == _PM_MAGIC and buf[7] == 3
     (root_off, root_len, _mo, _ml, leaf_off, _ll, data_off, _dl) = \
         struct.unpack_from("<QQQQQQQQ", buf, 8)
-    out = {}
-
-    def emit(tids, runs, lens, offs):
-        for tid, run, ln, off in zip(tids, runs, lens, offs):
-            if run == 0:  # leaf pointer: parse the referenced leaf directory
-                emit(*_pm_parse_dir(buf[leaf_off + off:leaf_off + off + ln]))
-                continue
-            for k in range(run):
-                x, y, z = tm.hilbert_decode(np.int64(tid + k))
-                out[(int(z), int(x), int(y))] = \
-                    buf[data_off + off:data_off + off + ln]
-
-    emit(*_pm_parse_dir(buf[root_off:root_off + root_len]))
-    return out
+    dirs = [buf[root_off:root_off + root_len]]
+    tile_entries = []
+    for comp in dirs:  # grows while leaf pointers are found
+        tids, runs, lens, offs = _pm_parse_dir(comp)
+        leaf = runs == 0
+        dirs += [buf[leaf_off + o:leaf_off + o + ln]
+                 for o, ln in zip(offs[leaf].tolist(), lens[leaf].tolist())]
+        tile_entries.append((tids[~leaf], runs[~leaf], lens[~leaf], offs[~leaf]))
+    tids, runs, lens, offs = (np.concatenate(c) for c in zip(*tile_entries))
+    # one id per addressed tile: a run covers consecutive ids sharing a blob
+    entry = np.repeat(np.arange(len(tids)), runs)
+    first = np.repeat(np.cumsum(runs) - runs, runs)
+    x, y, z = tm.hilbert_decode(tids[entry] + np.arange(len(entry)) - first)
+    blobs = [buf[data_off + o:data_off + o + ln]
+             for o, ln in zip(offs.tolist(), lens.tolist())]
+    return {(zz, xx, yy): blobs[e] for zz, xx, yy, e in
+            zip(z.tolist(), x.tolist(), y.tolist(), entry.tolist())}
 
 
 # ---------------------------------------------------------------------------
@@ -402,25 +520,28 @@ def write_proto_archive(tiles_df, path: str, metadata: dict | None = None) -> in
     Entry{tile: TileEntry{x,y,z,encoded_data}} per tile, then
     Entry{finish: FinishEntry{metadata}}. Canonical proto3 encoding
     (zero-valued scalar fields omitted), hand-rolled with the same varint
-    helpers as the MVT codec. The driver drains toLocalIterator() in tile
-    order — the single-stream ordered-writer shape of write_mbtiles."""
+    helpers as the MVT codec. The driver drains the frame in its partition
+    order (`_drain`) and writes each batch's entries with one write."""
     from ..kernels.mvt import _varint, _len_delim, _tag
 
     n = 0
     with open(path, "wb") as f:
         f.write(_varint(0))  # initialization: empty Entry (initialize():57)
-        for r in tiles_df.select("zoom", "x", "y", "tile_bytes").toLocalIterator():
-            te = b""
-            if r.x:
-                te += _tag(1, 0) + _varint(int(r.x))
-            if r.y:
-                te += _tag(2, 0) + _varint(int(r.y))
-            if r.zoom:
-                te += _tag(3, 0) + _varint(int(r.zoom))
-            te += _len_delim(4, bytes(r.tile_bytes))
-            ent = _len_delim(1, te)
-            f.write(_varint(len(ent)) + ent)
-            n += 1
+        for b in _drain(tiles_df.select("zoom", "x", "y", "tile_bytes")):
+            out = []
+            for z, x, y, blob in zip(*(c.to_pylist() for c in b.columns)):
+                te = b""
+                if x:
+                    te += _tag(1, 0) + _varint(x)
+                if y:
+                    te += _tag(2, 0) + _varint(y)
+                if z:
+                    te += _tag(3, 0) + _varint(z)
+                te += _len_delim(4, blob)
+                ent = _len_delim(1, te)
+                out.append(_varint(len(ent)) + ent)
+            f.write(b"".join(out))
+            n += b.num_rows
         md = b""
         for field, key in ((1, "name"), (2, "description"), (3, "attribution"),
                            (4, "version"), (5, "type"), (6, "format")):

@@ -59,20 +59,25 @@ def test_pmtiles_roundtrip(tiles, tile_map, tmp_path_factory):
     assert os.path.getsize(path) == stats["bytes"]
 
 
+def _leaf_frame(spark, n=20000):
+    """n distinct z8 tiles -> n directory entries (> 16384 root cap at 20k)."""
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame({
+        "zoom": [8] * n, "x": [i % 256 for i in range(n)],
+        "y": [i // 256 for i in range(n)],
+        "tile_bytes": [f"tile-{i}".encode() for i in range(n)],
+        "content_hash": [f"h{i}" for i in range(n)],
+    }))
+
+
 def test_pmtiles_leaf_directories(spark, tmp_path_factory):
     """>16384 directory entries must spill into leaf directories (spec §3 /
     WriteablePmtiles.java:40) and still round-trip tile-for-tile."""
-    import pandas as pd
-
-    n = 20000  # distinct z8 tiles -> 20000 entries > 16384 root cap
+    n = 20000
     xs = [i % 256 for i in range(n)]
     ys = [i // 256 for i in range(n)]
-    pdf = pd.DataFrame({
-        "zoom": [8] * n, "x": xs, "y": ys,
-        "tile_bytes": [f"tile-{i}".encode() for i in range(n)],
-        "content_hash": [f"h{i}" for i in range(n)],
-    })
-    df = spark.createDataFrame(pdf)
+    df = _leaf_frame(spark, n)
     path = str(tmp_path_factory.mktemp("pml") / "big.pmtiles")
     stats = ar.write_pmtiles(df, path)
     assert stats["tiles"] == n
@@ -191,3 +196,166 @@ def test_pmtiles_dir_build_bounded_memory():
     got = np.concatenate(chunks)
     assert got.shape == entries.shape
     assert np.array_equal(got, entries)
+
+
+# ---------------------------------------------------------------------------
+# PMTiles byte identity. The digests were recorded from the previous writer
+# (a sampled repartitionByRange over a persisted frame, drained one Row per
+# tile); the Arrow-chunk drain must reproduce every archive byte for byte, at
+# any shuffle partition count, input order and chunk size.
+# ---------------------------------------------------------------------------
+
+RECORDED_SHA256 = {
+    # 200 images, tileset z0-11: 1417 distinct tiles
+    "images": "f9b9f91875892f475159003c17fa6d275551b1703e2d901a607d0fa033b59657",
+    # 32 zones, zones_tileset z0-8: 4217 tiles, 3202 entries, 2837 blobs
+    "zones": "3461bf596d16e49d310cf49ee1a1b4f2303d992390fafa5b7504d6e96e65c474",
+    # _leaf_frame: 20000 entries in two leaf directories
+    "leaf": "b2948e92f918e677ccb94c2853da85838cb17830f79258eac874dc7253f3d15c",
+    # zones with dedup_cap=64: duplicates past the cap are stored again
+    "zones_cap64": "ea6a7d390bc9cf931774295da6faa9ed7297f1a077c649c4e7f3e1a4dc2eb036",
+    # _edge_frame: a 12-tile identical run across a partition edge
+    "edge": "02bddf8d010321b45b5e1bb52ade32cd514308aebeef40a34983b89aaf7d9cd4",
+    "empty": "60427d1f5cf22c8e816417a82b16a1acf868d0cd1bea093193d4271591a2b408",
+}
+
+
+def _sha256(path):
+    import hashlib
+    with open(path, "rb") as f:
+        return hashlib.sha256(f.read()).hexdigest()
+
+
+@pytest.fixture(scope="module")
+def images_z11(spark):
+    imgs = src.images_df(spark, 200, partitions=4, with_bytes=False)
+    t = tp.tileset(spark, imgs, min_zoom=0, max_zoom=11).cache()
+    t.count()
+    yield t
+    t.unpersist()
+
+
+@pytest.fixture(scope="module")
+def zones_z8(spark):
+    t = tp.zones_tileset(spark, 0, 8, n_zones=32).cache()
+    t.count()
+    yield t
+    t.unpersist()
+
+
+@pytest.fixture
+def shuffle_partitions(spark):
+    """Set spark.sql.shuffle.partitions for one test, restored after."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    yield lambda p: spark.conf.set(key, str(p))
+    spark.conf.set(key, old)
+
+
+def _edge_frame(spark):
+    """16 consecutive Hilbert ids around the first partition edge of the
+    writer's range exchange at 4 shuffle partitions (the end of z4 and the
+    start of z5); the middle 12 share one blob."""
+    import numpy as np
+    import pandas as pd
+
+    from planetiler_spark.kernels import tile_math as tm
+    from planetiler_spark.operators import partitioning as pt
+
+    bounds, pid = pt.tile_range_partitioning(0, tm.MAX_MAXZOOM, 4)
+    edge = int(bounds[np.flatnonzero(np.diff(pid))[0] + 1])
+    ids = np.arange(edge - 8, edge + 8)
+    x, y, z = tm.hilbert_decode(ids)
+    same = (ids >= edge - 6) & (ids < edge + 6)
+    names = ["ocean" if m else f"t{i}" for i, m in zip(ids, same)]
+    return spark.createDataFrame(pd.DataFrame({
+        "zoom": z, "x": x, "y": y,
+        "tile_bytes": [nm.encode() for nm in names], "content_hash": names}))
+
+
+@pytest.mark.parametrize("case", ["images", "zones", "leaf"])
+def test_pmtiles_bytes_match_recorded(spark, images_z11, zones_z8, case,
+                                      tmp_path):
+    df = {"images": images_z11, "zones": zones_z8,
+          "leaf": _leaf_frame(spark)}[case]
+    path = str(tmp_path / f"{case}.pmtiles")
+    ar.write_pmtiles(df, path)
+    assert _sha256(path) == RECORDED_SHA256[case]
+
+
+@pytest.mark.parametrize("case", ["images", "zones"])
+def test_pmtiles_bytes_independent_of_partitions_and_order(
+        spark, images_z11, zones_z8, shuffle_partitions, case, tmp_path):
+    """Same archive at shuffle partitions p and 2p+1, with the input rows in
+    tile order or permuted across a different partitioning."""
+    from pyspark.sql import functions as F
+
+    df = {"images": images_z11, "zones": zones_z8}[case]
+    permuted = df.repartition(7).orderBy(F.rand(11))
+    for p in (4, 9):
+        shuffle_partitions(p)
+        for k, frame in enumerate((df, permuted)):
+            path = str(tmp_path / f"{case}_{p}_{k}.pmtiles")
+            ar.write_pmtiles(frame, path)
+            assert _sha256(path) == RECORDED_SHA256[case], (p, k)
+
+
+def test_pmtiles_run_spans_partition_edge(spark, shuffle_partitions,
+                                          monkeypatch, tmp_path):
+    """An identical-tile run that crosses a partition edge (and, with a tiny
+    chunk cap, every chunk cut) still becomes one run-length entry."""
+    shuffle_partitions(4)
+    df = _edge_frame(spark)
+    for cap in (ar._CHUNK_BYTES, 64):
+        monkeypatch.setattr(ar, "_CHUNK_BYTES", cap)
+        path = str(tmp_path / f"edge_{cap}.pmtiles")
+        stats = ar.write_pmtiles(df, path)
+        assert _sha256(path) == RECORDED_SHA256["edge"], cap
+        assert stats["tiles"] == 16 and stats["entries"] == 5
+        assert stats["unique_blobs"] == 5
+    got = ar.read_pmtiles(path)
+    assert len(got) == 16
+    assert sum(v == b"ocean" for v in got.values()) == 12
+
+
+def test_pmtiles_dedup_cap_reached(zones_z8, tmp_path):
+    path = str(tmp_path / "cap.pmtiles")
+    stats = ar.write_pmtiles(zones_z8, path, dedup_cap=64)
+    assert stats["unique_blobs"] == 64
+    assert _sha256(path) == RECORDED_SHA256["zones_cap64"]
+    assert ar.read_pmtiles(path) == {
+        (r.zoom, r.x, r.y): bytes(r.tile_bytes) for r in zones_z8.collect()}
+
+
+def test_pmtiles_empty_input(spark, tmp_path):
+    empty = spark.createDataFrame(
+        [], "zoom int, x int, y int, tile_bytes binary, content_hash string")
+    path = str(tmp_path / "empty.pmtiles")
+    stats = ar.write_pmtiles(empty, path)
+    assert stats["tiles"] == stats["entries"] == stats["unique_blobs"] == 0
+    assert _sha256(path) == RECORDED_SHA256["empty"]
+    assert ar.read_pmtiles(path) == {}
+
+
+def test_pmtiles_small_chunk_cap(zones_z8, monkeypatch, tmp_path):
+    """A cap far below one batch splits every partition into many chunks;
+    the archive does not change."""
+    monkeypatch.setattr(ar, "_CHUNK_BYTES", 4096)
+    path = str(tmp_path / "small_chunks.pmtiles")
+    ar.write_pmtiles(zones_z8, path)
+    assert _sha256(path) == RECORDED_SHA256["zones"]
+
+
+def test_ipc_chunks_split_by_bytes_in_order():
+    import pyarrow as pa
+
+    rows = [bytes([i % 251]) * 100 for i in range(1000)]
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(range(1000), pa.int64()), pa.array(rows, pa.binary())],
+        ["i", "blob"])
+    cells = list(ar._ipc_chunks(10_000)(iter([batch, batch.slice(0, 0)])))
+    assert len(cells) >= 10
+    back = [b for c in cells
+            for b in pa.ipc.open_stream(c.column(0)[0].as_buffer())]
+    assert all(c.column(0)[0].as_buffer().size < 2 * 10_000 for c in cells)
+    assert pa.Table.from_batches(back).equals(pa.Table.from_batches([batch]))

@@ -66,6 +66,21 @@ def test_verify_archive_passes(archive, capsys):
     assert "FAIL" not in out
 
 
+def test_verify_proto_archive_passes(spark, archive, tmp_path, capsys):
+    """A named .proto stream archive passes verify: its metadata lives in
+    the stream's finish entry, not beside it."""
+    from planetiler_spark.sources import archives as ar
+    mb, _pm = archive
+    rows = [(z, x, y, blob) for (z, x, y), blob in sorted(ar.read_mbtiles(mb).items())]
+    tiles = spark.createDataFrame(rows, "zoom int, x int, y int, tile_bytes binary")
+    pb = str(tmp_path / "out.proto")
+    ar.write_proto_archive(tiles, pb, {"name": "cli-test", "format": "pbf"})
+    assert main(["verify-mbtiles", pb, "--min-features", "10"]) == 0
+    out = capsys.readouterr().out
+    assert "PASS  metadata has name: 'cli-test'" in out
+    assert "FAIL" not in out
+
+
 def test_verify_archive_fails_without_name(archive, tmp_path, capsys):
     mb, _pm = archive
     import shutil
