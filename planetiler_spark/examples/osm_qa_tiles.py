@@ -75,21 +75,10 @@ def qa_features(spark: SparkSession, pbf: str,
     polys = ways.filter(can_poly)
     lines = ways.filter(~can_poly)
 
-    mp = (ents.filter("etype = 2").filter(tagged)
-          .filter(F.col("tags")["type"] == "multipolygon")
-          .select(F.col("id").alias("rid"), "tags", "version",
-                  F.explode(F.arrays_zip(
-                      F.col("member_ids").alias("mid"),
-                      F.col("member_types").alias("mtype"))).alias("m"))
-          .filter("m.mtype = 1")
-          .select("rid", "tags", "version", F.col("m.mid").alias("id"))
-          .join(geoms.withColumnRenamed("way_id", "id"), "id")
-          .groupBy("rid")
-          .agg(F.first("tags").alias("tags"),
-               F.first("version").alias("version"),
-               F.collect_list("lons").alias("lons"),
-               F.collect_list("lats").alias("lats"))
-          .withColumnRenamed("rid", "id"))
+    mp = osrc.multipolygon_members(
+        ents.filter("etype = 2").filter(tagged)
+        .filter(F.col("tags")["type"] == "multipolygon"),
+        geoms, "tags", "version")
     mp = with_meta(mp, "relation")
 
     return (rows(nodes, "point", F.array(F.array("lon")),

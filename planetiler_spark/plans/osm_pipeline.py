@@ -94,18 +94,8 @@ def osm_features(spark: SparkSession, pbf: str, profile=DEFAULT_PROFILE) -> Data
             lons_col.alias("lons"), lats_col.alias("lats"))
 
     # multipolygon relations: members joined to way coords, grouped per rel
-    mp = (rels.filter(F.col("tags")["type"] == "multipolygon")
-          .select(F.col("id").alias("rid"), "tags",
-                  F.explode(F.arrays_zip(F.col("member_ids").alias("mid"),
-                                         F.col("member_types").alias("mtype"))).alias("m"))
-          .filter("m.mtype = 1")
-          .select("rid", "tags", F.col("m.mid").alias("id"))
-          .join(geoms.withColumnRenamed("way_id", "id"), "id")
-          .groupBy("rid")
-          .agg(F.first("tags").alias("tags"),
-               F.collect_list("lons").alias("lons"),
-               F.collect_list("lats").alias("lats"))
-          .withColumnRenamed("rid", "id"))
+    mp = osrc.multipolygon_members(
+        rels.filter(F.col("tags")["type"] == "multipolygon"), geoms, "tags")
 
     out = []
     for layer, key, vals, geom, minzoom, attr_keys in profile:
@@ -385,18 +375,9 @@ def _osm_candidates(spark: SparkSession, pbf: str) -> DataFrame:
     ways_g = ways.select("id", "tags", (F.element_at("refs", 1) ==
                                         F.element_at("refs", -1)).alias("closed")) \
                  .join(geoms.withColumnRenamed("way_id", "id"), "id")
-    mp = (ents.filter("etype = 2")
-          .filter(F.col("tags")["type"] == "multipolygon")
-          .select(F.col("id").alias("rid"), "tags",
-                  F.explode(F.arrays_zip(F.col("member_ids").alias("mid"),
-                                         F.col("member_types").alias("mtype"))).alias("m"))
-          .filter("m.mtype = 1")
-          .select("rid", "tags", F.col("m.mid").alias("id"))
-          .join(geoms.withColumnRenamed("way_id", "id"), "id")
-          .groupBy("rid")
-          .agg(F.first("tags").alias("tags"),
-               F.collect_list("lons").alias("lons"),
-               F.collect_list("lats").alias("lats")))
+    mp = osrc.multipolygon_members(
+        ents.filter("etype = 2").filter(F.col("tags")["type"] == "multipolygon"),
+        geoms, "tags")
 
     def cand(df, kind, lons_col, lats_col):
         return df.select(F.col("id").alias("fid"), F.lit(kind).alias("kind"),
@@ -409,8 +390,7 @@ def _osm_candidates(spark: SparkSession, pbf: str) -> DataFrame:
                               F.array("lons"), F.array("lats")))
             .unionByName(cand(ways_g.filter(F.col("closed")), "polygon",
                               F.array("lons"), F.array("lats")))
-            .unionByName(cand(mp.withColumnRenamed("rid", "id"), "multipolygon",
-                              F.col("lons"), F.col("lats"))))
+            .unionByName(cand(mp, "multipolygon", F.col("lons"), F.col("lats"))))
 
 
 def vector_layers_json(frags: DataFrame) -> str:

@@ -13,24 +13,37 @@ Reference parity (SURVEY §2.2):
   - CSV / JSON stream archives (stream/WriteableCsvArchive.java:68,
     WriteableJsonStreamArchive.java:32): df.write, fully parallel.
 
-The single-file writers (MBTiles, PMTiles, proto stream) drain on the driver
-— mirroring the reference's dedicated ordered writer thread
-(TileArchiveWriter.java:128) — through one path, `_drain`: executors frame
-each partition's record batches, in order, as Arrow IPC chunks of about
-`_CHUNK_BYTES`, and the driver reads them with `toLocalIterator` (the next
-partition computed while this one is written). The writers work on whole
-column arrays per batch; only the content-dedup maps touch one tile at a
-time. The driver holds at most a partition's worth of chunks. The parallel
-formats (files/csv/json) write from executors.
+PMTiles is assembled on the executors, the shape of the reference's emit
+phase (tiles encoded on every core, one ordered writer that only appends,
+TileArchiveWriter.java:128-207). One job sorts the tiles into Hilbert order
+and each task writes its partition to two part files under `<path>.parts/`:
+the partition's blobs (each stored once per partition) and a raw int64 index
+of four values per tile. The driver reads the indexes one partition at a
+time, dedups and run-length-encodes them with whole-array numpy, writes
+header and directories, and builds the data section by copying byte ranges
+out of the part files (`os.copy_file_range`); it never holds a tile's bytes.
+MBTiles and the proto stream have one writer each (sqlite, a stream) and
+drain on the driver through `_drain`: executors frame each partition's
+record batches, in order, as Arrow IPC chunks of about `_CHUNK_BYTES`, read
+with `toLocalIterator` (the next partition computed while this one is
+written). The files tree and CSV/JSON streams write from executors.
+
+Writers that write from executors (PMTiles parts, files tree) need storage
+that the executors and the driver both see: a local path in local mode, a
+shared mount on a cluster.
 """
 
 from __future__ import annotations
 
+import contextlib
+import errno
 import gzip
 import json
 import os
+import shutil
 import sqlite3
 import struct
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 
@@ -94,6 +107,67 @@ def _binary_values(arr):
     lo, hi = int(ends[0]), int(ends[-1])
     data = arr.buffers()[2]
     return ends, (data.slice(lo, hi - lo) if hi > lo else b"")
+
+
+@contextlib.contextmanager
+def _parts_dir(path: str):
+    """A fresh `<path>.parts/` directory for part files, removed when the
+    block ends, however it ends."""
+    parts = path + ".parts"
+    shutil.rmtree(parts, ignore_errors=True)
+    os.makedirs(parts)
+    try:
+        yield parts
+    finally:
+        shutil.rmtree(parts, ignore_errors=True)
+
+
+@contextlib.contextmanager
+def _part_files(parts_dir: str, *suffixes: str):
+    """(partition id, *open files) for this task's part-NNNNN<suffix> files.
+    Each task attempt writes its own temp names and publishes them with
+    os.replace only when the block finishes; a failed or abandoned attempt
+    removes its temp files. A retried or speculative task therefore
+    publishes only whole files."""
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    stem = os.path.join(parts_dir, f"part-{ctx.partitionId():05d}")
+    tmp = f".attempt-{ctx.taskAttemptId()}"
+    files = [open(stem + s + tmp, "wb") for s in suffixes]
+    try:
+        yield (ctx.partitionId(), *files)
+    except BaseException:
+        for f in files:
+            f.close()
+            os.remove(f.name)
+        raise
+    for f in files:
+        f.close()
+    for s in suffixes:
+        os.replace(stem + s + tmp, stem + s)
+
+
+def _copy_ranges(dst_fd: int, src_path: str, starts, lens) -> None:
+    """Append byte ranges of src_path to dst_fd at its current position, in
+    the kernel (os.copy_file_range) where the filesystem allows it."""
+    src = os.open(src_path, os.O_RDONLY)
+    try:
+        for off, n in zip(np.asarray(starts).tolist(), np.asarray(lens).tolist()):
+            while n:
+                try:
+                    done = os.copy_file_range(src, dst_fd, n, off)
+                except OSError as e:
+                    if e.errno not in (errno.EXDEV, errno.EINVAL,
+                                       errno.EOPNOTSUPP, errno.ENOSYS):
+                        raise
+                    done = os.write(dst_fd, os.pread(src, min(n, 1 << 24), off))
+                if not done:
+                    raise IOError(f"{src_path} is shorter than its index")
+                off += done
+                n -= done
+    finally:
+        os.close(src)
 
 
 # ---------------------------------------------------------------------------
@@ -244,46 +318,46 @@ def _pm_build_dirs(entries, max_dir_entries: int = _MAX_DIR_ENTRIES):
     leaf_size = max_dir_entries
     while (len(entries) + leaf_size - 1) // leaf_size > max_dir_entries:
         leaf_size *= 2
+    chunks = [entries[i:i + leaf_size] for i in range(0, len(entries), leaf_size)]
+    # gzip level 9 dominates; zlib releases the GIL, so leaves compress in
+    # parallel (each leaf is compressed on its own: the bytes do not change)
+    with ThreadPoolExecutor(os.cpu_count()) as pool:
+        sers = list(pool.map(_pm_dir, chunks))
     root_entries = []
     leaves = bytearray()
-    for i in range(0, len(entries), leaf_size):
-        chunk = entries[i:i + leaf_size]
-        ser = _pm_dir(chunk)
+    for chunk, ser in zip(chunks, sers):
         root_entries.append((int(chunk[0][0]), len(leaves), len(ser), 0))
         leaves += ser
     return _pm_dir(root_entries), bytes(leaves), len(root_entries)
 
 
-def write_pmtiles(tiles_df, path: str, metadata: dict | None = None,
-                  max_dir_entries: int = _MAX_DIR_ENTRIES,
-                  dedup_cap: int = 1 << 22) -> dict:
-    """Hilbert-clustered single-file archive with run-length + content dedup
-    and root+leaf directories. tiles_df must carry (zoom, x, y, tile_bytes,
-    content_hash).
-
-    STREAMING: tile bytes never accumulate on the driver. One mapInArrow
-    computes each tile's Hilbert id and its analytic range token
-    (operators/partitioning.py), so a plain hash exchange on the token plus
-    sortWithinPartitions is a total Hilbert order — no sampling job and no
-    cache of the tileset. The driver drains the sorted partitions as Arrow
-    chunks (`_drain`, the ordered-writer-thread shape of
-    TileArchiveWriter.java:128): run-length entries come from whole-array
-    comparisons, each batch's new blobs go to a temp data file as one slice,
-    and only the directory entries (4 ints per run) and a bounded
-    content-dedup map stay in memory. Directories follow the public PMTiles
-    v3 spec (pmtiles/Pmtiles.java:82-119): entries beyond max_dir_entries
-    spill into leaf directories with root pointer entries."""
-    from pyspark.sql import functions as F
-
+def _hilbert_tokens(spark, p: int):
+    """(token column name, PMTiles tile ids -> int64 tokens) of the analytic
+    range exchange (operators/partitioning.py): `repartition(p, token)`
+    puts lower ids on lower partitions. The writers cannot know their
+    input's zooms, so buckets span every legal zoom; their balance sets
+    only the parallelism, never the order."""
     from ..operators import partitioning as pt
+
+    boundaries, pid = pt.tile_range_partitioning(0, tm.MAX_MAXZOOM, p)
+    bucket_tok = pt.partition_tokens(spark, p)[pid]
+
+    def tokens(ids):
+        return bucket_tok[np.searchsorted(boundaries, ids, side="right") - 1]
+    return pt.token_col(p), tokens
+
+
+def _pm_sorted(tiles_df):
+    """tiles_df (zoom, x, y, tile_bytes, content_hash) -> (hilbert_id, zoom,
+    tile_bytes, content_hash) in total Hilbert order: partition i holds
+    lower ids than partition i+1 and each partition is sorted. One
+    mapInArrow computes each tile's id and range token, so a plain hash
+    exchange on the token is the range exchange (no sampling job)."""
+    from pyspark.sql import functions as F
 
     spark = tiles_df.sparkSession
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # the writer cannot know its input's zooms, so buckets span every legal
-    # zoom; their balance sets only the sort's parallelism, never the order
-    boundaries, pid = pt.tile_range_partitioning(0, tm.MAX_MAXZOOM, p)
-    bucket_tok = pt.partition_tokens(spark, p)[pid]
-    tok = pt.token_col(p)
+    tok, tokens = _hilbert_tokens(spark, p)
 
     def keyed(batches):
         import pyarrow as pa
@@ -292,84 +366,182 @@ def write_pmtiles(tiles_df, path: str, metadata: dict | None = None,
             hid = tm.hilbert_encode(b.column(1).to_numpy(),
                                     b.column(2).to_numpy(),
                                     b.column(0).to_numpy())
-            bk = np.searchsorted(boundaries, hid, side="right") - 1
             yield pa.RecordBatch.from_arrays(
                 [pa.array(hid, pa.int64()), b.column(0), b.column(3),
-                 b.column(4), pa.array(bucket_tok[bk], pa.int64())],
+                 b.column(4), pa.array(tokens(hid), pa.int64())],
                 ["hilbert_id", "zoom", "tile_bytes", "content_hash", tok])
 
-    ordered = (tiles_df
-               .select(F.col("zoom").cast("int"), F.col("x").cast("long"),
-                       F.col("y").cast("long"), "tile_bytes", "content_hash")
-               .mapInArrow(keyed, "hilbert_id long, zoom int, tile_bytes binary, "
-                                  f"content_hash string, {tok} long")
-               .repartition(p, tok)
-               .sortWithinPartitions("hilbert_id")
-               .drop(tok))
+    return (tiles_df
+            .select(F.col("zoom").cast("int"), F.col("x").cast("long"),
+                    F.col("y").cast("long"), "tile_bytes", "content_hash")
+            .mapInArrow(keyed, "hilbert_id long, zoom int, tile_bytes binary, "
+                               f"content_hash string, {tok} long")
+            .repartition(p, tok)
+            .sortWithinPartitions("hilbert_id")
+            .drop(tok))
 
-    tmp_data = path + ".data.tmp"
-    # entries live in (k, 4) int64 blocks — 32 bytes per [tid, off, len, run]
-    # run, so a planet-scale O(10^7-10^8)-entry directory stays a few hundred
-    # MB of driver memory (the reference holds the same compact longs,
-    # WriteablePmtiles; bounded-memory test in test_archives)
-    blocks: list[np.ndarray] = []
-    offsets: dict[str, tuple[int, int]] = {}   # content dedup (bounded)
-    last = None                                # (tid, off, len) of the last tile
-    n_tiles = 0
-    data_len = 0
-    minz = maxz = None
-    with open(tmp_data, "wb") as dataf:
-        for b in _drain(ordered):
-            n = b.num_rows
-            if not n:
-                continue
-            tid = b.column(0).to_numpy()
-            zoom = b.column(1).to_numpy()
-            blobs = b.column(2)
-            ends, _ = _binary_values(blobs)
-            offs, lens, fresh = [], [], []
-            for i, (h, size) in enumerate(zip(b.column(3).to_pylist(),
-                                              np.diff(ends).tolist())):
-                got = offsets.get(h)
-                if got is None:
-                    got = (data_len, size)
-                    if len(offsets) < dedup_cap:  # bounded driver memory; dedup
-                        offsets[h] = got          # beyond cap just stores dup
-                    fresh.append(i)
-                    data_len += size
-                offs.append(got[0])
-                lens.append(got[1])
-            if fresh:
-                new = blobs if len(fresh) == n else \
-                    blobs.take(np.asarray(fresh, dtype=np.int64))
-                dataf.write(_binary_values(new)[1])
-            off = np.asarray(offs, dtype=np.int64)
-            ln = np.asarray(lens, dtype=np.int64)
-            # a tile continues the current run when it is the next Hilbert id
-            # with the same blob; the first tile compares with the last one
-            # of the previous batch, so runs merge across chunks and partitions
-            cont = np.empty(n, dtype=bool)
-            cont[1:] = (tid[1:] == tid[:-1] + 1) & (off[1:] == off[:-1]) \
-                & (ln[1:] == ln[:-1])
-            cont[0] = last is not None and \
-                (int(tid[0]), int(off[0]), int(ln[0])) == (last[0] + 1, last[1], last[2])
-            starts = np.flatnonzero(~cont)
-            lead = int(starts[0]) if len(starts) else n
-            if lead:
-                blocks[-1][-1, 3] += lead
-            if len(starts):
-                blocks.append(np.stack([tid[starts], off[starts], ln[starts],
-                                        np.diff(starts, append=n)], axis=1))
-            last = (int(tid[-1]), int(off[-1]), int(ln[-1]))
-            n_tiles += n
-            bz_lo, bz_hi = int(zoom.min()), int(zoom.max())
-            minz = bz_lo if minz is None else min(minz, bz_lo)
-            maxz = bz_hi if maxz is None else max(maxz, bz_hi)
 
-    n_contents = len(offsets)
-    entries_np = np.concatenate(blocks) if blocks \
+# hex digit value of each byte; -1 for anything but 0-9 and a-f
+_HEX = np.full(256, -1, dtype=np.int64)
+_HEX[np.frombuffer(b"0123456789abcdef", dtype=np.uint8)] = np.arange(16)
+
+
+def _content_keys(hashes) -> np.ndarray:
+    """uint64 dedup key of each content_hash in a pyarrow string array. A
+    16-digit lowercase hex hash (the pipeline's form) is its own 64 bits,
+    decoded with whole-array numpy; any other string maps to an 8-byte
+    blake2b digest."""
+    import hashlib
+
+    ends, raw = _binary_values(hashes)
+    raw = np.frombuffer(raw, dtype=np.uint8)
+    starts = ends[:-1] - ends[0]
+    keys = np.zeros(len(hashes), dtype=np.uint64)
+    exact = np.diff(ends) == 16
+    nib = _HEX[raw[starts[exact, None] + np.arange(16)]]
+    ok = (nib >= 0).all(axis=1)
+    exact[exact] = ok
+    shifts = (4 * np.arange(15, -1, -1)).astype(np.uint64)
+    keys[exact] = np.bitwise_or.reduce(
+        nib[ok].astype(np.uint64) << shifts, axis=1)
+    for i in np.flatnonzero(~exact).tolist():
+        digest = hashlib.blake2b(raw[starts[i]:ends[i + 1] - ends[0]].tobytes(),
+                                 digest_size=8).digest()
+        keys[i] = int.from_bytes(digest, "big")
+    return keys
+
+
+_PM_PART_SCHEMA = "part long, tiles long, data_bytes long, minzoom long, maxzoom long"
+
+
+def _pm_part_writer(parts_dir: str):
+    """mapInArrow function over one Hilbert-sorted partition (hilbert_id,
+    zoom, tile_bytes, content_hash). Writes part-NNNNN.data, the
+    partition's blobs with any blob already seen in this partition skipped,
+    and part-NNNNN.idx, raw int64 [hilbert id, content key, length, offset
+    in the .data file] per tile; yields one summary row."""
+    def write(batches):
+        import pyarrow as pa
+
+        seen_k = np.empty(0, dtype=np.uint64)   # sorted keys in this part
+        seen_o = np.empty(0, dtype=np.int64)    # their offsets in .data
+        n = size = 0
+        minz, maxz = tm.MAX_MAXZOOM + 1, -1
+        with _part_files(parts_dir, ".data", ".idx") as (part, dataf, idxf):
+            for b in batches:
+                if not b.num_rows:
+                    continue
+                blobs = b.column(2)
+                ln = np.diff(_binary_values(blobs)[0]).astype(np.int64)
+                key = _content_keys(b.column(3))
+                pos = np.searchsorted(seen_k, key)
+                hit = pos < len(seen_k)
+                hit[hit] = seen_k[pos[hit]] == key[hit]
+                off = np.empty(len(key), dtype=np.int64)
+                off[hit] = seen_o[pos[hit]]
+                miss = np.flatnonzero(~hit)
+                uk, first, inv = np.unique(key[miss], return_index=True,
+                                           return_inverse=True)
+                order = np.argsort(first)          # new keys, first seen first
+                new = miss[first[order]]
+                uo = np.empty(len(uk), dtype=np.int64)
+                uo[order] = size + np.cumsum(ln[new]) - ln[new]
+                off[miss] = uo[inv]
+                taken = blobs if len(new) == len(key) else \
+                    blobs.take(pa.array(new, pa.int64()))
+                dataf.write(_binary_values(taken)[1])
+                size += int(ln[new].sum())
+                at = np.searchsorted(seen_k, uk)
+                seen_k, seen_o = np.insert(seen_k, at, uk), np.insert(seen_o, at, uo)
+                idxf.write(np.stack([b.column(0).to_numpy(), key.view(np.int64),
+                                     ln, off], axis=1).tobytes())
+                zoom = b.column(1).to_numpy()
+                minz, maxz = min(minz, int(zoom.min())), max(maxz, int(zoom.max()))
+                n += b.num_rows
+        yield pa.RecordBatch.from_pylist(
+            [{"part": part, "tiles": n, "data_bytes": size,
+              "minzoom": minz, "maxzoom": maxz}])
+    return write
+
+
+def _pm_assemble(parts_dir: str, parts, path: str, metadata: dict | None,
+                 max_dir_entries: int, dedup_cap: int) -> dict:
+    """Driver half of write_pmtiles: the part indexes, read one partition at
+    a time in partition order, become directory entries and a copy plan;
+    the archive is written beside the parts and moved to `path` when whole.
+    parts: the part writer's summary rows.
+
+    Dedup is global and first-occurrence-wins, as a tile-by-tile writer
+    would do it: a sorted array remembers up to dedup_cap content keys with
+    their data offsets, and a repeat of a key that is not remembered is
+    stored again. Memory is one partition's index plus the run entries and
+    the remembered keys."""
+    rem_k = np.empty(0, dtype=np.uint64)     # remembered keys, sorted
+    rem_o = np.empty(0, dtype=np.int64)      # their data offsets
+    blocks: list[np.ndarray] = []   # (k, 4) [tid, off, len, run] per run
+    copies = []                     # (part file, source starts, lengths)
+    last = None                     # (tid, off, len) of the last tile
+    n_tiles = data_len = 0
+    for s in sorted(parts, key=lambda r: r["part"]):
+        if not s["tiles"]:
+            continue
+        stem = os.path.join(parts_dir, f"part-{s['part']:05d}")
+        idx = np.fromfile(stem + ".idx", dtype=np.int64).reshape(-1, 4)
+        if len(idx) != s["tiles"] or os.path.getsize(stem + ".data") != s["data_bytes"]:
+            raise IOError(f"{stem}: part files differ from their task's summary")
+        n = len(idx)
+        tid, key, ln, src = idx[:, 0], idx[:, 1].view(np.uint64), idx[:, 2], idx[:, 3]
+        pos = np.searchsorted(rem_k, key)
+        hit = pos < len(rem_k)
+        hit[hit] = rem_k[pos[hit]] == key[hit]
+        off = np.empty(n, dtype=np.int64)
+        off[hit] = rem_o[pos[hit]]
+        miss = np.flatnonzero(~hit)
+        uk, first, inv = np.unique(key[miss], return_index=True,
+                                   return_inverse=True)
+        # the first (dedup_cap - remembered) new keys, by first occurrence,
+        # are remembered; a miss is stored unless it repeats one of those
+        keep = np.zeros(len(uk), dtype=bool)
+        keep[np.argsort(first)[:max(0, dedup_cap - len(rem_k))]] = True
+        first_at = miss[first]
+        stored = (first_at[inv] == miss) | ~keep[inv]
+        fresh = miss[stored]
+        off[fresh] = data_len + np.cumsum(ln[fresh]) - ln[fresh]
+        data_len += int(ln[fresh].sum())
+        repeat = miss[~stored]
+        off[repeat] = off[first_at[inv[~stored]]]
+        at = np.searchsorted(rem_k, uk[keep])
+        rem_k = np.insert(rem_k, at, uk[keep])
+        rem_o = np.insert(rem_o, at, off[first_at[keep]])
+        # stored blobs go out in tile order; adjacent source ranges coalesce
+        if len(fresh):
+            s_src, s_ln = src[fresh], ln[fresh]
+            cut = np.flatnonzero(np.r_[True, s_src[1:] != s_src[:-1] + s_ln[:-1]])
+            copies.append((stem + ".data", s_src[cut], np.add.reduceat(s_ln, cut)))
+        # a tile continues the current run when it is the next Hilbert id
+        # with the same blob; the first tile compares with the last one of
+        # the previous partition, so runs merge across partition edges
+        cont = np.empty(n, dtype=bool)
+        cont[1:] = (tid[1:] == tid[:-1] + 1) & (off[1:] == off[:-1]) \
+            & (ln[1:] == ln[:-1])
+        cont[0] = last is not None and \
+            (int(tid[0]), int(off[0]), int(ln[0])) == (last[0] + 1, last[1], last[2])
+        starts = np.flatnonzero(~cont)
+        lead = int(starts[0]) if len(starts) else n
+        if lead:
+            blocks[-1][-1, 3] += lead
+        if len(starts):
+            blocks.append(np.stack([tid[starts], off[starts], ln[starts],
+                                    np.diff(starts, append=n)], axis=1))
+        last = (int(tid[-1]), int(off[-1]), int(ln[-1]))
+        n_tiles += n
+
+    zooms = [(s["minzoom"], s["maxzoom"]) for s in parts if s["tiles"]]
+    minz = min((z[0] for z in zooms), default=0)
+    maxz = max((z[1] for z in zooms), default=0)
+    entries = np.concatenate(blocks) if blocks \
         else np.empty((0, 4), dtype=np.int64)
-    root, leaves, n_leaves = _pm_build_dirs(entries_np, max_dir_entries)
+    root, leaves, n_leaves = _pm_build_dirs(entries, max_dir_entries)
     meta_bytes = gzip.compress(json.dumps(metadata or {}).encode(), mtime=0)
 
     root_off = _PM_HEADER_LEN
@@ -384,28 +556,55 @@ def write_pmtiles(tiles_df, path: str, metadata: dict | None = None,
                      leaf_off, len(leaves), data_off, data_len)
     # spec bytes 72/80/88: addressed tiles / tile entries / tile contents
     # (Pmtiles.java:122-124)
-    struct.pack_into("<QQQ", hdr, 72, n_tiles, len(entries_np), n_contents)
+    struct.pack_into("<QQQ", hdr, 72, n_tiles, len(entries), len(rem_k))
     hdr[96] = 1   # clustered
     hdr[97] = 2   # internal compression: gzip
     hdr[98] = 2   # tile compression: gzip
     hdr[99] = 1   # tile type: mvt
-    hdr[100] = minz or 0
-    hdr[101] = maxz or 0
-    with open(path, "wb") as f:
-        f.write(bytes(hdr))
-        f.write(root)
-        f.write(meta_bytes)
-        f.write(leaves)
-        with open(tmp_data, "rb") as dataf:  # stream-append, no full read
-            while True:
-                chunk = dataf.read(1 << 24)
-                if not chunk:
-                    break
-                f.write(chunk)
-    os.remove(tmp_data)
-    return {"tiles": n_tiles, "entries": len(entries_np),
-            "unique_blobs": n_contents, "n_leaves": n_leaves,
+    hdr[100] = minz
+    hdr[101] = maxz
+    tmp = os.path.join(parts_dir, "archive.tmp")
+    with open(tmp, "wb") as out:
+        out.write(bytes(hdr) + root + meta_bytes + leaves)
+        out.flush()
+        for part_path, starts, lens in copies:
+            _copy_ranges(out.fileno(), part_path, starts, lens)
+    os.replace(tmp, path)
+    return {"tiles": n_tiles, "entries": len(entries),
+            "unique_blobs": len(rem_k), "n_leaves": n_leaves,
             "bytes": data_off + data_len}
+
+
+def write_pmtiles(tiles_df, path: str, metadata: dict | None = None,
+                  max_dir_entries: int = _MAX_DIR_ENTRIES,
+                  dedup_cap: int = 1 << 22) -> dict:
+    """Hilbert-clustered single-file archive with run-length + content dedup
+    and root+leaf directories. tiles_df must carry (zoom, x, y, tile_bytes,
+    content_hash).
+
+    ASSEMBLED ON THE EXECUTORS: one job sorts the tiles into Hilbert order
+    (`_pm_sorted`, an analytic range exchange) and every task writes its
+    partition's blobs and index to part files under `<path>.parts/`
+    (`_pm_part_writer`); a single collect() runs all partitions in
+    parallel. The driver then reads the indexes in partition order, does a
+    global first-occurrence content dedup over 64-bit keys (bounded by
+    dedup_cap), builds run-length entries that merge across partition
+    edges, writes header and directories, and copies the data section out
+    of the part files (`_pm_assemble`). Tile bytes never reach the driver.
+    Directories follow the public PMTiles v3 spec
+    (pmtiles/Pmtiles.java:82-119): entries beyond max_dir_entries spill
+    into leaf directories with root pointer entries.
+
+    The part files and the finished archive are published by rename, and
+    `<path>.parts/` is removed however the write ends, so a failed write
+    leaves no partial archive. On a cluster `<path>` must be on storage
+    that the executors and the driver both see."""
+    ordered = _pm_sorted(tiles_df)
+    with _parts_dir(path) as parts:
+        summary = ordered.mapInArrow(_pm_part_writer(parts),
+                                     _PM_PART_SCHEMA).collect()
+        return _pm_assemble(parts, [r.asDict() for r in summary], path,
+                            metadata, max_dir_entries, dedup_cap)
 
 
 def _pm_varints(raw: bytes) -> np.ndarray:
@@ -480,7 +679,8 @@ def read_pmtiles(path: str) -> dict:
 
 def write_files_archive(tiles_df, base: str, metadata: dict | None = None) -> int:
     """{base}/{z}/{x}/{y}.pbf tree (TileSchemeEncoding z/x/y default),
-    written in parallel from executors via foreachPartition."""
+    written in parallel from executors via foreachPartition (on a cluster,
+    base must be on storage that the executors and the driver both see)."""
     os.makedirs(base, exist_ok=True)
 
     def write_part(it):

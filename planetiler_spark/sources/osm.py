@@ -455,6 +455,31 @@ def way_geometries(entities):
                     F.expr("transform(pts, p -> p.lat)").alias("lats")))
 
 
+def multipolygon_members(rels, geoms, *keep: str):
+    """Multipolygon relations joined to their member ways' coordinates:
+    rels (id, member_ids, member_types, *keep) and way_geometries' (way_id,
+    lons, lats) -> (id, *keep, lons, lats), one row per relation whose
+    lons/lats hold one inner array per way member, in member order.
+    Members carry their position through the join and are sorted by it,
+    so ring assembly sees the same order at any partitioning (a bare
+    collect_list after the join takes rows in whatever order they arrive)."""
+    from pyspark.sql import functions as F
+    members = F.arrays_zip(F.col("member_ids").alias("mid"),
+                           F.col("member_types").alias("mtype"))
+    return (rels.select(F.col("id").alias("rid"), *keep,
+                        F.posexplode(members).alias("pos", "m"))
+            .filter(F.col("m.mtype") == WAY)
+            .select("rid", *keep, "pos", F.col("m.mid").alias("id"))
+            .join(geoms.withColumnRenamed("way_id", "id"), "id")
+            .groupBy("rid")
+            .agg(*(F.first(c).alias(c) for c in keep),
+                 F.sort_array(F.collect_list(F.struct("pos", "lons", "lats")))
+                 .alias("members"))
+            .select(F.col("rid").alias("id"), *keep,
+                    F.expr("transform(members, m -> m.lons)").alias("lons"),
+                    F.expr("transform(members, m -> m.lats)").alias("lats")))
+
+
 def split_ways_at_intersections(ways, renumber: bool = True):
     """SplitWay emission (OsmWaySplitter.java:40-52 + OsmReader
     splitWayIfNecessary:440-450 / asSplitLine:866-879 /

@@ -199,10 +199,10 @@ def test_pmtiles_dir_build_bounded_memory():
 
 
 # ---------------------------------------------------------------------------
-# PMTiles byte identity. The digests were recorded from the previous writer
+# PMTiles byte identity. The digests were recorded from an earlier writer
 # (a sampled repartitionByRange over a persisted frame, drained one Row per
-# tile); the Arrow-chunk drain must reproduce every archive byte for byte, at
-# any shuffle partition count, input order and chunk size.
+# tile); the executor-assembled archive must reproduce every byte, at any
+# shuffle partition count, input order, Arrow batch size and task retry.
 # ---------------------------------------------------------------------------
 
 RECORDED_SHA256 = {
@@ -249,6 +249,15 @@ def shuffle_partitions(spark):
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
     yield lambda p: spark.conf.set(key, str(p))
+    spark.conf.set(key, old)
+
+
+@pytest.fixture
+def arrow_batch_rows(spark):
+    """Set the Arrow batch size of mapInArrow inputs for one test."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    yield lambda n: spark.conf.set(key, str(n))
     spark.conf.set(key, old)
 
 
@@ -301,16 +310,17 @@ def test_pmtiles_bytes_independent_of_partitions_and_order(
 
 
 def test_pmtiles_run_spans_partition_edge(spark, shuffle_partitions,
-                                          monkeypatch, tmp_path):
-    """An identical-tile run that crosses a partition edge (and, with a tiny
-    chunk cap, every chunk cut) still becomes one run-length entry."""
+                                          arrow_batch_rows, tmp_path):
+    """An identical-tile run that crosses a partition edge (and, with
+    3-row Arrow batches, every batch cut) still becomes one run-length
+    entry."""
     shuffle_partitions(4)
     df = _edge_frame(spark)
-    for cap in (ar._CHUNK_BYTES, 64):
-        monkeypatch.setattr(ar, "_CHUNK_BYTES", cap)
-        path = str(tmp_path / f"edge_{cap}.pmtiles")
+    for rows in (10_000, 3):
+        arrow_batch_rows(rows)
+        path = str(tmp_path / f"edge_{rows}.pmtiles")
         stats = ar.write_pmtiles(df, path)
-        assert _sha256(path) == RECORDED_SHA256["edge"], cap
+        assert _sha256(path) == RECORDED_SHA256["edge"], rows
         assert stats["tiles"] == 16 and stats["entries"] == 5
         assert stats["unique_blobs"] == 5
     got = ar.read_pmtiles(path)
@@ -337,10 +347,11 @@ def test_pmtiles_empty_input(spark, tmp_path):
     assert ar.read_pmtiles(path) == {}
 
 
-def test_pmtiles_small_chunk_cap(zones_z8, monkeypatch, tmp_path):
-    """A cap far below one batch splits every partition into many chunks;
-    the archive does not change."""
-    monkeypatch.setattr(ar, "_CHUNK_BYTES", 4096)
+def test_pmtiles_small_chunk_cap(zones_z8, arrow_batch_rows, tmp_path):
+    """Arrow batches far smaller than a partition split every part file
+    into many writes, so dedup within a part crosses batch cuts; the
+    archive does not change."""
+    arrow_batch_rows(64)
     path = str(tmp_path / "small_chunks.pmtiles")
     ar.write_pmtiles(zones_z8, path)
     assert _sha256(path) == RECORDED_SHA256["zones"]
@@ -359,3 +370,117 @@ def test_ipc_chunks_split_by_bytes_in_order():
             for b in pa.ipc.open_stream(c.column(0)[0].as_buffer())]
     assert all(c.column(0)[0].as_buffer().size < 2 * 10_000 for c in cells)
     assert pa.Table.from_batches(back).equals(pa.Table.from_batches([batch]))
+
+
+def test_pmtiles_failed_write_leaves_no_files(zones_z8, tmp_path):
+    """A job that fails upstream of the writer leaves neither part files nor
+    a partial archive behind."""
+    def fail(batches):
+        for b in batches:
+            raise RuntimeError("upstream failure")
+            yield b
+
+    broken = zones_z8.mapInArrow(fail, zones_z8.schema)
+    path = str(tmp_path / "failed.pmtiles")
+    with pytest.raises(Exception, match="upstream failure"):
+        ar.write_pmtiles(broken, path)
+    assert os.listdir(tmp_path) == []
+
+
+class _TaskContextStub:
+    def __init__(self, part, attempt_id):
+        self.part, self.attempt_id = part, attempt_id
+
+    def partitionId(self):
+        return self.part
+
+    def taskAttemptId(self):
+        return self.attempt_id
+
+
+def test_pmtiles_part_writer_retry_is_idempotent(zones_z8, monkeypatch,
+                                                  tmp_path):
+    """A task attempt that dies mid-stream publishes nothing and leaves no
+    temp file; its retry publishes whole part files, and the archive
+    assembled from them has the recorded bytes."""
+    from pyspark import TaskContext
+
+    # any contiguous split of the Hilbert-sorted tiles is a valid partitioning
+    table = ar._pm_sorted(zones_z8).toArrow()
+    cuts = [0, 1000, 2500, table.num_rows]
+    pieces = [table.slice(a, b - a).to_batches(max_chunksize=300)
+              for a, b in zip(cuts, cuts[1:])]
+    parts = tmp_path / "z.pmtiles.parts"
+    parts.mkdir()
+    writer = ar._pm_part_writer(str(parts))
+    ctx = []
+    monkeypatch.setattr(TaskContext, "get", lambda: ctx[-1])
+
+    def attempt(part, attempt_id, batches):
+        ctx.append(_TaskContextStub(part, attempt_id))
+        return [b.to_pylist()[0] for b in writer(batches)]
+
+    def dies_midway(batches):
+        yield from batches[:2]
+        raise RuntimeError("executor lost")
+
+    summary = attempt(0, 1, iter(pieces[0]))
+    with pytest.raises(RuntimeError, match="executor lost"):
+        attempt(1, 2, dies_midway(pieces[1]))
+    assert sorted(os.listdir(parts)) == ["part-00000.data", "part-00000.idx"]
+    summary += attempt(1, 3, iter(pieces[1]))
+    summary += attempt(2, 4, iter(pieces[2]))
+    assert sorted(os.listdir(parts)) == [
+        f"part-{i:05d}.{ext}" for i in range(3) for ext in ("data", "idx")]
+    assert [s["tiles"] for s in summary] == [1000, 1500, table.num_rows - 2500]
+
+    path = str(tmp_path / "z.pmtiles")
+    ar._pm_assemble(str(parts), summary, path, None, ar._MAX_DIR_ENTRIES,
+                    1 << 22)
+    assert _sha256(path) == RECORDED_SHA256["zones"]
+
+
+def test_content_keys_match_reference_loop():
+    """The vectorized keys equal a per-string reference: a 16-digit
+    lowercase hex hash is its own 64 bits, anything else an 8-byte
+    blake2b (wrong length, upper case, non-hex, empty)."""
+    import hashlib
+
+    import pyarrow as pa
+
+    hashes = ["0123456789abcdef", "h0", "ffffffffffffffff", "ocean",
+              "0123456789ABCDEF", "", "00000000000000zz", "0" * 15,
+              "f" * 17, "8000000000000000"]
+
+    def reference(h):
+        if len(h) == 16 and all(c in "0123456789abcdef" for c in h):
+            return int(h, 16)
+        return int.from_bytes(hashlib.blake2b(h.encode(), digest_size=8)
+                              .digest(), "big")
+
+    arr = pa.array(["pad"] + hashes).slice(1)   # a non-zero array offset
+    assert ar._content_keys(arr).tolist() == [reference(h) for h in hashes]
+
+
+def test_copy_ranges_without_copy_file_range(monkeypatch, tmp_path):
+    """Where the filesystem refuses copy_file_range, the ranges are copied
+    through user space with the same result."""
+    import errno
+
+    src = tmp_path / "src"
+    src.write_bytes(bytes(range(256)) * 4)
+    ranges = ([10, 300, 1000], [5, 200, 24])
+    want = b"".join(src.read_bytes()[o:o + n] for o, n in zip(*ranges))
+
+    def refuse(*args):
+        raise OSError(errno.EXDEV, "cross-device")
+
+    for patch in (False, True):
+        if patch:
+            monkeypatch.setattr(os, "copy_file_range", refuse)
+        dst = tmp_path / f"dst{patch}"
+        with open(dst, "wb") as f:
+            f.write(b"hdr")
+            f.flush()
+            ar._copy_ranges(f.fileno(), str(src), *ranges)
+        assert dst.read_bytes() == b"hdr" + want

@@ -119,3 +119,47 @@ def test_pipeline_cli_layerstats_without_osm(tmp_path):
     assert lines[0] == ts.HEADER.strip()
     assert len(lines) == 1 + summary["layerstats_rows"]
     assert summary["layerstats_rows"] == summary["n_tiles"]
+
+
+# SHA-256 of the decompressed TSV text, recorded from the previous writer
+# (a sampled orderBy("z", "hilbert", "layer") drained one Row at a time)
+LAYERSTATS_SHA256 = {
+    # 200 images, tileset z0-9: 1062 rows
+    "images": "e5514cce79782c88959427a44769e28a61fca05179eb4d55c48177636f3f89c1",
+    # 32 zones, zones_tileset z0-7: 1472 rows
+    "zones": "16f4a0164c6bb2a703f3644c81d272b1872db295b53365f38aff5dc06314414f",
+}
+
+
+@pytest.mark.parametrize("case", ["images", "zones"])
+def test_layerstats_text_matches_recorded(spark, case, tmp_path):
+    """The same text at shuffle partitions 4 and 9, and no part files left
+    beside the output."""
+    import hashlib
+    import os
+
+    from planetiler_spark.operators import tile_pipeline as tp
+    from planetiler_spark.sources import images as src
+
+    if case == "images":
+        tiles = tp.tileset(spark, src.images_df(spark, 200, partitions=4,
+                                                with_bytes=False),
+                           0, 9, ordered=False)
+    else:
+        tiles = tp.zones_tileset(spark, 0, 7, n_zones=32)
+    stats = ts.layer_size_stats(tiles.cache())
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    try:
+        for p in (4, 9):
+            spark.conf.set(key, str(p))
+            path = str(tmp_path / f"{case}_{p}.tsv.gz")
+            n = ts.write_layerstats(stats, path)
+            with gzip.open(path, "rb") as f:
+                text = f.read()
+            assert hashlib.sha256(text).hexdigest() == LAYERSTATS_SHA256[case]
+            assert text.count(b"\n") == 1 + n
+    finally:
+        spark.conf.set(key, old)
+        tiles.unpersist()
+    assert sorted(os.listdir(tmp_path)) == [f"{case}_4.tsv.gz", f"{case}_9.tsv.gz"]

@@ -303,8 +303,9 @@ wall {fl['wall_s']}s, {fl['n_tiles']:,} tiles ({fl['tiles_per_s']:,}/s),
 archive {fl['archive_mb']} MB ({fl['n_entries']:,} dir entries).
 Peak memory: process tree {fl['peak_tree_mb']:,} MB RSS;
 largest single process (JVM) {fl['peak_proc_mb']:,} MB VmHWM.
-Driver stays bounded: tile bytes stream via toLocalIterator, only
-directory entries + the dedup map are resident.
+Driver stays bounded: tasks write tile bytes to part files and the
+driver copies them into the archive; only directory entries + the
+remembered dedup keys are resident.
 
 ## Checkpoint/resume at the same scale ({args.buckets} buckets)
 
