@@ -32,11 +32,30 @@ MAX_ZOOM = 14
 ATTRS = ("height", "roof_color")
 
 
+def _fid(v, row_id: int) -> int:
+    """int64 feature id of a source id: an integer stays itself, a string
+    (Overture's GERS ids are hex strings) or bytes maps to the signed int64
+    of its 8-byte blake2b digest, and a missing id falls back to the row's
+    globally unique `row_id`."""
+    import hashlib
+
+    if v is None or (isinstance(v, float) and np.isnan(v)):
+        return row_id
+    if isinstance(v, str):
+        v = v.encode()
+    if isinstance(v, bytes):
+        return int.from_bytes(hashlib.blake2b(v, digest_size=8).digest(),
+                              "big", signed=True)
+    return int(v)
+
+
 def overture_features(spark: SparkSession, parquet_path: str,
                       bounds=None) -> DataFrame:
     """buildings GeoParquet -> the unified matched-feature schema. Each
     polygon's rings travel as multipolygon members — ring role assignment
-    (shells vs holes) happens in the render's assemble step."""
+    (shells vs holes) happens in the render's assemble step. Feature ids
+    come from the `id` column (see _fid), else from
+    monotonically_increasing_id, unique across partitions."""
     from ..kernels import geom as gk
     from ..sources import geo
 
@@ -52,7 +71,7 @@ def overture_features(spark: SparkSession, parquet_path: str,
         for pdf in batches:
             rows = {k: [] for k in ("fid", "layer", "kind", "min_zoom",
                                     "max_zoom", "attrs", "lons", "lats")}
-            for i, r in enumerate(pdf.itertuples(index=False)):
+            for r in pdf.itertuples(index=False):
                 typ, data = gk.parse_wkb(bytes(r.geometry))
                 if typ == "polygon":
                     rings = list(data)
@@ -68,7 +87,7 @@ def overture_features(spark: SparkSession, parquet_path: str,
                     if v is not None and not (isinstance(v, float)
                                               and np.isnan(v)):
                         attrs[c] = str(v)
-                rows["fid"].append(int(getattr(r, "id", i)))
+                rows["fid"].append(_fid(getattr(r, "id", None), r.row_id))
                 rows["layer"].append(LAYER)
                 rows["kind"].append("multipolygon")
                 rows["min_zoom"].append(MIN_ZOOM)
@@ -81,7 +100,8 @@ def overture_features(spark: SparkSession, parquet_path: str,
             yield pd.DataFrame(rows)
 
     sel = ["geometry"] + keep + (["id"] if "id" in cols else [])
-    return df.select(*sel).mapInPandas(gen, out_schema)
+    return (df.select(*sel, F.monotonically_increasing_id().alias("row_id"))
+            .mapInPandas(gen, out_schema))
 
 
 def build(spark: SparkSession, parquet_path: str, out_dir: str,

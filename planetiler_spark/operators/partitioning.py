@@ -9,7 +9,9 @@ Planetiler's tile-id space needs no sampling: ids are zoom-major with
 analytically-known extents — zoom z occupies [ZOOM_START_INDEX[z],
 ZOOM_START_INDEX[z] + 4^z) (reference geo/TileCoord.java:31-44, :86-90) —
 and a point feature appears once per zoom, so the expected row mass per
-zoom is uniform. `tile_range_boundaries` turns that into contiguous id
+zoom is uniform. PMTiles Hilbert ids are zoom-major over the same ranges
+(TileCoord.hilbertEncoded:158-161), so the same boundaries range-partition
+either order; the tile pipelines key on the Hilbert id, the archive order. `tile_range_boundaries` turns that into contiguous id
 buckets, and `partition_tokens` turns a plain hash exchange into an EXACT
 range exchange: token[i] is a long whose Murmur3 hash lands on partition i
 (HashPartitioning.partitionIdExpression = pmod(murmur3(cols), n), the same

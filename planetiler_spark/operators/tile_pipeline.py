@@ -4,12 +4,22 @@ re-expressed Spark-first (ARCHITECTURE.md:5-11 of the reference).
   phase 1 RENDER  — mapInPandas: phash -> geo-anchor -> slice into per-tile
                     fragments across zooms (FeatureRenderer.java:62-111,
                     TiledGeometry.slicePoint:245-260), emit rows keyed by the
-                    64-bit feature key (FeatureGroup.encodeKey:176-196)
+                    64-bit feature key (FeatureGroup.encodeKey:176-196) and
+                    the fragment's PMTiles Hilbert tile id
   phase 2 SORT    — the shuffle IS the external merge sort
-                    (ExternalMergeSort.java:168 -> repartitionByRange(key))
-  phase 3 EMIT    — groupBy(tile_id).applyInPandas: label-grid limit, MVT
-                    encode + gzip (VectorTile.java, TileArchiveWriter.java),
-                    content-hash for order-free tile dedup
+                    (ExternalMergeSort.java:168): an analytic range exchange
+                    on the Hilbert id (partitioning.py), sorted within
+                    partitions
+  phase 3 EMIT    — mapInArrow over consecutive same-tile runs: label-grid
+                    limit, MVT encode + gzip (VectorTile.java,
+                    TileArchiveWriter.java), content-hash for order-free
+                    tile dedup
+
+The sort key's tile field is the Hilbert id, as in the reference when it
+writes PMTiles (TileOrder.encode, FeatureGroup.java:168-196): the tileset
+leaves the reduce in total zoom-major Hilbert order with a `hilbert_id`
+column, so the PMTiles writer appends the tileset's own partitions without
+a second sort.
 
 Raster graft axis: at max zoom each image's bytes are decoded ONCE in the
 render stage, cropped to the tiles it overlaps, and shipped as per-tile PNG
@@ -19,16 +29,17 @@ reduce pastes patches into a 256x256 canvas per tile. Per-row invariant
 are exact for png and PSNR>=40dB for the lossy codec; caption equality rides
 along. `verify_patches` checks both distributed.
 
-Skew (north_rule): dense city tiles are thinned by a SALTED two-stage
-label-grid top-K (`label_grid_thin`) before the tile reduce, so no single
-pandas group explodes; shuffle partitions are explicit everywhere.
+Skew (north_rule): dense city tiles are thinned by the label-grid top-K in
+two tiers — a map-side partial cap per render batch (`_partial_thin`) and
+the exact cap inside the tile reduce — so no single tile run explodes;
+shuffle partitions are explicit everywhere.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..kernels import image as ik
@@ -39,10 +50,12 @@ from . import render as R
 
 MAX_ZOOM = 14
 FEATURES_SCHEMA = ("key long, tile_id long, zoom int, ex int, ey int, "
-                   "image_id string, caption string, sort_key int")
+                   "image_id string, caption string, sort_key int, "
+                   "hilbert_id long")
 PATCH_SCHEMA = ("tile_id long, image_id string, px0 int, py0 int, "
                 "pw int, ph int, patch binary, caption string, fmt string")
-TILE_SCHEMA = "tile_id long, zoom int, x int, y int, n_features long, tile_bytes binary, content_hash string"
+TILE_SCHEMA = ("tile_id long, zoom int, x int, y int, n_features long, "
+               "tile_bytes binary, content_hash string, hilbert_id long")
 RASTER_SCHEMA = "tile_id long, zoom int, x int, y int, n_images long, raster binary"
 VERIFY_SCHEMA = ("image_id string, tile_id long, psnr double, pixels_ok boolean, "
                  "caption_ok boolean")
@@ -82,18 +95,43 @@ def _partial_thin(out: pd.DataFrame, thin_limit: int, cell: int) -> pd.DataFrame
     return out[keep]
 
 
+def _hilbert_ids(tile_ids: np.ndarray) -> np.ndarray:
+    """PMTiles Hilbert id of each TMS tile id (same tile, archive order)."""
+    return tm.hilbert_encode(*tm.tile_decode(tile_ids))
+
+
+def _render_batch(pdf: pd.DataFrame, zooms: range, thin_limit: int | None,
+                  cell: int) -> pd.DataFrame:
+    """One images batch -> per-(feature, zoom, tile) rows with their Hilbert
+    ids, after the map-side partial label-grid cap (shared by both
+    transports)."""
+    ph = pdf["phash"].to_numpy()
+    wx, wy = src.anchor_world(ph)
+    sort_key = (ph % 1000).astype(np.int64)  # deterministic draw order
+    out = R.render_points_pdf(pdf, wx, wy, zooms, layer=0, sort_key=sort_key)
+    idx = out.pop("feature_id").to_numpy()
+    out["image_id"] = pdf["image_id"].to_numpy()[idx]
+    out["caption"] = pdf["caption"].to_numpy()[idx]
+    out["sort_key"] = sort_key[idx]
+    if thin_limit is not None:
+        out = _partial_thin(out, thin_limit, cell)
+    out["hilbert_id"] = _hilbert_ids(out["tile_id"].to_numpy())
+    return out
+
+
 def render_features(images: DataFrame, min_zoom: int = 0,
                     max_zoom: int = MAX_ZOOM, thin_limit: int | None = None,
                     grid_px: int = 32, counters=None,
                     partitions: int | None = None) -> DataFrame:
-    """images -> per-(feature, zoom, tile) rows in the sorted-KV model.
-    thin_limit applies the map-side partial label-grid cap (see _partial_thin).
+    """images -> per-(feature, zoom, tile) rows in the sorted-KV model, each
+    with its PMTiles `hilbert_id`. thin_limit applies the map-side partial
+    label-grid cap (see _partial_thin).
 
     With `partitions` set, each row also carries its analytic range-exchange
-    token (partitioning.py) so the ROW-path tile shuffle doubles as the
-    archive-order sort — the same trick the packed path and the zones path
-    use, eliminating the output repartitionByRange whose boundary sampling
-    re-executes this whole stage (measured 5.5s vs 3.8s at sf0.1)."""
+    token over the Hilbert id (partitioning.py), so the tile shuffle is also
+    the archive-order sort; the output repartitionByRange it replaces
+    re-executed this whole stage to sample boundaries (measured 5.5s vs
+    3.8s at sf0.1)."""
     from . import partitioning as pt
 
     zooms = range(min_zoom, max_zoom + 1)
@@ -111,18 +149,9 @@ def render_features(images: DataFrame, min_zoom: int = 0,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ph = pdf["phash"].to_numpy()
-            wx, wy = src.anchor_world(ph)
-            sort_key = (ph % 1000).astype(np.int64)  # deterministic draw order
-            out = R.render_points_pdf(pdf, wx, wy, zooms, layer=0, sort_key=sort_key)
-            idx = out.pop("feature_id").to_numpy()
-            out["image_id"] = pdf["image_id"].to_numpy()[idx]
-            out["caption"] = pdf["caption"].to_numpy()[idx]
-            out["sort_key"] = sort_key[idx]
-            if thin_limit is not None:
-                out = _partial_thin(out, thin_limit, cell)
+            out = _render_batch(pdf, zooms, thin_limit, cell)
             if tok_name is not None:
-                bk = np.searchsorted(boundaries, out["tile_id"].to_numpy(),
+                bk = np.searchsorted(boundaries, out["hilbert_id"].to_numpy(),
                                      side="right") - 1
                 out[tok_name] = bucket_tok[bk]
             if counters is not None:  # one accumulator add per Arrow batch
@@ -156,8 +185,9 @@ def _string_buffers(arr):
 def _pack_feature_runs(out: pd.DataFrame, boundaries: np.ndarray,
                        bucket_tok: np.ndarray,
                        tok_name: str = "tok") -> pd.DataFrame:
-    """Pack one render batch into ONE binary row per contiguous-range bucket:
-    [n u32 | tile_id i64[n] | ex i32[n] | ey i32[n] | sort_key i32[n] |
+    """Pack one render batch into ONE binary row per contiguous-range bucket
+    of Hilbert ids:
+    [n u32 | hilbert_id i64[n] | ex i32[n] | ey i32[n] | sort_key i32[n] |
      id_off u32[n+1] | id_bytes | cap_off u32[n+1] | cap_bytes].
 
     This is the transport fix for the measured floor of the tile pipeline:
@@ -173,11 +203,11 @@ def _pack_feature_runs(out: pd.DataFrame, boundaries: np.ndarray,
         return pd.DataFrame({"bucket": pd.Series([], dtype="int32"),
                              tok_name: pd.Series([], dtype="int64"),
                              "blob": pd.Series([], dtype=object)})
-    tids = out["tile_id"].to_numpy()
-    bucket = np.searchsorted(boundaries, tids, side="right") - 1
+    hids = out["hilbert_id"].to_numpy()
+    bucket = np.searchsorted(boundaries, hids, side="right") - 1
     order = np.argsort(bucket, kind="stable")
     b_s = bucket[order]
-    tids_s = np.ascontiguousarray(tids[order], dtype="<i8")
+    hids_s = np.ascontiguousarray(hids[order], dtype="<i8")
     ex_s = np.ascontiguousarray(out["ex"].to_numpy()[order], dtype="<i4")
     ey_s = np.ascontiguousarray(out["ey"].to_numpy()[order], dtype="<i4")
     sk_s = np.ascontiguousarray(out["sort_key"].to_numpy()[order], dtype="<i4")
@@ -192,7 +222,7 @@ def _pack_feature_runs(out: pd.DataFrame, boundaries: np.ndarray,
     for s, e in zip(starts, ends):
         blobs.append(b"".join((
             np.uint32(e - s).tobytes(),
-            tids_s[s:e].tobytes(),
+            hids_s[s:e].tobytes(),
             ex_s[s:e].tobytes(), ey_s[s:e].tobytes(), sk_s[s:e].tobytes(),
             np.ascontiguousarray(id_off[s:e + 1] - id_off[s], dtype="<u4").tobytes(),
             id_data[id_off[s]:id_off[e]].tobytes(),
@@ -211,7 +241,7 @@ def _unpack_blob(mv):
     import pyarrow as pa
     n = int(np.frombuffer(mv, np.uint32, 1)[0])
     o = 4
-    tid = np.frombuffer(mv, "<i8", n, o); o += 8 * n
+    hid = np.frombuffer(mv, "<i8", n, o); o += 8 * n
     ex = np.frombuffer(mv, "<i4", n, o); o += 4 * n
     ey = np.frombuffer(mv, "<i4", n, o); o += 4 * n
     sk = np.frombuffer(mv, "<i4", n, o); o += 4 * n
@@ -228,7 +258,7 @@ def _unpack_blob(mv):
 
     ids, o = strings(o)
     caps, _ = strings(o)
-    return tid, ex, ey, sk, ids, caps
+    return hid, ex, ey, sk, ids, caps
 
 
 def render_features_packed(images: DataFrame, min_zoom: int = 0,
@@ -238,7 +268,7 @@ def render_features_packed(images: DataFrame, min_zoom: int = 0,
                            buckets_per_partition: int = 8) -> DataFrame:
     """render_features with bucket-packed transport: same per-batch render +
     map-side partial thin, then each batch's features leave the Python worker
-    as one row per analytic tile-id-range bucket (see partitioning.py).
+    as one row per analytic Hilbert-id-range bucket (see partitioning.py).
     `partitions` MUST match the value passed to encode_vector_tiles_packed
     (the partition tokens are baked per p)."""
     from . import partitioning as pt
@@ -256,16 +286,7 @@ def render_features_packed(images: DataFrame, min_zoom: int = 0,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ph = pdf["phash"].to_numpy()
-            wx, wy = src.anchor_world(ph)
-            sort_key = (ph % 1000).astype(np.int64)
-            out = R.render_points_pdf(pdf, wx, wy, zooms, layer=0, sort_key=sort_key)
-            idx = out.pop("feature_id").to_numpy()
-            out["image_id"] = pdf["image_id"].to_numpy()[idx]
-            out["caption"] = pdf["caption"].to_numpy()[idx]
-            out["sort_key"] = sort_key[idx]
-            if thin_limit is not None:
-                out = _partial_thin(out, thin_limit, cell)
+            out = _render_batch(pdf, zooms, thin_limit, cell)
             if counters is not None:
                 counters.add("features", len(out))
             yield _pack_feature_runs(out, boundaries, bucket_tok, tok_name)
@@ -280,13 +301,14 @@ def encode_vector_tiles_packed(packed: DataFrame, partitions: int | None = None,
     """Tile reduce over bucket-packed features. The exchange is a plain hash
     shuffle on the partition TOKEN (exact bucket->partition placement, see
     partitioning.partition_tokens), so the output is in TOTAL zoom-major
-    tile order — partitions ascend with tile-id range, buckets ascend within
-    a partition, tiles ascend within a bucket — and the sampling double-
-    compute of repartitionByRange never happens. Per bucket the features are
-    re-sorted (tile_id, sort_key, image_id) — the same total order the row
-    path's sortWithinPartitions("tile_id", "key", "image_id") produces (key
-    is monotone in (tile, layer=0, sort_key)) — then encoded by the shared
-    _encode_tile_runs, so tiles are byte-identical to the row path."""
+    Hilbert order — partitions ascend with Hilbert-id range, buckets ascend
+    within a partition, tiles ascend within a bucket — and the sampling
+    double-compute of repartitionByRange never happens. Per bucket the
+    features are re-sorted (hilbert_id, sort_key, image_id) — the same total
+    order the row path's sortWithinPartitions("hilbert_id", "key",
+    "image_id") produces (key is monotone in (tile, layer=0, sort_key)) —
+    then encoded by the shared _encode_tile_runs, so tiles are
+    byte-identical to the row path."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -303,21 +325,21 @@ def encode_vector_tiles_packed(packed: DataFrame, partitions: int | None = None,
     def reduce_bucket(blob_views):
         parts = [_unpack_blob(mv) for mv in blob_views]
         if len(parts) == 1:
-            tid, ex, ey, sk, ids, caps = parts[0]
+            hid, ex, ey, sk, ids, caps = parts[0]
         else:
-            tid = np.concatenate([x[0] for x in parts])
+            hid = np.concatenate([x[0] for x in parts])
             ex = np.concatenate([x[1] for x in parts])
             ey = np.concatenate([x[2] for x in parts])
             sk = np.concatenate([x[3] for x in parts])
             ids = pa.concat_arrays([x[4] for x in parts])
             caps = pa.concat_arrays([x[5] for x in parts])
         order = pc.sort_indices(
-            pa.table({"t": tid, "s": sk, "i": ids}),
+            pa.table({"t": hid, "s": sk, "i": ids}),
             sort_keys=[("t", "ascending"), ("s", "ascending"),
                        ("i", "ascending")])
         idx = order.to_numpy()
         return _encode_tile_runs(
-            tid[idx].astype(np.int64), ex[idx].astype(np.int64),
+            hid[idx].astype(np.int64), ex[idx].astype(np.int64),
             ey[idx].astype(np.int64), sk[idx].astype(np.int64),
             ids.take(order), caps.take(order), thin_limit, cell, counters)
 
@@ -400,40 +422,6 @@ def render_patches(images: DataFrame, zoom: int = MAX_ZOOM) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# skew: salted two-stage label-grid thinning (north_rule)
-# ---------------------------------------------------------------------------
-
-def label_grid_thin(feats: DataFrame, limit: int = 64, grid_px: int = 32,
-                    salt_buckets: int = 8) -> DataFrame:
-    """Keep the first `limit` features per (tile, label-grid cell) in sortKey
-    order (FeatureGroup.TileFeatures.add:616-637). Two-stage with salting:
-    stage 1 ranks within (tile, cell, salt) and keeps `limit` per salt — a
-    partial top-K that caps any single window partition even on a city tile
-    with 10^6 features; stage 2 ranks the survivors exactly. Deterministic:
-    full tie-breakers (sort_key, image_id) at both stages."""
-    cell = grid_px * mvt.EXTENT // 256
-    # true floor division (matches _partial_thin / the in-reduce cap, which use
-    # `//`): buffer-zone features with negative ex/ey must land in cell -1, not
-    # the cast-truncated cell 0, or the three thinning tiers disagree
-    gx = F.floor(F.col("ex") / cell).cast("long")
-    gy = F.floor(F.col("ey") / cell).cast("long")
-    salt = F.pmod(F.xxhash64("image_id"), F.lit(salt_buckets))
-    stage1 = (feats
-              .withColumn("gx", gx).withColumn("gy", gy)
-              .withColumn("salt", salt)
-              .withColumn("rn1", F.row_number().over(
-                  W.partitionBy("tile_id", "gx", "gy", "salt")
-                  .orderBy("sort_key", "image_id")))
-              .filter(F.col("rn1") <= limit))
-    stage2 = (stage1
-              .withColumn("rn", F.row_number().over(
-                  W.partitionBy("tile_id", "gx", "gy")
-                  .orderBy("sort_key", "image_id")))
-              .filter(F.col("rn") <= limit))
-    return stage2.drop("gx", "gy", "salt", "rn1", "rn")
-
-
-# ---------------------------------------------------------------------------
 # phase 3: tile reduce
 # ---------------------------------------------------------------------------
 
@@ -445,7 +433,10 @@ def _grouped_by_tile(df: DataFrame, partitions: int | None, order_cols: list[str
     batches grouping CONSECUTIVE same-tile runs — exactly
     FeatureGroup.groupIntoTiles:339-378 — with carry-over across batch
     boundaries. Orders of magnitude less per-group overhead than
-    groupBy().applyInPandas at millions of small tiles."""
+    groupBy().applyInPandas at millions of small tiles.
+
+    The tile key is `hilbert_id` when the input carries one (archive order),
+    else `tile_id` (TMS order)."""
     p = partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     # a `tok` column (hash-preimage partition token over analytic tile-id
     # range buckets, operators/partitioning.py) turns this hash exchange
@@ -454,9 +445,10 @@ def _grouped_by_tile(df: DataFrame, partitions: int | None, order_cols: list[str
     # upstream plan) is ever needed downstream
     from . import partitioning as pt
 
-    key = pt.resolve_token_col(df.columns, int(p)) or "tile_id"
+    tile_col = "hilbert_id" if "hilbert_id" in df.columns else "tile_id"
+    key = pt.resolve_token_col(df.columns, int(p)) or tile_col
     shuffled = (df.repartition(int(p), key)
-                .sortWithinPartitions("tile_id", *order_cols))
+                .sortWithinPartitions(tile_col, *order_cols))
 
     def stream(batches):
         # Carry-over across Arrow batch boundaries is O(total): the trailing
@@ -468,11 +460,11 @@ def _grouped_by_tile(df: DataFrame, partitions: int | None, order_cols: list[str
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            tids = pdf["tile_id"].to_numpy()
+            tids = pdf[tile_col].to_numpy()
             # guard the sortedness precondition: searchsorted on an unsorted
             # tids array would silently mis-group instead of erroring
             if len(tids) > 1 and not np.all(tids[1:] >= tids[:-1]):
-                raise ValueError("_grouped_by_tile: batch not sorted by tile_id "
+                raise ValueError(f"_grouped_by_tile: batch not sorted by {tile_col} "
                                  "(upstream sortWithinPartitions missing?)")
             if held and held_tile != tids[0]:
                 yield from reduce_fn(pd.concat(held, ignore_index=True)
@@ -514,35 +506,35 @@ def _cumcount(keys: np.ndarray) -> np.ndarray:
     return rank
 
 
-def _encode_tile_runs(tids, ex, ey, sk, ids, caps, thin_limit, cell, counters):
+def _encode_tile_runs(hids, ex, ey, sk, ids, caps, thin_limit, cell, counters):
     """Shared encode tail of both vector-tile reduce paths: label-grid cap
     (in sortKey order — FeatureGroup.TileFeatures.add:616-637), consecutive
     tile runs, PointTileStream encode. Inputs MUST already be sorted by
-    (tile_id, sort_key, image_id); returns a RecordBatch or None."""
+    (hilbert_id, sort_key, image_id); returns a RecordBatch (TILE_SCHEMA,
+    tiles in Hilbert order) or None."""
     import hashlib
     import pyarrow as pa
     if thin_limit is not None:
         # vectorized label-grid cap: rows are already in (tile, sortKey)
         # order, so rank-within-(tile,cell) = order of appearance
-        cell_key = (tids << 16) ^ (((ex // cell) & 0xFF) << 8) ^ ((ey // cell) & 0xFF)
-        keep = _cumcount(cell_key) < thin_limit
+        keep = _cumcount(_cell_key(hids, ex, ey, cell)) < thin_limit
         if not keep.all():
             idx = np.nonzero(keep)[0]
-            tids, ex, ey, sk = tids[idx], ex[idx], ey[idx], sk[idx]
+            hids, ex, ey, sk = hids[idx], ex[idx], ey[idx], sk[idx]
             ids = ids.take(pa.array(idx))
             caps = caps.take(pa.array(idx))
-    n = len(tids)
+    n = len(hids)
     if n == 0:
         return None
-    starts = np.nonzero(np.diff(tids, prepend=tids[0] - 1))[0]
+    starts = np.nonzero(np.diff(hids, prepend=hids[0] - 1))[0]
     ends = np.append(starts[1:], n)
-    xs, ys, zs = tm.tile_decode(tids[starts])
+    xs, ys, zs = tm.hilbert_decode(hids[starts])
     stream = mvt.PointTileStream(ex, ey, sk, ids, caps)
     blobs = list(stream.encode_tiles(starts, ends))
     if counters is not None:  # per reduce call, not per tile
         counters.add("tiles", len(starts))
     return pa.RecordBatch.from_arrays([
-        pa.array(tids[starts], type=pa.int64()),
+        pa.array(tm.tile_encode(xs, ys, zs), type=pa.int64()),
         pa.array(zs.astype(np.int32), type=pa.int32()),
         pa.array(xs.astype(np.int32), type=pa.int32()),
         pa.array(ys.astype(np.int32), type=pa.int32()),
@@ -550,8 +542,9 @@ def _encode_tile_runs(tids, ex, ey, sk, ids, caps, thin_limit, cell, counters):
         pa.array(blobs, type=pa.binary()),
         pa.array([hashlib.sha256(b).hexdigest()[:16] for b in blobs],
                  type=pa.string()),
+        pa.array(hids[starts], type=pa.int64()),
     ], names=["tile_id", "zoom", "x", "y", "n_features",
-              "tile_bytes", "content_hash"])
+              "tile_bytes", "content_hash", "hilbert_id"])
 
 
 def encode_vector_tiles(feats: DataFrame, partitions: int | None = None,
@@ -568,24 +561,26 @@ def encode_vector_tiles(feats: DataFrame, partitions: int | None = None,
     thin_limit: label-grid density cap applied INSIDE the reduce (rows arrive
     sorted by key, i.e. sortKey order — FeatureGroup.TileFeatures.add:616-637
     drops beyond-limit features exactly like this, during tile assembly).
-    Costs no extra shuffle; use the standalone `label_grid_thin` (salted
-    windows) instead when data must shrink BEFORE the shuffle."""
+    Costs no extra shuffle.
+
+    Rows are grouped on `hilbert_id` (render_features emits it), so tiles
+    leave in Hilbert order within each partition."""
     import pyarrow as pa
 
     from . import partitioning as pt
     cell = grid_px * mvt.EXTENT // 256
     p = partitions or feats.sparkSession.conf.get("spark.sql.shuffle.partitions")
     # a tok column (render_features(partitions=...)) turns this hash exchange
-    # into an exact RANGE exchange: partitions ascend with tile-id range, so
-    # the per-partition sort below yields TOTAL zoom-major order for free
-    key = pt.resolve_token_col(feats.columns, int(p)) or "tile_id"
+    # into an exact RANGE exchange: partitions ascend with Hilbert-id range,
+    # so the per-partition sort below yields TOTAL zoom-major order for free
+    key = pt.resolve_token_col(feats.columns, int(p)) or "hilbert_id"
     shuffled = (feats.repartition(int(p), key)
-                .sortWithinPartitions("tile_id", "key", "image_id"))
+                .sortWithinPartitions("hilbert_id", "key", "image_id"))
 
     def reduce_tiles(chunks: list[pa.RecordBatch]):
         tbl = pa.Table.from_batches(chunks)
         return _encode_tile_runs(
-            tbl.column("tile_id").to_numpy(),
+            tbl.column("hilbert_id").to_numpy(),
             tbl.column("ex").to_numpy().astype(np.int64),
             tbl.column("ey").to_numpy().astype(np.int64),
             tbl.column("sort_key").to_numpy().astype(np.int64),
@@ -600,10 +595,10 @@ def encode_vector_tiles(feats: DataFrame, partitions: int | None = None,
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            tids = rb.column(rb.schema.get_field_index("tile_id")).to_numpy()
+            tids = rb.column("hilbert_id").to_numpy()
             if len(tids) > 1 and not np.all(tids[1:] >= tids[:-1]):
                 raise ValueError("encode_vector_tiles: batch not sorted by "
-                                 "tile_id (upstream sortWithinPartitions missing?)")
+                                 "hilbert_id (upstream sortWithinPartitions missing?)")
             if held and held_tile != tids[0]:
                 out = reduce_tiles(held)
                 if out is not None:
@@ -851,9 +846,10 @@ def render_zone_features(spark: SparkSession, min_zoom: int = 0,
                          range_partitions: int | None = None,
                          zones_pdf=None) -> DataFrame:
     """zones polygons -> per-tile clipped/simplified fragments + interior fill
-    rows across zooms, in the sorted-KV model. Each row carries its analytic
-    range-exchange token (partitioning.py) so the tile shuffle doubles as the
-    archive-order sort — no repartitionByRange sampling pass downstream."""
+    rows across zooms, in the sorted-KV model. Each row carries its PMTiles
+    `hilbert_id` and the analytic range-exchange token over it
+    (partitioning.py), so the tile shuffle doubles as the archive-order
+    sort — no repartitionByRange sampling pass downstream."""
     from . import partitioning as pt
     from ..kernels import geom as gk
     from ..sources import images as src
@@ -887,15 +883,17 @@ def render_zone_features(spark: SparkSession, min_zoom: int = 0,
             out = pd.DataFrame(rows)
             if len(out):
                 out["zoom"] = out["zoom"].astype("int32")
-                bk = np.searchsorted(boundaries, out["tile_id"].to_numpy(),
+                out["hilbert_id"] = _hilbert_ids(out["tile_id"].to_numpy())
+                bk = np.searchsorted(boundaries, out["hilbert_id"].to_numpy(),
                                      side="right") - 1
                 out[tok_name] = bucket_tok[bk]
             else:
+                out["hilbert_id"] = pd.Series([], dtype="int64")
                 out[tok_name] = pd.Series([], dtype="int64")
             yield out
 
     return zones.repartition(partitions, "zone_id").mapInPandas(
-        gen, f"{ZONE_FEATURES_COLS}, {tok_name} long")
+        gen, f"{ZONE_FEATURES_COLS}, hilbert_id long, {tok_name} long")
 
 
 def encode_zone_tiles(feats: DataFrame, partitions: int | None = None,
@@ -915,10 +913,11 @@ def encode_zone_tiles(feats: DataFrame, partitions: int | None = None,
     buf_px = R.BUFFER_PX * mvt.EXTENT / 256.0
 
     def reduce_tiles(pdf: pd.DataFrame):
-        tids = pdf["tile_id"].to_numpy()
-        starts = np.nonzero(np.diff(tids, prepend=tids[0] - 1))[0]
-        ends = np.append(starts[1:], len(tids))
-        xs, ys, zs = tm.tile_decode(tids[starts])
+        hids = pdf["hilbert_id"].to_numpy()
+        starts = np.nonzero(np.diff(hids, prepend=hids[0] - 1))[0]
+        ends = np.append(starts[1:], len(hids))
+        xs, ys, zs = tm.hilbert_decode(hids[starts])
+        tids = tm.tile_encode(xs, ys, zs)
         fills = pdf["fill"].to_numpy()
         parts_a = pdf["parts"].to_numpy()
         zid_a = pdf["zone_id"].to_numpy()
@@ -942,7 +941,7 @@ def encode_zone_tiles(feats: DataFrame, partitions: int | None = None,
                 ring_feat.append(i)
         goff, gflat = mvt.polygon_geom_stream(rings, ring_feat, nf)
         out = {k: [] for k in ("tile_id", "zoom", "x", "y", "n_features",
-                               "tile_bytes", "content_hash")}
+                               "tile_bytes", "content_hash", "hilbert_id")}
         for g, (s, e) in enumerate(zip(starts, ends)):
             layer = mvt.LayerBuilder("zones")
             for i in range(s, e):
@@ -954,13 +953,14 @@ def encode_zone_tiles(feats: DataFrame, partitions: int | None = None,
                     layer.add_feature_rawgeom(None, mvt.GEOM_POLYGON,
                                               gflat[goff[i]:goff[i + 1]], attrs)
             blob = mvt.encode_tile([layer])
-            out["tile_id"].append(int(tids[s]))
+            out["tile_id"].append(int(tids[g]))
             out["zoom"].append(int(zs[g]))
             out["x"].append(int(xs[g]))
             out["y"].append(int(ys[g]))
             out["n_features"].append(e - s)
             out["tile_bytes"].append(blob)
             out["content_hash"].append(hashlib.sha256(blob).hexdigest()[:16])
+            out["hilbert_id"].append(int(hids[s]))
         yield pd.DataFrame(out)
 
     shuffled, stream = _grouped_by_tile(feats, partitions,
@@ -971,7 +971,9 @@ def encode_zone_tiles(feats: DataFrame, partitions: int | None = None,
 def zones_tileset(spark: SparkSession, min_zoom: int = 0, max_zoom: int = 8,
                   shuffle_partitions: int | None = None,
                   n_zones: int | None = None, zones_pdf=None) -> DataFrame:
-    """Full polygon render+encode pipeline. Measured at scale (round 3,
+    """Full polygon render+encode pipeline -> vector tiles table in
+    zoom-major Hilbert order, with a `hilbert_id` column (the PMTiles tile
+    id). Measured at scale (round 3,
     local[16], one window): 50,000 polygons z0-10 -> 75.1M tile fragments /
     1.29M tiles in 506s = 9.3k features/s/core — within 2x of the point
     path's per-feature rate in the same round's scaling runs (18.7k/core),
@@ -984,9 +986,9 @@ def zones_tileset(spark: SparkSession, min_zoom: int = 0, max_zoom: int = 8,
                              partitions=shuffle_partitions or 16,
                              range_partitions=p, zones_pdf=zones_pdf),
         partitions=p)
-    # already in total zoom-major order: the tile shuffle rode the analytic
-    # range tokens, so the old repartitionByRange (whose boundary sampling
-    # re-executed this whole pipeline) is gone
+    # already in total zoom-major Hilbert order: the tile shuffle rode the
+    # analytic range tokens, so the old repartitionByRange (whose boundary
+    # sampling re-executed this whole pipeline) is gone
     return tiles
 
 
@@ -1011,54 +1013,38 @@ def _packed_default() -> bool:
 
 def tileset(spark: SparkSession, images: DataFrame, min_zoom: int = 0,
             max_zoom: int = MAX_ZOOM, shuffle_partitions: int | None = None,
-            thin_limit: int | None = 64, ordered: bool = True,
-            pre_thin: bool = False, counters=None,
+            thin_limit: int | None = 64, counters=None,
             packed: bool | None = None) -> DataFrame:
-    """images -> vector tiles table, zoom-major tile order (phase 1+2+3).
+    """images -> vector tiles table in zoom-major Hilbert order, with a
+    `hilbert_id` column (the PMTiles tile id) — phase 1+2+3 over ONE
+    exchange. write_pmtiles appends these partitions as they are.
 
-    Density thinning (thin_limit) normally runs inside the tile reduce (zero
-    extra shuffles). pre_thin=True additionally runs the salted two-stage
-    window BEFORE the shuffle — worth it only when dense tiles dominate
-    shuffle volume (extreme skew at production scale); it needs row-shaped
-    features, so it forces the row path.
+    Density thinning (thin_limit) runs map-side per render batch and exactly
+    inside the tile reduce (zero extra shuffles).
 
     packed=True moves features across the shuffle as bucket-packed binary
     rows on an analytic range partitioning (partitioning.py): ~50x fewer
-    rows through Spark's per-row UnsafeRow<->Arrow conversion AND the output
-    lands in total zoom-major order for free, replacing the
-    repartitionByRange(tile_id) whose boundary sampling re-executed the
-    entire pipeline (measured: 5.5s -> 3.8s at sf0.1 before packing even
-    starts helping). Tiles are byte-identical between both paths
-    (test_packed_transport_equals_row_path). Default: see _packed_default."""
+    rows through Spark's per-row UnsafeRow<->Arrow conversion. Both paths
+    ride the same range tokens, so the output lands in total order with no
+    repartitionByRange (whose boundary sampling re-executed the entire
+    pipeline: 5.5s -> 3.8s at sf0.1). Tiles are byte-identical between both
+    paths (test_packed_transport_equals_row_path). Default: see
+    _packed_default."""
     if packed is None:
         packed = _packed_default()
-    if packed and not pre_thin:
-        p = int(shuffle_partitions
-                or spark.conf.get("spark.sql.shuffle.partitions"))
+    p = int(shuffle_partitions
+            or spark.conf.get("spark.sql.shuffle.partitions"))
+    if packed:
         feats = render_features_packed(images, min_zoom, max_zoom,
                                        thin_limit=thin_limit,
                                        counters=counters, partitions=p)
-        # already in total zoom-major order (exact range exchange)
         return encode_vector_tiles_packed(feats, partitions=p,
                                           thin_limit=thin_limit,
                                           counters=counters)
-    p = int(shuffle_partitions
-            or spark.conf.get("spark.sql.shuffle.partitions"))
-    # ordered row path rides the analytic range tokens through the one tile
-    # shuffle (same as the packed/zones paths) — the old output
-    # repartitionByRange's boundary sampling re-executed the entire render
-    use_tok = ordered and not pre_thin
     feats = render_features(images, min_zoom, max_zoom, thin_limit=thin_limit,
-                            counters=counters,
-                            partitions=p if use_tok else None)
-    if pre_thin and thin_limit is not None:
-        feats = label_grid_thin(feats, limit=thin_limit)
-    tiles = encode_vector_tiles(feats, partitions=p,
-                                thin_limit=thin_limit, counters=counters)
-    if ordered and not use_tok:
-        # pre_thin fallback: zoom-major order via a (tiny) output range sort
-        tiles = tiles.repartitionByRange(16, "tile_id").sortWithinPartitions("tile_id")
-    return tiles
+                            counters=counters, partitions=p)
+    return encode_vector_tiles(feats, partitions=p,
+                               thin_limit=thin_limit, counters=counters)
 
 
 def raster_tileset(spark: SparkSession, images: DataFrame,

@@ -15,13 +15,16 @@ Reference parity (SURVEY §2.2):
 
 PMTiles is assembled on the executors, the shape of the reference's emit
 phase (tiles encoded on every core, one ordered writer that only appends,
-TileArchiveWriter.java:128-207). One job sorts the tiles into Hilbert order
-and each task writes its partition to two part files under `<path>.parts/`:
-the partition's blobs (each stored once per partition) and a raw int64 index
-of four values per tile. The driver reads the indexes one partition at a
-time, dedups and run-length-encodes them with whole-array numpy, writes
-header and directories, and builds the data section by copying byte ranges
-out of the part files (`os.copy_file_range`); it never holds a tile's bytes.
+TileArchiveWriter.java:128-207). The engine's tilesets leave their one tile
+exchange already in Hilbert order (a `hilbert_id` column says so), so each
+task writes the tileset's own partition, with no second sort, to two part
+files under `<path>.parts/`: the partition's blobs (each stored once per
+partition) and a raw int64 index of four values per tile. Frames in any
+other order are range-sorted first. The driver reads the indexes one
+partition at a time, dedups and run-length-encodes them with whole-array
+numpy, writes header and directories, and builds the data section by
+copying byte ranges out of the part files (`os.copy_file_range`); it never
+holds a tile's bytes.
 MBTiles and the proto stream have one writer each (sqlite, a stream) and
 drain on the driver through `_drain`: executors frame each partition's
 record batches, in order, as Arrow IPC chunks of about `_CHUNK_BYTES`, read
@@ -334,9 +337,11 @@ def _pm_build_dirs(entries, max_dir_entries: int = _MAX_DIR_ENTRIES):
 def _hilbert_tokens(spark, p: int):
     """(token column name, PMTiles tile ids -> int64 tokens) of the analytic
     range exchange (operators/partitioning.py): `repartition(p, token)`
-    puts lower ids on lower partitions. The writers cannot know their
-    input's zooms, so buckets span every legal zoom; their balance sets
-    only the parallelism, never the order."""
+    puts lower ids on lower partitions. The tile pipelines build the same
+    tokens over their own zoom range; this writer-side twin serves frames
+    that arrive out of Hilbert order, and since it cannot know their
+    zooms, its buckets span every legal zoom; their balance sets only the
+    parallelism, never the order."""
     from ..operators import partitioning as pt
 
     boundaries, pid = pt.tile_range_partitioning(0, tm.MAX_MAXZOOM, p)
@@ -347,12 +352,22 @@ def _hilbert_tokens(spark, p: int):
     return pt.token_col(p), tokens
 
 
+def _pm_tile_ids(b) -> np.ndarray:
+    """PMTiles Hilbert id of each tile of a record batch (zoom, x, y)."""
+    return tm.hilbert_encode(b.column("x").to_numpy(), b.column("y").to_numpy(),
+                             b.column("zoom").to_numpy())
+
+
+_PM_COLS = ("zoom", "x", "y", "tile_bytes", "content_hash")
+
+
 def _pm_sorted(tiles_df):
-    """tiles_df (zoom, x, y, tile_bytes, content_hash) -> (hilbert_id, zoom,
-    tile_bytes, content_hash) in total Hilbert order: partition i holds
-    lower ids than partition i+1 and each partition is sorted. One
-    mapInArrow computes each tile's id and range token, so a plain hash
-    exchange on the token is the range exchange (no sampling job)."""
+    """tiles_df (zoom, x, y, tile_bytes, content_hash) -> the same columns in
+    total Hilbert order: partition i holds lower ids than partition i+1 and
+    each partition is sorted. One mapInArrow computes each tile's id and
+    range token, so a plain hash exchange on the token is the range
+    exchange (no sampling job). write_pmtiles needs this only for frames
+    that are not already in Hilbert order."""
     from pyspark.sql import functions as F
 
     spark = tiles_df.sparkSession
@@ -363,22 +378,20 @@ def _pm_sorted(tiles_df):
         import pyarrow as pa
 
         for b in batches:
-            hid = tm.hilbert_encode(b.column(1).to_numpy(),
-                                    b.column(2).to_numpy(),
-                                    b.column(0).to_numpy())
+            hid = _pm_tile_ids(b)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(hid, pa.int64()), b.column(0), b.column(3),
-                 b.column(4), pa.array(tokens(hid), pa.int64())],
-                ["hilbert_id", "zoom", "tile_bytes", "content_hash", tok])
+                [pa.array(hid, pa.int64()), *b.columns,
+                 pa.array(tokens(hid), pa.int64())],
+                ["hilbert_id", *_PM_COLS, tok])
 
     return (tiles_df
-            .select(F.col("zoom").cast("int"), F.col("x").cast("long"),
-                    F.col("y").cast("long"), "tile_bytes", "content_hash")
-            .mapInArrow(keyed, "hilbert_id long, zoom int, tile_bytes binary, "
-                               f"content_hash string, {tok} long")
+            .select(F.col("zoom").cast("int"), F.col("x").cast("int"),
+                    F.col("y").cast("int"), "tile_bytes", "content_hash")
+            .mapInArrow(keyed, "hilbert_id long, zoom int, x int, y int, "
+                               f"tile_bytes binary, content_hash string, {tok} long")
             .repartition(p, tok)
             .sortWithinPartitions("hilbert_id")
-            .drop(tok))
+            .select(*_PM_COLS))
 
 
 # hex digit value of each byte; -1 for anything but 0-9 and a-f
@@ -411,15 +424,20 @@ def _content_keys(hashes) -> np.ndarray:
     return keys
 
 
-_PM_PART_SCHEMA = "part long, tiles long, data_bytes long, minzoom long, maxzoom long"
+_PM_PART_SCHEMA = ("part long, tiles long, data_bytes long, minzoom long, "
+                   "maxzoom long, first_id long, last_id long, "
+                   "increasing boolean")
 
 
 def _pm_part_writer(parts_dir: str):
-    """mapInArrow function over one Hilbert-sorted partition (hilbert_id,
-    zoom, tile_bytes, content_hash). Writes part-NNNNN.data, the
+    """mapInArrow function over one partition of (zoom, x, y, tile_bytes,
+    content_hash), expected in Hilbert order. Writes part-NNNNN.data, the
     partition's blobs with any blob already seen in this partition skipped,
     and part-NNNNN.idx, raw int64 [hilbert id, content key, length, offset
-    in the .data file] per tile; yields one summary row."""
+    in the .data file] per tile; yields one summary row. The Hilbert ids
+    are computed here from (zoom, x, y), never taken from the frame, and
+    the summary says whether they strictly increase (first_id, last_id,
+    increasing), so the driver can check the partition order."""
     def write(batches):
         import pyarrow as pa
 
@@ -427,23 +445,31 @@ def _pm_part_writer(parts_dir: str):
         seen_o = np.empty(0, dtype=np.int64)    # their offsets in .data
         n = size = 0
         minz, maxz = tm.MAX_MAXZOOM + 1, -1
+        first = last = -1
+        increasing = True
         with _part_files(parts_dir, ".data", ".idx") as (part, dataf, idxf):
             for b in batches:
                 if not b.num_rows:
                     continue
-                blobs = b.column(2)
+                hid = _pm_tile_ids(b)
+                increasing = increasing and bool(hid[0] > last) \
+                    and bool(np.all(hid[1:] > hid[:-1]))
+                if not n:
+                    first = int(hid[0])
+                last = int(hid[-1])
+                blobs = b.column("tile_bytes")
                 ln = np.diff(_binary_values(blobs)[0]).astype(np.int64)
-                key = _content_keys(b.column(3))
+                key = _content_keys(b.column("content_hash"))
                 pos = np.searchsorted(seen_k, key)
                 hit = pos < len(seen_k)
                 hit[hit] = seen_k[pos[hit]] == key[hit]
                 off = np.empty(len(key), dtype=np.int64)
                 off[hit] = seen_o[pos[hit]]
                 miss = np.flatnonzero(~hit)
-                uk, first, inv = np.unique(key[miss], return_index=True,
-                                           return_inverse=True)
-                order = np.argsort(first)          # new keys, first seen first
-                new = miss[first[order]]
+                uk, first_at, inv = np.unique(key[miss], return_index=True,
+                                              return_inverse=True)
+                order = np.argsort(first_at)       # new keys, first seen first
+                new = miss[first_at[order]]
                 uo = np.empty(len(uk), dtype=np.int64)
                 uo[order] = size + np.cumsum(ln[new]) - ln[new]
                 off[miss] = uo[inv]
@@ -453,15 +479,39 @@ def _pm_part_writer(parts_dir: str):
                 size += int(ln[new].sum())
                 at = np.searchsorted(seen_k, uk)
                 seen_k, seen_o = np.insert(seen_k, at, uk), np.insert(seen_o, at, uo)
-                idxf.write(np.stack([b.column(0).to_numpy(), key.view(np.int64),
-                                     ln, off], axis=1).tobytes())
-                zoom = b.column(1).to_numpy()
+                idxf.write(np.stack([hid, key.view(np.int64), ln, off],
+                                    axis=1).tobytes())
+                zoom = b.column("zoom").to_numpy()
                 minz, maxz = min(minz, int(zoom.min())), max(maxz, int(zoom.max()))
                 n += b.num_rows
         yield pa.RecordBatch.from_pylist(
             [{"part": part, "tiles": n, "data_bytes": size,
-              "minzoom": minz, "maxzoom": maxz}])
+              "minzoom": minz, "maxzoom": maxz, "first_id": first,
+              "last_id": last, "increasing": increasing}])
     return write
+
+
+def _pm_write_parts(ordered, parts_dir: str) -> list[dict]:
+    """Run the part writer over `ordered`'s own partitions in one job; its
+    summary rows."""
+    rows = (ordered.select(*_PM_COLS)
+            .mapInArrow(_pm_part_writer(parts_dir), _PM_PART_SCHEMA)
+            .collect())
+    return [r.asDict() for r in rows]
+
+
+def _pm_in_order(parts) -> bool:
+    """True when the parts, read in partition order, hold strictly
+    increasing Hilbert ids: each partition increases and each non-empty
+    partition starts above the previous one's last id."""
+    last = -1
+    for s in sorted(parts, key=lambda r: r["part"]):
+        if not s["tiles"]:
+            continue
+        if not s["increasing"] or s["first_id"] <= last:
+            return False
+        last = s["last_id"]
+    return True
 
 
 def _pm_assemble(parts_dir: str, parts, path: str, metadata: dict | None,
@@ -582,29 +632,42 @@ def write_pmtiles(tiles_df, path: str, metadata: dict | None = None,
     and root+leaf directories. tiles_df must carry (zoom, x, y, tile_bytes,
     content_hash).
 
-    ASSEMBLED ON THE EXECUTORS: one job sorts the tiles into Hilbert order
-    (`_pm_sorted`, an analytic range exchange) and every task writes its
-    partition's blobs and index to part files under `<path>.parts/`
-    (`_pm_part_writer`); a single collect() runs all partitions in
-    parallel. The driver then reads the indexes in partition order, does a
-    global first-occurrence content dedup over 64-bit keys (bounded by
-    dedup_cap), builds run-length entries that merge across partition
-    edges, writes header and directories, and copies the data section out
-    of the part files (`_pm_assemble`). Tile bytes never reach the driver.
-    Directories follow the public PMTiles v3 spec
-    (pmtiles/Pmtiles.java:82-119): entries beyond max_dir_entries spill
-    into leaf directories with root pointer entries.
+    ASSEMBLED ON THE EXECUTORS: every task writes its partition's blobs and
+    index to part files under `<path>.parts/` (`_pm_part_writer`); a single
+    collect() runs all partitions in parallel. A frame with a `hilbert_id`
+    column (the engine's tilesets: their one tile exchange already sorted
+    them in Hilbert order) is written from its own partitions, with no
+    exchange and no sort. The part writer computes every tile's id from
+    (zoom, x, y) and reports whether its partition increases; if the
+    partitions are not in total Hilbert order after all, the parts are
+    discarded and the frame is written again through `_pm_sorted` (an
+    analytic range exchange), as is any frame without the column.
+
+    The driver then reads the indexes in partition order, does a global
+    first-occurrence content dedup over 64-bit keys (bounded by dedup_cap),
+    builds run-length entries that merge across partition edges, writes
+    header and directories, and copies the data section out of the part
+    files (`_pm_assemble`). Tile bytes never reach the driver. Directories
+    follow the public PMTiles v3 spec (pmtiles/Pmtiles.java:82-119): entries
+    beyond max_dir_entries spill into leaf directories with root pointer
+    entries.
 
     The part files and the finished archive are published by rename, and
     `<path>.parts/` is removed however the write ends, so a failed write
     leaves no partial archive. On a cluster `<path>` must be on storage
     that the executors and the driver both see."""
-    ordered = _pm_sorted(tiles_df)
     with _parts_dir(path) as parts:
-        summary = ordered.mapInArrow(_pm_part_writer(parts),
-                                     _PM_PART_SCHEMA).collect()
-        return _pm_assemble(parts, [r.asDict() for r in summary], path,
-                            metadata, max_dir_entries, dedup_cap)
+        summary = None
+        if "hilbert_id" in tiles_df.columns:
+            summary = _pm_write_parts(tiles_df, parts)
+            if not _pm_in_order(summary):
+                summary = None
+                shutil.rmtree(parts)
+                os.makedirs(parts)
+        if summary is None:
+            summary = _pm_write_parts(_pm_sorted(tiles_df), parts)
+        return _pm_assemble(parts, summary, path, metadata, max_dir_entries,
+                            dedup_cap)
 
 
 def _pm_varints(raw: bytes) -> np.ndarray:

@@ -309,6 +309,34 @@ def test_pmtiles_bytes_independent_of_partitions_and_order(
             assert _sha256(path) == RECORDED_SHA256[case], (p, k)
 
 
+@pytest.mark.parametrize("case", ["images", "zones"])
+def test_pipeline_archive_independent_of_partitions_and_order(
+        spark, shuffle_partitions, case, tmp_path):
+    """The whole tile pipeline, not just the writer: the tileset built at
+    shuffle partitions p and 2p+1, from input rows in order or permuted,
+    gives the recorded archive. Core counts (local[1] against local[4])
+    need a session each and are not covered here."""
+    from pyspark.sql import functions as F
+
+    def build(permuted):
+        if case == "images":
+            imgs = src.images_df(spark, 200, partitions=4, with_bytes=False)
+            if permuted:
+                imgs = imgs.repartition(5).orderBy(F.rand(7))
+            return tp.tileset(spark, imgs, min_zoom=0, max_zoom=11)
+        zones = src.zones_pdf(32)
+        if permuted:
+            zones = zones.sample(frac=1.0, random_state=7)
+        return tp.zones_tileset(spark, 0, 8, zones_pdf=zones)
+
+    for p in (4, 9):
+        shuffle_partitions(p)
+        for permuted in (False, True):
+            path = str(tmp_path / f"{case}_{p}_{permuted}.pmtiles")
+            ar.write_pmtiles(build(permuted), path)
+            assert _sha256(path) == RECORDED_SHA256[case], (p, permuted)
+
+
 def test_pmtiles_run_spans_partition_edge(spark, shuffle_partitions,
                                           arrow_batch_rows, tmp_path):
     """An identical-tile run that crosses a partition edge (and, with

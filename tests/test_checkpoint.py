@@ -81,7 +81,7 @@ def test_counters_and_progress_logger(spark):
     out = io.StringIO()
     with pg.ProgressLogger(spark, counters, interval=0.2, out=out) as pl:
         images = src.images_df(spark, 500, partitions=4, with_bytes=False)
-        tiles = tp.tileset(spark, images, 0, 6, counters=counters, ordered=False)
+        tiles = tp.tileset(spark, images, 0, 6, counters=counters)
         # ONE action: accumulators meter work done, so a second action over
         # the uncached DAG would re-run the kernels and double the counts
         row = tiles.agg(F.count("*").alias("nt"),

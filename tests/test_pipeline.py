@@ -63,10 +63,47 @@ def test_vector_tiles_exact_assignment(spark, images):
         assert got.get(z, {}) == want[z], f"zoom {z} tile map mismatch"
 
 
+def assert_hilbert_order(rows):
+    """Archive order: hilbert_id strictly ascends over the rows as the
+    partitions hand them out, and is each tile's PMTiles id."""
+    hid = np.array([r.hilbert_id for r in rows], dtype=np.int64)
+    assert len(hid) and np.all(np.diff(hid) > 0)
+    xyz = (np.array([r.x for r in rows]), np.array([r.y for r in rows]),
+           np.array([r.zoom for r in rows]))
+    assert hid.tolist() == tm.hilbert_encode(*xyz).tolist()
+    assert [r.tile_id for r in rows] == tm.tile_encode(*xyz).tolist()
+
+
 def test_tiles_sorted_zoom_major(spark, images):
     tiles = tp.tileset(spark, images, min_zoom=0, max_zoom=4)
-    ids = [r.tile_id for r in tiles.select("tile_id").toLocalIterator()]
-    assert ids == sorted(ids)  # archive order: zoom-major TMS
+    assert_hilbert_order(list(tiles.select("hilbert_id", "tile_id", "zoom",
+                                           "x", "y").toLocalIterator()))
+
+
+def test_tileset_to_pmtiles_runs_one_exchange(spark, images, tmp_path,
+                                              monkeypatch):
+    """The part-writer job over a tileset holds the tile exchange and no
+    other: write_pmtiles appends the tileset's own partitions, without the
+    range sort it keeps for frames in other orders."""
+    import re
+
+    from planetiler_spark.sources import archives as ar
+
+    tiles = tp.tileset(spark, images, min_zoom=0, max_zoom=6)
+    job = (tiles.select(*ar._PM_COLS)
+           .mapInArrow(ar._pm_part_writer(str(tmp_path)), ar._PM_PART_SCHEMA))
+    plan = job._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
+
+    def no_sort(df):
+        raise AssertionError("write_pmtiles re-sorted an ordered tileset")
+
+    monkeypatch.setattr(ar, "_pm_sorted", no_sort)
+    path = str(tmp_path / "t.pmtiles")
+    stats = ar.write_pmtiles(tiles, path)
+    assert stats["tiles"] == tiles.count()
+    assert ar.read_pmtiles(path) == {
+        (r.zoom, r.x, r.y): bytes(r.tile_bytes) for r in tiles.collect()}
 
 
 def test_z0_tile_has_all_points(spark, images):
@@ -81,20 +118,6 @@ def test_z0_tile_has_all_points(spark, images):
     wrapped = [f for f in decoded["images"]
                if not (0 <= f["geometry"][0][0][0] <= mvt.EXTENT)]
     assert extra == len(wrapped)
-
-
-def test_label_grid_thin_caps_density(spark, images):
-    feats = tp.render_features(images, 5, 5)
-    thinned = tp.label_grid_thin(feats, limit=1, grid_px=256)
-    # at most 1 feature per (tile, full-tile cell): count per tile <= grid cells
-    per_tile = thinned.groupBy("tile_id").count().collect()
-    # 256px grid on a 256px tile = 1 core cell (+buffer cells) -> tiny counts
-    assert all(r["count"] <= 4 for r in per_tile)
-    # deterministic winner: rerun gives identical rows
-    a = sorted((r.tile_id, r.image_id) for r in thinned.collect())
-    b = sorted((r.tile_id, r.image_id)
-               for r in tp.label_grid_thin(feats, limit=1, grid_px=256).collect())
-    assert a == b
 
 
 def test_raster_patches_invariants(spark, images):
@@ -130,8 +153,8 @@ def test_content_hash_dedup_consistency(spark, images):
 
 def test_packed_transport_equals_row_path(spark, images):
     """The bucket-packed transport (analytic range exchange + blob rows) must
-    be BYTE-identical to the row path, in total zoom-major order, with the
-    same thinning selection."""
+    be BYTE-identical to the row path, in total zoom-major Hilbert order,
+    with the same thinning selection."""
     a = tp.tileset(spark, images, min_zoom=0, max_zoom=7, packed=False,
                    thin_limit=4).collect()
     b = tp.tileset(spark, images, min_zoom=0, max_zoom=7, packed=True,
@@ -141,8 +164,7 @@ def test_packed_transport_equals_row_path(spark, images):
     bm = {r.tile_id: (r.zoom, r.x, r.y, r.n_features, bytes(r.tile_bytes),
                       r.content_hash) for r in b}
     assert am == bm
-    ids = [r.tile_id for r in b]
-    assert ids == sorted(ids)  # total order without any range-sampling pass
+    assert_hilbert_order(b)  # total order without any range-sampling pass
 
 
 def test_partition_tokens_exact(spark):
@@ -187,7 +209,7 @@ def test_pack_unpack_roundtrip():
     xs = rng.randint(0, 1 << 8, n) % (1 << zs)
     ys = rng.randint(0, 1 << 8, n) % (1 << zs)
     out = pd.DataFrame({
-        "tile_id": tm.tile_encode(xs, ys, zs),
+        "hilbert_id": tm.hilbert_encode(xs, ys, zs),
         "ex": rng.randint(-64, 4160, n).astype(np.int64),
         "ey": rng.randint(-64, 4160, n).astype(np.int64),
         "sort_key": rng.randint(0, 1000, n).astype(np.int64),
@@ -207,7 +229,7 @@ def test_pack_unpack_roundtrip():
             got.append((int(tid[j]), int(ex[j]), int(ey[j]), int(sk[j]),
                         ids[j].as_py(), caps[j].as_py()))
     want = sorted(
-        ((int(r.tile_id), int(r.ex), int(r.ey), int(r.sort_key),
+        ((int(r.hilbert_id), int(r.ex), int(r.ey), int(r.sort_key),
           r.image_id, r.caption) for r in out.itertuples(index=False)),
         key=lambda t: np.searchsorted(b, t[0], side="right"))
     assert sorted(got) == sorted(want)

@@ -230,7 +230,7 @@ def test_pack_unpack_feature_runs_property(seed, n):
     xs = rng.randint(0, 1 << 10, n) % (1 << zs)
     ys = rng.randint(0, 1 << 10, n) % (1 << zs)
     out = pd.DataFrame({
-        "tile_id": tm.tile_encode(xs, ys, zs),
+        "hilbert_id": tm.hilbert_encode(xs, ys, zs),
         "ex": rng.randint(-64, 4161, n).astype(np.int64),
         "ey": rng.randint(-64, 4161, n).astype(np.int64),
         "sort_key": rng.randint(0, 1000, n).astype(np.int64),
@@ -246,6 +246,6 @@ def test_pack_unpack_feature_runs_property(seed, n):
         tid, ex, ey, sk, ids, caps = tp._unpack_blob(memoryview(blob))
         got += [(int(tid[j]), int(ex[j]), int(ey[j]), int(sk[j]),
                  ids[j].as_py(), caps[j].as_py()) for j in range(len(tid))]
-    want = [(int(r.tile_id), int(r.ex), int(r.ey), int(r.sort_key),
+    want = [(int(r.hilbert_id), int(r.ex), int(r.ey), int(r.sort_key),
              r.image_id, r.caption) for r in out.itertuples(index=False)]
     assert sorted(got) == sorted(want)

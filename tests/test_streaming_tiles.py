@@ -30,7 +30,7 @@ def _tile_map(rows):
 
 def _expected(spark):
     full = src.images_df(spark, N, partitions=4, with_bytes=False)
-    return _tile_map(tp.tileset(spark, full, 0, ZMAX, ordered=False).collect())
+    return _tile_map(tp.tileset(spark, full, 0, ZMAX).collect())
 
 
 def test_apply_batch_incremental_equals_batch(spark, tmp_path):

@@ -56,7 +56,7 @@ def test_layer_size_stats_spark_and_tsv(spark, tmp_path):
     from planetiler_spark.sources import images as src
 
     imgs = src.images_df(spark, 30, partitions=2, with_bytes=False)
-    tiles = tp.tileset(spark, imgs, 0, 4, ordered=False).cache()
+    tiles = tp.tileset(spark, imgs, 0, 4).cache()
     stats = ts.layer_size_stats(tiles).cache()
     # every tile contributes exactly one 'images' layer row
     assert stats.count() == tiles.count()
@@ -144,7 +144,7 @@ def test_layerstats_text_matches_recorded(spark, case, tmp_path):
     if case == "images":
         tiles = tp.tileset(spark, src.images_df(spark, 200, partitions=4,
                                                 with_bytes=False),
-                           0, 9, ordered=False)
+                           0, 9)
     else:
         tiles = tp.zones_tileset(spark, 0, 7, n_zones=32)
     stats = ts.layer_size_stats(tiles.cache())

@@ -6,6 +6,7 @@ import pytest
 
 from planetiler_spark.kernels import geom as gk
 from planetiler_spark.kernels import mvt
+from planetiler_spark.kernels import tile_math as tm
 from planetiler_spark.operators import render as R
 from planetiler_spark.operators import tile_pipeline as tp
 from planetiler_spark.sources import images as src
@@ -75,6 +76,10 @@ def test_holes_preserved(spark, tiles):
 
 def test_zones_output_total_order(spark, tiles):
     """The analytic range-token exchange must leave the tileset in total
-    zoom-major tile order without any repartitionByRange downstream."""
-    ids = [r.tile_id for r in tiles]
-    assert ids == sorted(ids)
+    zoom-major Hilbert order without any repartitionByRange downstream."""
+    hid = np.array([r.hilbert_id for r in tiles], dtype=np.int64)
+    assert np.all(np.diff(hid) > 0)
+    want = tm.hilbert_encode(np.array([r.x for r in tiles]),
+                             np.array([r.y for r in tiles]),
+                             np.array([r.zoom for r in tiles]))
+    assert hid.tolist() == want.tolist()

@@ -80,7 +80,8 @@ def main() -> None:
                             "image_id": np.arange(m, dtype=np.int64)})
         out = tp._partial_thin(out, args.thin, cell)
         tid = out["tile_id"].to_numpy()
-        bk = np.searchsorted(boundaries, tid, side="right") - 1
+        # the pipelines range the exchange on the Hilbert id
+        bk = np.searchsorted(boundaries, tp._hilbert_ids(tid), side="right") - 1
         mass_range += np.bincount(pid[bk], minlength=args.p)
         hsh = ((tid.astype(np.uint64) * np.uint64(0x9E3779B97F4A7C15))
                >> np.uint64(13)).astype(np.int64) % args.p

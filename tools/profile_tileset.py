@@ -76,7 +76,7 @@ def main():
     else:
         tiles = tp.tileset(spark, images, 0, args.maxzoom,
                            shuffle_partitions=args.shuffle_partitions,
-                           ordered=False, packed=bool(args.packed))
+                           packed=bool(args.packed))
         agg = tiles.agg(F.count("*").alias("nt"), F.sum("n_features").alias("nf")).collect()[0]
         wall = time.time() - t0
         print(f"tileset wall {wall:.2f}s  tiles={agg.nt} features={agg.nf}")

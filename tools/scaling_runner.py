@@ -121,7 +121,7 @@ def main():
         t0 = time.time()
         tiles = tp.tileset(spark, images, 0, args.maxzoom,
                            shuffle_partitions=args.shuffle_partitions,
-                           ordered=False, packed=packed)
+                           packed=packed)
         agg = tiles.agg(F.count("*").alias("nt"),
                         F.sum("n_features").alias("nf")).collect()[0]
         return time.time() - t0, {"n_tiles": int(agg.nt),

@@ -5,7 +5,7 @@ operators/checkpoint.py) and peak driver/JVM memory logged from /proc.
 
 Phases (each a fresh subprocess so RSS and kills are clean):
   prep       generate the 20M-row images parquet (untimed input prep)
-  flagship   tileset(0..maxzoom, ordered=True) -> write_pmtiles(...)
+  flagship   tileset(0..maxzoom) -> write_pmtiles(...)
   ckpt A     run_checkpointed uninterrupted (the equality reference)
   ckpt B     same job, SIGKILLed after K buckets land, then RESUMED
   compare    per-tile (bucket, z, x, y, content_hash) equality A vs B
@@ -123,7 +123,7 @@ def job_flagship(args):
     images.count()  # warm FS cache before timing
     out = os.path.join(args.work, "flagship.pmtiles")
     t0 = time.time()
-    tiles = tp.tileset(spark, images, 0, args.maxzoom, ordered=True)
+    tiles = tp.tileset(spark, images, 0, args.maxzoom)
     meta_out = archives.write_pmtiles(
         tiles, out, metadata={"name": "soak_r5", "format": "pbf"})
     wall = time.time() - t0
