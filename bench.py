@@ -16,10 +16,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 BENCH_QUERIES = [
-    # flagship pipeline (tiles/sec numerator): the shipped default transport
-    # (row path, scaling-record holder) AND the opt-in packed transport —
-    # byte-identical outputs, both on record (round-4 transport policy,
-    # tile_pipeline._packed_default)
+    # flagship pipeline (tiles/sec numerator); images_tileset_packed now
+    # runs the same bucket-packed path as images_tileset and keeps its name
+    # so the query list stays stable
     "images_tileset",
     "images_tileset_packed",
     "raster_tile_patches",

@@ -1,4 +1,4 @@
-"""Image payload kernels: PNG codec, deterministic lossy codec (JPEG stand-in), PSNR.
+"""Image payload kernels: PNG codec, JPEG routing, PSNR.
 
 The graft axis treats images as opaque `binary` columns with typed metadata
 (image_id, bytes, w, h, fmt) — see BASELINE.json input_hint. Per-tile raster
@@ -7,9 +7,8 @@ slicing (operators/raster.py) decodes these inside Arrow-batched UDFs.
 - PNG: minimal but real RGB8 encoder/decoder implemented on zlib + numpy
   (IHDR/IDAT/IEND, filter type 0). Lossless round-trip, deterministic bytes.
 - JPEG: REAL baseline JFIF codec, implemented from the public T.81 spec in
-  kernels/jpeg.py (rounds 1-2 used a documented quantize+zlib stand-in; the
-  `FJPG` magic is still decoded for those legacy payloads). Default quality
-  98 measures >=43dB on the worst-case synthetic sawtooth fixtures.
+  kernels/jpeg.py. Default quality 98 measures >=43dB on the worst-case
+  synthetic sawtooth fixtures.
 - PSNR: the per-row invariant from BASELINE.json (decoded-pixel allclose,
   PSNR>=40dB for lossy, exact for lossless).
 """
@@ -22,8 +21,6 @@ import zlib
 import numpy as np
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
-_FJPG_MAGIC = b"FJPG"
-FAKE_JPEG_QUANT = 6  # PSNR ~= 10*log10(255^2/(q^2/12)) ~= 43.4 dB >= 40 dB
 
 
 def _chunk(tag: bytes, payload: bytes) -> bytes:
@@ -155,22 +152,6 @@ def decode_png(buf: bytes) -> np.ndarray:
     return ((color * a + 255 * (255 - a) + 127) // 255).astype(np.uint8)
 
 
-def encode_fake_jpeg(pixels: np.ndarray) -> bytes:
-    """Legacy round-1/2 lossy stand-in (quantize+zlib), superseded by the real
-    baseline JPEG in kernels/jpeg.py; kept so old FJPG payloads still decode."""
-    h, w, c = pixels.shape
-    q = (pixels.astype(np.int32) + FAKE_JPEG_QUANT // 2) // FAKE_JPEG_QUANT
-    q = np.clip(q * FAKE_JPEG_QUANT, 0, 255).astype(np.uint8)
-    return _FJPG_MAGIC + struct.pack("<HH", w, h) + zlib.compress(q.tobytes(), 6)
-
-
-def decode_fake_jpeg(buf: bytes) -> np.ndarray:
-    if buf[:4] != _FJPG_MAGIC:
-        raise ValueError("not a fake-jpeg payload")
-    w, h = struct.unpack_from("<HH", buf, 4)
-    return np.frombuffer(zlib.decompress(buf[8:]), dtype=np.uint8).reshape(h, w, 3).copy()
-
-
 # Restart interval for engine-EMITTED jpegs: tiny intervals cost ~0.6% size
 # (2 marker bytes + byte-align per interval) and make every segment an
 # independent bitstream, which is what lets decode_images' lockstep batch
@@ -193,8 +174,6 @@ def decode_image(buf: bytes, fmt: str) -> np.ndarray:
     if fmt == "png":
         return decode_png(buf)
     if fmt == "jpeg":
-        if bytes(buf[:4]) == _FJPG_MAGIC:  # legacy round-1/2 stand-in payloads
-            return decode_fake_jpeg(buf)
         from . import jpeg as _jpeg
         return _jpeg.decode_jpeg(buf)
     raise NotImplementedError(f"image format {fmt!r} not supported (png/jpeg only)")
@@ -214,8 +193,7 @@ def decode_images(bufs: list[bytes], fmts: list[str]) -> list[np.ndarray]:
     # (this engine's own output) to the batch decoder; a DRI-less foreign
     # jpeg is ONE long stream and decodes faster through the serial walk
     jpeg_idx = [i for i, f in enumerate(fmts)
-                if f == "jpeg" and bytes(bufs[i][:4]) != _FJPG_MAGIC
-                and b"\xff\xdd" in bytes(bufs[i][:4096])]
+                if f == "jpeg" and b"\xff\xdd" in bytes(bufs[i][:4096])]
     # chunked: the lockstep decoder materializes ~16 int64 bytes per entropy
     # byte (flat windows) plus every decoded image of the call at once, so a
     # whole 65536-row Arrow batch in one call would spike task memory; a few

@@ -608,6 +608,24 @@ def buffer_union_unbuffer(polys, d, quad_segs=8):
     return erode_rings(dilated, d, quad_segs=quad_segs)
 
 
+def _interior_point(ring):
+    """A point strictly inside a closed ring: the middle of the widest
+    inside span of a horizontal line through the ring, taken halfway
+    between two vertex y levels so it meets no vertex."""
+    ys = np.unique(ring[:, 1])
+    if len(ys) < 2:
+        return None
+    k = int(np.argmax(np.diff(ys)))
+    y = 0.5 * (ys[k] + ys[k + 1])
+    x0, y0, x1, y1 = ring[:-1, 0], ring[:-1, 1], ring[1:, 0], ring[1:, 1]
+    cross = (y0 > y) != (y1 > y)
+    xs = np.sort(x0[cross] + (y - y0[cross]) * (x1[cross] - x0[cross])
+                 / (y1[cross] - y0[cross]))
+    spans = xs[1::2] - xs[0::2]
+    j = int(np.argmax(spans))
+    return 0.5 * (xs[2 * j] + xs[2 * j + 1]), y
+
+
 def drop_small_regions_exact(rings, min_area):
     """Drop whole regions (a CCW shell plus its CW holes) whose NET area is
     below min_area — the vector analog of union.drop_small_regions (and of
@@ -619,20 +637,18 @@ def drop_small_regions_exact(rings, min_area):
     areas = [float(gk.ring_signed_area(r)) for r in rings]
     shells = [(i, a) for i, a in enumerate(areas) if a > 0]
     holes = [i for i, a in enumerate(areas) if a <= 0]
-    # assign each hole to the smallest shell containing one of its
-    # vertices (try several: a vertex can sit exactly on a shell edge)
+    # assign each hole to the smallest shell containing a point strictly
+    # inside it (its vertices may all sit on the shell's boundary)
     shell_holes = {i: [] for i, _ in shells}
     unassigned = []
     for hi_ in holes:
         best, best_area = None, None
-        for px, py in rings[hi_][:-1][:8]:
-            for si, sa in shells:
-                if si != hi_ and bool(gk.points_in_polygon(
-                        np.array([px]), np.array([py]), [rings[si]])[0]):
-                    if best is None or sa < best_area:
-                        best, best_area = si, sa
-            if best is not None:
-                break
+        pt = _interior_point(rings[hi_])
+        for si, sa in shells if pt is not None else ():
+            if bool(gk.points_in_polygon(np.array([pt[0]]), np.array([pt[1]]),
+                                         [rings[si]])[0]):
+                if best is None or sa < best_area:
+                    best, best_area = si, sa
         if best is not None:
             shell_holes[best].append(hi_)
         else:

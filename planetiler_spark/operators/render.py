@@ -257,7 +257,8 @@ def render_points_pdf(pdf: pd.DataFrame, wx: np.ndarray, wy: np.ndarray,
                       sort_key: np.ndarray | None = None) -> pd.DataFrame:
     """Explode a batch of point rows across zooms into the sorted-KV model:
     one output row per (feature, zoom, tile) with the 64-bit feature key
-    (FeatureGroup.encodeKey:176-180) ready for repartitionByRange."""
+    (FeatureGroup.encodeKey:176-180) and the tile's PMTiles Hilbert id
+    (TileCoord.hilbertEncoded:158-161), taken from the slice's own (x, y)."""
     if sort_key is None:
         sort_key = np.zeros(len(pdf), dtype=np.int64)
     outs = []
@@ -271,9 +272,11 @@ def render_points_pdf(pdf: pd.DataFrame, wx: np.ndarray, wy: np.ndarray,
             "zoom": np.full(len(idx), z, dtype=np.int32),
             "ex": ex,
             "ey": ey,
+            "hilbert_id": tm.ZOOM_START_INDEX[z] + tm.hilbert_xy_to_index(z, txs, tys),
         })
         out["feature_id"] = pdf.index.to_numpy()[idx]
         outs.append(out)
     if not outs:
-        return pd.DataFrame(columns=["key", "tile_id", "zoom", "ex", "ey", "feature_id"])
+        return pd.DataFrame(columns=["key", "tile_id", "zoom", "ex", "ey",
+                                     "hilbert_id", "feature_id"])
     return pd.concat(outs, ignore_index=True)

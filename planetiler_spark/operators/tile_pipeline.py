@@ -3,17 +3,20 @@ re-expressed Spark-first (ARCHITECTURE.md:5-11 of the reference).
 
   phase 1 RENDER  — mapInPandas: phash -> geo-anchor -> slice into per-tile
                     fragments across zooms (FeatureRenderer.java:62-111,
-                    TiledGeometry.slicePoint:245-260), emit rows keyed by the
-                    64-bit feature key (FeatureGroup.encodeKey:176-196) and
-                    the fragment's PMTiles Hilbert tile id
+                    TiledGeometry.slicePoint:245-260), each with the
+                    fragment's PMTiles Hilbert tile id, then PACK each
+                    render batch into one binary row per Hilbert-id range
+                    bucket (_pack_feature_runs)
   phase 2 SORT    — the shuffle IS the external merge sort
                     (ExternalMergeSort.java:168): an analytic range exchange
-                    on the Hilbert id (partitioning.py), sorted within
-                    partitions
-  phase 3 EMIT    — mapInArrow over consecutive same-tile runs: label-grid
-                    limit, MVT encode + gzip (VectorTile.java,
-                    TileArchiveWriter.java), content-hash for order-free
-                    tile dedup
+                    on the bucket's partition token (partitioning.py),
+                    sorted within partitions by bucket
+  phase 3 EMIT    — mapInArrow per bucket: re-sort its features by
+                    (hilbert_id, sort_key, image_id) — the feature key order
+                    of FeatureGroup.encodeKey:176-196 — then consecutive
+                    same-tile runs: label-grid limit, MVT encode + gzip
+                    (VectorTile.java, TileArchiveWriter.java), content-hash
+                    for order-free tile dedup
 
 The sort key's tile field is the Hilbert id, as in the reference when it
 writes PMTiles (TileOrder.encode, FeatureGroup.java:168-196): the tileset
@@ -95,16 +98,10 @@ def _partial_thin(out: pd.DataFrame, thin_limit: int, cell: int) -> pd.DataFrame
     return out[keep]
 
 
-def _hilbert_ids(tile_ids: np.ndarray) -> np.ndarray:
-    """PMTiles Hilbert id of each TMS tile id (same tile, archive order)."""
-    return tm.hilbert_encode(*tm.tile_decode(tile_ids))
-
-
 def _render_batch(pdf: pd.DataFrame, zooms: range, thin_limit: int | None,
                   cell: int) -> pd.DataFrame:
     """One images batch -> per-(feature, zoom, tile) rows with their Hilbert
-    ids, after the map-side partial label-grid cap (shared by both
-    transports)."""
+    ids, after the map-side partial label-grid cap."""
     ph = pdf["phash"].to_numpy()
     wx, wy = src.anchor_world(ph)
     sort_key = (ph % 1000).astype(np.int64)  # deterministic draw order
@@ -115,51 +112,38 @@ def _render_batch(pdf: pd.DataFrame, zooms: range, thin_limit: int | None,
     out["sort_key"] = sort_key[idx]
     if thin_limit is not None:
         out = _partial_thin(out, thin_limit, cell)
-    out["hilbert_id"] = _hilbert_ids(out["tile_id"].to_numpy())
     return out
 
 
 def render_features(images: DataFrame, min_zoom: int = 0,
                     max_zoom: int = MAX_ZOOM, thin_limit: int | None = None,
-                    grid_px: int = 32, counters=None,
-                    partitions: int | None = None) -> DataFrame:
+                    grid_px: int = 32) -> DataFrame:
     """images -> per-(feature, zoom, tile) rows in the sorted-KV model, each
-    with its PMTiles `hilbert_id`. thin_limit applies the map-side partial
-    label-grid cap (see _partial_thin).
-
-    With `partitions` set, each row also carries its analytic range-exchange
-    token over the Hilbert id (partitioning.py), so the tile shuffle is also
-    the archive-order sort; the output repartitionByRange it replaces
-    re-executed this whole stage to sample boundaries (measured 5.5s vs
-    3.8s at sf0.1)."""
-    from . import partitioning as pt
-
+    with its PMTiles `hilbert_id`, unpacked: one row per feature, as the
+    streaming feature log stores them (pack_features ships them to the tile
+    reduce). thin_limit applies the map-side partial label-grid cap (see
+    _partial_thin)."""
     zooms = range(min_zoom, max_zoom + 1)
     cell = grid_px * 4096 // 256
-    schema = FEATURES_SCHEMA
-    boundaries = bucket_tok = tok_name = None
-    if partitions is not None:
-        rp = int(partitions)
-        boundaries, pid = pt.tile_range_partitioning(min_zoom, max_zoom, rp)
-        bucket_tok = pt.partition_tokens(images.sparkSession, rp)[pid]
-        tok_name = pt.token_col(rp)
-        schema = f"{FEATURES_SCHEMA}, {tok_name} long"
 
     def gen(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            out = _render_batch(pdf, zooms, thin_limit, cell)
-            if tok_name is not None:
-                bk = np.searchsorted(boundaries, out["hilbert_id"].to_numpy(),
-                                     side="right") - 1
-                out[tok_name] = bucket_tok[bk]
-            if counters is not None:  # one accumulator add per Arrow batch
-                counters.add("features", len(out))
-            yield out
+            yield _render_batch(pdf, zooms, thin_limit, cell)
 
     cols = [c for c in images.columns if c != "bytes"]  # column pruning: no pixels in the vector path
-    return images.select(*cols).mapInPandas(gen, schema)
+    return images.select(*cols).mapInPandas(gen, FEATURES_SCHEMA)
+
+
+def _range_tokens(spark: SparkSession, min_zoom: int, max_zoom: int, p: int):
+    """(bucket boundaries over the Hilbert ids of min_zoom..max_zoom, each
+    bucket's partition token, the token column's name) for an analytic
+    range exchange into p partitions (partitioning.py)."""
+    from . import partitioning as pt
+
+    boundaries, pid = pt.tile_range_partitioning(min_zoom, max_zoom, p)
+    return boundaries, pt.partition_tokens(spark, p)[pid], pt.token_col(p)
 
 
 def _packed_schema(p: int) -> str:
@@ -264,21 +248,15 @@ def _unpack_blob(mv):
 def render_features_packed(images: DataFrame, min_zoom: int = 0,
                            max_zoom: int = MAX_ZOOM,
                            thin_limit: int | None = None, grid_px: int = 32,
-                           counters=None, partitions: int | None = None,
-                           buckets_per_partition: int = 8) -> DataFrame:
-    """render_features with bucket-packed transport: same per-batch render +
-    map-side partial thin, then each batch's features leave the Python worker
-    as one row per analytic Hilbert-id-range bucket (see partitioning.py).
-    `partitions` MUST match the value passed to encode_vector_tiles_packed
-    (the partition tokens are baked per p)."""
-    from . import partitioning as pt
-
+                           counters=None, partitions: int | None = None) -> DataFrame:
+    """images -> bucket-packed features: the per-batch render + map-side
+    partial thin of render_features, then each batch's features leave the
+    Python worker as one row per analytic Hilbert-id-range bucket (see
+    partitioning.py). `partitions` MUST match the value passed to
+    encode_vector_tiles_packed (the partition tokens are baked per p)."""
     spark = images.sparkSession
     p = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    boundaries, pid = pt.tile_range_partitioning(
-        min_zoom, max_zoom, p, buckets_per_partition)
-    bucket_tok = pt.partition_tokens(spark, p)[pid]
-    tok_name = pt.token_col(p)
+    boundaries, bucket_tok, tok_name = _range_tokens(spark, min_zoom, max_zoom, p)
     zooms = range(min_zoom, max_zoom + 1)
     cell = grid_px * 4096 // 256
 
@@ -295,20 +273,44 @@ def render_features_packed(images: DataFrame, min_zoom: int = 0,
     return images.select(*cols).mapInPandas(gen, _packed_schema(p))
 
 
+def pack_features(feats: DataFrame, min_zoom: int = 0, max_zoom: int = MAX_ZOOM,
+                  partitions: int | None = None) -> DataFrame:
+    """Already-rendered feature rows (render_features' schema, e.g. read back
+    from a feature log) -> the bucket-packed rows render_features_packed
+    emits: same boundaries, same tokens, same blob layout."""
+    spark = feats.sparkSession
+    p = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    boundaries, bucket_tok, tok_name = _range_tokens(spark, min_zoom, max_zoom, p)
+
+    def gen(batches):
+        for pdf in batches:
+            if len(pdf):
+                yield _pack_feature_runs(pdf, boundaries, bucket_tok, tok_name)
+
+    return (feats.select("hilbert_id", "ex", "ey", "sort_key", "image_id", "caption")
+            .mapInPandas(gen, _packed_schema(p)))
+
+
 def encode_vector_tiles_packed(packed: DataFrame, partitions: int | None = None,
                                thin_limit: int | None = None,
                                grid_px: int = 32, counters=None) -> DataFrame:
-    """Tile reduce over bucket-packed features. The exchange is a plain hash
-    shuffle on the partition TOKEN (exact bucket->partition placement, see
-    partitioning.partition_tokens), so the output is in TOTAL zoom-major
-    Hilbert order — partitions ascend with Hilbert-id range, buckets ascend
-    within a partition, tiles ascend within a bucket — and the sampling
-    double-compute of repartitionByRange never happens. Per bucket the
-    features are re-sorted (hilbert_id, sort_key, image_id) — the same total
-    order the row path's sortWithinPartitions("hilbert_id", "key",
-    "image_id") produces (key is monotone in (tile, layer=0, sort_key)) —
-    then encoded by the shared _encode_tile_runs, so tiles are
-    byte-identical to the row path."""
+    """The vector-tile reduce over bucket-packed features. The exchange is a
+    plain hash shuffle on the partition TOKEN (exact bucket->partition
+    placement, see partitioning.partition_tokens), so the output is in TOTAL
+    zoom-major Hilbert order — partitions ascend with Hilbert-id range,
+    buckets ascend within a partition, tiles ascend within a bucket — and the
+    sampling double-compute of repartitionByRange never happens.
+
+    Features cross the exchange ~50-500x fewer rows than one per feature:
+    Spark's per-row UnsafeRow<->Arrow conversion (~1.3us/row regardless of
+    width) was the tile reduce's floor. Per bucket the features are
+    re-sorted (hilbert_id, sort_key, image_id) — the feature key order
+    (FeatureGroup.encodeKey:176-196 with layer 0) plus image_id as the
+    tie-break — then encoded by _encode_tile_runs.
+
+    thin_limit: label-grid density cap applied inside the reduce, in sortKey
+    order (FeatureGroup.TileFeatures.add:616-637 drops beyond-limit features
+    exactly like this, during tile assembly); costs no extra shuffle."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -319,7 +321,7 @@ def encode_vector_tiles_packed(packed: DataFrame, partitions: int | None = None,
     tok_name = pt.resolve_token_col(packed.columns, p)
     if tok_name is None:
         raise ValueError("encode_vector_tiles_packed needs bucket-packed "
-                         "input from render_features_packed")
+                         "input from render_features_packed or pack_features")
     shuffled = packed.repartition(p, tok_name).sortWithinPartitions("bucket")
 
     def reduce_bucket(blob_views):
@@ -507,7 +509,7 @@ def _cumcount(keys: np.ndarray) -> np.ndarray:
 
 
 def _encode_tile_runs(hids, ex, ey, sk, ids, caps, thin_limit, cell, counters):
-    """Shared encode tail of both vector-tile reduce paths: label-grid cap
+    """Encode tail of the vector-tile reduce: label-grid cap
     (in sortKey order — FeatureGroup.TileFeatures.add:616-637), consecutive
     tile runs, PointTileStream encode. Inputs MUST already be sorted by
     (hilbert_id, sort_key, image_id); returns a RecordBatch (TILE_SCHEMA,
@@ -545,91 +547,6 @@ def _encode_tile_runs(hids, ex, ey, sk, ids, caps, thin_limit, cell, counters):
         pa.array(hids[starts], type=pa.int64()),
     ], names=["tile_id", "zoom", "x", "y", "n_features",
               "tile_bytes", "content_hash", "hilbert_id"])
-
-
-def encode_vector_tiles(feats: DataFrame, partitions: int | None = None,
-                        thin_limit: int | None = None,
-                        grid_px: int = 32, counters=None) -> DataFrame:
-    """Sorted consecutive-tile grouping -> one MVT blob per tile.
-
-    ARROW-NATIVE reduce (mapInArrow): record batches stream straight from the
-    shuffle — tile ids/coords as zero-copy numpy views, image_id/caption stay
-    Arrow string arrays end-to-end (PointTileStream casts offsets once; no
-    arrow->pandas->object->arrow round-trip, which cost ~1.2us/row).
-    Carry-over across batch boundaries uses zero-copy RecordBatch.slice.
-
-    thin_limit: label-grid density cap applied INSIDE the reduce (rows arrive
-    sorted by key, i.e. sortKey order — FeatureGroup.TileFeatures.add:616-637
-    drops beyond-limit features exactly like this, during tile assembly).
-    Costs no extra shuffle.
-
-    Rows are grouped on `hilbert_id` (render_features emits it), so tiles
-    leave in Hilbert order within each partition."""
-    import pyarrow as pa
-
-    from . import partitioning as pt
-    cell = grid_px * mvt.EXTENT // 256
-    p = partitions or feats.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    # a tok column (render_features(partitions=...)) turns this hash exchange
-    # into an exact RANGE exchange: partitions ascend with Hilbert-id range,
-    # so the per-partition sort below yields TOTAL zoom-major order for free
-    key = pt.resolve_token_col(feats.columns, int(p)) or "hilbert_id"
-    shuffled = (feats.repartition(int(p), key)
-                .sortWithinPartitions("hilbert_id", "key", "image_id"))
-
-    def reduce_tiles(chunks: list[pa.RecordBatch]):
-        tbl = pa.Table.from_batches(chunks)
-        return _encode_tile_runs(
-            tbl.column("hilbert_id").to_numpy(),
-            tbl.column("ex").to_numpy().astype(np.int64),
-            tbl.column("ey").to_numpy().astype(np.int64),
-            tbl.column("sort_key").to_numpy().astype(np.int64),
-            tbl.column("image_id"), tbl.column("caption"),
-            thin_limit, cell, counters)
-
-    def stream_batches(batches):
-        # consecutive-run grouping with zero-copy carry-over (the arrow twin
-        # of _grouped_by_tile's pandas stream; same O(total) chunk holding)
-        held: list[pa.RecordBatch] = []
-        held_tile: int | None = None
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            tids = rb.column("hilbert_id").to_numpy()
-            if len(tids) > 1 and not np.all(tids[1:] >= tids[:-1]):
-                raise ValueError("encode_vector_tiles: batch not sorted by "
-                                 "hilbert_id (upstream sortWithinPartitions missing?)")
-            if held and held_tile != tids[0]:
-                out = reduce_tiles(held)
-                if out is not None:
-                    yield out
-                held = []
-            last_start = int(np.searchsorted(tids, tids[-1], side="left"))
-            if held and last_start == 0:
-                held.append(rb)  # whole batch continues the held tile
-                continue
-            if held:
-                first_end = int(np.searchsorted(tids, tids[0], side="right"))
-                held.append(rb.slice(0, first_end))
-                out = reduce_tiles(held)
-                if out is not None:
-                    yield out
-                held = []
-                body = rb.slice(first_end, last_start - first_end)
-            else:
-                body = rb.slice(0, last_start)
-            if body.num_rows:
-                out = reduce_tiles([body])
-                if out is not None:
-                    yield out
-            held = [rb.slice(last_start)]
-            held_tile = int(tids[-1])
-        if held:
-            out = reduce_tiles(held)
-            if out is not None:
-                yield out
-
-    return shuffled.mapInArrow(stream_batches, TILE_SCHEMA)
 
 
 def encode_raster_tiles(patches: DataFrame, partitions: int | None = None) -> DataFrame:
@@ -850,7 +767,6 @@ def render_zone_features(spark: SparkSession, min_zoom: int = 0,
     `hilbert_id` and the analytic range-exchange token over it
     (partitioning.py), so the tile shuffle doubles as the archive-order
     sort — no repartitionByRange sampling pass downstream."""
-    from . import partitioning as pt
     from ..kernels import geom as gk
     from ..sources import images as src
 
@@ -859,14 +775,13 @@ def render_zone_features(spark: SparkSession, min_zoom: int = 0,
         else src.zones_pdf(n_zones or src.N_ZONES))
     rp = int(range_partitions
              or spark.conf.get("spark.sql.shuffle.partitions"))
-    boundaries, pid = pt.tile_range_partitioning(min_zoom, max_zoom, rp)
-    bucket_tok = pt.partition_tokens(spark, rp)[pid]
-    tok_name = pt.token_col(rp)
+    boundaries, bucket_tok, tok_name = _range_tokens(spark, min_zoom, max_zoom, rp)
 
     def gen(batches):
         for pdf in batches:
             rows = {k: [] for k in ("key", "tile_id", "zoom", "zone_id",
                                     "kind", "fill", "parts")}
+            txs, tys = [], []
             for r in pdf.itertuples(index=False):
                 typ, rings = gk.parse_wkb(bytes(r.wkb))
                 assert typ == "polygon"
@@ -880,10 +795,14 @@ def render_zone_features(spark: SparkSession, min_zoom: int = 0,
                         rows["kind"].append(r.kind)
                         rows["fill"].append(kind == "fill")
                         rows["parts"].append(b"" if parts is None else gk.pack_parts(parts))
+                        txs.append(tx)
+                        tys.append(ty)
             out = pd.DataFrame(rows)
             if len(out):
                 out["zoom"] = out["zoom"].astype("int32")
-                out["hilbert_id"] = _hilbert_ids(out["tile_id"].to_numpy())
+                out["hilbert_id"] = tm.hilbert_encode(
+                    np.array(txs, dtype=np.int64), np.array(tys, dtype=np.int64),
+                    out["zoom"].to_numpy())
                 bk = np.searchsorted(boundaries, out["hilbert_id"].to_numpy(),
                                      side="right") - 1
                 out[tok_name] = bucket_tok[bk]
@@ -996,55 +915,28 @@ def zones_tileset(spark: SparkSession, min_zoom: int = 0, max_zoom: int = 8,
 # the full job
 # ---------------------------------------------------------------------------
 
-def _packed_default() -> bool:
-    """Transport default (round-4 policy, VERDICT r3 #1): the ROW path is
-    the default because it owns the >=0.8 N-vs-4N scaling record (twelve-run
-    medians 0.845/0.953, BENCH/BASELINE.md); the bucket-PACKED transport —
-    ~1.2x faster at bench scale once the row path rides the range tokens
-    too (1.59s vs 1.95s at sf0.1), byte-identical output by test — is opt-in
-    via SPARK_GRAFT_PACKED=1 or tileset(packed=True) until it owns a
-    clean-window >=0.8 median of its own. (Round-4 same-night controls show
-    both paths converge at this single-socket host's DRAM ceiling at 24
-    cores, so the gap is measurement physics, not a distribution defect —
-    but the default follows the evidence on record.)"""
-    import os
-    return os.environ.get("SPARK_GRAFT_PACKED", "0") != "0"
-
-
 def tileset(spark: SparkSession, images: DataFrame, min_zoom: int = 0,
             max_zoom: int = MAX_ZOOM, shuffle_partitions: int | None = None,
-            thin_limit: int | None = 64, counters=None,
-            packed: bool | None = None) -> DataFrame:
+            thin_limit: int | None = 64, counters=None) -> DataFrame:
     """images -> vector tiles table in zoom-major Hilbert order, with a
     `hilbert_id` column (the PMTiles tile id) — phase 1+2+3 over ONE
-    exchange. write_pmtiles appends these partitions as they are.
+    exchange: render_features_packed -> encode_vector_tiles_packed.
+    write_pmtiles appends these partitions as they are.
+
+    Features move across the shuffle as bucket-packed binary rows on an
+    analytic range partitioning (partitioning.py), so the output lands in
+    total order with no repartitionByRange (whose boundary sampling
+    re-executed the entire pipeline: 5.5s -> 3.8s at sf0.1).
 
     Density thinning (thin_limit) runs map-side per render batch and exactly
-    inside the tile reduce (zero extra shuffles).
-
-    packed=True moves features across the shuffle as bucket-packed binary
-    rows on an analytic range partitioning (partitioning.py): ~50x fewer
-    rows through Spark's per-row UnsafeRow<->Arrow conversion. Both paths
-    ride the same range tokens, so the output lands in total order with no
-    repartitionByRange (whose boundary sampling re-executed the entire
-    pipeline: 5.5s -> 3.8s at sf0.1). Tiles are byte-identical between both
-    paths (test_packed_transport_equals_row_path). Default: see
-    _packed_default."""
-    if packed is None:
-        packed = _packed_default()
+    inside the tile reduce (zero extra shuffles)."""
     p = int(shuffle_partitions
             or spark.conf.get("spark.sql.shuffle.partitions"))
-    if packed:
-        feats = render_features_packed(images, min_zoom, max_zoom,
-                                       thin_limit=thin_limit,
-                                       counters=counters, partitions=p)
-        return encode_vector_tiles_packed(feats, partitions=p,
-                                          thin_limit=thin_limit,
-                                          counters=counters)
-    feats = render_features(images, min_zoom, max_zoom, thin_limit=thin_limit,
-                            counters=counters, partitions=p)
-    return encode_vector_tiles(feats, partitions=p,
-                               thin_limit=thin_limit, counters=counters)
+    feats = render_features_packed(images, min_zoom, max_zoom,
+                                   thin_limit=thin_limit,
+                                   counters=counters, partitions=p)
+    return encode_vector_tiles_packed(feats, partitions=p,
+                                      thin_limit=thin_limit, counters=counters)
 
 
 def raster_tileset(spark: SparkSession, images: DataFrame,

@@ -2071,15 +2071,15 @@ def images_tileset(spark, sf_dir):
 
 
 def images_tileset_packed(spark, sf_dir):
-    """The bucket-PACKED transport variant of the flagship (opt-in path,
-    tile_pipeline._packed_default policy; byte-identical tiles by test) —
-    timed separately by bench.py so both transports' throughput stays on
-    record. Not a gate row (same results as images_tileset)."""
+    """Kept under its own name for bench.py's query list: since the
+    bucket-packed exchange became the tileset's only transport, this runs
+    the same path as images_tileset. Not a gate row (same results as
+    images_tileset)."""
     from ..operators import tile_pipeline as tp
     from ..sources import images as src
 
     imgs = src.images_table(spark, _images_n(sf_dir, 1200), partitions=16, with_bytes=False)
-    tiles = tp.tileset(spark, imgs, min_zoom=0, max_zoom=11, packed=True)
+    tiles = tp.tileset(spark, imgs, min_zoom=0, max_zoom=11)
     return tiles.select("tile_id", "zoom", "x", "y", "n_features")
 
 

@@ -15,9 +15,10 @@ touches:
        what makes foreachBatch exactly-once here
     3. re-encode only the affected buckets: read the feature log filtered to
        those buckets (directory-partition pruning — untouched buckets are
-       never listed), group-by-tile MVT encode (encode_vector_tiles, the same
-       reduce the batch pipeline uses), and dynamic-partition-overwrite the
-       tile table at  out/tiles/bucket=K/
+       never listed), pack them into range buckets (pack_features) and
+       MVT-encode them with encode_vector_tiles_packed, the same exchange
+       and reduce the batch pipeline uses, then dynamic-partition-overwrite
+       the tile table at  out/tiles/bucket=K/
 
 Equivalence invariant (tested in test_streaming_tiles): after any sequence of
 micro-batches, the tile table equals `tileset()` run over the union of all
@@ -93,8 +94,8 @@ def apply_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
     # both levels: batch=* is listed, bucket filter prunes directories)
     log = (spark.read.option("basePath", feat_root).parquet(feat_root)
            .filter(F.col("bucket").isin([int(b) for b in affected])))
-    tiles = tp.encode_vector_tiles(log.drop("batch", "bucket"),
-                                   thin_limit=thin_limit)
+    tiles = tp.encode_vector_tiles_packed(
+        tp.pack_features(log, min_zoom, max_zoom), thin_limit=thin_limit)
     tiles = tiles.withColumn("bucket", _bucket(n_buckets))
 
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")

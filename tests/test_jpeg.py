@@ -131,18 +131,23 @@ def test_quality_scaling_formula():
 def test_decoder_rejects_garbage_and_truncation():
     with pytest.raises(ValueError):
         J.decode_jpeg(b"not a jpeg at all")
+    # a quantize+zlib "FJPG" payload tagged jpeg is not a JPEG stream
+    import zlib
+
+    fjpg = (b"FJPG" + (16).to_bytes(2, "little") * 2
+            + zlib.compress(bytes(16 * 16 * 3)))
+    with pytest.raises(ValueError):
+        ik.decode_image(fjpg, "jpeg")
     buf = J.encode_jpeg(_pixels(1, 16, 16))
     with pytest.raises(ValueError):
         J.decode_jpeg(buf[:40])  # headers cut off
 
 
-def test_decode_image_dispatch_and_legacy_fjpg():
+def test_decode_image_dispatch():
     px = _pixels(6, 64, 64)
     real = ik.encode_image(px, "jpeg")
     assert real[:2] == b"\xFF\xD8"
     assert ik.psnr(px, ik.decode_image(real, "jpeg")) >= 40.0
-    legacy = ik.encode_fake_jpeg(px)
-    assert ik.psnr(px, ik.decode_image(legacy, "jpeg")) >= 40.0
 
 
 def test_grayscale_single_component_stream():

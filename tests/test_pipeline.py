@@ -151,20 +151,72 @@ def test_content_hash_dedup_consistency(spark, images):
         assert len(blobs) == 1  # same hash -> byte-identical tile
 
 
-def test_packed_transport_equals_row_path(spark, images):
-    """The bucket-packed transport (analytic range exchange + blob rows) must
-    be BYTE-identical to the row path, in total zoom-major Hilbert order,
-    with the same thinning selection."""
-    a = tp.tileset(spark, images, min_zoom=0, max_zoom=7, packed=False,
-                   thin_limit=4).collect()
-    b = tp.tileset(spark, images, min_zoom=0, max_zoom=7, packed=True,
-                   thin_limit=4).collect()
-    am = {r.tile_id: (r.zoom, r.x, r.y, r.n_features, bytes(r.tile_bytes),
-                      r.content_hash) for r in a}
-    bm = {r.tile_id: (r.zoom, r.x, r.y, r.n_features, bytes(r.tile_bytes),
-                      r.content_hash) for r in b}
-    assert am == bm
-    assert_hilbert_order(b)  # total order without any range-sampling pass
+# Per-tile (hilbert_id, n_features, sha256(tile_bytes)) of
+# tileset(images, 0, 7, thin_limit=4), recorded from the row-per-feature
+# transport the bucket-packed exchange replaced (byte-identical by test then).
+TRANSPORT_TILES = 303
+TRANSPORT_SHA256 = \
+    "3951ffa5720f775e74af4fd62abe4580540b0b19dae8acc483c56e6443cd2e6d"
+
+
+def _tiles_digest(rows):
+    import hashlib
+
+    h = hashlib.sha256()
+    for r in rows:
+        h.update(f"{r.hilbert_id} {r.n_features} "
+                 f"{hashlib.sha256(bytes(r.tile_bytes)).hexdigest()}\n".encode())
+    return len(rows), h.hexdigest()
+
+
+@pytest.mark.parametrize("partitions", [4, 9])
+def test_packed_transport_bytes_pinned(spark, images, partitions):
+    """The bucket-packed exchange reproduces the recorded tiles byte for
+    byte, in total zoom-major Hilbert order, with the same thinning
+    selection, whatever the shuffle partition count."""
+    rows = tp.tileset(spark, images, min_zoom=0, max_zoom=7, thin_limit=4,
+                      shuffle_partitions=partitions).collect()
+    assert _tiles_digest(rows) == (TRANSPORT_TILES, TRANSPORT_SHA256)
+    assert_hilbert_order(rows)  # total order without any range-sampling pass
+
+
+def test_tileset_has_one_transport(spark, images):
+    import inspect
+
+    assert "packed" not in inspect.signature(tp.tileset).parameters
+    with pytest.raises(TypeError):
+        tp.tileset(spark, images, 0, 2, **{"packed": True})
+
+
+def _shuffle_exchanges(node):
+    """ShuffleExchangeExec nodes of an executed (possibly adaptive) plan."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _shuffle_exchanges(node.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return _shuffle_exchanges(node.plan())
+    found = [node] if name == "ShuffleExchangeExec" else []
+    kids = node.children()
+    for i in range(kids.size()):
+        found += _shuffle_exchanges(kids.apply(i))
+    return found
+
+
+def test_tile_exchange_carries_packed_buckets(spark, images):
+    """The one tile exchange moves bucket-packed blobs, not per-feature
+    rows: its input schema is (bucket, token, blob) and it writes far
+    fewer records than the tiles hold features."""
+    from planetiler_spark.operators import partitioning as pt
+
+    tiles = tp.tileset(spark, images, min_zoom=0, max_zoom=7,
+                       shuffle_partitions=4)
+    n_features = sum(r.n_features for r in tiles.collect())
+    (ex,) = _shuffle_exchanges(tiles._jdf.queryExecution().executedPlan())
+    out = ex.child().output()
+    assert [out.apply(i).name() for i in range(out.size())] == \
+        ["bucket", pt.token_col(4), "blob"]
+    records = ex.metrics().apply("shuffleRecordsWritten").value()
+    assert 0 < records < n_features / 4
 
 
 def test_partition_tokens_exact(spark):

@@ -240,6 +240,19 @@ def test_min_area_drops_small_regions():
     assert len(out) == 1 and area(out) == 10000.0
 
 
+def test_min_area_assigns_boundary_touching_hole():
+    """A hole whose every vertex lies on its shell's boundary still belongs
+    to that shell: its area counts in the shell's net-area test, and it
+    goes when the shell goes (no orphan hole ring)."""
+    shell = sq(0, 0, 10)[0]
+    hole = np.array([[10, 2], [4, 10], [10, 8], [10, 2]], float)  # CW
+    assert pc.drop_small_regions_exact([shell, hole], 1000.0) == []
+    kept = pc.drop_small_regions_exact([shell, hole], 50.0)
+    assert len(kept) == 2 and kept[1] is hole
+    # net area 100 - 18 = 82: below 90 once the hole is counted
+    assert pc.drop_small_regions_exact([shell, hole], 90.0) == []
+
+
 def test_union_polygons_exact_min_dist():
     # mirrors union.union_polygons' min_dist_px semantics (d = min_dist/2)
     two = [sq(0, 0, 10), sq(13, 0, 10)]

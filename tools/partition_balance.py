@@ -81,7 +81,8 @@ def main() -> None:
         out = tp._partial_thin(out, args.thin, cell)
         tid = out["tile_id"].to_numpy()
         # the pipelines range the exchange on the Hilbert id
-        bk = np.searchsorted(boundaries, tp._hilbert_ids(tid), side="right") - 1
+        bk = np.searchsorted(boundaries, tm.hilbert_encode(*tm.tile_decode(tid)),
+                             side="right") - 1
         mass_range += np.bincount(pid[bk], minlength=args.p)
         hsh = ((tid.astype(np.uint64) * np.uint64(0x9E3779B97F4A7C15))
                >> np.uint64(13)).astype(np.int64) % args.p

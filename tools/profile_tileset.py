@@ -28,7 +28,6 @@ def main():
     ap.add_argument("--cpus", type=int, required=True)
     ap.add_argument("--images", required=True)
     ap.add_argument("--maxzoom", type=int, default=13)
-    ap.add_argument("--packed", type=int, default=0)
     ap.add_argument("--shuffle-partitions", type=int, default=128)
     ap.add_argument("--max-partition-bytes", default=None)
     ap.add_argument("--open-cost", default=None)
@@ -75,8 +74,7 @@ def main():
         print(f"raster wall {wall:.2f}s  tiles={nr}")
     else:
         tiles = tp.tileset(spark, images, 0, args.maxzoom,
-                           shuffle_partitions=args.shuffle_partitions,
-                           packed=bool(args.packed))
+                           shuffle_partitions=args.shuffle_partitions)
         agg = tiles.agg(F.count("*").alias("nt"), F.sum("n_features").alias("nf")).collect()[0]
         wall = time.time() - t0
         print(f"tileset wall {wall:.2f}s  tiles={agg.nt} features={agg.nf}")

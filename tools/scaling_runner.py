@@ -99,13 +99,6 @@ def main():
     images = spark.read.parquet(args.images)
     images.count()  # warm FS cache + JVM before timing
 
-    # The scaling runner measures the PACKED transport by default (the path
-    # whose N-vs-4N record is being built); SPARK_GRAFT_PACKED=0 forces the
-    # row-shaped transport for PAIRED control runs that separate host-window
-    # noise from code effects. NOTE: the library default is the ROW path
-    # (tile_pipeline._packed_default — round-4 transport policy).
-    packed = os.environ.get("SPARK_GRAFT_PACKED", "1") != "0"
-
     # fixture generation + index build are INPUT PREP, not the measured job
     # (the images parquet is likewise prepared untimed): zones_pdf's Python
     # hull synthesis + the slab build take ~20s of DRIVER time, identical at
@@ -120,8 +113,7 @@ def main():
     def run_tileset():
         t0 = time.time()
         tiles = tp.tileset(spark, images, 0, args.maxzoom,
-                           shuffle_partitions=args.shuffle_partitions,
-                           packed=packed)
+                           shuffle_partitions=args.shuffle_partitions)
         agg = tiles.agg(F.count("*").alias("nt"),
                         F.sum("n_features").alias("nf")).collect()[0]
         return time.time() - t0, {"n_tiles": int(agg.nt),
