@@ -637,14 +637,17 @@ def drop_small_regions_exact(rings, min_area):
     areas = [float(gk.ring_signed_area(r)) for r in rings]
     shells = [(i, a) for i, a in enumerate(areas) if a > 0]
     holes = [i for i, a in enumerate(areas) if a <= 0]
-    # assign each hole to the smallest shell containing a point strictly
-    # inside it (its vertices may all sit on the shell's boundary)
+    # assign each hole to the smallest shell larger than it that contains
+    # a point strictly inside it (its vertices may all sit on the shell's
+    # boundary; an island inside the hole is smaller and may hold the point)
     shell_holes = {i: [] for i, _ in shells}
     unassigned = []
     for hi_ in holes:
         best, best_area = None, None
         pt = _interior_point(rings[hi_])
         for si, sa in shells if pt is not None else ():
+            if sa <= -areas[hi_]:
+                continue
             if bool(gk.points_in_polygon(np.array([pt[0]]), np.array([pt[1]]),
                                          [rings[si]])[0]):
                 if best is None or sa < best_area:

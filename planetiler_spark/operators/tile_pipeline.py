@@ -273,13 +273,13 @@ def render_features_packed(images: DataFrame, min_zoom: int = 0,
     return images.select(*cols).mapInPandas(gen, _packed_schema(p))
 
 
-def pack_features(feats: DataFrame, min_zoom: int = 0, max_zoom: int = MAX_ZOOM,
-                  partitions: int | None = None) -> DataFrame:
+def pack_features(feats: DataFrame, min_zoom: int, max_zoom: int) -> DataFrame:
     """Already-rendered feature rows (render_features' schema, e.g. read back
     from a feature log) -> the bucket-packed rows render_features_packed
-    emits: same boundaries, same tokens, same blob layout."""
+    emits: same boundaries, same tokens, same blob layout, for the session's
+    shuffle partition count (the one encode_vector_tiles_packed defaults to)."""
     spark = feats.sparkSession
-    p = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     boundaries, bucket_tok, tok_name = _range_tokens(spark, min_zoom, max_zoom, p)
 
     def gen(batches):

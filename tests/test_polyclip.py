@@ -251,6 +251,14 @@ def test_min_area_assigns_boundary_touching_hole():
     assert len(kept) == 2 and kept[1] is hole
     # net area 100 - 18 = 82: below 90 once the hole is counted
     assert pc.drop_small_regions_exact([shell, hole], 90.0) == []
+    # an island inside a hole may hold the hole's interior point; the hole
+    # still belongs to the outer shell (net 100 - 36 = 64), the island
+    # (area 4) is dropped on its own
+    outer = sq(0, 0, 10)[0]
+    ring = sq(2, 2, 6)[0][::-1].copy()  # CW hole 2..8
+    island = sq(4, 4, 2)[0]
+    kept = pc.drop_small_regions_exact([outer, ring, island], 10.0)
+    assert len(kept) == 2 and kept[0] is outer and kept[1] is ring
 
 
 def test_union_polygons_exact_min_dist():
