@@ -102,3 +102,37 @@ def test_merge_tile_polygons_exact_matches_raster(spark):
                 (k, e.area_out_px2, r.area_out_px2)
             compared += 1
     assert compared > 10
+
+
+def rows_digest(rows):
+    """(rows, sha256 over the sorted reprs of every row)."""
+    import hashlib
+
+    lines = sorted(repr(tuple(r)) for r in rows)
+    return len(lines), hashlib.sha256("\n".join(lines).encode()).hexdigest()
+
+
+# Sorted-row digests recorded from the row exchange the bucket-packed tile
+# exchange replaced: merge_tile_lines over render_boundary_lines(5, 6), and
+# merge_tile_polygons over render_zone_features(4, 5) (raster) and (4, 4)
+# (exact).
+MERGED_LINES = (
+    6975, "c5a2ece2104cc8fa1cf665434c1858fb6f2c31fb8ed33cb7fac34f5d4a14a782")
+MERGED_POLYS_RASTER = (
+    2429, "4881ff6b83b42138bae50b0f0356420d246b48a4b8b29fc1a347cb1ee4bbf8c7")
+MERGED_POLYS_EXACT = (
+    715, "479717faa5ec18550fb12c5dae4d30b92d8c5d1c5ad38027f88cf038b7961f2f")
+
+
+def test_merge_tile_lines_pinned(merged):
+    assert rows_digest(merged) == MERGED_LINES
+
+
+@pytest.mark.parametrize("method", ["raster", "exact"])
+def test_merge_tile_polygons_pinned(spark, method):
+    from planetiler_spark.operators import tile_pipeline as tp
+    max_zoom = 5 if method == "raster" else 4
+    feats = tp.render_zone_features(spark, min_zoom=4, max_zoom=max_zoom)
+    got = rows_digest(mg.merge_tile_polygons(feats, method=method).collect())
+    assert got == {"raster": MERGED_POLYS_RASTER,
+                   "exact": MERGED_POLYS_EXACT}[method]

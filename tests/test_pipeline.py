@@ -142,6 +142,41 @@ def test_raster_tiles_cover_and_decode(spark, images):
     assert (int(x), int(y), int(z)) == (r0.x, r0.y, r0.zoom)
 
 
+def raster_tiles_digest(rows):
+    """(tiles, sha256 over per-tile (tile_id, n_images, sha256(raster))
+    lines in tile_id order)."""
+    import hashlib
+
+    h = hashlib.sha256()
+    for r in sorted(rows, key=lambda r: r.tile_id):
+        h.update(f"{r.tile_id} {r.n_images} "
+                 f"{hashlib.sha256(bytes(r.raster)).hexdigest()}\n".encode())
+    return len(rows), h.hexdigest()
+
+
+# raster_tileset over the 64-image fixture, recorded from the row exchange
+# the bucket-packed tile exchange replaced.
+RASTER_TILES = 94
+RASTER_SHA256 = \
+    "c6bf1e05bdbfca2e7395cc4b40f1c48dc306de7ff542587bf0e3c8d687da14f0"
+
+
+@pytest.mark.parametrize("partitions", [4, 9])
+def test_raster_tiles_bytes_pinned(spark, images, partitions):
+    """Same raster tiles at any shuffle partition count and input order."""
+    from pyspark.sql import functions as F
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(partitions))
+    try:
+        for frame in (images, images.repartition(5).orderBy(F.rand(7))):
+            rows = tp.raster_tileset(spark, frame).collect()
+            assert raster_tiles_digest(rows) == (RASTER_TILES, RASTER_SHA256)
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_content_hash_dedup_consistency(spark, images):
     tiles = tp.tileset(spark, images, min_zoom=2, max_zoom=2).collect()
     by_hash = {}

@@ -83,3 +83,34 @@ def test_zones_output_total_order(spark, tiles):
                              np.array([r.y for r in tiles]),
                              np.array([r.zoom for r in tiles]))
     assert hid.tolist() == want.tolist()
+
+
+def zones_tiles_digest(rows):
+    """(tiles, sha256 over per-tile (hilbert_id, n_features,
+    sha256(tile_bytes)) lines in Hilbert order)."""
+    import hashlib
+
+    h = hashlib.sha256()
+    for r in sorted(rows, key=lambda r: r.hilbert_id):
+        h.update(f"{r.hilbert_id} {r.n_features} "
+                 f"{hashlib.sha256(bytes(r.tile_bytes)).hexdigest()}\n".encode())
+    return len(rows), h.hexdigest()
+
+
+# zones_tileset(spark, 0, 7, n_zones=64), recorded from the row exchange the
+# bucket-packed tile exchange replaced.
+ZONES_TILES = 2881
+ZONES_SHA256 = \
+    "abc87b55592a7966d30766891f23058032fbb46ac2559893b6e1781ba9c7ef37"
+
+
+@pytest.mark.parametrize("partitions", [4, 9])
+def test_zones_tiles_bytes_pinned(spark, partitions):
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(partitions))
+    try:
+        rows = tp.zones_tileset(spark, 0, 7, n_zones=64).collect()
+    finally:
+        spark.conf.set(key, old)
+    assert zones_tiles_digest(rows) == (ZONES_TILES, ZONES_SHA256)
