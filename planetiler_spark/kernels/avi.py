@@ -1,9 +1,9 @@
 """From-scratch AVI (RIFF) container with MJPEG video frames.
 
-Upgrades the video modality from the deterministic FVID stand-in to a REAL,
-player-openable container: the AVI structure is a public RIFF layout
-(hdrl list with avih main header + strl stream header/format, movi list of
-'00dc' compressed-frame chunks, word-aligned like every RIFF), and MJPEG
+The video modality's container, a REAL, player-openable one: the AVI
+structure is a public RIFF layout (hdrl list with avih main header + strl
+stream header/format, movi list of '00dc' compressed-frame chunks,
+word-aligned like every RIFF), and MJPEG
 is simply one baseline JPEG per frame — which kernels/jpeg.py already
 encodes and decodes for real. No codec library involved anywhere.
 

@@ -54,6 +54,7 @@ counts. The raster path stays the default for huge fused groups;
 from __future__ import annotations
 
 from math import gcd
+from operator import itemgetter
 
 import numpy as np
 
@@ -105,6 +106,19 @@ def _rcmp(a, b):
 
 def _rf(a):
     return a[0] / a[1]
+
+
+def _exact_sorted(items, key=itemgetter(0)):
+    """`items` in ascending exact order of the rational `key(item)`: a
+    float sort, then an insertion pass with the exact comparator that
+    repairs float near-ties (cheap: the float order is nearly right)."""
+    out = sorted(items, key=lambda v: _rf(key(v)))
+    for i in range(1, len(out)):
+        j = i
+        while j > 0 and _rcmp(key(out[j - 1]), key(out[j])) > 0:
+            out[j - 1], out[j] = out[j], out[j - 1]
+            j -= 1
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -246,13 +260,7 @@ def boolean_rings(polys_a, polys_b, op="union"):
         ys.add(y1)
         ys.add(y2)
     ys.update(_cross_ys(flat))
-    ys = sorted(ys, key=_rf)
-    # float sort can misorder near-ties: repair with the exact comparator
-    for i in range(1, len(ys)):
-        j = i
-        while j > 0 and _rcmp(ys[j - 1], ys[j]) > 0:
-            ys[j - 1], ys[j] = ys[j], ys[j - 1]
-            j -= 1
+    ys = _exact_sorted(ys, key=lambda y: y)
     # drop exact duplicates
     dedup = [ys[0]]
     for y in ys[1:]:
@@ -274,12 +282,7 @@ def boolean_rings(polys_a, polys_b, op="union"):
         else:
             spans.append([y2, y1, x2, x1, pi, None,
                           _rsub(x1, x2), _rsub(y1, y2)])
-    spans.sort(key=lambda s: _rf(s[0]))
-    for i in range(1, len(spans)):    # exact repair of float near-ties
-        j = i
-        while j > 0 and _rcmp(spans[j - 1][0], spans[j][0]) > 0:
-            spans[j - 1], spans[j] = spans[j], spans[j - 1]
-            j -= 1
+    spans = _exact_sorted(spans)
 
     def x_at(s, y):
         # x = xlo + (y - ylo) * dx / dy, fused into one normalization:
@@ -324,12 +327,7 @@ def boolean_rings(polys_a, polys_b, op="union"):
         if not active:
             slab_ivals.append((y0, y1, []))
             continue
-        active.sort(key=lambda t: _rf(t[0]))
-        for i in range(1, len(active)):   # exact repair of float near-ties
-            j = i
-            while j > 0 and _rcmp(active[j - 1][0], active[j][0]) > 0:
-                active[j - 1], active[j] = active[j], active[j - 1]
-                j -= 1
+        active = _exact_sorted(active)
         parity = [0] * npoly
         odd_a = odd_b = 0
         ivals = []
@@ -395,10 +393,10 @@ def _rings_from_slabs(slab_ivals):
             segs.append(((xl1, y1), (xl0, y0)))   # left side: downward
             segs.append(((xr0, y0), (xr1, y1)))   # right side: upward
         below = slab_ivals[si - 1][2] if si > 0 else []
-        mine_at = sorted(((xl0, xr0) for (xl0, xl1, xr0, xr1) in ivals
-                          if xl0 != xr0), key=lambda p: _rf(p[0]))
-        below_at = sorted(((xl1, xr1) for (xl0, xl1, xr0, xr1) in below
-                           if xl1 != xr1), key=lambda p: _rf(p[0]))
+        mine_at = _exact_sorted((xl0, xr0) for (xl0, xl1, xr0, xr1) in ivals
+                                if xl0 != xr0)
+        below_at = _exact_sorted((xl1, xr1) for (xl0, xl1, xr0, xr1) in below
+                                 if xl1 != xr1)
         # bottom caps of this slab's region (interior above): +x direction
         for lo, hi in _sub_intervals(mine_at, below_at):
             segs.append(((lo, y0), (hi, y0)))
@@ -406,8 +404,8 @@ def _rings_from_slabs(slab_ivals):
         for lo, hi in _sub_intervals(below_at, mine_at):
             segs.append(((hi, y0), (lo, y0)))
         if si == nslab - 1:
-            top_at = sorted(((xl1, xr1) for (xl0, xl1, xr0, xr1) in ivals
-                             if xl1 != xr1), key=lambda p: _rf(p[0]))
+            top_at = _exact_sorted((xl1, xr1) for (xl0, xl1, xr0, xr1) in ivals
+                                   if xl1 != xr1)
             for lo, hi in top_at:
                 segs.append(((hi, y1), (lo, y1)))
 

@@ -7,11 +7,10 @@ codecs in kernels/image.py + kernels/jpeg.py): bilinear resize is vectorized
 numpy gather/lerp, and feature extraction computes an ACTUAL 64-bit
 perceptual hash — 32x32 luma -> orthonormal 2D DCT-II -> low-frequency 8x8
 block -> median threshold — i.e. the classic pHash construction, not a
-stand-in. Video is the one modality whose real decoder cannot exist in this
-container (no codec library); `sample_frames` keeps the Spark plumbing
-(schema, explode shape, batch flow) real and routes fmt='video' bytes
-through a clearly-marked deterministic fake splitter, raising for anything
-else.
+stand-in. Video frames come out of a real RIFF/AVI MJPEG container
+(kernels/avi.py on the same JPEG codec); `sample_frames` raises for any
+other container, since inter-frame codecs need a decoder this package does
+not ship.
 """
 
 from __future__ import annotations
@@ -143,56 +142,28 @@ def extract_features(images: DataFrame, hist_bins: int = 8) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # video frame sampling — REAL AVI/MJPEG container (kernels/avi.py on the
-# from-scratch JPEG codec) plus the legacy FVID deterministic stand-in
+# from-scratch JPEG codec)
 # ---------------------------------------------------------------------------
-
-FAKE_VIDEO_MAGIC = b"FVID"
-
 
 def encode_video(frames: list[np.ndarray], fmt: str = "avi",
                  fps: int = 10) -> bytes:
-    """Frames -> video bytes. 'avi' is a real RIFF/AVI MJPEG container any
-    player opens; 'fvid' keeps the legacy lossless test container."""
+    """Frames -> video bytes: a real RIFF/AVI MJPEG container any player
+    opens."""
     if fmt == "avi":
         from ..kernels import avi as avk
         return avk.encode_avi(frames, fps=fps)
-    if fmt == "fvid":
-        return encode_fake_video(frames)
     raise ValueError(f"unknown video format {fmt!r}")
 
 
 def decode_video(buf: bytes) -> list[np.ndarray]:
-    """Magic-dispatched decode: RIFF/AVI (real MJPEG) or FVID (legacy)."""
+    """RIFF/AVI (MJPEG) bytes -> frames."""
     if buf[:4] == b"RIFF" and buf[8:12] == b"AVI ":
         from ..kernels import avi as avk
         return avk.decode_avi(buf)[1]
-    return _decode_fake_video(buf)
-
-
-def encode_fake_video(frames: list[np.ndarray]) -> bytes:
-    """Deterministic stand-in container: FVID | n | per-frame PNG lengths |
-    concatenated PNG payloads. Lets the frame-sampling plumbing be tested
-    end-to-end without a codec library."""
-    payloads = [ik.encode_png(f) for f in frames]
-    head = FAKE_VIDEO_MAGIC + len(payloads).to_bytes(4, "big") + b"".join(
-        len(p).to_bytes(4, "big") for p in payloads)
-    return head + b"".join(payloads)
-
-
-def _decode_fake_video(buf: bytes) -> list[np.ndarray]:
-    if buf[:4] != FAKE_VIDEO_MAGIC:
-        raise NotImplementedError(
-            "unknown video container (AVI/MJPEG and FVID are supported; "
-            "inter-frame codecs like H.264 genuinely need an external "
-            "decoder this environment does not ship)")
-    n = int.from_bytes(buf[4:8], "big")
-    lens = [int.from_bytes(buf[8 + 4 * i:12 + 4 * i], "big") for i in range(n)]
-    off = 8 + 4 * n
-    out = []
-    for ln in lens:
-        out.append(ik.decode_png(buf[off:off + ln]))
-        off += ln
-    return out
+    raise NotImplementedError(
+        "unknown video container (AVI/MJPEG is supported; inter-frame "
+        "codecs like H.264 need an external decoder this package does not "
+        "ship)")
 
 
 def sample_frames(videos: DataFrame, every_n: int = 2) -> DataFrame:

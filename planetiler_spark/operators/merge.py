@@ -12,6 +12,11 @@ The line demo source is the zones' boundaries (GeoUtils.polygonToLineString
 :443): rings sliced into per-tile pieces at render time, then re-merged into
 contiguous strokes inside each tile — slicing+merging round-trips the
 boundary length, which the tests assert.
+
+Both merge ops are per-bucket reduces of the one tile exchange
+(tile_pipeline.tile_exchange): their inputs are bucket-packed rows, as
+render_boundary_lines / render_zone_features emit them or pack_rows makes
+them from existing rows.
 """
 
 from __future__ import annotations
@@ -24,10 +29,10 @@ from ..kernels import geom as gk
 from ..kernels import lines as lk
 from ..kernels import tile_math as tm
 from . import render as R
-from .tile_pipeline import _grouped_by_tile
+from .tile_pipeline import _packer, _record_batch, tile_exchange
 
 LINE_FEATURES_SCHEMA = ("key long, tile_id long, zoom int, zone_id string, "
-                        "kind string, scale int, parts binary")
+                        "kind string, scale int, parts binary, hilbert_id long")
 MERGED_SCHEMA = ("tile_id long, zoom int, zone_id string, kind string, "
                  "n_pieces long, n_merged long, len_before double, len_after double")
 
@@ -38,16 +43,19 @@ def render_boundary_lines(spark: SparkSession, min_zoom: int = 4,
     pieces across zooms (TiledGeometry slicing, no simplification so merge
     length checks are exact). Pieces are stored at the reference's
     zoom-dependent extra precision (FeatureRenderer.java:262-269 via
-    render.line_scale_bits) and only unscaled AFTER merging."""
+    render.line_scale_bits) and only unscaled AFTER merging. Rows
+    (LINE_FEATURES_SCHEMA) leave bucket-packed for the tile exchange."""
     from ..sources import images as src
 
     zones = spark.createDataFrame(src.zones_pdf())
+    pack, schema = _packer(spark, min_zoom, max_zoom)
 
     def gen(batches):
-        for pdf in batches:
+        for rb in batches:
             rows = {k: [] for k in ("key", "tile_id", "zoom", "zone_id",
                                     "kind", "scale", "parts")}
-            for r in pdf.itertuples(index=False):
+            txs, tys = [], []
+            for r in rb.to_pandas().itertuples(index=False):
                 typ, rings = gk.parse_wkb(bytes(r.wkb))
                 for z in range(min_zoom, max_zoom + 1):
                     sb = R.line_scale_bits(z, max_zoom)
@@ -61,22 +69,29 @@ def render_boundary_lines(spark: SparkSession, min_zoom: int = 4,
                         rows["kind"].append(r.kind)
                         rows["scale"].append(sb)
                         rows["parts"].append(gk.pack_parts(parts))
+                        txs.append(tx)
+                        tys.append(ty)
             out = pd.DataFrame(rows)
             if len(out):
+                out["zoom"] = out["zoom"].astype("int32")
                 out["scale"] = out["scale"].astype("int32")
-            yield out
+                out["hilbert_id"] = tm.hilbert_encode(
+                    np.array(txs, dtype=np.int64), np.array(tys, dtype=np.int64),
+                    out["zoom"].to_numpy())
+                yield pack(out)
 
-    return zones.repartition(16, "zone_id").mapInPandas(gen, LINE_FEATURES_SCHEMA)
+    return zones.repartition(16, "zone_id").mapInArrow(gen, schema)
 
 
 def merge_tile_lines(feats: DataFrame, min_length: float = 0.0,
-                     stub_min_length: float = 0.0,
-                     partitions: int | None = None) -> DataFrame:
-    """Per (tile, attr-group): merge touching line pieces into strokes
-    (mergeLineStrings semantics) — returns merge stats per group so results
-    stay verifiable without shipping geometry."""
+                     stub_min_length: float = 0.0) -> DataFrame:
+    """Per (tile, attr-group): merge touching line pieces (bucket-packed
+    LINE_FEATURES_SCHEMA rows) into strokes (mergeLineStrings semantics) —
+    returns merge stats per group so results stay verifiable without
+    shipping geometry."""
 
-    def reduce_tiles(pdf: pd.DataFrame):
+    def reduce_tiles(t):
+        pdf = t.to_pandas()
         out = {k: [] for k in ("tile_id", "zoom", "zone_id", "kind",
                                "n_pieces", "n_merged", "len_before", "len_after")}
         for (tid, zid), grp in pdf.groupby(["tile_id", "zone_id"], sort=True):
@@ -101,11 +116,9 @@ def merge_tile_lines(feats: DataFrame, min_length: float = 0.0,
             out["n_merged"].append(len(merged))
             out["len_before"].append(float(sum(gk.line_length(p) for p in pieces)))
             out["len_after"].append(float(sum(gk.line_length(m) for m in merged)))
-        yield pd.DataFrame(out)
+        return _record_batch(out, MERGED_SCHEMA)
 
-    shuffled, stream = _grouped_by_tile(feats, partitions, ["key", "zone_id"],
-                                        reduce_tiles)
-    return shuffled.mapInPandas(stream, MERGED_SCHEMA)
+    return tile_exchange(feats, reduce_tiles, MERGED_SCHEMA, ["key", "zone_id"])
 
 
 def merge_points_by_attrs(df: DataFrame, attr_cols: list[str],
@@ -125,12 +138,11 @@ MERGED_POLY_SCHEMA = ("tile_id long, zoom int, kind string, n_input long, "
 
 def merge_tile_polygons(feats: DataFrame, min_dist_px: float = 0.0,
                         min_area: float = 0.0,
-                        partitions: int | None = None,
                         method: str = "raster") -> DataFrame:
     """Per (tile, kind): union overlapping/nearby polygons
     (FeatureMerge.mergeOverlappingPolygons:291-300 / mergeNearbyPolygons
-    :323-394). Input = zone polygon fragments from render_zone_features
-    (fill rows become full-tile squares). Outputs area accounting: union
+    :323-394). Input = bucket-packed zone polygon fragments, as
+    render_zone_features emits them (fill rows become full-tile squares). Outputs area accounting: union
     area <= input area (overlaps collapse) and >= largest input.
 
     method="raster" (default): kernels/union.py scanline+morphology union —
@@ -151,7 +163,8 @@ def merge_tile_polygons(feats: DataFrame, min_dist_px: float = 0.0,
     full_tile = [np.array([[lo, lo], [hi, lo], [hi, hi], [lo, hi], [lo, lo]],
                           dtype=float)]
 
-    def reduce_tiles(pdf: pd.DataFrame):
+    def reduce_tiles(t):
+        pdf = t.to_pandas()
         out = {k: [] for k in ("tile_id", "zoom", "kind", "n_input",
                                "n_rings", "area_in_px2", "area_out_px2")}
         for (tid, kind), grp in pdf.groupby(["tile_id", "kind"], sort=True):
@@ -182,11 +195,10 @@ def merge_tile_polygons(feats: DataFrame, min_dist_px: float = 0.0,
             out["n_rings"].append(len(merged))
             out["area_in_px2"].append(float(area_in))
             out["area_out_px2"].append(area_out)
-        yield pd.DataFrame(out)
+        return _record_batch(out, MERGED_POLY_SCHEMA)
 
-    shuffled, stream = _grouped_by_tile(feats, partitions, ["key", "zone_id"],
-                                        reduce_tiles)
-    return shuffled.mapInPandas(stream, MERGED_POLY_SCHEMA)
+    return tile_exchange(feats, reduce_tiles, MERGED_POLY_SCHEMA,
+                         ["key", "zone_id"])
 
 
 def merge_multipolygon(polys: list[list[np.ndarray]], extent: int = 4096

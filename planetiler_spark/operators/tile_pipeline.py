@@ -1,22 +1,28 @@
 """The flagship job: Planetiler's 3-phase pipeline over the images table,
 re-expressed Spark-first (ARCHITECTURE.md:5-11 of the reference).
 
-  phase 1 RENDER  — mapInPandas: phash -> geo-anchor -> slice into per-tile
+  phase 1 RENDER  — mapInArrow: phash -> geo-anchor -> slice into per-tile
                     fragments across zooms (FeatureRenderer.java:62-111,
                     TiledGeometry.slicePoint:245-260), each with the
                     fragment's PMTiles Hilbert tile id, then PACK each
-                    render batch into one binary row per Hilbert-id range
-                    bucket (_pack_feature_runs)
+                    render batch into one row per Hilbert-id range bucket:
+                    the bucket's rows as one Arrow IPC stream (_pack)
   phase 2 SORT    — the shuffle IS the external merge sort
                     (ExternalMergeSort.java:168): an analytic range exchange
                     on the bucket's partition token (partitioning.py),
-                    sorted within partitions by bucket
+                    sorted within partitions by bucket (tile_exchange)
   phase 3 EMIT    — mapInArrow per bucket: re-sort its features by
                     (hilbert_id, sort_key, image_id) — the feature key order
                     of FeatureGroup.encodeKey:176-196 — then consecutive
                     same-tile runs: label-grid limit, MVT encode + gzip
                     (VectorTile.java, TileArchiveWriter.java), content-hash
                     for order-free tile dedup
+
+Every tile flow here — images (batch and streaming), zones, raster
+patches and the merge ops (merge.py) — runs on that one exchange and
+reduce loop, `tile_exchange`; each supplies only its render (which packs)
+and its per-bucket encode. OSM keeps its own row exchange
+(plans/osm_pipeline.py).
 
 The sort key's tile field is the Hilbert id, as in the reference when it
 writes PMTiles (TileOrder.encode, FeatureGroup.java:168-196): the tileset
@@ -56,7 +62,8 @@ FEATURES_SCHEMA = ("key long, tile_id long, zoom int, ex int, ey int, "
                    "image_id string, caption string, sort_key int, "
                    "hilbert_id long")
 PATCH_SCHEMA = ("tile_id long, image_id string, px0 int, py0 int, "
-                "pw int, ph int, patch binary, caption string, fmt string")
+                "pw int, ph int, patch binary, caption string, fmt string, "
+                "hilbert_id long")
 TILE_SCHEMA = ("tile_id long, zoom int, x int, y int, n_features long, "
                "tile_bytes binary, content_hash string, hilbert_id long")
 RASTER_SCHEMA = "tile_id long, zoom int, x int, y int, n_images long, raster binary"
@@ -120,7 +127,7 @@ def render_features(images: DataFrame, min_zoom: int = 0,
                     grid_px: int = 32) -> DataFrame:
     """images -> per-(feature, zoom, tile) rows in the sorted-KV model, each
     with its PMTiles `hilbert_id`, unpacked: one row per feature, as the
-    streaming feature log stores them (pack_features ships them to the tile
+    streaming feature log stores them (pack_rows ships them to the tile
     reduce). thin_limit applies the map-side partial label-grid cap (see
     _partial_thin)."""
     zooms = range(min_zoom, max_zoom + 1)
@@ -136,113 +143,156 @@ def render_features(images: DataFrame, min_zoom: int = 0,
     return images.select(*cols).mapInPandas(gen, FEATURES_SCHEMA)
 
 
-def _range_tokens(spark: SparkSession, min_zoom: int, max_zoom: int, p: int):
-    """(bucket boundaries over the Hilbert ids of min_zoom..max_zoom, each
-    bucket's partition token, the token column's name) for an analytic
-    range exchange into p partitions (partitioning.py)."""
-    from . import partitioning as pt
+# ---------------------------------------------------------------------------
+# phase 2: the tile exchange
+# ---------------------------------------------------------------------------
 
-    boundaries, pid = pt.tile_range_partitioning(min_zoom, max_zoom, p)
-    return boundaries, pt.partition_tokens(spark, p)[pid], pt.token_col(p)
+# the image features' packed columns, in the order the feature log has them
+POINT_COLS = ("hilbert_id", "ex", "ey", "sort_key", "image_id", "caption")
 
 
-def _packed_schema(p: int) -> str:
-    from . import partitioning as pt
-    return f"bucket int, {pt.token_col(p)} long, blob binary"
+def _pack(table, boundaries: np.ndarray, bucket_tok: np.ndarray,
+          tok_name: str):
+    """One render batch (an Arrow table/batch or a pandas frame with a
+    `hilbert_id` column) -> ONE row per Hilbert-id range bucket it touches:
+    (bucket, the bucket's partition token, the bucket's rows as one Arrow
+    IPC stream). `boundaries` are the bucket edges, n_buckets + 1 ids.
 
-
-def _string_buffers(arr):
-    """(offsets int32[n+1], data uint8[*]) numpy views of a pyarrow string
-    array, offset-normalized (a sliced array's offsets buffer starts at its
-    logical offset, not index 0 — same hazard PointTileStream.as_binary
-    guards)."""
+    Spark's per-row UnsafeRow<->Arrow conversion costs ~1.3us/row whatever
+    the width, so rows cross the exchange ~50-500x fewer than one per
+    feature; the reduce opens the streams zero-copy. ex/ey/sort_key travel
+    as int32."""
     import pyarrow as pa
-    if arr.offset:
-        arr = pa.concat_arrays([arr])
-    bufs = arr.buffers()
-    off = np.frombuffer(bufs[1], dtype=np.int32, count=len(arr) + 1)
-    data = (np.frombuffer(bufs[2], dtype=np.uint8)
-            if bufs[2] is not None else np.empty(0, dtype=np.uint8))
-    return off, data
-
-
-def _pack_feature_runs(out: pd.DataFrame, boundaries: np.ndarray,
-                       bucket_tok: np.ndarray,
-                       tok_name: str = "tok") -> pd.DataFrame:
-    """Pack one render batch into ONE binary row per contiguous-range bucket
-    of Hilbert ids:
-    [n u32 | hilbert_id i64[n] | ex i32[n] | ey i32[n] | sort_key i32[n] |
-     id_off u32[n+1] | id_bytes | cap_off u32[n+1] | cap_bytes].
-
-    This is the transport fix for the measured floor of the tile pipeline:
-    Spark's per-row UnsafeRow<->Arrow conversion costs ~1.3us/row regardless
-    of width (a no-op mapInArrow over the shuffled features cost the same as
-    the full MVT encode), so the features cross the row boundary packed
-    ~50-500x fewer rows instead. String payloads move as UTF-8 + offsets the
-    reduce re-hydrates into Arrow arrays zero-copy — no Python string objects
-    exist on either side."""
-    import pyarrow as pa
-    n = len(out)
-    if n == 0:
-        return pd.DataFrame({"bucket": pd.Series([], dtype="int32"),
-                             tok_name: pd.Series([], dtype="int64"),
-                             "blob": pd.Series([], dtype=object)})
-    hids = out["hilbert_id"].to_numpy()
-    bucket = np.searchsorted(boundaries, hids, side="right") - 1
+    if isinstance(table, pd.DataFrame):
+        table = pa.Table.from_pandas(table, preserve_index=False)
+    elif isinstance(table, pa.RecordBatch):
+        table = pa.Table.from_batches([table])
+    for name in ("ex", "ey", "sort_key"):
+        if name in table.column_names:
+            i = table.column_names.index(name)
+            table = table.set_column(i, name, table.column(i).cast(pa.int32()))
+    bucket = np.searchsorted(boundaries, table.column("hilbert_id").to_numpy(),
+                             side="right") - 1
+    if len(bucket) and (bucket.min() < 0 or bucket.max() >= len(boundaries) - 1):
+        raise ValueError("hilbert_id outside the zooms of the range buckets")
     order = np.argsort(bucket, kind="stable")
-    b_s = bucket[order]
-    hids_s = np.ascontiguousarray(hids[order], dtype="<i8")
-    ex_s = np.ascontiguousarray(out["ex"].to_numpy()[order], dtype="<i4")
-    ey_s = np.ascontiguousarray(out["ey"].to_numpy()[order], dtype="<i4")
-    sk_s = np.ascontiguousarray(out["sort_key"].to_numpy()[order], dtype="<i4")
-    take = pa.array(order)
-    ids = pa.array(out["image_id"].to_numpy(), type=pa.string()).take(take)
-    caps = pa.array(out["caption"].to_numpy(), type=pa.string()).take(take)
-    id_off, id_data = _string_buffers(ids)
-    cap_off, cap_data = _string_buffers(caps)
-    starts = np.nonzero(np.diff(b_s, prepend=b_s[0] - 1))[0]
-    ends = np.append(starts[1:], n)
-    blobs = []
+    table = table.take(order)
+    bucket = bucket[order]
+    starts = np.flatnonzero(np.diff(bucket, prepend=-1))
+    ends = np.append(starts[1:], len(bucket))
+    sink = pa.BufferOutputStream()
+    offsets = [0]
     for s, e in zip(starts, ends):
-        blobs.append(b"".join((
-            np.uint32(e - s).tobytes(),
-            hids_s[s:e].tobytes(),
-            ex_s[s:e].tobytes(), ey_s[s:e].tobytes(), sk_s[s:e].tobytes(),
-            np.ascontiguousarray(id_off[s:e + 1] - id_off[s], dtype="<u4").tobytes(),
-            id_data[id_off[s]:id_off[e]].tobytes(),
-            np.ascontiguousarray(cap_off[s:e + 1] - cap_off[s], dtype="<u4").tobytes(),
-            cap_data[cap_off[s]:cap_off[e]].tobytes(),
-        )))
-    bks = b_s[starts]
-    return pd.DataFrame({"bucket": bks.astype(np.int32),
-                         tok_name: bucket_tok[bks],
-                         "blob": blobs})
+        with pa.ipc.new_stream(sink, table.schema) as w:
+            w.write_table(table.slice(s, e - s))
+        offsets.append(sink.tell())
+    bks = bucket[starts]
+    blobs = pa.Array.from_buffers(pa.binary(), len(starts), [
+        None, pa.py_buffer(np.array(offsets, dtype=np.int32)), sink.getvalue()])
+    return pa.RecordBatch.from_arrays(
+        [pa.array(bks, pa.int32()), pa.array(bucket_tok[bks], pa.int64()), blobs],
+        names=["bucket", tok_name, "blob"])
 
 
-def _unpack_blob(mv):
-    """Inverse of one _pack_feature_runs blob: numpy views over the
-    (unaligned-tolerant) buffer + zero-copy Arrow string rehydration."""
+def _packer(spark: SparkSession, min_zoom: int, max_zoom: int,
+            p: int | None = None):
+    """(pack, schema): _pack bound to the analytic range buckets over the
+    Hilbert ids of min_zoom..max_zoom for an exchange into p partitions
+    (default: the session's shuffle partitions; partitioning.py), and the
+    packed rows' schema."""
+    import functools
+
+    from . import partitioning as pt
+
+    p = int(p or spark.conf.get("spark.sql.shuffle.partitions"))
+    starts, pid = pt.tile_range_partitioning(min_zoom, max_zoom, p)
+    end = int(tm.ZOOM_START_INDEX[max_zoom]) + (1 << (2 * max_zoom))
+    tok_name = pt.token_col(p)
+    pack = functools.partial(_pack, boundaries=np.append(starts, end),
+                             bucket_tok=pt.partition_tokens(spark, p)[pid],
+                             tok_name=tok_name)
+    return pack, f"bucket int, {tok_name} long, blob binary"
+
+
+def pack_rows(df: DataFrame, min_zoom: int, max_zoom: int) -> DataFrame:
+    """Rows that already exist and carry `hilbert_id` (a feature log read
+    back, raster patches, fixtures) -> the bucket-packed rows a packing
+    render emits, for the session's shuffle partition count."""
+    pack, schema = _packer(df.sparkSession, min_zoom, max_zoom)
+
+    def gen(batches):
+        for rb in batches:
+            if rb.num_rows:
+                yield pack(rb)
+
+    return df.mapInArrow(gen, schema)
+
+
+def tile_exchange(packed: DataFrame, reduce_bucket, schema: str,
+                  order) -> DataFrame:
+    """The one tile shuffle, Planetiler's sort + groupIntoTiles
+    (FeatureGroup.java:168-196, :339-378) re-expressed Spark-first, for
+    bucket-packed rows (_pack). A plain hash exchange on the partition
+    TOKEN places each bucket exactly (partitioning.partition_tokens), so
+    partitions ascend with Hilbert-id range and, sorted by bucket within
+    them, hand out buckets in total order with no sampling pass.
+
+    Per bucket, its IPC streams from every render batch are opened
+    zero-copy, concatenated and sorted by (hilbert_id, *order); then
+    `reduce_bucket(table)` returns a RecordBatch of `schema` or None. A
+    bucket holds whole tiles, so the output is in zoom-major Hilbert
+    order."""
     import pyarrow as pa
-    n = int(np.frombuffer(mv, np.uint32, 1)[0])
-    o = 4
-    hid = np.frombuffer(mv, "<i8", n, o); o += 8 * n
-    ex = np.frombuffer(mv, "<i4", n, o); o += 4 * n
-    ey = np.frombuffer(mv, "<i4", n, o); o += 4 * n
-    sk = np.frombuffer(mv, "<i4", n, o); o += 4 * n
+    import pyarrow.compute as pc
 
-    def strings(o):
-        off = np.frombuffer(mv, "<u4", n + 1, o)
-        o += 4 * (n + 1)
-        nbytes = int(off[n])
-        arr = pa.Array.from_buffers(pa.utf8(), n, [
-            None,
-            pa.py_buffer(np.ascontiguousarray(off, dtype=np.int32)),
-            pa.py_buffer(bytes(mv[o:o + nbytes]))])
-        return arr, o + nbytes
+    toks = [c for c in packed.columns if c.startswith("tok_p")]
+    if len(toks) != 1:
+        raise ValueError("tile_exchange needs bucket-packed rows "
+                         "(pack_rows or a packing render)")
+    p = int(toks[0][len("tok_p"):])
+    shuffled = packed.repartition(p, toks[0]).sortWithinPartitions("bucket")
+    keys = [(c, "ascending") for c in ("hilbert_id", *order)]
 
-    ids, o = strings(o)
-    caps, _ = strings(o)
-    return hid, ex, ey, sk, ids, caps
+    def reduce(blobs):
+        table = pa.concat_tables(pa.ipc.open_stream(b).read_all() for b in blobs)
+        table = table.take(pc.sort_indices(table, sort_keys=keys))
+        return reduce_bucket(table.combine_chunks())
+
+    def stream(batches):
+        held: list = []          # the open bucket's IPC streams
+        held_bucket = None
+        for rb in batches:
+            bks = rb.column(0).to_numpy()
+            if np.any(bks[1:] < bks[:-1]):
+                raise ValueError("tile_exchange: batch not sorted by bucket")
+            blobs = rb.column(2)
+            for i, b in enumerate(bks):
+                if held and b != held_bucket:
+                    out = reduce(held)
+                    if out is not None:
+                        yield out
+                    held = []
+                held.append(blobs[i].as_buffer())
+                held_bucket = b
+        if held:
+            out = reduce(held)
+            if out is not None:
+                yield out
+
+    return shuffled.mapInArrow(stream, schema)
+
+
+def _record_batch(cols: dict, schema: str):
+    """Equal-length columns -> a RecordBatch typed by a flat DDL schema
+    ("name type, ..."), for reduces that build their output per tile."""
+    import pyarrow as pa
+    types = {"long": pa.int64(), "int": pa.int32(), "string": pa.string(),
+             "binary": pa.binary(), "double": pa.float64(),
+             "boolean": pa.bool_()}
+    fields = [f.split() for f in schema.split(",")]
+    return pa.RecordBatch.from_arrays(
+        [pa.array(cols[n], type=types[t]) for n, t in fields],
+        names=[n for n, _ in fields])
 
 
 def render_features_packed(images: DataFrame, min_zoom: int = 0,
@@ -251,146 +301,64 @@ def render_features_packed(images: DataFrame, min_zoom: int = 0,
                            counters=None, partitions: int | None = None) -> DataFrame:
     """images -> bucket-packed features: the per-batch render + map-side
     partial thin of render_features, then each batch's features leave the
-    Python worker as one row per analytic Hilbert-id-range bucket (see
-    partitioning.py). `partitions` MUST match the value passed to
-    encode_vector_tiles_packed (the partition tokens are baked per p)."""
-    spark = images.sparkSession
-    p = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    boundaries, bucket_tok, tok_name = _range_tokens(spark, min_zoom, max_zoom, p)
+    Python worker as one row per analytic Hilbert-id-range bucket (_pack),
+    for a tile exchange into `partitions` partitions (default: the
+    session's shuffle partitions)."""
+    pack, schema = _packer(images.sparkSession, min_zoom, max_zoom, partitions)
     zooms = range(min_zoom, max_zoom + 1)
     cell = grid_px * 4096 // 256
 
     def gen(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            out = _render_batch(pdf, zooms, thin_limit, cell)
+            out = _render_batch(rb.to_pandas(), zooms, thin_limit, cell)
             if counters is not None:
                 counters.add("features", len(out))
-            yield _pack_feature_runs(out, boundaries, bucket_tok, tok_name)
+            if len(out):
+                yield pack(out[list(POINT_COLS)])
 
     cols = [c for c in images.columns if c != "bytes"]
-    return images.select(*cols).mapInPandas(gen, _packed_schema(p))
+    return images.select(*cols).mapInArrow(gen, schema)
 
 
-def pack_features(feats: DataFrame, min_zoom: int, max_zoom: int) -> DataFrame:
-    """Already-rendered feature rows (render_features' schema, e.g. read back
-    from a feature log) -> the bucket-packed rows render_features_packed
-    emits: same boundaries, same tokens, same blob layout, for the session's
-    shuffle partition count (the one encode_vector_tiles_packed defaults to)."""
-    spark = feats.sparkSession
-    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    boundaries, bucket_tok, tok_name = _range_tokens(spark, min_zoom, max_zoom, p)
-
-    def gen(batches):
-        for pdf in batches:
-            if len(pdf):
-                yield _pack_feature_runs(pdf, boundaries, bucket_tok, tok_name)
-
-    return (feats.select("hilbert_id", "ex", "ey", "sort_key", "image_id", "caption")
-            .mapInPandas(gen, _packed_schema(p)))
-
-
-def encode_vector_tiles_packed(packed: DataFrame, partitions: int | None = None,
+def encode_vector_tiles_packed(packed: DataFrame,
                                thin_limit: int | None = None,
                                grid_px: int = 32, counters=None) -> DataFrame:
-    """The vector-tile reduce over bucket-packed features. The exchange is a
-    plain hash shuffle on the partition TOKEN (exact bucket->partition
-    placement, see partitioning.partition_tokens), so the output is in TOTAL
-    zoom-major Hilbert order — partitions ascend with Hilbert-id range,
-    buckets ascend within a partition, tiles ascend within a bucket — and the
-    sampling double-compute of repartitionByRange never happens.
-
-    Features cross the exchange ~50-500x fewer rows than one per feature:
-    Spark's per-row UnsafeRow<->Arrow conversion (~1.3us/row regardless of
-    width) was the tile reduce's floor. Per bucket the features are
-    re-sorted (hilbert_id, sort_key, image_id) — the feature key order
-    (FeatureGroup.encodeKey:176-196 with layer 0) plus image_id as the
-    tie-break — then encoded by _encode_tile_runs.
+    """The vector-tile reduce over bucket-packed features (tile_exchange).
+    Per bucket the features are sorted (hilbert_id, sort_key, image_id) —
+    the feature key order (FeatureGroup.encodeKey:176-196 with layer 0)
+    plus image_id as the tie-break — then encoded by _encode_tile_runs.
 
     thin_limit: label-grid density cap applied inside the reduce, in sortKey
     order (FeatureGroup.TileFeatures.add:616-637 drops beyond-limit features
     exactly like this, during tile assembly); costs no extra shuffle."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from . import partitioning as pt
-
     cell = grid_px * mvt.EXTENT // 256
-    p = int(partitions or packed.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    tok_name = pt.resolve_token_col(packed.columns, p)
-    if tok_name is None:
-        raise ValueError("encode_vector_tiles_packed needs bucket-packed "
-                         "input from render_features_packed or pack_features")
-    shuffled = packed.repartition(p, tok_name).sortWithinPartitions("bucket")
 
-    def reduce_bucket(blob_views):
-        parts = [_unpack_blob(mv) for mv in blob_views]
-        if len(parts) == 1:
-            hid, ex, ey, sk, ids, caps = parts[0]
-        else:
-            hid = np.concatenate([x[0] for x in parts])
-            ex = np.concatenate([x[1] for x in parts])
-            ey = np.concatenate([x[2] for x in parts])
-            sk = np.concatenate([x[3] for x in parts])
-            ids = pa.concat_arrays([x[4] for x in parts])
-            caps = pa.concat_arrays([x[5] for x in parts])
-        order = pc.sort_indices(
-            pa.table({"t": hid, "s": sk, "i": ids}),
-            sort_keys=[("t", "ascending"), ("s", "ascending"),
-                       ("i", "ascending")])
-        idx = order.to_numpy()
+    def reduce_bucket(t):
+        def ints(name):
+            return t.column(name).to_numpy().astype(np.int64)
+
         return _encode_tile_runs(
-            hid[idx].astype(np.int64), ex[idx].astype(np.int64),
-            ey[idx].astype(np.int64), sk[idx].astype(np.int64),
-            ids.take(order), caps.take(order), thin_limit, cell, counters)
+            ints("hilbert_id"), ints("ex"), ints("ey"), ints("sort_key"),
+            t.column("image_id").chunk(0), t.column("caption").chunk(0),
+            thin_limit, cell, counters)
 
-    def stream(batches):
-        held: list = []          # memoryviews of the open bucket's blobs
-        held_bucket: int | None = None
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            bks = rb.column(0).to_numpy()
-            if len(bks) > 1 and not np.all(bks[1:] >= bks[:-1]):
-                raise ValueError("encode_vector_tiles_packed: batch not "
-                                 "sorted by bucket")
-            col = rb.column(2)
-            if col.offset:
-                col = pa.concat_arrays([col])
-            off = np.frombuffer(col.buffers()[1], dtype=np.int32,
-                                count=len(col) + 1)
-            data = memoryview(col.buffers()[2])
-            starts = np.nonzero(np.diff(bks, prepend=bks[0] - 1))[0]
-            ends = np.append(starts[1:], len(bks))
-            for s, e in zip(starts, ends):
-                views = [data[off[i]:off[i + 1]] for i in range(s, e)]
-                if held and held_bucket == bks[s]:
-                    held.extend(views)
-                    continue
-                if held:
-                    out = reduce_bucket(held)
-                    if out is not None:
-                        yield out
-                held = views
-                held_bucket = int(bks[s])
-        if held:
-            out = reduce_bucket(held)
-            if out is not None:
-                yield out
-
-    return shuffled.mapInArrow(stream, TILE_SCHEMA)
+    return tile_exchange(packed, reduce_bucket, TILE_SCHEMA,
+                         ["sort_key", "image_id"])
 
 
 def render_patches(images: DataFrame, zoom: int = MAX_ZOOM) -> DataFrame:
     """Raster render: decode each image once, crop per overlapping tile,
-    re-encode the crop as PNG. One output row per (image, tile)."""
+    re-encode the crop as PNG. One output row per (image, tile), with the
+    tile's PMTiles `hilbert_id`."""
     n = 1 << zoom
 
     def gen(batches):
         for pdf in batches:
             rows = {k: [] for k in ("tile_id", "image_id", "px0", "py0", "pw",
                                     "ph", "patch", "caption", "fmt")}
+            txs, tys = [], []
             # decode the whole Arrow batch at once: jpegs go through the
             # lockstep batch entropy decoder (~3x the serial walk)
             decoded = ik.decode_images(list(pdf["bytes"]), list(pdf["fmt"]))
@@ -418,6 +386,11 @@ def render_patches(images: DataFrame, zoom: int = MAX_ZOOM) -> DataFrame:
                         rows["patch"].append(ik.encode_png(np.ascontiguousarray(crop), level=1))
                         rows["caption"].append(r.caption)
                         rows["fmt"].append(r.fmt)
+                        txs.append(tx % n)
+                        tys.append(ty)
+            rows["hilbert_id"] = tm.hilbert_encode(
+                np.array(txs, dtype=np.int64), np.array(tys, dtype=np.int64),
+                np.full(len(txs), zoom, dtype=np.int64))
             yield pd.DataFrame(rows)
 
     return images.mapInPandas(gen, PATCH_SCHEMA)
@@ -426,74 +399,6 @@ def render_patches(images: DataFrame, zoom: int = MAX_ZOOM) -> DataFrame:
 # ---------------------------------------------------------------------------
 # phase 3: tile reduce
 # ---------------------------------------------------------------------------
-
-def _grouped_by_tile(df: DataFrame, partitions: int | None, order_cols: list[str],
-                     reduce_fn):
-    """The reference's phase-3 shape, Spark-first: hash-repartition by tile so
-    each tile's rows land in one partition, sort within partitions by tile
-    (the shuffle+sort IS ExternalMergeSort.java:168), then stream Arrow
-    batches grouping CONSECUTIVE same-tile runs — exactly
-    FeatureGroup.groupIntoTiles:339-378 — with carry-over across batch
-    boundaries. Orders of magnitude less per-group overhead than
-    groupBy().applyInPandas at millions of small tiles.
-
-    The tile key is `hilbert_id` when the input carries one (archive order),
-    else `tile_id` (TMS order)."""
-    p = partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    # a `tok` column (hash-preimage partition token over analytic tile-id
-    # range buckets, operators/partitioning.py) turns this hash exchange
-    # into an exact RANGE exchange: output is then in total tile order, so
-    # no repartitionByRange (whose boundary sampling re-executes the whole
-    # upstream plan) is ever needed downstream
-    from . import partitioning as pt
-
-    tile_col = "hilbert_id" if "hilbert_id" in df.columns else "tile_id"
-    key = pt.resolve_token_col(df.columns, int(p)) or tile_col
-    shuffled = (df.repartition(int(p), key)
-                .sortWithinPartitions(tile_col, *order_cols))
-
-    def stream(batches):
-        # Carry-over across Arrow batch boundaries is O(total): the trailing
-        # (possibly continuing) tile is held as a LIST of chunks and concat'd
-        # exactly once when it completes — a dense city tile spanning hundreds
-        # of batches costs linear copies, never quadratic.
-        held: list[pd.DataFrame] = []
-        held_tile: int | None = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            tids = pdf[tile_col].to_numpy()
-            # guard the sortedness precondition: searchsorted on an unsorted
-            # tids array would silently mis-group instead of erroring
-            if len(tids) > 1 and not np.all(tids[1:] >= tids[:-1]):
-                raise ValueError(f"_grouped_by_tile: batch not sorted by {tile_col} "
-                                 "(upstream sortWithinPartitions missing?)")
-            if held and held_tile != tids[0]:
-                yield from reduce_fn(pd.concat(held, ignore_index=True)
-                                     if len(held) > 1 else held[0])
-                held = []
-            last_start = int(np.searchsorted(tids, tids[-1], side="left"))
-            if held and last_start == 0:
-                held.append(pdf)  # whole batch continues the held tile
-                continue
-            if held:
-                first_end = int(np.searchsorted(tids, tids[0], side="right"))
-                held.append(pdf.iloc[:first_end])
-                yield from reduce_fn(pd.concat(held, ignore_index=True))
-                held = []
-                body = pdf.iloc[first_end:last_start]
-            else:
-                body = pdf.iloc[:last_start]
-            if len(body):
-                yield from reduce_fn(body)
-            held = [pdf.iloc[last_start:]]
-            held_tile = int(tids[-1])
-        if held:
-            yield from reduce_fn(pd.concat(held, ignore_index=True)
-                                 if len(held) > 1 else held[0])
-
-    return shuffled, stream
-
 
 def _cumcount(keys: np.ndarray) -> np.ndarray:
     """Order-preserving rank within each key group (pandas
@@ -549,12 +454,14 @@ def _encode_tile_runs(hids, ex, ey, sk, ids, caps, thin_limit, cell, counters):
               "tile_bytes", "content_hash", "hilbert_id"])
 
 
-def encode_raster_tiles(patches: DataFrame, partitions: int | None = None) -> DataFrame:
-    """Paste per-image patches into a 256x256 canvas per tile (deterministic
-    z-order: image_id asc, later wins) and PNG-encode — the raster<->vector
-    graft operator (sorted consecutive-tile grouping, see _grouped_by_tile)."""
+def encode_raster_tiles(packed: DataFrame) -> DataFrame:
+    """Paste per-image patches (render_patches, packed by pack_rows) into a
+    256x256 canvas per tile (deterministic z-order: image_id asc, later
+    wins) and PNG-encode — the raster<->vector graft operator, a reduce of
+    the one tile exchange."""
 
-    def reduce_tiles(pdf: pd.DataFrame):
+    def reduce_tiles(t):
+        pdf = t.to_pandas()
         tids = pdf["tile_id"].to_numpy()
         starts = np.nonzero(np.diff(tids, prepend=tids[0] - 1))[0]
         ends = np.append(starts[1:], len(tids))
@@ -574,11 +481,9 @@ def encode_raster_tiles(patches: DataFrame, partitions: int | None = None) -> Da
             out["y"].append(int(ys[g]))
             out["n_images"].append(e - s)
             out["raster"].append(ik.encode_png(canvas))  # final artifact: full compression
-        yield pd.DataFrame(out)
+        return _record_batch(out, RASTER_SCHEMA)
 
-    shuffled, stream = _grouped_by_tile(patches, partitions,
-                                        ["image_id"], reduce_tiles)
-    return shuffled.mapInPandas(stream, RASTER_SCHEMA)
+    return tile_exchange(packed, reduce_tiles, RASTER_SCHEMA, ["image_id"])
 
 
 def verify_patches(patches: DataFrame, images: DataFrame | None = None) -> DataFrame:
@@ -754,31 +659,29 @@ def verify_patches(patches: DataFrame, images: DataFrame | None = None) -> DataF
 # ---------------------------------------------------------------------------
 
 ZONE_FEATURES_COLS = ("key long, tile_id long, zoom int, zone_id string, "
-                      "kind string, fill boolean, parts binary")
+                      "kind string, fill boolean, parts binary, hilbert_id long")
 
 
 def render_zone_features(spark: SparkSession, min_zoom: int = 0,
                          max_zoom: int = 8, n_zones: int | None = None,
-                         partitions: int = 16,
-                         range_partitions: int | None = None,
+                         partitions: int | None = None,
                          zones_pdf=None) -> DataFrame:
     """zones polygons -> per-tile clipped/simplified fragments + interior fill
-    rows across zooms, in the sorted-KV model. Each row carries its PMTiles
-    `hilbert_id` and the analytic range-exchange token over it
-    (partitioning.py), so the tile shuffle doubles as the archive-order
-    sort — no repartitionByRange sampling pass downstream."""
+    rows across zooms (ZONE_FEATURES_COLS, each with its PMTiles
+    `hilbert_id`), bucket-packed for the tile exchange (_pack).
+    `partitions` sets both the render's input partitions (default 16) and
+    the exchange's (default: the session's shuffle partitions)."""
     from ..kernels import geom as gk
     from ..sources import images as src
 
     zones = spark.createDataFrame(
         zones_pdf if zones_pdf is not None
         else src.zones_pdf(n_zones or src.N_ZONES))
-    rp = int(range_partitions
-             or spark.conf.get("spark.sql.shuffle.partitions"))
-    boundaries, bucket_tok, tok_name = _range_tokens(spark, min_zoom, max_zoom, rp)
+    pack, schema = _packer(spark, min_zoom, max_zoom, partitions)
 
     def gen(batches):
-        for pdf in batches:
+        for rb in batches:
+            pdf = rb.to_pandas()
             rows = {k: [] for k in ("key", "tile_id", "zoom", "zone_id",
                                     "kind", "fill", "parts")}
             txs, tys = [], []
@@ -803,20 +706,12 @@ def render_zone_features(spark: SparkSession, min_zoom: int = 0,
                 out["hilbert_id"] = tm.hilbert_encode(
                     np.array(txs, dtype=np.int64), np.array(tys, dtype=np.int64),
                     out["zoom"].to_numpy())
-                bk = np.searchsorted(boundaries, out["hilbert_id"].to_numpy(),
-                                     side="right") - 1
-                out[tok_name] = bucket_tok[bk]
-            else:
-                out["hilbert_id"] = pd.Series([], dtype="int64")
-                out[tok_name] = pd.Series([], dtype="int64")
-            yield out
+                yield pack(out)
 
-    return zones.repartition(partitions, "zone_id").mapInPandas(
-        gen, f"{ZONE_FEATURES_COLS}, hilbert_id long, {tok_name} long")
+    return zones.repartition(partitions or 16, "zone_id").mapInArrow(gen, schema)
 
 
-def encode_zone_tiles(feats: DataFrame, partitions: int | None = None,
-                      fix_polygons: bool = True) -> DataFrame:
+def encode_zone_tiles(feats: DataFrame, fix_polygons: bool = True) -> DataFrame:
     """Per-tile MVT encode of the polygon layer; interior tiles reuse ONE
     precomputed constant fill geometry (FeatureRenderer.emitFilledTiles:290 +
     VectorTile.encodeFill:481 — memoization-friendly by construction).
@@ -831,7 +726,8 @@ def encode_zone_tiles(feats: DataFrame, partitions: int | None = None,
     fill_field = mvt._packed(4, mvt.encode_fill(R.BUFFER_PX))
     buf_px = R.BUFFER_PX * mvt.EXTENT / 256.0
 
-    def reduce_tiles(pdf: pd.DataFrame):
+    def reduce_tiles(t):
+        pdf = t.to_pandas()
         hids = pdf["hilbert_id"].to_numpy()
         starts = np.nonzero(np.diff(hids, prepend=hids[0] - 1))[0]
         ends = np.append(starts[1:], len(hids))
@@ -880,11 +776,9 @@ def encode_zone_tiles(feats: DataFrame, partitions: int | None = None,
             out["tile_bytes"].append(blob)
             out["content_hash"].append(hashlib.sha256(blob).hexdigest()[:16])
             out["hilbert_id"].append(int(hids[s]))
-        yield pd.DataFrame(out)
+        return _record_batch(out, TILE_SCHEMA)
 
-    shuffled, stream = _grouped_by_tile(feats, partitions,
-                                        ["key", "zone_id"], reduce_tiles)
-    return shuffled.mapInPandas(stream, TILE_SCHEMA)
+    return tile_exchange(feats, reduce_tiles, TILE_SCHEMA, ["key", "zone_id"])
 
 
 def zones_tileset(spark: SparkSession, min_zoom: int = 0, max_zoom: int = 8,
@@ -898,17 +792,10 @@ def zones_tileset(spark: SparkSession, min_zoom: int = 0, max_zoom: int = 8,
     path's per-feature rate in the same round's scaling runs (18.7k/core),
     i.e. the vectorized polygon command streams + scalar self-intersect
     screen keep polygons on the same cost curve as points."""
-    p = int(shuffle_partitions
-            or spark.conf.get("spark.sql.shuffle.partitions"))
-    tiles = encode_zone_tiles(
+    return encode_zone_tiles(
         render_zone_features(spark, min_zoom, max_zoom, n_zones=n_zones,
-                             partitions=shuffle_partitions or 16,
-                             range_partitions=p, zones_pdf=zones_pdf),
-        partitions=p)
-    # already in total zoom-major Hilbert order: the tile shuffle rode the
-    # analytic range tokens, so the old repartitionByRange (whose boundary
-    # sampling re-executed this whole pipeline) is gone
-    return tiles
+                             partitions=shuffle_partitions,
+                             zones_pdf=zones_pdf))
 
 
 # ---------------------------------------------------------------------------
@@ -930,15 +817,13 @@ def tileset(spark: SparkSession, images: DataFrame, min_zoom: int = 0,
 
     Density thinning (thin_limit) runs map-side per render batch and exactly
     inside the tile reduce (zero extra shuffles)."""
-    p = int(shuffle_partitions
-            or spark.conf.get("spark.sql.shuffle.partitions"))
     feats = render_features_packed(images, min_zoom, max_zoom,
-                                   thin_limit=thin_limit,
-                                   counters=counters, partitions=p)
-    return encode_vector_tiles_packed(feats, partitions=p,
-                                      thin_limit=thin_limit, counters=counters)
+                                   thin_limit=thin_limit, counters=counters,
+                                   partitions=shuffle_partitions)
+    return encode_vector_tiles_packed(feats, thin_limit=thin_limit,
+                                      counters=counters)
 
 
 def raster_tileset(spark: SparkSession, images: DataFrame,
                    zoom: int = MAX_ZOOM) -> DataFrame:
-    return encode_raster_tiles(render_patches(images, zoom))
+    return encode_raster_tiles(pack_rows(render_patches(images, zoom), zoom, zoom))

@@ -2171,8 +2171,8 @@ def raster_tile_patches(spark, sf_dir):
     """Raster graft AND its distributed verify job in one result set (merged
     with the former `patch_psnr_verify` row to free a gate slot): decode image
     bytes -> crop per-z14-tile patches -> paste into 256x256 canvases via
-    groupBy(tile_id).applyInPandas, unioned with the BASELINE.json input_hint
-    invariant check — decoded patch pixels vs deterministic source (exact for
+    the tile exchange (tile_pipeline.tile_exchange), unioned with the
+    BASELINE.json input_hint invariant check — decoded patch pixels vs deterministic source (exact for
     png, PSNR>=40dB lossy) and caption equality, aggregated per outcome.
     `kind` discriminates: 'patch' rows carry the tile index (n = images in
     tile), 'verify' rows carry (pixels_ok, caption_ok, n = patches).
@@ -2189,7 +2189,8 @@ def raster_tile_patches(spark, sf_dir):
     # so the decode/crop/re-encode pass runs once (LRU-evicted, MEMORY_AND_DISK)
     patches = tp.render_patches(imgs).persist()
     _b = F.lit(None).cast("boolean")
-    rast = tp.encode_raster_tiles(patches).select(
+    rast = tp.encode_raster_tiles(
+        tp.pack_rows(patches, tp.MAX_ZOOM, tp.MAX_ZOOM)).select(
         F.lit("patch").alias("kind"), "tile_id", "zoom",
         F.col("x").cast("long").alias("x"), F.col("y").cast("long").alias("y"),
         F.col("n_images").cast("long").alias("n"),
@@ -2908,20 +2909,20 @@ def tile_feature_merge(spark, sf_dir):
     (min_dist_px) variants keep their length-conservation / area pytest
     coverage in test_merge_op."""
     from ..operators import merge as mg
+    from ..operators import tile_pipeline as tp
     from ..sources import images as src
 
     n = _images_n(sf_dir, 60)
-    lines = mg.merge_tile_lines(spark.createDataFrame(
-        src.merge_line_fixture_pdf(n), schema=mg.LINE_FEATURES_SCHEMA))
+    lines = mg.merge_tile_lines(tp.pack_rows(spark.createDataFrame(
+        src.merge_line_fixture_pdf(n), schema=mg.LINE_FEATURES_SCHEMA), 6, 6))
     line_rows = lines.select(
         F.lit("lines").alias("op"), "tile_id", F.col("zone_id").alias("grp"),
         F.col("n_pieces").alias("a"), F.col("n_merged").alias("b"),
         F.col("len_before").cast("long").alias("len_in"),
         F.col("len_after").cast("long").alias("len_out"))
 
-    from ..operators.tile_pipeline import ZONE_FEATURES_COLS
-    polys = mg.merge_tile_polygons(spark.createDataFrame(
-        src.merge_poly_fixture_pdf(n), schema=ZONE_FEATURES_COLS),
+    polys = mg.merge_tile_polygons(tp.pack_rows(spark.createDataFrame(
+        src.merge_poly_fixture_pdf(n), schema=tp.ZONE_FEATURES_COLS), 6, 6),
         min_dist_px=0.0)
     poly_rows = polys.select(
         F.lit("polys").alias("op"), "tile_id", F.col("kind").alias("grp"),

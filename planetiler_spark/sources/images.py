@@ -332,6 +332,7 @@ def merge_line_fixture_pdf(n_groups: int) -> pd.DataFrame:
     """merge_line_segments as engine line-feature rows (merge.py
     LINE_FEATURES_SCHEMA: packed 2-point parts at scale 0)."""
     segs = merge_line_segments(n_groups)
+    tids = np.array([t for _, t, *_ in segs], dtype=np.int64)
     return pd.DataFrame({
         "key": [int(tm.encode_sort_key(t, 2, 0, 0)) for _, t, *_ in segs],
         "tile_id": [t for _, t, *_ in segs],
@@ -341,6 +342,7 @@ def merge_line_fixture_pdf(n_groups: int) -> pd.DataFrame:
         "scale": np.zeros(len(segs), dtype=np.int32),
         "parts": [gk.pack_parts([np.array([[r[3], r[4]], [r[5], r[6]]],
                                           dtype=np.int64)]) for r in segs],
+        "hilbert_id": tm.hilbert_encode(*tm.tile_decode(tids)),
     })
 
 
@@ -348,6 +350,7 @@ def merge_poly_fixture_pdf(n_groups: int) -> pd.DataFrame:
     """merge_poly_rects as engine zone-fragment rows (tile_pipeline
     ZONE_FEATURES_COLS: packed rect rings, no fills)."""
     rects = merge_poly_rects(n_groups)
+    tids = np.array([t for _, t, *_ in rects], dtype=np.int64)
 
     def ring(r):
         x0, y0, x1, y1 = r[4], r[5], r[6], r[7]
@@ -363,6 +366,7 @@ def merge_poly_fixture_pdf(n_groups: int) -> pd.DataFrame:
         "kind": [k for _, _, k, *_ in rects],
         "fill": np.zeros(len(rects), dtype=bool),
         "parts": [ring(r) for r in rects],
+        "hilbert_id": tm.hilbert_encode(*tm.tile_decode(tids)),
     })
 
 

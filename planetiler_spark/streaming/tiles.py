@@ -15,7 +15,7 @@ touches:
        what makes foreachBatch exactly-once here
     3. re-encode only the affected buckets: read the feature log filtered to
        those buckets (directory-partition pruning — untouched buckets are
-       never listed), pack them into range buckets (pack_features) and
+       never listed), pack them into range buckets (pack_rows) and
        MVT-encode them with encode_vector_tiles_packed, the same exchange
        and reduce the batch pipeline uses, then dynamic-partition-overwrite
        the tile table at  out/tiles/bucket=K/
@@ -95,7 +95,8 @@ def apply_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
     log = (spark.read.option("basePath", feat_root).parquet(feat_root)
            .filter(F.col("bucket").isin([int(b) for b in affected])))
     tiles = tp.encode_vector_tiles_packed(
-        tp.pack_features(log, min_zoom, max_zoom), thin_limit=thin_limit)
+        tp.pack_rows(log.select(*tp.POINT_COLS), min_zoom, max_zoom),
+        thin_limit=thin_limit)
     tiles = tiles.withColumn("bucket", _bucket(n_buckets))
 
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")

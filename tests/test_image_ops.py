@@ -86,24 +86,6 @@ def test_extract_features_df(spark):
     assert got == want
 
 
-def test_sample_frames_plumbing(spark):
-    import pandas as pd
-    frames = [src._pixels(i, 16, 16) for i in range(7)]
-    blob = io_ops.encode_fake_video(frames)
-    vids = spark.createDataFrame(pd.DataFrame(
-        {"image_id": ["vid0"], "bytes": [blob]}))
-    out = sorted(io_ops.sample_frames(vids, every_n=2).collect(),
-                 key=lambda r: r.frame_idx)
-    assert [r.frame_idx for r in out] == [0, 2, 4, 6]
-    for r in out:
-        assert r.w == 16 and r.h == 16
-    got = ik.decode_png(bytes(out[1].bytes))
-    assert np.array_equal(got, frames[2])
-    # real codecs honestly absent: anything but the FVID container raises
-    with pytest.raises(NotImplementedError):
-        io_ops._decode_fake_video(b"\x00\x01realvideo")
-
-
 def test_real_phash_near_dup_end_to_end(spark):
     """The full image near-dup pipeline on REAL bytes: decode -> pHash ->
     16-bit band equi-join -> Hamming refine. Planted perturbations (uniform
@@ -198,3 +180,12 @@ def test_sample_frames_over_real_avi(spark):
         assert got.shape == want.shape
         mse = np.mean((got.astype(np.float64) - want.astype(np.float64)) ** 2)
         assert 10 * np.log10(255.0 ** 2 / mse) >= 40.0
+
+
+def test_decode_video_rejects_other_containers():
+    """Only RIFF/AVI decodes; any other container raises rather than
+    guessing (inter-frame codecs need a decoder this package lacks)."""
+    with pytest.raises(NotImplementedError):
+        io_ops.decode_video(b"\x00\x01realvideo")
+    with pytest.raises(NotImplementedError):
+        io_ops.decode_video(b"FVID\x00\x00\x00\x00")

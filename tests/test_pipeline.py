@@ -254,6 +254,63 @@ def test_tile_exchange_carries_packed_buckets(spark, images):
     assert 0 < records < n_features / 4
 
 
+def _packed_exchanges(df, p=4):
+    """(every ShuffleExchangeExec of df's plan, those whose input is
+    bucket-packed (bucket, tok_p{p}, blob) rows)."""
+    from planetiler_spark.operators import partitioning as pt
+
+    exs = _shuffle_exchanges(df._jdf.queryExecution().executedPlan())
+
+    def names(ex):
+        out = ex.child().output()
+        return [out.apply(i).name() for i in range(out.size())]
+
+    return exs, [ex for ex in exs
+                 if names(ex) == ["bucket", pt.token_col(p), "blob"]]
+
+
+@pytest.mark.parametrize("flow", ["zones", "raster", "merge_polygons"])
+def test_flow_exchange_carries_packed_buckets(spark, images, flow):
+    """Zones, raster and the polygon merge reach their tiles through the
+    one bucket-packed tile exchange. The zone renders also repartition
+    their input polygons by zone_id; that is the only other exchange."""
+    from planetiler_spark.operators import merge as mg
+
+    frame = {
+        "zones": lambda: tp.zones_tileset(spark, 0, 5, n_zones=16),
+        "raster": lambda: tp.raster_tileset(spark, images),
+        "merge_polygons": lambda: mg.merge_tile_polygons(
+            tp.render_zone_features(spark, 4, 5, n_zones=16)),
+    }[flow]()
+    exs, packed = _packed_exchanges(frame)
+    assert len(packed) == 1
+    assert len(exs) == (1 if flow == "raster" else 2)
+
+
+def test_zones_tileset_to_pmtiles_runs_one_tile_exchange(spark, tmp_path,
+                                                         monkeypatch):
+    """write_pmtiles appends the zones tileset's own partitions: the part
+    writer's job holds the tile exchange (plus the render's input
+    repartition) and no range sort of its own."""
+    from planetiler_spark.sources import archives as ar
+
+    tiles = tp.zones_tileset(spark, 0, 6, n_zones=32)
+    job = (tiles.select(*ar._PM_COLS)
+           .mapInArrow(ar._pm_part_writer(str(tmp_path)), ar._PM_PART_SCHEMA))
+    exs, packed = _packed_exchanges(job)
+    assert len(packed) == 1 and len(exs) == 2
+
+    def no_sort(df):
+        raise AssertionError("write_pmtiles re-sorted the zones tileset")
+
+    monkeypatch.setattr(ar, "_pm_sorted", no_sort)
+    path = str(tmp_path / "z.pmtiles")
+    stats = ar.write_pmtiles(tiles, path)
+    assert stats["tiles"] == tiles.count()
+    assert ar.read_pmtiles(path) == {
+        (r.zoom, r.x, r.y): bytes(r.tile_bytes) for r in tiles.collect()}
+
+
 def test_partition_tokens_exact(spark):
     """token[i] must land on partition index i under repartition(p, token) —
     the hash-preimage construction behind the analytic range exchange."""
@@ -285,6 +342,15 @@ def test_tile_range_partitioning_properties(spark):
         assert int(tm.ZOOM_START_INDEX[z]) <= int(b[k]) <= tid
 
 
+def unpack(packed):
+    """The rows of every IPC stream in a _pack batch, per bucket."""
+    import pyarrow as pa
+
+    return {int(k): pa.ipc.open_stream(blob.as_buffer()).read_all()
+            for k, blob in zip(packed.column("bucket").to_pylist(),
+                               packed.column("blob"))}
+
+
 def test_pack_unpack_roundtrip():
     import pandas as pd
 
@@ -306,23 +372,31 @@ def test_pack_unpack_roundtrip():
                             dtype=object),
     })
     b, pid = tile_range_partitioning(0, 8, 8, 4)
-    packed = tp._pack_feature_runs(out, b, pid)
-    assert (packed["bucket"].to_numpy() ==
-            np.sort(packed["bucket"].to_numpy())).all()
+    edges = np.append(b, tm.ZOOM_START_INDEX[9])
+    packed = tp._pack(out, edges, pid, "tok")
+    bks = packed.column("bucket").to_numpy()
+    assert np.all(np.diff(bks) > 0)          # one row per bucket, ascending
+    assert packed.column("tok").to_numpy().tolist() == pid[bks].tolist()
     got = []
-    for blob in packed["blob"]:
-        tid, ex, ey, sk, ids, caps = tp._unpack_blob(memoryview(blob))
-        for j in range(len(tid)):
-            got.append((int(tid[j]), int(ex[j]), int(ey[j]), int(sk[j]),
-                        ids[j].as_py(), caps[j].as_py()))
-    want = sorted(
-        ((int(r.hilbert_id), int(r.ex), int(r.ey), int(r.sort_key),
-          r.image_id, r.caption) for r in out.itertuples(index=False)),
-        key=lambda t: np.searchsorted(b, t[0], side="right"))
-    assert sorted(got) == sorted(want)
-    # bucket grouping is a partition of the rows (per-bucket counts add up)
-    assert sum(int(np.frombuffer(bl, np.uint32, 1)[0])
-               for bl in packed["blob"]) == n
+    for k, t in unpack(packed).items():
+        assert t.schema.field("ex").type == "int32"
+        hid = t.column("hilbert_id").to_numpy()
+        assert np.all(np.searchsorted(b, hid, side="right") - 1 == k)
+        got += list(zip(*(t.column(c).to_pylist() for c in out.columns)))
+    want = list(out.itertuples(index=False, name=None))
+    assert len(got) == n and sorted(got) == sorted(want)
+
+
+def test_pack_rejects_ids_outside_the_buckets():
+    import pandas as pd
+
+    from planetiler_spark.operators.partitioning import tile_range_partitioning
+
+    b, pid = tile_range_partitioning(2, 4, 4)
+    edges = np.append(b, tm.ZOOM_START_INDEX[5])
+    for hid in (int(tm.ZOOM_START_INDEX[2]) - 1, int(tm.ZOOM_START_INDEX[5])):
+        with pytest.raises(ValueError, match="outside"):
+            tp._pack(pd.DataFrame({"hilbert_id": [hid]}), edges, pid, "tok")
 
 
 def test_verify_stored_bytes_path_equals_legacy(spark, images):
@@ -349,11 +423,3 @@ def test_decode_images_batch_equals_serial():
     got = _ik.decode_images(bufs, fmts)
     for g, b, f in zip(got, bufs, fmts):
         assert np.array_equal(g, _ik.decode_image(b, f))
-
-
-def test_token_partition_count_mismatch_raises(spark, images):
-    """A range-exchange token column built for one partition count must not
-    silently feed an exchange with a different count."""
-    feats = tp.render_features_packed(images, 0, 4, partitions=8)
-    with pytest.raises(Exception, match="different.*partition count"):
-        tp.encode_vector_tiles_packed(feats, partitions=16).count()

@@ -364,3 +364,29 @@ def test_fuzz_degenerate_soups():
         for p in polys:
             want |= inside_eo(px, py, p)
         assert np.array_equal(want, inside_eo(px, py, out)), (trial, kind)
+
+
+def test_caps_exact_order_of_sub_ulp_intervals():
+    """Cap intervals whose lows differ by less than an ulp sort by their
+    exact values, not their (equal) floats: the rings of a slab stack do not
+    depend on the order its intervals are listed in. Here two slivers sit
+    at x = 1 and x = 1 + 2^-79 under a wide slab; listed in exact-descending
+    order, a float-only sort kept them misordered and the bottom cap of the
+    wide slab ran across the gap between them."""
+    one = (1, 1)
+    m = ((1 << 80) + 1, 1 << 80)           # 1 + 2^-80
+    l2 = ((1 << 79) + 1, 1 << 79)          # 1 + 2^-79
+    two, three, zero = (2, 1), (3, 1), (0, 1)
+    y0, y1, y2 = (0, 1), (1, 1), (2, 1)
+    a = (one, one, m, m)                   # [1, 1 + 2^-80]
+    b = (l2, l2, two, two)                 # [1 + 2^-79, 2]
+    top = [(y1, y2, [(zero, zero, three, three)])]
+    ascending = pc._rings_from_slabs([(y0, y1, [a, b])] + top)
+    descending = pc._rings_from_slabs([(y0, y1, [b, a])] + top)
+
+    def canon(ring):  # a ring up to its starting vertex
+        pts = [tuple(p) for p in ring[:-1].tolist()]
+        return min(pts[i:] + pts[:i] for i in range(len(pts)))
+
+    assert sorted(map(canon, descending)) == sorted(map(canon, ascending))
+    assert len(canon(ascending[0])) == 12  # the sliver gap's notch is kept

@@ -239,13 +239,14 @@ def test_pack_unpack_feature_runs_property(seed, n):
         "caption": np.array(["cápt🌍" * int(k) for k in rng.randint(0, 4, n)],
                             dtype=object),
     })
+    import pyarrow as pa
+
     b, pid = pt.tile_range_partitioning(0, 9, 8, 4)
-    packed = tp._pack_feature_runs(out, b, pid)
+    edges = np.append(b, tm.ZOOM_START_INDEX[10])
+    packed = tp._pack(out, edges, pid, "tok")
     got = []
-    for blob in packed["blob"]:
-        tid, ex, ey, sk, ids, caps = tp._unpack_blob(memoryview(blob))
-        got += [(int(tid[j]), int(ex[j]), int(ey[j]), int(sk[j]),
-                 ids[j].as_py(), caps[j].as_py()) for j in range(len(tid))]
-    want = [(int(r.hilbert_id), int(r.ex), int(r.ey), int(r.sort_key),
-             r.image_id, r.caption) for r in out.itertuples(index=False)]
+    for blob in packed.column("blob"):
+        t = pa.ipc.open_stream(blob.as_buffer()).read_all()
+        got += list(zip(*(t.column(c).to_pylist() for c in out.columns)))
+    want = list(out.itertuples(index=False, name=None))
     assert sorted(got) == sorted(want)
