@@ -142,8 +142,9 @@ def merge_tile_polygons(feats: DataFrame, min_dist_px: float = 0.0,
     """Per (tile, kind): union overlapping/nearby polygons
     (FeatureMerge.mergeOverlappingPolygons:291-300 / mergeNearbyPolygons
     :323-394). Input = bucket-packed zone polygon fragments, as
-    render_zone_features emits them (fill rows become full-tile squares). Outputs area accounting: union
-    area <= input area (overlaps collapse) and >= largest input.
+    render_zone_features emits them (fill rows become full-tile squares).
+    Outputs area accounting: union area <= input area (overlaps collapse)
+    and >= largest input.
 
     method="raster" (default): kernels/union.py scanline+morphology union —
     the scale path for huge fused groups (bounded work per tile regardless

@@ -2172,8 +2172,9 @@ def raster_tile_patches(spark, sf_dir):
     with the former `patch_psnr_verify` row to free a gate slot): decode image
     bytes -> crop per-z14-tile patches -> paste into 256x256 canvases via
     the tile exchange (tile_pipeline.tile_exchange), unioned with the
-    BASELINE.json input_hint invariant check — decoded patch pixels vs deterministic source (exact for
-    png, PSNR>=40dB lossy) and caption equality, aggregated per outcome.
+    BASELINE.json input_hint invariant check — decoded patch pixels vs
+    deterministic source (exact for png, PSNR>=40dB lossy) and caption
+    equality, aggregated per outcome.
     `kind` discriminates: 'patch' rows carry the tile index (n = images in
     tile), 'verify' rows carry (pixels_ok, caption_ok, n = patches).
     Oracle-backed since round 4 (_raster_patches_oracle): the patch index is

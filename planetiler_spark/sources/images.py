@@ -334,8 +334,8 @@ def merge_line_fixture_pdf(n_groups: int) -> pd.DataFrame:
     segs = merge_line_segments(n_groups)
     tids = np.array([t for _, t, *_ in segs], dtype=np.int64)
     return pd.DataFrame({
-        "key": [int(tm.encode_sort_key(t, 2, 0, 0)) for _, t, *_ in segs],
-        "tile_id": [t for _, t, *_ in segs],
+        "key": [int(tm.encode_sort_key(t, 2, 0, 0)) for t in tids],
+        "tile_id": tids,
         "zoom": np.full(len(segs), 6, dtype=np.int32),
         "zone_id": [z for _, _, z, *_ in segs],
         "kind": [ZONE_KINDS[g % 4] for g, *_ in segs],
@@ -359,8 +359,8 @@ def merge_poly_fixture_pdf(n_groups: int) -> pd.DataFrame:
             dtype=np.int64)])
 
     return pd.DataFrame({
-        "key": [int(tm.encode_sort_key(t, 1, 0, 0)) for _, t, *_ in rects],
-        "tile_id": [t for _, t, *_ in rects],
+        "key": [int(tm.encode_sort_key(t, 1, 0, 0)) for t in tids],
+        "tile_id": tids,
         "zoom": np.full(len(rects), 6, dtype=np.int32),
         "zone_id": [f"g{g:04d}" for g, *_ in rects],
         "kind": [k for _, _, k, *_ in rects],

@@ -20,3 +20,12 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def shuffle_partitions(spark):
+    """Set spark.sql.shuffle.partitions for one test, restored after."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    yield lambda p: spark.conf.set(key, str(p))
+    spark.conf.set(key, old)

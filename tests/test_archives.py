@@ -244,15 +244,6 @@ def zones_z8(spark):
 
 
 @pytest.fixture
-def shuffle_partitions(spark):
-    """Set spark.sql.shuffle.partitions for one test, restored after."""
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    yield lambda p: spark.conf.set(key, str(p))
-    spark.conf.set(key, old)
-
-
-@pytest.fixture
 def arrow_batch_rows(spark):
     """Set the Arrow batch size of mapInArrow inputs for one test."""
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"

@@ -162,19 +162,15 @@ RASTER_SHA256 = \
 
 
 @pytest.mark.parametrize("partitions", [4, 9])
-def test_raster_tiles_bytes_pinned(spark, images, partitions):
+def test_raster_tiles_bytes_pinned(spark, images, shuffle_partitions,
+                                   partitions):
     """Same raster tiles at any shuffle partition count and input order."""
     from pyspark.sql import functions as F
 
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(partitions))
-    try:
-        for frame in (images, images.repartition(5).orderBy(F.rand(7))):
-            rows = tp.raster_tileset(spark, frame).collect()
-            assert raster_tiles_digest(rows) == (RASTER_TILES, RASTER_SHA256)
-    finally:
-        spark.conf.set(key, old)
+    shuffle_partitions(partitions)
+    for frame in (images, images.repartition(5).orderBy(F.rand(7))):
+        rows = tp.raster_tileset(spark, frame).collect()
+        assert raster_tiles_digest(rows) == (RASTER_TILES, RASTER_SHA256)
 
 
 def test_content_hash_dedup_consistency(spark, images):
@@ -342,17 +338,9 @@ def test_tile_range_partitioning_properties(spark):
         assert int(tm.ZOOM_START_INDEX[z]) <= int(b[k]) <= tid
 
 
-def unpack(packed):
-    """The rows of every IPC stream in a _pack batch, per bucket."""
-    import pyarrow as pa
-
-    return {int(k): pa.ipc.open_stream(blob.as_buffer()).read_all()
-            for k, blob in zip(packed.column("bucket").to_pylist(),
-                               packed.column("blob"))}
-
-
 def test_pack_unpack_roundtrip():
     import pandas as pd
+    import pyarrow as pa
 
     from planetiler_spark.operators.partitioning import tile_range_partitioning
 
@@ -378,7 +366,8 @@ def test_pack_unpack_roundtrip():
     assert np.all(np.diff(bks) > 0)          # one row per bucket, ascending
     assert packed.column("tok").to_numpy().tolist() == pid[bks].tolist()
     got = []
-    for k, t in unpack(packed).items():
+    for k, blob in zip(bks, packed.column("blob")):
+        t = pa.ipc.open_stream(blob.as_buffer()).read_all()
         assert t.schema.field("ex").type == "int32"
         hid = t.column("hilbert_id").to_numpy()
         assert np.all(np.searchsorted(b, hid, side="right") - 1 == k)

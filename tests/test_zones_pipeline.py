@@ -105,12 +105,7 @@ ZONES_SHA256 = \
 
 
 @pytest.mark.parametrize("partitions", [4, 9])
-def test_zones_tiles_bytes_pinned(spark, partitions):
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(partitions))
-    try:
-        rows = tp.zones_tileset(spark, 0, 7, n_zones=64).collect()
-    finally:
-        spark.conf.set(key, old)
+def test_zones_tiles_bytes_pinned(spark, shuffle_partitions, partitions):
+    shuffle_partitions(partitions)
+    rows = tp.zones_tileset(spark, 0, 7, n_zones=64).collect()
     assert zones_tiles_digest(rows) == (ZONES_TILES, ZONES_SHA256)
