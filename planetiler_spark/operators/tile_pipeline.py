@@ -24,6 +24,14 @@ reduce loop, `tile_exchange`; each supplies only its render (which packs)
 and its per-bucket encode. OSM keeps its own row exchange
 (plans/osm_pipeline.py).
 
+The frame `tile_exchange` returns remembers its shuffled input and its
+reduce (`tile_reduce_of`). `archives.write_pmtiles` runs the PMTiles part
+writer over that reduce's output inside the same Python map, so finished
+tiles go straight from the encoder to the part files, as the reference's
+encoders feed its archive writer (TileArchiveWriter.java:128-207). A
+cached frame, or one derived from it (select, filter, ...), is written
+from its rows instead.
+
 The sort key's tile field is the Hilbert id, as in the reference when it
 writes PMTiles (TileOrder.encode, FeatureGroup.java:168-196): the tileset
 leaves the reduce in total zoom-major Hilbert order with a `hilbert_id`
@@ -45,6 +53,8 @@ shuffle partitions are explicit everywhere.
 """
 
 from __future__ import annotations
+
+import weakref
 
 import numpy as np
 import pandas as pd
@@ -228,6 +238,20 @@ def pack_rows(df: DataFrame, min_zoom: int, max_zoom: int) -> DataFrame:
     return df.mapInArrow(gen, schema)
 
 
+# tile_exchange's output frame -> (its shuffled packed rows, its reduce's
+# stream function); weak keys, so the entry goes with the frame
+_REDUCES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def tile_reduce_of(df: DataFrame):
+    """(shuffled, stream) when `df` is a frame tile_exchange returned —
+    `shuffled.mapInArrow(stream, schema)` is `df` — else None. A derived
+    frame (select, filter, withColumn, ...) is a new object and has none;
+    cache() and persist() return the frame itself, so a caller that must
+    honour the cache checks `df.is_cached`."""
+    return _REDUCES.get(df)
+
+
 def tile_exchange(packed: DataFrame, reduce_bucket, schema: str,
                   order) -> DataFrame:
     """The one tile shuffle, Planetiler's sort + groupIntoTiles
@@ -241,7 +265,11 @@ def tile_exchange(packed: DataFrame, reduce_bucket, schema: str,
     zero-copy, concatenated and sorted by (hilbert_id, *order); then
     `reduce_bucket(table)` returns a RecordBatch of `schema` or None. A
     bucket holds whole tiles, so the output is in zoom-major Hilbert
-    order."""
+    order.
+
+    The returned frame remembers (shuffled, stream) (tile_reduce_of), so a
+    sink can run its own per-partition writer over `stream` in the same
+    task (archives.write_pmtiles)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -279,7 +307,9 @@ def tile_exchange(packed: DataFrame, reduce_bucket, schema: str,
             if out is not None:
                 yield out
 
-    return shuffled.mapInArrow(stream, schema)
+    out = shuffled.mapInArrow(stream, schema)
+    _REDUCES[out] = (shuffled, stream)
+    return out
 
 
 def _record_batch(cols: dict, schema: str):
@@ -322,6 +352,28 @@ def render_features_packed(images: DataFrame, min_zoom: int = 0,
     return images.select(*cols).mapInArrow(gen, schema)
 
 
+# the image features' order within a tile, after hilbert_id
+POINT_ORDER = ("sort_key", "image_id")
+
+
+def point_tile_reduce(thin_limit: int | None = None, grid_px: int = 32,
+                      counters=None):
+    """The image features' per-bucket encode for tile_exchange (sorted by
+    hilbert_id, *POINT_ORDER): _encode_tile_runs over the bucket's
+    columns."""
+    cell = grid_px * mvt.EXTENT // 256
+
+    def reduce_bucket(t):
+        def ints(name):
+            return t.column(name).to_numpy().astype(np.int64)
+
+        return _encode_tile_runs(
+            ints("hilbert_id"), ints("ex"), ints("ey"), ints("sort_key"),
+            t.column("image_id").chunk(0), t.column("caption").chunk(0),
+            thin_limit, cell, counters)
+    return reduce_bucket
+
+
 def encode_vector_tiles_packed(packed: DataFrame,
                                thin_limit: int | None = None,
                                grid_px: int = 32, counters=None) -> DataFrame:
@@ -333,19 +385,9 @@ def encode_vector_tiles_packed(packed: DataFrame,
     thin_limit: label-grid density cap applied inside the reduce, in sortKey
     order (FeatureGroup.TileFeatures.add:616-637 drops beyond-limit features
     exactly like this, during tile assembly); costs no extra shuffle."""
-    cell = grid_px * mvt.EXTENT // 256
-
-    def reduce_bucket(t):
-        def ints(name):
-            return t.column(name).to_numpy().astype(np.int64)
-
-        return _encode_tile_runs(
-            ints("hilbert_id"), ints("ex"), ints("ey"), ints("sort_key"),
-            t.column("image_id").chunk(0), t.column("caption").chunk(0),
-            thin_limit, cell, counters)
-
-    return tile_exchange(packed, reduce_bucket, TILE_SCHEMA,
-                         ["sort_key", "image_id"])
+    return tile_exchange(packed,
+                         point_tile_reduce(thin_limit, grid_px, counters),
+                         TILE_SCHEMA, POINT_ORDER)
 
 
 def render_patches(images: DataFrame, zoom: int = MAX_ZOOM) -> DataFrame:
@@ -786,7 +828,8 @@ def zones_tileset(spark: SparkSession, min_zoom: int = 0, max_zoom: int = 8,
                   n_zones: int | None = None, zones_pdf=None) -> DataFrame:
     """Full polygon render+encode pipeline -> vector tiles table in
     zoom-major Hilbert order, with a `hilbert_id` column (the PMTiles tile
-    id). Measured at scale (round 3,
+    id), returned as tile_exchange made it (write_pmtiles fuses its part
+    writer into the reduce, as for `tileset`). Measured at scale (round 3,
     local[16], one window): 50,000 polygons z0-10 -> 75.1M tile fragments /
     1.29M tiles in 506s = 9.3k features/s/core — within 2x of the point
     path's per-feature rate in the same round's scaling runs (18.7k/core),
@@ -808,7 +851,10 @@ def tileset(spark: SparkSession, images: DataFrame, min_zoom: int = 0,
     """images -> vector tiles table in zoom-major Hilbert order, with a
     `hilbert_id` column (the PMTiles tile id) — phase 1+2+3 over ONE
     exchange: render_features_packed -> encode_vector_tiles_packed.
-    write_pmtiles appends these partitions as they are.
+    Returned as tile_exchange made it, so write_pmtiles writes the part
+    files inside the tile reduce's own tasks (one Python map, no second
+    hand-off); a cached or derived frame is written from its partitions as
+    they are.
 
     Features move across the shuffle as bucket-packed binary rows on an
     analytic range partitioning (partitioning.py), so the output lands in

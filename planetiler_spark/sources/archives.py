@@ -19,12 +19,14 @@ TileArchiveWriter.java:128-207). The engine's tilesets leave their one tile
 exchange already in Hilbert order (a `hilbert_id` column says so), so each
 task writes the tileset's own partition, with no second sort, to two part
 files under `<path>.parts/`: the partition's blobs (each stored once per
-partition) and a raw int64 index of four values per tile. Frames in any
-other order are range-sorted first. The driver reads the indexes one
-partition at a time, dedups and run-length-encodes them with whole-array
-numpy, writes header and directories, and builds the data section by
-copying byte ranges out of the part files (`os.copy_file_range`); it never
-holds a tile's bytes.
+partition) and a raw int64 index of four values per tile. A tileset that
+comes straight from the tile exchange is written inside the tile reduce's
+own Python map: the encoder's record batches go to the part writer with no
+trip through the JVM. Frames in any other order are range-sorted first.
+The driver reads the indexes one partition at a time, dedups and
+run-length-encodes them with whole-array numpy, writes header and
+directories, and builds the data section by copying byte ranges out of the
+part files (`os.copy_file_range`); it never holds a tile's bytes.
 MBTiles and the proto stream have one writer each (sqlite, a stream) and
 drain on the driver through `_drain`: executors frame each partition's
 record batches, in order, as Arrow IPC chunks of about `_CHUNK_BYTES`, read
@@ -424,9 +426,9 @@ def _content_keys(hashes) -> np.ndarray:
     return keys
 
 
-_PM_PART_SCHEMA = ("part long, tiles long, data_bytes long, minzoom long, "
-                   "maxzoom long, first_id long, last_id long, "
-                   "increasing boolean")
+_PM_PART_SCHEMA = ("part long, tiles long, data_bytes long, first_id long, "
+                   "last_id long, increasing boolean, zoom_tiles array<long>, "
+                   "zoom_bytes array<long>, zoom_max_bytes array<long>")
 
 
 def _pm_part_writer(parts_dir: str):
@@ -437,14 +439,23 @@ def _pm_part_writer(parts_dir: str):
     in the .data file] per tile; yields one summary row. The Hilbert ids
     are computed here from (zoom, x, y), never taken from the frame, and
     the summary says whether they strictly increase (first_id, last_id,
-    increasing), so the driver can check the partition order."""
+    increasing), so the driver can check the partition order. Per zoom
+    0..MAX_MAXZOOM it also counts the tiles, their total bytes and the
+    largest tile (zoom_tiles, zoom_bytes, zoom_max_bytes).
+
+    Columns are read by name, so the batches may carry more of them: the
+    tile reduce's own TILE_SCHEMA batches go in as they are."""
+    nz = tm.MAX_MAXZOOM + 1
+
     def write(batches):
         import pyarrow as pa
 
         seen_k = np.empty(0, dtype=np.uint64)   # sorted keys in this part
         seen_o = np.empty(0, dtype=np.int64)    # their offsets in .data
         n = size = 0
-        minz, maxz = tm.MAX_MAXZOOM + 1, -1
+        z_tiles = np.zeros(nz, dtype=np.int64)
+        z_bytes = np.zeros(nz, dtype=np.int64)
+        z_max = np.zeros(nz, dtype=np.int64)
         first = last = -1
         increasing = True
         with _part_files(parts_dir, ".data", ".idx") as (part, dataf, idxf):
@@ -482,12 +493,15 @@ def _pm_part_writer(parts_dir: str):
                 idxf.write(np.stack([hid, key.view(np.int64), ln, off],
                                     axis=1).tobytes())
                 zoom = b.column("zoom").to_numpy()
-                minz, maxz = min(minz, int(zoom.min())), max(maxz, int(zoom.max()))
+                z_tiles += np.bincount(zoom, minlength=nz)
+                np.add.at(z_bytes, zoom, ln)
+                np.maximum.at(z_max, zoom, ln)
                 n += b.num_rows
         yield pa.RecordBatch.from_pylist(
             [{"part": part, "tiles": n, "data_bytes": size,
-              "minzoom": minz, "maxzoom": maxz, "first_id": first,
-              "last_id": last, "increasing": increasing}])
+              "first_id": first, "last_id": last, "increasing": increasing,
+              "zoom_tiles": z_tiles.tolist(), "zoom_bytes": z_bytes.tolist(),
+              "zoom_max_bytes": z_max.tolist()}])
     return write
 
 
@@ -496,6 +510,17 @@ def _pm_write_parts(ordered, parts_dir: str) -> list[dict]:
     summary rows."""
     rows = (ordered.select(*_PM_COLS)
             .mapInArrow(_pm_part_writer(parts_dir), _PM_PART_SCHEMA)
+            .collect())
+    return [r.asDict() for r in rows]
+
+
+def _pm_write_fused(shuffled, stream, parts_dir: str) -> list[dict]:
+    """Run the part writer inside the tile reduce: one mapInArrow over the
+    tile exchange's shuffled rows whose function is the writer over the
+    reduce's `stream` (operators/tile_pipeline.tile_exchange). Finished
+    tiles never leave the Python worker; its summary rows."""
+    writer = _pm_part_writer(parts_dir)
+    rows = (shuffled.mapInArrow(lambda it: writer(stream(it)), _PM_PART_SCHEMA)
             .collect())
     return [r.asDict() for r in rows]
 
@@ -586,9 +611,8 @@ def _pm_assemble(parts_dir: str, parts, path: str, metadata: dict | None,
         last = (int(tid[-1]), int(off[-1]), int(ln[-1]))
         n_tiles += n
 
-    zooms = [(s["minzoom"], s["maxzoom"]) for s in parts if s["tiles"]]
-    minz = min((z[0] for z in zooms), default=0)
-    maxz = max((z[1] for z in zooms), default=0)
+    zooms = _pm_zoom_stats(parts)
+    minz, maxz = (min(zooms), max(zooms)) if zooms else (0, 0)
     entries = np.concatenate(blocks) if blocks \
         else np.empty((0, 4), dtype=np.int64)
     root, leaves, n_leaves = _pm_build_dirs(entries, max_dir_entries)
@@ -622,7 +646,20 @@ def _pm_assemble(parts_dir: str, parts, path: str, metadata: dict | None,
     os.replace(tmp, path)
     return {"tiles": n_tiles, "entries": len(entries),
             "unique_blobs": len(rem_k), "n_leaves": n_leaves,
-            "bytes": data_off + data_len}
+            "bytes": data_off + data_len, "zooms": zooms}
+
+
+def _pm_zoom_stats(parts) -> dict:
+    """The part summaries' per-zoom columns merged: {zoom: {"tiles",
+    "bytes", "max_bytes"}} for every zoom that holds a tile (addressed
+    tiles, each counted with its own length, before any dedup)."""
+    if not parts:
+        return {}
+    tiles = np.sum([s["zoom_tiles"] for s in parts], axis=0)
+    size = np.sum([s["zoom_bytes"] for s in parts], axis=0)
+    top = np.max([s["zoom_max_bytes"] for s in parts], axis=0)
+    return {z: {"tiles": int(tiles[z]), "bytes": int(size[z]),
+                "max_bytes": int(top[z])} for z in np.flatnonzero(tiles).tolist()}
 
 
 def write_pmtiles(tiles_df, path: str, metadata: dict | None = None,
@@ -634,14 +671,24 @@ def write_pmtiles(tiles_df, path: str, metadata: dict | None = None,
 
     ASSEMBLED ON THE EXECUTORS: every task writes its partition's blobs and
     index to part files under `<path>.parts/` (`_pm_part_writer`); a single
-    collect() runs all partitions in parallel. A frame with a `hilbert_id`
-    column (the engine's tilesets: their one tile exchange already sorted
-    them in Hilbert order) is written from its own partitions, with no
-    exchange and no sort. The part writer computes every tile's id from
-    (zoom, x, y) and reports whether its partition increases; if the
-    partitions are not in total Hilbert order after all, the parts are
-    discarded and the frame is written again through `_pm_sorted` (an
-    analytic range exchange), as is any frame without the column.
+    collect() runs all partitions in parallel. Which job writes them:
+      - a frame straight from the tile exchange (`tileset`,
+        `zones_tileset`; tile_pipeline.tile_reduce_of) and not cached: the
+        part writer runs inside the tile reduce, one mapInArrow over the
+        exchange's shuffled rows (`_pm_write_fused`), so finished tiles
+        never return to the JVM;
+      - a cached frame (cache() and persist() return the frame itself;
+        fusing would run the render, the exchange and the reduce again
+        and ignore the cache), or any other frame with a `hilbert_id`
+        column, such as one derived from a tileset by select or filter:
+        the part writer over the frame's own partitions, with no exchange
+        and no sort;
+      - a frame without the column (OSM, Overture, synthetic): the part
+        writer after `_pm_sorted`, an analytic range exchange.
+    The part writer computes every tile's id from (zoom, x, y) and reports
+    whether its partition increases; if the partitions of the first two
+    kinds are not in total Hilbert order after all, the parts are
+    discarded and the frame is written again through `_pm_sorted`.
 
     The driver then reads the indexes in partition order, does a global
     first-occurrence content dedup over 64-bit keys (bounded by dedup_cap),
@@ -655,11 +702,18 @@ def write_pmtiles(tiles_df, path: str, metadata: dict | None = None,
     The part files and the finished archive are published by rename, and
     `<path>.parts/` is removed however the write ends, so a failed write
     leaves no partial archive. On a cluster `<path>` must be on storage
-    that the executors and the driver both see."""
+    that the executors and the driver both see.
+
+    The returned stats carry `zooms`: per zoom, the tile count, total
+    bytes and largest tile, summed by the part writers (no extra job)."""
+    from ..operators.tile_pipeline import tile_reduce_of
+
     with _parts_dir(path) as parts:
         summary = None
         if "hilbert_id" in tiles_df.columns:
-            summary = _pm_write_parts(tiles_df, parts)
+            reduce = None if tiles_df.is_cached else tile_reduce_of(tiles_df)
+            summary = (_pm_write_fused(*reduce, parts) if reduce is not None
+                       else _pm_write_parts(tiles_df, parts))
             if not _pm_in_order(summary):
                 summary = None
                 shutil.rmtree(parts)

@@ -459,6 +459,157 @@ def test_pmtiles_part_writer_retry_is_idempotent(zones_z8, monkeypatch,
     assert _sha256(path) == RECORDED_SHA256["zones"]
 
 
+def test_fused_part_writer_retry_is_idempotent(spark, monkeypatch, tmp_path):
+    """The part writer inside the tile reduce, writer(stream(...)) over
+    packed zones buckets: an attempt that dies mid-stream publishes nothing
+    and leaves no temp file; its retry publishes whole part files, and the
+    archive assembled from them has the recorded bytes."""
+    import numpy as np
+    from pyspark import TaskContext
+
+    shuffled, stream = tp.tile_reduce_of(
+        tp.zones_tileset(spark, 0, 8, n_zones=32))
+    # the packed rows in partition order ascend by bucket; a bucket holds
+    # whole tiles, so any contiguous split at a bucket edge is a valid
+    # partitioning
+    table = shuffled.toArrow()
+    edges = np.flatnonzero(np.diff(table.column("bucket").to_numpy())) + 1
+    cuts = [0, int(edges[len(edges) // 3]), int(edges[2 * len(edges) // 3]),
+            table.num_rows]
+    pieces = [table.slice(a, b - a).to_batches(max_chunksize=5)
+              for a, b in zip(cuts, cuts[1:])]
+    assert all(len(p) > 2 for p in pieces)
+    parts = tmp_path / "z.pmtiles.parts"
+    parts.mkdir()
+    writer = ar._pm_part_writer(str(parts))
+    ctx = []
+    monkeypatch.setattr(TaskContext, "get", lambda: ctx[-1])
+
+    def attempt(part, attempt_id, batches):
+        ctx.append(_TaskContextStub(part, attempt_id))
+        return [b.to_pylist()[0] for b in writer(stream(batches))]
+
+    def dies_midway(batches):
+        yield from batches[:2]
+        raise RuntimeError("executor lost")
+
+    summary = attempt(0, 1, iter(pieces[0]))
+    with pytest.raises(RuntimeError, match="executor lost"):
+        attempt(1, 2, dies_midway(pieces[1]))
+    assert sorted(os.listdir(parts)) == ["part-00000.data", "part-00000.idx"]
+    summary += attempt(1, 3, iter(pieces[1]))
+    summary += attempt(2, 4, iter(pieces[2]))
+    assert sorted(os.listdir(parts)) == [
+        f"part-{i:05d}.{ext}" for i in range(3) for ext in ("data", "idx")]
+    assert ar._pm_in_order(summary)
+    assert sum(s["tiles"] for s in summary) == 4217
+
+    path = str(tmp_path / "z.pmtiles")
+    ar._pm_assemble(str(parts), summary, path, None, ar._MAX_DIR_ENTRIES,
+                    1 << 22)
+    assert _sha256(path) == RECORDED_SHA256["zones"]
+
+
+_RETRY_SCRIPT = """
+import json, os, sys
+from pyspark import TaskContext
+from pyspark.sql import SparkSession
+from planetiler_spark.operators import tile_pipeline as tp
+from planetiler_spark.sources import archives as ar
+from planetiler_spark.sources import images as src
+
+out, marker = sys.argv[1], sys.argv[2]
+# local[N, F]: F attempts per task; local mode ignores spark.task.maxFailures
+spark = (SparkSession.builder.master("local[4,2]")
+         .config("spark.sql.shuffle.partitions", "4")
+         .config("spark.ui.enabled", "false").getOrCreate())
+spark.sparkContext.setLogLevel("OFF")
+encode = tp.point_tile_reduce(thin_limit=64)
+
+
+def flaky(table):
+    ctx = TaskContext.get()
+    if ctx.partitionId() == 2 and ctx.attemptNumber() == 0:
+        open(marker, "w").close()
+        raise RuntimeError("injected reduce failure")
+    return encode(table)
+
+
+imgs = src.images_df(spark, 200, partitions=4, with_bytes=False)
+feats = tp.render_features_packed(imgs, 0, 11, thin_limit=64)
+tiles = tp.tile_exchange(feats, flaky, tp.TILE_SCHEMA, tp.POINT_ORDER)
+stats = ar.write_pmtiles(tiles, out)
+print(json.dumps({"tiles": stats["tiles"]}))
+"""
+
+
+def test_pmtiles_spark_task_retry(tmp_path):
+    """A real Spark task retry: one tile reduce partition raises on its
+    first attempt, inside the fused part-writer job. The retried write
+    gives the recorded archive and leaves no part files behind."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).parent.parent)
+    out, marker = tmp_path / "retry.pmtiles", tmp_path / "failed-once"
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        [repo, os.environ.get("PYTHONPATH", "")]))
+    res = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT, str(out), str(marker)],
+        capture_output=True, text=True, timeout=600, cwd=repo, env=env)
+    assert res.returncode == 0, res.stderr[-3000:]
+    assert marker.exists()            # the first attempt did fail
+    assert json.loads(res.stdout.strip().splitlines()[-1])["tiles"] == 1417
+    assert _sha256(str(out)) == RECORDED_SHA256["images"]
+    assert sorted(os.listdir(tmp_path)) == ["failed-once", "retry.pmtiles"]
+
+
+@pytest.mark.parametrize("frame", ["cached", "derived"])
+def test_cached_and_derived_tilesets_take_the_unfused_path(
+        spark, monkeypatch, frame, tmp_path):
+    """A cached tileset is the frame tileset() returned (cache() returns
+    self), yet the write must read the cache, not run the reduce again; a
+    derived frame has no tile reduce. Both are written from their own
+    partitions, with the recorded bytes."""
+    imgs = src.images_df(spark, 200, partitions=4, with_bytes=False)
+    tiles = tp.tileset(spark, imgs, min_zoom=0, max_zoom=11)
+    if frame == "cached":
+        tiles.cache().count()
+    else:
+        tiles = tiles.select(*tiles.columns)
+
+    def no_fuse(*args):
+        raise AssertionError("the fused part writer ran")
+
+    monkeypatch.setattr(ar, "_pm_write_fused", no_fuse)
+    path = str(tmp_path / f"{frame}.pmtiles")
+    try:
+        ar.write_pmtiles(tiles, path)
+    finally:
+        tiles.unpersist()
+    assert _sha256(path) == RECORDED_SHA256["images"]
+
+
+def test_pmtiles_zoom_stats_match_spark(spark, tmp_path):
+    """stats["zooms"] from the part summaries equals an exact Spark
+    aggregate over the same tileset, and the archive bytes do not move."""
+    from pyspark.sql import functions as F
+
+    imgs = src.images_df(spark, 200, partitions=4, with_bytes=False)
+    tiles = tp.tileset(spark, imgs, min_zoom=0, max_zoom=11)
+    path = str(tmp_path / "zooms.pmtiles")
+    stats = ar.write_pmtiles(tiles, path)
+    size = F.length("tile_bytes")
+    want = {r.zoom: {"tiles": r.n, "bytes": r.b, "max_bytes": r.m}
+            for r in tiles.groupBy("zoom").agg(
+                F.count("*").alias("n"), F.sum(size).alias("b"),
+                F.max(size).alias("m")).collect()}
+    assert stats["zooms"] == want
+    assert sorted(want) == list(range(12))
+    assert _sha256(path) == RECORDED_SHA256["images"]
+
+
 def test_content_keys_match_reference_loop():
     """The vectorized keys equal a per-string reference: a 16-digit
     lowercase hex hash is its own 64 bits, anything else an 8-byte

@@ -82,25 +82,17 @@ def test_tiles_sorted_zoom_major(spark, images):
 
 def test_tileset_to_pmtiles_runs_one_exchange(spark, images, tmp_path,
                                               monkeypatch):
-    """The part-writer job over a tileset holds the tile exchange and no
-    other: write_pmtiles appends the tileset's own partitions, without the
-    range sort it keeps for frames in other orders."""
-    import re
-
+    """The job write_pmtiles runs over a tileset holds the tile exchange
+    and no other, and one Python map above it: the part writer runs inside
+    the tile reduce, with no range sort and no second hand-off."""
     from planetiler_spark.sources import archives as ar
 
     tiles = tp.tileset(spark, images, min_zoom=0, max_zoom=6)
-    job = (tiles.select(*ar._PM_COLS)
-           .mapInArrow(ar._pm_part_writer(str(tmp_path)), ar._PM_PART_SCHEMA))
-    plan = job._jdf.queryExecution().executedPlan().toString()
-    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
-
-    def no_sort(df):
-        raise AssertionError("write_pmtiles re-sorted an ordered tileset")
-
-    monkeypatch.setattr(ar, "_pm_sorted", no_sort)
     path = str(tmp_path / "t.pmtiles")
-    stats = ar.write_pmtiles(tiles, path)
+    stats, job = _written_job(monkeypatch, tiles, path)
+    exs, packed = _packed_exchanges(job)
+    assert len(packed) == 1 and len(exs) == 1
+    assert _python_maps_above(job, packed[0]) == 1
     assert stats["tiles"] == tiles.count()
     assert ar.read_pmtiles(path) == {
         (r.zoom, r.x, r.y): bytes(r.tile_bytes) for r in tiles.collect()}
@@ -219,17 +211,23 @@ def test_tileset_has_one_transport(spark, images):
         tp.tileset(spark, images, 0, 2, **{"packed": True})
 
 
-def _shuffle_exchanges(node):
-    """ShuffleExchangeExec nodes of an executed (possibly adaptive) plan."""
+def _plan_children(node):
+    """A physical plan node's children, looking through adaptive plans and
+    query stages."""
     name = node.getClass().getSimpleName()
     if name == "AdaptiveSparkPlanExec":
-        return _shuffle_exchanges(node.executedPlan())
+        return [node.executedPlan()]
     if name.endswith("QueryStageExec"):
-        return _shuffle_exchanges(node.plan())
-    found = [node] if name == "ShuffleExchangeExec" else []
+        return [node.plan()]
     kids = node.children()
-    for i in range(kids.size()):
-        found += _shuffle_exchanges(kids.apply(i))
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _shuffle_exchanges(node):
+    """ShuffleExchangeExec nodes of an executed (possibly adaptive) plan."""
+    found = [node] if node.getClass().getSimpleName() == "ShuffleExchangeExec" else []
+    for kid in _plan_children(node):
+        found += _shuffle_exchanges(kid)
     return found
 
 
@@ -265,6 +263,48 @@ def _packed_exchanges(df, p=4):
                  if names(ex) == ["bucket", pt.token_col(p), "blob"]]
 
 
+def _python_maps_above(df, node):
+    """How many MapInArrow nodes of df's executed plan lie on the path from
+    its root down to `node`."""
+    def path(n):
+        if n.equals(node):
+            return [n]
+        for kid in _plan_children(n):
+            found = path(kid)
+            if found is not None:
+                return [n] + found
+        return None
+
+    nodes = path(df._jdf.queryExecution().executedPlan())
+    assert nodes is not None, "node is not in the plan"
+    return sum("MapInArrow" in n.getClass().getSimpleName() for n in nodes)
+
+
+def _written_job(monkeypatch, tiles, path):
+    """write_pmtiles(tiles, path) with its range sort forbidden; (stats,
+    the one frame the write collected: its part-writer job)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from planetiler_spark.sources import archives as ar
+
+    def no_sort(df):
+        raise AssertionError("write_pmtiles re-sorted an ordered tileset")
+
+    jobs = []
+    collect = DataFrame.collect
+
+    def spy(self):
+        jobs.append(self)
+        return collect(self)
+
+    with monkeypatch.context() as m:
+        m.setattr(ar, "_pm_sorted", no_sort)
+        m.setattr(DataFrame, "collect", spy)
+        stats = ar.write_pmtiles(tiles, path)
+    assert len(jobs) == 1
+    return stats, jobs[0]
+
+
 @pytest.mark.parametrize("flow", ["zones", "raster", "merge_polygons"])
 def test_flow_exchange_carries_packed_buckets(spark, images, flow):
     """Zones, raster and the polygon merge reach their tiles through the
@@ -285,23 +325,20 @@ def test_flow_exchange_carries_packed_buckets(spark, images, flow):
 
 def test_zones_tileset_to_pmtiles_runs_one_tile_exchange(spark, tmp_path,
                                                          monkeypatch):
-    """write_pmtiles appends the zones tileset's own partitions: the part
-    writer's job holds the tile exchange (plus the render's input
-    repartition) and no range sort of its own."""
+    """write_pmtiles runs its part writer inside the zones tile reduce: the
+    job holds the tile exchange, one Python map above it, and the render's
+    input repartition(16, "zone_id"); no range sort of its own."""
     from planetiler_spark.sources import archives as ar
 
     tiles = tp.zones_tileset(spark, 0, 6, n_zones=32)
-    job = (tiles.select(*ar._PM_COLS)
-           .mapInArrow(ar._pm_part_writer(str(tmp_path)), ar._PM_PART_SCHEMA))
+    path = str(tmp_path / "z.pmtiles")
+    stats, job = _written_job(monkeypatch, tiles, path)
     exs, packed = _packed_exchanges(job)
     assert len(packed) == 1 and len(exs) == 2
-
-    def no_sort(df):
-        raise AssertionError("write_pmtiles re-sorted the zones tileset")
-
-    monkeypatch.setattr(ar, "_pm_sorted", no_sort)
-    path = str(tmp_path / "z.pmtiles")
-    stats = ar.write_pmtiles(tiles, path)
+    assert _python_maps_above(job, packed[0]) == 1
+    (render_in,) = [ex for ex in exs if ex is not packed[0]]
+    part = render_in.outputPartitioning()
+    assert part.numPartitions() == 16 and "zone_id" in part.toString()
     assert stats["tiles"] == tiles.count()
     assert ar.read_pmtiles(path) == {
         (r.zoom, r.x, r.y): bytes(r.tile_bytes) for r in tiles.collect()}
