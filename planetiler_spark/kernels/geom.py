@@ -4,8 +4,8 @@ Implements the geometry semantics the engine needs, re-derived from the
 reference's JTS usage (all paths under /root/reference/planetiler-core/src/main/java/com/onthegomap/planetiler/):
 
   - point-in-polygon + nearest-fallback:  geo/PolygonIndex.java:20-145
-    (STRtree envelope query + exact contains; here: bbox grid index + even-odd
-    ray cast, vectorized over all points per polygon)
+    (STRtree envelope query + exact contains; here: a raster-interval grid
+    of full and partial cells + even-odd ray cast on partial cells only)
   - Douglas-Peucker simplification:       geo/DouglasPeuckerSimplifier.java:33-100
     (iterative DP on squared segment distance, min-4-point polygon-ring guard)
   - rectangle clipping (Sutherland-Hodgman / Cohen-style), the primitive behind
@@ -488,10 +488,79 @@ def dist_to_polygon(px: np.ndarray, py: np.ndarray, rings: list[np.ndarray]) -> 
 
 # --- polygon grid index (replaces JTS STRtree, PolygonIndex.java:20-145) -------
 
+# fine cells per coarse cell side: on the 16,384-zone join 8-16 all probe
+# 3-4x faster than the coarse grid; finer probes faster but grows the build
+# and the broadcast (12: ~0.33 s, 16 MB; 16: ~0.5 s, 22 MB)
+_FINE = 12
+# points per probe block and (pair, edge) entries per parity chunk: bound the
+# probe's temporaries whatever the batch size
+_BLOCK = 16384
+_EDGE_CHUNK = 1 << 16
+# polygon bbox cells rasterised per build chunk
+_BUILD_CELLS = 1 << 19
+
+
+def _segments(counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """For a concatenation of segments with these lengths: each element's
+    segment index and its position within the segment."""
+    counts = np.asarray(counts, dtype=np.int64)
+    seg = np.repeat(np.arange(len(counts)), counts)
+    return seg, np.arange(len(seg)) - (np.cumsum(counts) - counts)[seg]
+
+
+def _grid(lo: np.ndarray, hi: np.ndarray, size: float, border: int, n: int) -> tuple:
+    """(ox, oy, size, nx, ny): a grid over the box [lo, hi] with `border`
+    spare cells on every side. Cells are at least `size` on a side, and
+    coarse enough that any cell key times `n` fits in an int64."""
+    size = max(size, float((hi - lo).max()) * np.sqrt(max(n, 1)) / (1 << 30))
+    nx, ny = (np.floor((hi - lo) / size).astype(np.int64) + 2 * border + 1).tolist()
+    ox, oy = (lo - border * size).tolist()
+    return ox, oy, size, nx, ny
+
+
+def _cell_keys(grid: tuple, x: np.ndarray, y: np.ndarray):
+    """Each point's cell key `gy * nx + gx`, and whether it lies on the grid
+    (NaN does not)."""
+    ox, oy, size, nx, ny = grid
+    fx = np.floor((x - ox) / size)
+    fy = np.floor((y - oy) / size)
+    ok = (fx >= 0) & (fx < nx) & (fy >= 0) & (fy < ny)
+    return np.where(ok, fy, 0).astype(np.int64) * nx + np.where(ok, fx, 0).astype(np.int64), ok
+
+
+def _csr(codes: np.ndarray, keys: np.ndarray, n: int):
+    """Sorted `key * n + val` codes as a CSR under the sorted `keys`:
+    offsets (one per key, plus the end; int32 below 2^31 codes) and int32
+    vals, ascending per key."""
+    off = np.append(np.searchsorted(codes, keys * n), len(codes))
+    return off.astype(np.int32 if len(codes) < 1 << 31 else np.int64), (codes % n).astype(np.int32)
+
+
+def _chunks(counts: np.ndarray, limit: int):
+    """(lo, hi) bounds of consecutive runs of items whose counts sum to
+    about `limit`, at least one item each."""
+    cum = np.cumsum(counts)
+    lo = 0
+    while lo < len(cum):
+        done = cum[lo - 1] if lo else 0
+        hi = max(int(np.searchsorted(cum, done + limit, side="right")), lo + 1)
+        yield lo, hi
+        lo = hi
+
+
+def _expand(pts: np.ndarray, slots: np.ndarray, off: np.ndarray, vals: np.ndarray):
+    """(point, val) pairs for every val listed under each point's slot,
+    point-major, vals in stored order."""
+    start = off[slots].astype(np.int64)
+    n = off[slots + 1] - start
+    pos = np.arange(int(n.sum())) - np.repeat(np.cumsum(n) - n - start, n)
+    return np.repeat(pts, n), vals[pos]
+
+
 @dataclass
 class PolygonIndex:
-    """Uniform-grid spatial index over polygons; built on the driver,
-    broadcast to executors, probed with vectorized numpy inside pandas UDFs.
+    """Grid index over polygons; built on the driver, broadcast to executors,
+    probed with vectorized numpy inside pandas UDFs.
 
     Matches PolygonIndex.java semantics:
       - get_containing(points): all polygons whose interior contains each point
@@ -499,20 +568,38 @@ class PolygonIndex:
       - get_containing_or_nearest(points, within): containment first, else the
         nearest polygon within `within` distance (:93-124)
 
-    Probe is cell-major, not polygon-major: at build time every polygon's
-    edges are packed into one flat edge pool and a per-cell CSR slab maps
-    each grid cell to (candidate poly ids, their pooled edge ids, per-poly
-    segment starts). A batch probe sorts points by cell once, then walks the
-    ~hundreds of OCCUPIED CELLS (not the tens of thousands of polygons),
-    evaluating one (points-in-cell x packed-edges) crossing matrix per cell
-    and reducing crossings to per-polygon parity with np.add.reduceat.
-    Even-odd correctness: parity of TOTAL crossings across all of a
-    polygon's rings equals the XOR of per-ring parities, so packing all
-    rings into one segment is exact. Inputs per cell are contiguous
-    (cell-sorted points, pooled-edge gathers), so the kernel is
-    compute-dense rather than gather-bound — this is what lets the join
-    scale with cores instead of hitting the shared-DRAM ceiling the
-    polygon-major loop hit (BENCH/BASELINE.md round-2 analysis).
+    Containment uses a raster-interval approximation ("Raster Intervals",
+    SIGMOD 2023): a fine grid, `cell / _FINE` on a side, where each polygon
+    classifies the cells of its bbox as
+      - partial: some edge lies within the margin `m` of the closed cell
+        (found from each edge's own row spans, dilated by `m`);
+      - full: not partial, and the cell centre is inside by the even-odd
+        scanline rule;
+      - outside: anything else, dropped.
+    Two sparse CSR lists (sorted int64 keys of the occupied cells, int32
+    offsets, int32 polygon ids ascending per cell) hold the full and the
+    partial (cell, polygon) pairs, so the index grows with those pairs, not
+    with the extent. A probe finds each point's cell by binary search; its
+    full polygons contain it with no edge test, and only its partial
+    polygons run the crossing test, over flat (pair, edge) arrays with one
+    add.reduceat parity per pair. Parity of the TOTAL crossings across all
+    of a polygon's rings equals the XOR of per-ring parities, so one
+    segment per polygon is exact.
+
+    Why a full cell is exact, bit for bit: `m = 1e-9 * max(1, max|coord|)`.
+    A point in a full cell lies at least `m` from every edge (the float
+    cell lookup misplaces a point by ~1e-16 * |coord|, far below `m`). For
+    each edge whose half-open y-span holds the point, the exact crossing x
+    lies at least `m` from the point, while the float crossing
+    `x0 + (py-y0)*(x1-x0)/(y1-y0)` errs by a few ulps of max|coord| (the
+    factor (py-y0)/(y1-y0) is in [0, 1]). So no `px < xi` comparison can
+    flip: the float test gives the exact even-odd answer, which is the same
+    for every point of the cell (no edge enters it) as for its centre.
+    Points within `m` of an edge fall in partial cells and get the float
+    test itself, so every answer equals the per-polygon kernel's.
+
+    The nearest fallback uses a coarse grid (`cell` = median bbox extent):
+    a CSR of the polygons whose bbox, padded by one cell, meets each cell.
     """
 
     ids: list
@@ -521,84 +608,300 @@ class PolygonIndex:
     cell: float = field(init=False)
 
     def __post_init__(self):
-        bb = np.empty((len(self.polys), 4))
-        for i, rings in enumerate(self.polys):
-            shell = rings[0]
-            bb[i] = (shell[:, 0].min(), shell[:, 1].min(), shell[:, 0].max(), shell[:, 1].max())
+        n = len(self.polys)
+        rings = [r for rs in self.polys for r in rs]
+        nring = np.array([len(rs) for rs in self.polys], dtype=np.int64)
+        rlen = np.array([len(r) for r in rings], dtype=np.int64)
+        self._nedges = np.bincount(np.repeat(np.arange(n), nring),
+                                   weights=np.maximum(rlen - 1, 0), minlength=n).astype(np.int64)
+        self._estart = np.append(0, np.cumsum(self._nedges))
+        xy = np.concatenate(rings + [np.empty((0, 2))])
+        first = np.ones(len(xy), dtype=bool)  # vertices that start an edge
+        first[(np.cumsum(rlen) - 1)[rlen > 0]] = False
+        e = np.flatnonzero(first)
+        self._ex0, self._ey0 = xy[e, 0], xy[e, 1]
+        self._ex1, self._ey1 = xy[e + 1, 0], xy[e + 1, 1]
+        bb = np.full((n, 4), np.nan)
+        has = self._nedges > 0
+        if has.any():
+            at = self._estart[:-1][has]
+            bb[has, 0] = np.minimum.reduceat(np.minimum(self._ex0, self._ex1), at)
+            bb[has, 1] = np.minimum.reduceat(np.minimum(self._ey0, self._ey1), at)
+            bb[has, 2] = np.maximum.reduceat(np.maximum(self._ex0, self._ex1), at)
+            bb[has, 3] = np.maximum.reduceat(np.maximum(self._ey0, self._ey1), at)
         self.bboxes = bb
         # cell ~ median bbox extent: ~1-4 covered cells per polygon
-        spans = np.maximum(bb[:, 2] - bb[:, 0], bb[:, 3] - bb[:, 1])
+        spans = np.maximum(bb[has, 2] - bb[has, 0], bb[has, 3] - bb[has, 1])
         self.cell = float(max(np.median(spans), 1e-6)) if len(spans) else 1.0
-        self._build_slabs()
+        self._m = 1e-9 * max(1.0, float(np.abs(bb[has]).max())) if has.any() else 0.0
+        self._fine = self._pad = (0.0, 0.0, 1.0, 0, 0)
+        self._keys = self._pad_keys = np.empty(0, dtype=np.int64)
+        self._full_off = self._part_off = self._pad_off = np.zeros(1, dtype=np.int32)
+        self._full_poly = self._part_poly = self._pad_poly = np.empty(0, dtype=np.int32)
+        if has.any():
+            lo, hi = bb[has, :2].min(axis=0), bb[has, 2:].max(axis=0)
+            self._build_fine(has, lo, hi)
+            self._build_pad(has, lo, hi)
 
-    # -- build-time packing (driver-side, once; the whole object is broadcast) --
+    # -- build (driver-side, once; the whole object is broadcast) --------------
 
-    def _build_slabs(self):
-        """Flat edge pool + per-cell CSR slabs (tight for containment, padded
-        by one full cell for the nearest-within fallback)."""
-        ex0, ey0, ex1, ey1 = [], [], [], []
-        estart = np.zeros(len(self.polys) + 1, dtype=np.int64)
-        for i, rings in enumerate(self.polys):
-            for r in rings:
-                ex0.append(r[:-1, 0]); ey0.append(r[:-1, 1])
-                ex1.append(r[1:, 0]); ey1.append(r[1:, 1])
-            estart[i + 1] = estart[i] + sum(len(r) - 1 for r in rings)
-        self._ex0 = np.concatenate(ex0) if ex0 else np.empty(0)
-        self._ey0 = np.concatenate(ey0) if ey0 else np.empty(0)
-        self._ex1 = np.concatenate(ex1) if ex1 else np.empty(0)
-        self._ey1 = np.concatenate(ey1) if ey1 else np.empty(0)
-        self._estart = estart
-        self._cells_tight = self._bucket(pad=0.0)
-        self._cells_pad = self._bucket(pad=self.cell)
+    def _cover(self, has, lo, hi, size, border, pad):
+        """A grid (see _grid) of cells at least `size`, and each polygon's
+        first cell and cell counts along x and y over its bbox dilated by
+        `pad` cells plus the margin. The cells are coarsened only when
+        outsized polygons would cover more than 1024 per polygon plus 2^18
+        in all, so the index never grows with the area of one polygon."""
+        bb, n = self.bboxes, len(self.bboxes)
+        budget = 1024.0 * n + (1 << 18)
+        while True:
+            grid = ox, oy, c, _, _ = _grid(lo, hi, size, border, n)
+            d = pad * c + self._m
+            gx0 = np.where(has, np.floor((bb[:, 0] - d - ox) / c), 0)
+            gy0 = np.where(has, np.floor((bb[:, 1] - d - oy) / c), 0)
+            ncx = np.where(has, np.floor((bb[:, 2] + d - ox) / c) - gx0 + 1, 0)
+            ncy = np.where(has, np.floor((bb[:, 3] + d - oy) / c) - gy0 + 1, 0)
+            total = float((ncx * ncy).sum())
+            if total <= budget:
+                return (grid,) + tuple(a.astype(np.int64) for a in (gx0, gy0, ncx, ncy))
+            size = c * 1.01 * np.sqrt(total / budget)
 
-    def _bucket(self, pad: float) -> dict:
-        """cell_key -> (poly_ids asc, pooled edge_ids, per-poly seg starts).
-        Fully vectorized build: (poly, cell) incidences via the offset-grid
-        trick, pooled edge ids via one segmented arange, per-cell slabs as
-        views into the shared arrays (no per-cell allocation)."""
-        c = self.cell
-        if not len(self.polys):
-            return {}
-        bb = self.bboxes
-        cx0 = np.floor((bb[:, 0] - pad) / c).astype(np.int64)
-        cx1 = np.floor((bb[:, 2] + pad) / c).astype(np.int64)
-        cy0 = np.floor((bb[:, 1] - pad) / c).astype(np.int64)
-        cy1 = np.floor((bb[:, 3] + pad) / c).astype(np.int64)
-        ncx, ncy = cx1 - cx0 + 1, cy1 - cy0 + 1
-        pidx_l, key_l = [], []
-        for dx in range(int(ncx.max())):
-            for dy in range(int(ncy.max())):
-                m = (dx < ncx) & (dy < ncy)
-                if not m.any():
-                    continue
-                pid = np.nonzero(m)[0].astype(np.int64)
-                key = (cx0[pid] + dx) * np.int64(1 << 31) + (cy0[pid] + dy)
-                pidx_l.append(pid)
-                key_l.append(key)
-        pidx = np.concatenate(pidx_l)
-        keys = np.concatenate(key_l)
-        o = np.lexsort((pidx, keys))  # cell-major, poly ids ascending per cell
-        pidx, keys = pidx[o], keys[o]
-        nedges = np.diff(self._estart)
-        lens = nedges[pidx]
-        ends = np.cumsum(lens)
-        starts_out = ends - lens
-        total = int(ends[-1]) if len(ends) else 0
-        eids_all = (np.arange(total, dtype=np.int64)
-                    - np.repeat(starts_out - self._estart[pidx], lens))
-        run_keys, run_starts = np.unique(keys, return_index=True)
-        run_bounds = np.append(run_starts, len(keys))
-        out = {}
-        for r, key in enumerate(run_keys):
-            lo, hi = run_bounds[r], run_bounds[r + 1]
-            elo = starts_out[lo]
-            out[int(key)] = (pidx[lo:hi],
-                             eids_all[elo:ends[hi - 1]],
-                             starts_out[lo:hi] - elo)
+    def _build_fine(self, has, lo, hi):
+        """Classify each polygon's fine cells as full or partial, in polygon
+        chunks of at most _BUILD_CELLS bbox cells."""
+        n = len(self.polys)
+        self._fine, gx0, gy0, ncx, ncy = self._cover(
+            has, lo, hi, max(self.cell / _FINE, 8 * self._m), 1, 0)
+        cells = np.cumsum(ncx * ncy)
+        full, part = [], []
+        p0 = 0
+        while p0 < n:
+            p1 = max(int(np.searchsorted(cells, cells[p0] - ncx[p0] * ncy[p0] + _BUILD_CELLS,
+                                         side="right")), p0 + 1)
+            f, p = self._classify(p0, p1, gx0, gy0, ncx, ncy)
+            full.append(f)
+            part.append(p)
+            p0 = p1
+        full, part = np.concatenate(full), np.concatenate(part)
+        full.sort()
+        part.sort()
+        self._keys = np.union1d(full // n, part // n)
+        self._full_off, self._full_poly = _csr(full, self._keys, n)
+        self._part_off, self._part_poly = _csr(part, self._keys, n)
+
+    def _classify(self, p0, p1, gx0, gy0, ncx, ncy):
+        """Codes `key * P + poly` of the full and of the partial fine cells of
+        polygons p0..p1."""
+        m, n = self._m, len(self.polys)
+        ox, oy, fc, nx, _ = self._fine
+        gx0, gy0, ncx, ncy = gx0[p0:p1], gy0[p0:p1], ncx[p0:p1], ncy[p0:p1]
+        # each polygon's bbox raster, row by row: raster row r belongs to local
+        # polygon rp[r], has length ncx[rp[r]] and starts at rstart[r]
+        rp, lrow = _segments(ncy)
+        rstart = np.cumsum(ncx[rp]) - ncx[rp]
+        rfirst = np.cumsum(ncy) - ncy
+        e0, e1 = self._estart[p0], self._estart[p1]
+        ep, _ = _segments(self._nedges[p0:p1])
+        x0, y0 = self._ex0[e0:e1], self._ey0[e0:e1]
+        x1, y1 = self._ex1[e0:e1], self._ey1[e0:e1]
+        # (edge, row) pairs: the fine rows each edge comes within m of
+        r0 = np.maximum(np.floor((np.minimum(y0, y1) - m - oy) / fc).astype(np.int64), gy0[ep])
+        r1 = np.minimum(np.floor((np.maximum(y0, y1) + m - oy) / fc).astype(np.int64),
+                        gy0[ep] + ncy[ep] - 1)
+        er, k = _segments(np.maximum(r1 - r0 + 1, 0))
+        row = r0[er] + k
+        x0, y0, x1, y1, ep = x0[er], y0[er], x1[er], y1[er], ep[er]
+        base = rstart[rfirst[ep] + row - gy0[ep]] - gx0[ep]  # raster index of column 0
+        dx, dy = x1 - x0, y1 - y0
+        # partial: the cells within m of the edge's x-range inside the row's
+        # band, the band itself dilated by m
+        ylo = oy + row * fc - m
+        with np.errstate(divide="ignore", invalid="ignore"):
+            ta, tb = (ylo - y0) / dy, (ylo + fc + 2 * m - y0) / dy
+        flat = dy == 0
+        xa = x0 + np.where(flat, 0.0, np.clip(np.minimum(ta, tb), 0.0, 1.0)) * dx
+        xb = x0 + np.where(flat, 1.0, np.clip(np.maximum(ta, tb), 0.0, 1.0)) * dx
+        c0 = np.maximum(np.floor((np.minimum(xa, xb) - m - ox) / fc).astype(np.int64), gx0[ep])
+        c1 = np.minimum(np.floor((np.maximum(xa, xb) + m - ox) / fc).astype(np.int64),
+                        gx0[ep] + ncx[ep] - 1)
+        rc, k = _segments(np.maximum(c1 - c0 + 1, 0))
+        partial = np.zeros(int((ncx * ncy).sum()), dtype=bool)
+        partial[base[rc] + c0[rc] + k] = True
+        # even-odd at each cell centre: the row's centre line crossings,
+        # counted into their columns; a cell is inside when an odd number lie
+        # right of its column (its own column holds one only if it is partial)
+        yc = oy + (row + 0.5) * fc
+        hit = (y0 > yc) != (y1 > yc)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xi = x0[hit] + (yc[hit] - y0[hit]) * dx[hit] / dy[hit]
+        col = np.clip(np.floor((xi - ox) / fc).astype(np.int64),
+                      gx0[ep[hit]], gx0[ep[hit]] + ncx[ep[hit]] - 1)
+        cs = np.cumsum(np.bincount(base[hit] + col, minlength=len(partial)))
+        rs, lcol = _segments(ncx[rp])
+        full = ((cs[(rstart + ncx[rp] - 1)[rs]] - cs) & 1).astype(bool) & ~partial
+        rowcode = ((gy0[rp] + lrow) * nx + gx0[rp]) * n + rp + p0
+
+        def codes(sel):
+            sel = np.flatnonzero(sel)
+            return rowcode[rs[sel]] + lcol[sel] * n
+
+        return codes(full), codes(partial)
+
+    def _build_pad(self, has, lo, hi):
+        """Coarse cell -> ascending ids of the polygons whose bbox, padded by
+        one cell, meets the cell: a superset of every polygon within `cell`
+        of any point in it (the grid's cells are at least `cell`)."""
+        n = len(self.polys)
+        self._pad, cx0, cy0, ncx, ncy = self._cover(has, lo, hi, self.cell, 2, 1)
+        p, k = _segments(ncx * ncy)
+        codes = ((cy0[p] + k // ncx[p]) * self._pad[3] + cx0[p] + k % ncx[p]) * n + p
+        codes.sort()
+        self._pad_keys = np.unique(codes // n)
+        self._pad_off, self._pad_poly = _csr(codes, self._pad_keys, n)
+
+    # -- probe ------------------------------------------------------------------
+
+    @staticmethod
+    def _slots(keys, q, ok):
+        """Index of each query key in the sorted `keys`; -1 where absent or
+        where `ok` is False."""
+        if not len(keys):
+            return np.full(len(q), -1, dtype=np.int64)
+        pos = np.minimum(np.searchsorted(keys, q), len(keys) - 1)
+        return np.where(ok & (keys[pos] == q), pos, -1)
+
+    def _pair_edges(self, poly):
+        """The flat (pair, edge) arrays for pairs with polygons `poly`, in
+        chunks of about _EDGE_CHUNK edges: (lo, hi, n, starts, e) gives the
+        chunk's pairs lo..hi, their edge counts, their segment starts within
+        the chunk and the pooled edge ids."""
+        ne = self._nedges[poly]
+        for lo, hi in _chunks(ne, _EDGE_CHUNK):
+            n = ne[lo:hi]
+            starts = np.cumsum(n) - n
+            e = np.arange(int(starts[-1] + n[-1])) + np.repeat(self._estart[poly[lo:hi]] - starts, n)
+            yield lo, hi, n, starts, e
+
+    def _parity(self, px, py, pt, poly):
+        """Even-odd containment of point pt[i] in polygon poly[i]: the
+        crossing test of points_in_ring over flat (pair, edge) arrays."""
+        out = np.empty(len(pt), dtype=bool)
+        for lo, hi, n, starts, e in self._pair_edges(poly):
+            x = np.repeat(px[pt[lo:hi]], n)
+            y = np.repeat(py[pt[lo:hi]], n)
+            x0, y0 = self._ex0[e], self._ey0[e]
+            x1, y1 = self._ex1[e], self._ey1[e]
+            cond = (y0 > y) != (y1 > y)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                xi = x0 + (y - y0) * (x1 - x0) / (y1 - y0)
+            crossings = (cond & (x < xi)).view(np.uint8)
+            out[lo:hi] = np.add.reduceat(crossings, starts) & 1
         return out
 
-    def _sorted_cells(self, px, py, pad: float = 0.0):
-        """Sort point indices by cell key; return (order, keys_sorted)."""
+    def get_containing(self, px: np.ndarray, py: np.ndarray):
+        """Returns (point_idx, poly_idx) arrays for every containment pair,
+        ordered by (point, polygon)."""
+        px = np.asarray(px, dtype=np.float64)
+        py = np.asarray(py, dtype=np.float64)
+        npoly = np.int64(max(len(self.polys), 1))
+        out = [np.empty(0, dtype=np.int64)]
+        for lo in range(0, len(px), _BLOCK):
+            bx, by = px[lo:lo + _BLOCK], py[lo:lo + _BLOCK]
+            slot = self._slots(self._keys, *_cell_keys(self._fine, bx, by))
+            pts = np.flatnonzero(slot >= 0)
+            slot = slot[pts]
+            fpt, fpoly = _expand(pts, slot, self._full_off, self._full_poly)
+            ppt, ppoly = _expand(pts, slot, self._part_off, self._part_poly)
+            keep = self._parity(bx, by, ppt, ppoly)
+            key = np.concatenate([fpt * npoly + fpoly, ppt[keep] * npoly + ppoly[keep]])
+            key.sort(kind="stable")
+            out.append(key + lo * npoly)
+        key = np.concatenate(out)
+        del out  # free the block runs before divmod writes two more arrays
+        return np.divmod(key, npoly)
+
+    def get_containing_or_nearest(self, px: np.ndarray, py: np.ndarray, within: float):
+        """Returns (point_idx, poly_idx, fallback_flag). Points contained by >=1
+        polygon yield one row per containing polygon (fallback=False); points in
+        no polygon yield their nearest polygon within `within` (fallback=True);
+        on exact distance ties the lowest polygon id wins."""
+        px = np.asarray(px, dtype=np.float64)
+        py = np.asarray(py, dtype=np.float64)
+        pt, poly = self.get_containing(px, py)
+        contained = np.zeros(len(px), dtype=bool)
+        contained[pt] = True
+        miss = np.flatnonzero(~contained & np.isfinite(px) & np.isfinite(py))
+        if within <= self.cell:
+            fb_i, fb_poly = self._nearest_narrow(px[miss], py[miss], within)
+        else:
+            fb_i, fb_poly = self._nearest_wide(px[miss], py[miss], within)
+        fb_pt = miss[fb_i]
+        return (np.concatenate([pt, fb_pt]),
+                np.concatenate([poly, fb_poly]),
+                np.concatenate([np.zeros(len(pt), dtype=bool), np.ones(len(fb_pt), dtype=bool)]))
+
+    def _nearest_narrow(self, mx, my, within):
+        """Nearest polygon within `within` <= cell: (miss, candidate) pairs
+        from the padded coarse cell, in chunks of about _EDGE_CHUNK pairs,
+        minus pairs whose bbox is farther than `within` (they can never
+        win), then one flat distance pass with a minimum.reduceat per pair."""
+        slot = self._slots(self._pad_keys, *_cell_keys(self._pad, mx, my))
+        pts = np.flatnonzero(slot >= 0)
+        slot = slot[pts]
+        out_i, out_poly = [np.empty(0, dtype=np.int64)], [np.empty(0, dtype=np.int64)]
+        for lo, hi in _chunks(self._pad_off[slot + 1] - self._pad_off[slot], _EDGE_CHUNK):
+            pi, cand = _expand(pts[lo:hi], slot[lo:hi], self._pad_off, self._pad_poly)
+            x, y = mx[pi], my[pi]
+            bb = self.bboxes
+            gx = np.maximum(np.maximum(bb[cand, 0] - x, x - bb[cand, 2]), 0.0)
+            gy = np.maximum(np.maximum(bb[cand, 1] - y, y - bb[cand, 3]), 0.0)
+            near = np.flatnonzero(gx * gx + gy * gy <= (within + self._m) ** 2)
+            if not len(near):
+                continue
+            pi, cand = pi[near], cand[near]
+            d = np.empty(len(pi))
+            for elo, ehi, n, starts, e in self._pair_edges(cand):
+                d2 = point_segment_dist_sq(np.repeat(mx[pi[elo:ehi]], n), np.repeat(my[pi[elo:ehi]], n),
+                                           self._ex0[e], self._ey0[e], self._ex1[e], self._ey1[e])
+                d[elo:ehi] = np.sqrt(np.minimum.reduceat(d2, starts))
+            # pairs run point-major with ascending polygon ids: per point, the
+            # first pair at the minimum distance is the lowest-id nearest polygon
+            run = np.flatnonzero(np.r_[True, pi[1:] != pi[:-1]])
+            best = np.repeat(np.minimum.reduceat(d, run), np.diff(np.r_[run, len(d)]))
+            w = np.flatnonzero(d == best)
+            w = w[np.r_[True, pi[w[1:]] != pi[w[:-1]]]]
+            w = w[d[w] <= within]
+            out_i.append(pi[w])
+            out_poly.append(cand[w].astype(np.int64))
+        return np.concatenate(out_i), np.concatenate(out_poly)
+
+    def _nearest_wide(self, mx, my, within):
+        """Nearest polygon within `within` > cell: polygon-major scan over the
+        points whose cells meet each polygon's bbox padded by `within`."""
+        best_d = np.full(len(mx), np.inf)
+        best_i = np.full(len(mx), -1, dtype=np.int64)
+        order, keys_sorted = self._sorted_cells(mx, my)
+        for i in np.flatnonzero(self._nedges):
+            minx, miny, maxx, maxy = self.bboxes[i]
+            cand = self._candidates(order, keys_sorted,
+                                    minx - within, miny - within,
+                                    maxx + within, maxy + within)
+            if len(cand) == 0:
+                continue
+            cx, cy = mx[cand], my[cand]
+            m = ((cx >= minx - within) & (cx <= maxx + within) &
+                 (cy >= miny - within) & (cy <= maxy + within))
+            cand = cand[m]
+            if len(cand) == 0:
+                continue
+            d = dist_to_polygon(mx[cand], my[cand], self.polys[i])
+            upd = d < best_d[cand]
+            best_d[cand] = np.where(upd, d, best_d[cand])
+            best_i[cand] = np.where(upd, i, best_i[cand])
+        ok = np.flatnonzero((best_i >= 0) & (best_d <= within))
+        return ok, best_i[ok]
+
+    def _sorted_cells(self, px, py):
+        """Sort point indices by coarse cell key; return (order, keys_sorted)."""
         c = self.cell
         cx = np.floor(px / c).astype(np.int64)
         cy = np.floor(py / c).astype(np.int64)
@@ -621,117 +924,6 @@ class PolygonIndex:
         if not parts:
             return np.empty(0, dtype=np.int64)
         return np.concatenate(parts)
-
-    def _cell_runs(self, px, py):
-        """Cell-sort the points; return (order, run_keys, run_starts incl. end)."""
-        order, keys_sorted = self._sorted_cells(px, py)
-        if len(order) == 0:
-            return order, np.empty(0, dtype=np.int64), np.zeros(1, dtype=np.int64)
-        run_keys, run_starts = np.unique(keys_sorted, return_index=True)
-        return order, run_keys, np.append(run_starts, len(order))
-
-    # point-chunk size per cell: keeps the (chunk x edges) crossing matrix and
-    # its temporaries L2-resident even for edge-dense cells
-    _CHUNK = 256
-
-    def get_containing(self, px: np.ndarray, py: np.ndarray):
-        """Returns (point_idx, poly_idx) arrays for every containment pair."""
-        order, run_keys, run_bounds = self._cell_runs(px, py)
-        out_pt, out_poly = [], []
-        cells = self._cells_tight
-        for r, key in enumerate(run_keys):
-            slab = cells.get(int(key))
-            if slab is None:
-                continue
-            pids, eids, starts = slab
-            pts = order[run_bounds[r]:run_bounds[r + 1]]
-            x0, y0 = self._ex0[eids], self._ey0[eids]
-            x1, y1 = self._ex1[eids], self._ey1[eids]
-            for lo in range(0, len(pts), self._CHUNK):
-                chunk = pts[lo:lo + self._CHUNK]
-                cx = px[chunk][:, None]
-                cy = py[chunk][:, None]
-                cond = (y0 > cy) != (y1 > cy)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    xi = x0 + (cy - y0) * (x1 - x0) / (y1 - y0)
-                crossings = (cond & (cx < xi)).view(np.uint8)
-                parity = np.add.reduceat(crossings, starts, axis=1) & 1
-                ppos, cpos = np.nonzero(parity.T)  # poly-major like the old loop
-                if len(ppos):
-                    out_pt.append(chunk[cpos])
-                    out_poly.append(pids[ppos])
-        if not out_pt:
-            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-        pt = np.concatenate(out_pt)
-        poly = np.concatenate(out_poly)
-        # deterministic output order: by (point, polygon)
-        o = np.lexsort((poly, pt))
-        return pt[o], poly[o]
-
-    def get_containing_or_nearest(self, px: np.ndarray, py: np.ndarray, within: float):
-        """Returns (point_idx, poly_idx, fallback_flag). Points contained by >=1
-        polygon yield one row per containing polygon (fallback=False); points in
-        no polygon yield their nearest polygon within `within` (fallback=True)."""
-        pt, poly = self.get_containing(px, py)
-        n = len(px)
-        contained = np.zeros(n, dtype=bool)
-        contained[pt] = True
-        miss = np.nonzero(~contained)[0]
-        if len(miss) == 0:
-            return pt, poly, np.zeros(len(pt), dtype=bool)
-        mx, my = px[miss], py[miss]
-        best_d = np.full(len(miss), np.inf)
-        best_i = np.full(len(miss), -1, dtype=np.int64)
-        if within <= self.cell:
-            # cell-major: the one-cell-padded slab is a superset of every
-            # polygon within `within` of any point in the cell
-            order, run_keys, run_bounds = self._cell_runs(mx, my)
-            cells = self._cells_pad
-            for r, key in enumerate(run_keys):
-                slab = cells.get(int(key))
-                if slab is None:
-                    continue
-                pids, eids, starts = slab
-                pts = order[run_bounds[r]:run_bounds[r + 1]]
-                x0, y0 = self._ex0[eids], self._ey0[eids]
-                x1, y1 = self._ex1[eids], self._ey1[eids]
-                for lo in range(0, len(pts), self._CHUNK):
-                    chunk = pts[lo:lo + self._CHUNK]
-                    d2 = point_segment_dist_sq(mx[chunk][:, None], my[chunk][:, None],
-                                               x0, y0, x1, y1)
-                    dpoly = np.sqrt(np.minimum.reduceat(d2, starts, axis=1))
-                    # argmin keeps the FIRST (lowest poly id — pids ascending)
-                    # on exact ties, matching the old sequential `d < best_d`
-                    amin = np.argmin(dpoly, axis=1)
-                    rows = np.arange(len(chunk))
-                    best_d[chunk] = dpoly[rows, amin]
-                    best_i[chunk] = pids[amin]
-        else:
-            # rare: fallback radius wider than the grid cell — polygon-major scan
-            order, keys_sorted = self._sorted_cells(mx, my)
-            for i, rings in enumerate(self.polys):
-                minx, miny, maxx, maxy = self.bboxes[i]
-                cand = self._candidates(order, keys_sorted,
-                                        minx - within, miny - within,
-                                        maxx + within, maxy + within)
-                if len(cand) == 0:
-                    continue
-                cx, cy = mx[cand], my[cand]
-                m = ((cx >= minx - within) & (cx <= maxx + within) &
-                     (cy >= miny - within) & (cy <= maxy + within))
-                cand = cand[m]
-                if len(cand) == 0:
-                    continue
-                d = dist_to_polygon(mx[cand], my[cand], rings)
-                upd = d < best_d[cand]
-                best_d[cand] = np.where(upd, d, best_d[cand])
-                best_i[cand] = np.where(upd, i, best_i[cand])
-        ok = (best_i >= 0) & (best_d <= within)
-        fb_pt = miss[ok]
-        fb_poly = best_i[ok]
-        return (np.concatenate([pt, fb_pt]),
-                np.concatenate([poly, fb_poly]),
-                np.concatenate([np.zeros(len(pt), dtype=bool), np.ones(len(fb_pt), dtype=bool)]))
 
 
 # --- Douglas-Peucker simplification (DouglasPeuckerSimplifier.java:33-100) ------

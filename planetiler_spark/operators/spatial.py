@@ -4,9 +4,13 @@ Reference semantics:
   - PIP zone assignment: geo/PolygonIndex.java:20-145 — in-memory STRtree of
     zone polygons, envelope candidates -> exact contains, with
     nearest-within-threshold fallback (getContainingOrNearest:93-124).
-    Spark-first: build the index ONCE on the driver, `sc.broadcast` it, probe
-    with fully vectorized numpy inside Arrow-batched mapInPandas — the
-    distributed analog of the reference's per-worker shared index.
+    Spark-first: build the index ONCE on the driver, broadcast it once per
+    live SparkContext and zone count (`zones_broadcast`), probe with fully
+    vectorized numpy inside Arrow-batched mapInPandas — the distributed
+    analog of the reference's per-worker shared index. The probe is a
+    raster-interval grid (`kernels/geom.py PolygonIndex`): points in a cell
+    wholly inside a zone take it with no edge test, and only cells crossed
+    by a zone's boundary run the even-odd crossing test.
   - kNN: geo/PointIndex.java:22-106 — envelope query expanded by radius,
     post-filter by true distance. Here the probe side is billions of rows and
     the target side (zone sites) is broadcastable, so each Arrow batch
@@ -19,6 +23,8 @@ Both avoid per-row Python entirely (input_hint mandate).
 
 from __future__ import annotations
 
+import weakref
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -30,6 +36,22 @@ PIP_SCHEMA = "image_id string, zone_id string, kind string, fallback boolean"
 PIP_COMPACT_SCHEMA = "phash long, zone_idx int, fallback boolean"
 PIP_AGG_SCHEMA = "zone_idx int, fallback boolean, n long"
 KNN_SCHEMA = "image_id string, zone_id string, rank int, d2 double"
+
+# SparkContext -> {n_zones: broadcast}; a stopped session's context drops out
+# with its last reference, and the next session broadcasts afresh
+_ZONE_BROADCASTS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def zones_broadcast(spark, n_zones: int | None = None):
+    """The broadcast `(PolygonIndex, kinds)` of the `n_zones` zone table, one
+    per live SparkContext and zone count: each join reuses it instead of
+    pickling the index again and leaving another copy on every executor."""
+    sc = spark.sparkContext
+    n = n_zones or src.N_ZONES
+    per_sc = _ZONE_BROADCASTS.setdefault(sc, {})
+    if n not in per_sc:
+        per_sc[n] = sc.broadcast((src.zones_index(n), src.zones_pdf(n)["kind"].tolist()))
+    return per_sc[n]
 
 
 def pip_zones(images: DataFrame, within: float | None = 0.01,
@@ -48,10 +70,7 @@ def pip_zones(images: DataFrame, within: float | None = 0.01,
     instead of raw join rows — the map-side combine of the join→aggregate
     pipeline; finish with groupBy(zone_idx, fallback).sum(n). Total row count
     is conserved (sum(n) == number of raw join rows)."""
-    spark = images.sparkSession
-    zones = src.zones_pdf(n_zones or src.N_ZONES)
-    idx = src.zones_index(n_zones or src.N_ZONES)
-    bidx = spark.sparkContext.broadcast((idx, zones["kind"].tolist()))
+    bidx = zones_broadcast(images.sparkSession, n_zones)
 
     def probe(batches):
         index, kinds = bidx.value
@@ -65,12 +84,12 @@ def pip_zones(images: DataFrame, within: float | None = 0.01,
             else:
                 pt, poly, fb = index.get_containing_or_nearest(wx, wy, within)
             if aggregate:
-                key = poly.astype(np.int64) * 2 + fb
-                uniq, counts = np.unique(key, return_counts=True)
+                counts = np.bincount(poly * 2 + fb)
+                key = np.flatnonzero(counts)
                 yield pd.DataFrame({
-                    "zone_idx": (uniq // 2).astype(np.int32),
-                    "fallback": (uniq % 2).astype(bool),
-                    "n": counts.astype(np.int64),
+                    "zone_idx": (key // 2).astype(np.int32),
+                    "fallback": (key % 2).astype(bool),
+                    "n": counts[key].astype(np.int64),
                 })
                 continue
             if compact:

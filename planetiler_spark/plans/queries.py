@@ -2297,21 +2297,21 @@ def pip_polygon_index(spark, sf_dir):
     customer keys through the shared LCG (exact in both engines) and the
     zone rings are inlined into the DuckDB SQL as literal edges, so the
     even-odd crossing parity, the nearest point-segment distances, and the
-    tie-breaks are replayed bit-for-bit against the cell-slab index probe."""
+    tie-breaks are replayed bit-for-bit against the raster-interval index
+    probe."""
     import numpy as np
     import pandas as pd
 
-    from ..sources import images as src
+    from ..operators.spatial import zones_broadcast
 
-    idx = src.zones_index()
-    bidx = spark.sparkContext.broadcast(idx)
+    bidx = zones_broadcast(spark)
     c = tbl(spark, sf_dir, "customer").select(
         "c_custkey",
         (F.expr(_IXC) / F.lit(2147483647.0)).alias("px"),
         (F.expr(_IYC) / F.lit(2147483647.0)).alias("py"))
 
     def probe(batches):
-        index = bidx.value
+        index, _ = bidx.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue

@@ -69,6 +69,157 @@ def test_polygon_index_nearest_fallback():
     assert rows == [(0, 0, False), (1, 0, True)]  # 9.0 beyond `within` -> dropped
 
 
+def star(rng, cx, cy, r, n):
+    """A closed star-shaped (mostly concave) ring; about a third of its
+    vertices repeat the previous y, so the ring has horizontal edges."""
+    ang = np.sort(rng.uniform(0, 2 * np.pi, n))
+    rad = r * rng.uniform(0.4, 1.0, n)
+    xy = np.column_stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)])
+    flat = np.flatnonzero(rng.uniform(size=n) < 0.3)
+    xy[flat[flat > 0], 1] = xy[flat[flat > 0] - 1, 1]
+    return np.vstack([xy, xy[:1]])
+
+
+def random_polygons(seed, n, scale):
+    """n overlapping star polygons, some with one or two holes, scaled by
+    `scale` and moved ~3 * scale off the origin."""
+    rng = np.random.default_rng(seed)
+    polys = []
+    for _ in range(n):
+        c = rng.uniform(0, 4, 2)
+        r = rng.uniform(0.3, 1.2)
+        rings = [star(rng, c[0], c[1], r, int(rng.integers(5, 16)))]
+        for h in range(int(rng.integers(0, 3))):
+            off = (h - 0.5) * 0.35 * r if h else 0.0
+            rings.append(star(rng, c[0] + off, c[1], 0.12 * r, int(rng.integers(3, 9))))
+        polys.append([ring * scale + np.array([3.0, -2.0]) * scale for ring in rings])
+    return polys
+
+
+def probe_points(rng, idx, polys, n):
+    """Uniform points plus the hard cases: vertices, edge midpoints, fine-grid
+    lines, NaN and points outside every bbox."""
+    lo, hi = idx.bboxes[:, :2].min(axis=0), idx.bboxes[:, 2:].max(axis=0)
+    span = hi - lo
+    xy = [rng.uniform(lo - 0.1 * span, hi + 0.1 * span, (n, 2))]
+    rings = [r for rs in polys for r in rs]
+    verts = np.concatenate([r[:-1] for r in rings])
+    mids = np.concatenate([(r[:-1] + r[1:]) / 2 for r in rings])
+    xy += [verts, mids]
+    ox, oy, size = idx._fine[:3]  # the fine grid's origin and cell size
+    k = rng.integers(0, int(span.max() / size) + 2, (n // 4, 2))
+    u = rng.uniform(lo, hi, (n // 4, 2))
+    xy += [np.column_stack([ox + k[:, 0] * size, u[:, 1]]),
+           np.column_stack([u[:, 0], oy + k[:, 1] * size]),
+           np.array([[np.nan, lo[1]], [lo[0], np.nan], [np.nan, np.nan],
+                     [hi[0] + 10 * span[0], hi[1]], [lo[0], lo[1] - 10 * span[1]]])]
+    xy = np.concatenate(xy)
+    return xy[:, 0], xy[:, 1]
+
+
+def brute_containing(px, py, polys):
+    inside = np.array([g.points_in_polygon(px, py, rings) for rings in polys]).reshape(len(polys), len(px))
+    poly, pt = np.nonzero(inside)
+    o = np.lexsort((poly, pt))
+    return pt[o], poly[o]
+
+
+def brute_nearest(px, py, polys, within):
+    """One row per containing polygon, else the nearest polygon within
+    `within` (lowest id on ties), by per-polygon kernels."""
+    pt, poly = brute_containing(px, py, polys)
+    miss = np.setdiff1d(np.flatnonzero(np.isfinite(px) & np.isfinite(py)), pt)
+    if len(polys) and len(miss):
+        d = np.array([g.dist_to_polygon(px[miss], py[miss], rings) for rings in polys])
+        best = np.argmin(d, axis=0)
+        ok = d[best, np.arange(len(miss))] <= within
+        fb_pt, fb_poly = miss[ok], best[ok]
+    else:
+        fb_pt = fb_poly = np.empty(0, dtype=np.int64)
+    return (np.concatenate([pt, fb_pt]), np.concatenate([poly, fb_poly]),
+            np.concatenate([np.zeros(len(pt), bool), np.ones(len(fb_pt), bool)]))
+
+
+def assert_same(got, want):
+    assert len(got) == len(want)
+    for a, b in zip(got, want):
+        np.testing.assert_array_equal(a, b)
+
+
+@pytest.mark.parametrize("scale", [1e-3, 1.0, 1e7])
+def test_polygon_index_matches_brute_force(scale):
+    polys = random_polygons(7, 40, scale)
+    polys.append(polys[3])  # a twin: every fallback near it is an exact tie
+    idx = g.PolygonIndex(ids=list(range(len(polys))), polys=polys)
+    px, py = probe_points(np.random.default_rng(11), idx, polys, 4000)
+    assert_same(idx.get_containing(px, py), brute_containing(px, py, polys))
+    within = 0.5 * idx.cell
+    assert_same(idx.get_containing_or_nearest(px, py, within),
+                brute_nearest(px, py, polys, within))
+
+
+def test_polygon_index_chunk_edges_match_brute_force(monkeypatch):
+    # tiny build chunks, point blocks and edge chunks: every boundary case
+    monkeypatch.setattr(g, "_BUILD_CELLS", 50)
+    monkeypatch.setattr(g, "_BLOCK", 97)
+    monkeypatch.setattr(g, "_EDGE_CHUNK", 7)
+    test_polygon_index_matches_brute_force(1.0)
+
+
+def test_polygon_index_wide_fallback_matches_brute_force():
+    polys = random_polygons(8, 25, 1.0)
+    polys.append(polys[5])
+    idx = g.PolygonIndex(ids=list(range(len(polys))), polys=polys)
+    px, py = probe_points(np.random.default_rng(12), idx, polys, 3000)
+    within = 2.5 * idx.cell  # wider than the grid cell: the polygon-major path
+    want = brute_nearest(px, py, polys, within)
+    assert want[2].sum() > 100
+    assert_same(idx.get_containing_or_nearest(px, py, within), want)
+
+
+def test_polygon_index_empty_and_single():
+    px = np.array([0.0, 0.5, 3.0, np.nan])
+    py = np.array([0.0, 0.9, 0.0, 0.0])
+    empty = g.PolygonIndex(ids=[], polys=[])
+    assert_same(empty.get_containing(px, py), (np.empty(0), np.empty(0)))
+    assert_same(empty.get_containing_or_nearest(px, py, 1.0),
+                (np.empty(0), np.empty(0), np.empty(0, bool)))
+    polys = random_polygons(9, 1, 1.0)
+    one = g.PolygonIndex(ids=["a"], polys=polys)
+    qx, qy = probe_points(np.random.default_rng(13), one, polys, 2000)
+    assert_same(one.get_containing(qx, qy), brute_containing(qx, qy, polys))
+    assert_same(one.get_containing_or_nearest(qx, qy, 0.3 * one.cell),
+                brute_nearest(qx, qy, polys, 0.3 * one.cell))
+
+
+def test_polygon_index_size_follows_polygons_not_extent():
+    # two unit squares 1e6 apart: a dense grid over the extent would hold
+    # ~1e12 fine cells; the sparse index holds only the occupied ones
+    import pickle
+    idx = g.PolygonIndex(ids=["a", "b"], polys=[[square(0, 0, 0.5)], [square(1e6, 1e6, 0.5)]])
+    assert len(pickle.dumps(idx)) < 1 << 20
+    pt, poly, fb = idx.get_containing_or_nearest(
+        np.array([0.1, 1e6 - 0.2, 5e5, 1e6 + 0.7]), np.array([0.1, 1e6, 5e5, 1e6]), 0.5)
+    assert list(zip(pt, poly, fb)) == [(0, 0, False), (1, 1, False), (3, 1, True)]
+
+
+def test_polygon_index_outsized_polygon_coarsens_the_grid():
+    # one polygon 2,000x the median size would cover ~6e8 fine and ~4e6
+    # coarse cells at the median-derived sizes; the build coarsens both grids
+    # to the cell budget
+    import pickle
+    rng = np.random.default_rng(14)
+    polys = [[square(x, y, 0.5)] for x, y in rng.uniform(-900, 900, (60, 2))]
+    polys.append(random_polygons(15, 1, 1000.0)[0])
+    idx = g.PolygonIndex(ids=list(range(len(polys))), polys=polys)
+    budget = 1024 * len(polys) + (1 << 18)
+    assert len(idx._full_poly) + len(idx._part_poly) <= budget
+    assert len(idx._pad_poly) <= budget
+    assert len(pickle.dumps(idx)) < 16 << 20
+    px, py = probe_points(np.random.default_rng(16), idx, polys, 3000)
+    assert_same(idx.get_containing(px, py), brute_containing(px, py, polys))
+
+
 def test_dist_to_polygon():
     d = g.dist_to_polygon(np.array([0.0, 2.0, 0.0]), np.array([0.0, 0.0, 3.0]), [square(r=1.0)])
     np.testing.assert_allclose(d, [0.0, 1.0, 2.0])

@@ -93,6 +93,42 @@ def test_pip_aggregate_mode_conserves_rows(spark, images):
     assert raw_groups == agg_groups
 
 
+def test_pip_zones_share_one_broadcast(spark, images, monkeypatch):
+    """Two joins over the same zone count in one session pickle the index
+    once: both probes read one broadcast."""
+    sc = spark.sparkContext
+    made = []
+
+    def spy(value):
+        made.append(real(value))
+        return made[-1]
+
+    real = sc.broadcast
+    monkeypatch.setattr(sc, "broadcast", spy)
+    n = 64  # a zone count no other test joins against
+    a = sp.pip_zones(images, n_zones=n, aggregate=True).collect()
+    b = sp.pip_zones(images, n_zones=n, within=None).collect()
+    assert len(made) == 1 and len(a) > 0 and len(b) > 0
+    assert sp.zones_broadcast(spark, n)._jbroadcast.id() == made[0]._jbroadcast.id()
+
+
+def test_zone_broadcast_per_context_and_zone_count():
+    """A new SparkContext (a session started after a stop) gets its own
+    broadcast; so does each zone count."""
+    class Context:
+        def broadcast(self, value):
+            return object()
+
+    class Session:
+        def __init__(self):
+            self.sparkContext = Context()
+
+    s1, s2 = Session(), Session()
+    assert sp.zones_broadcast(s1, 8) is sp.zones_broadcast(s1, 8)
+    assert sp.zones_broadcast(s2, 8) is not sp.zones_broadcast(s1, 8)
+    assert sp.zones_broadcast(s1, 16) is not sp.zones_broadcast(s1, 8)
+
+
 def test_knn_grid_shuffle_fallback(spark):
     """Broadcast guard: with a tiny broadcast_limit the exploded indexed side
     must switch every join to a shuffle hash join (no BroadcastExchange in
