@@ -75,7 +75,7 @@ def bike_route_features(spark: SparkSession, pbf: str) -> DataFrame:
 
 
 def build(spark: SparkSession, pbf: str, out_dir: str,
-          max_zoom: int = MAX_ZOOM, partitions: int | None = None) -> dict:
+          max_zoom: int = MAX_ZOOM) -> dict:
     import os
 
     from ..plans import osm_pipeline as op
@@ -86,7 +86,7 @@ def build(spark: SparkSession, pbf: str, out_dir: str,
     # mergeLineStrings(0.5px min length, 0.1px tolerance, 4px buffer) in
     # EXTENT units (16/px), one feature per merged stroke like the
     # reference's postProcessLayerFeatures
-    tiles = op.encode_osm_tiles(frags, partitions,
+    tiles = op.encode_osm_tiles(frags, 0, max_zoom,
                                 feature_per_stroke=True,
                                 merge_min_length=8.0,
                                 merge_stub_min_length=8.0,

@@ -92,7 +92,7 @@ def qa_features(spark: SparkSession, pbf: str,
 
 
 def build(spark: SparkSession, pbf: str, out_dir: str,
-          zoom: int = DEFAULT_ZOOM, partitions: int | None = None) -> dict:
+          zoom: int = DEFAULT_ZOOM) -> dict:
     import os
 
     from ..plans import osm_pipeline as op
@@ -100,7 +100,7 @@ def build(spark: SparkSession, pbf: str, out_dir: str,
 
     feats = qa_features(spark, pbf, zoom)
     frags = op.render_osm_features(feats, zoom, zoom)
-    tiles = op.encode_osm_tiles(frags, partitions).cache()
+    tiles = op.encode_osm_tiles(frags, zoom, zoom).cache()
     os.makedirs(out_dir, exist_ok=True)
     path = os.path.join(out_dir, "qa.mbtiles")
     meta = {"name": "osm qa", "format": "pbf",

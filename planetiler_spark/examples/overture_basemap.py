@@ -104,8 +104,7 @@ def overture_features(spark: SparkSession, parquet_path: str,
             .mapInPandas(gen, out_schema))
 
 
-def build(spark: SparkSession, parquet_path: str, out_dir: str,
-          partitions: int | None = None) -> dict:
+def build(spark: SparkSession, parquet_path: str, out_dir: str) -> dict:
     import os
 
     from ..plans import osm_pipeline as op
@@ -113,7 +112,7 @@ def build(spark: SparkSession, parquet_path: str, out_dir: str,
 
     feats = overture_features(spark, parquet_path)
     frags = op.render_osm_features(feats, MIN_ZOOM, MAX_ZOOM)
-    tiles = op.encode_osm_tiles(frags, partitions).cache()
+    tiles = op.encode_osm_tiles(frags, MIN_ZOOM, MAX_ZOOM).cache()
     os.makedirs(out_dir, exist_ok=True)
     path = os.path.join(out_dir, "overture.pmtiles")
     meta = {"name": "Overture",

@@ -69,7 +69,7 @@ def thin_at_zoom(feats: DataFrame, zoom: int) -> DataFrame:
 
 
 def build(spark: SparkSession, pbf: str, out_dir: str,
-          max_zoom: int = MAX_ZOOM, partitions: int | None = None) -> dict:
+          max_zoom: int = MAX_ZOOM) -> dict:
     import os
 
     from ..plans import osm_pipeline as op
@@ -84,7 +84,7 @@ def build(spark: SparkSession, pbf: str, out_dir: str,
                 .drop("sort_key", "wx", "wy"))
         r = op.render_osm_features(zf, z, z)
         frags = r if frags is None else frags.unionByName(r)
-    tiles = op.encode_osm_tiles(frags, partitions).cache()
+    tiles = op.encode_osm_tiles(frags, 0, max_zoom).cache()
     os.makedirs(out_dir, exist_ok=True)
     path = os.path.join(out_dir, "toilets.mbtiles")
     meta = {"name": "Toilets Overlay", "format": "pbf",

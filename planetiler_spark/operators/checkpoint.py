@@ -121,7 +121,7 @@ def run_checkpointed(spark: SparkSession, images: DataFrame, out_dir: str,
             "wall_s": round(time.time() - t0, 3),
         }
         if with_raster:
-            checks = tp.verify_patches(tp.render_patches(part)).agg(
+            checks = tp.verify_patches(tp.render_patches(part), part).agg(
                 F.min("psnr").alias("p"),
                 F.min(F.col("pixels_ok").cast("int")).alias("ok"),
                 F.min(F.col("caption_ok").cast("int")).alias("cap")).collect()[0]

@@ -111,24 +111,5 @@ def partition_tokens(spark, p: int) -> np.ndarray:
 
 def token_col(p: int) -> str:
     """Column name for range-exchange tokens, carrying the partition count
-    they were built for — a consumer repartitioning with a DIFFERENT p must
-    fail loudly (see resolve_token_col) instead of silently losing the
-    total-order contract."""
+    they were built for (tile_pipeline.tile_exchange reads p from it)."""
     return f"tok_p{p}"
-
-
-def resolve_token_col(columns, p: int) -> str | None:
-    """Return the token column matching partition count p, None if the frame
-    carries no token column, and raise if it carries one built for a
-    different p (the exchange would still colocate tiles, but the output
-    would silently stop being range-ordered)."""
-    toks = [c for c in columns if c.startswith("tok_p")]
-    if not toks:
-        return None
-    want = token_col(p)
-    if want not in toks:
-        raise ValueError(
-            f"range-exchange token column {toks} was built for a different "
-            f"partition count than {p}; pass matching `partitions` to both "
-            "the render and the reduce")
-    return want

@@ -18,11 +18,11 @@ re-expressed Spark-first (ARCHITECTURE.md:5-11 of the reference).
                     (VectorTile.java, TileArchiveWriter.java), content-hash
                     for order-free tile dedup
 
-Every tile flow here — images (batch and streaming), zones, raster
-patches and the merge ops (merge.py) — runs on that one exchange and
-reduce loop, `tile_exchange`; each supplies only its render (which packs)
-and its per-bucket encode. OSM keeps its own row exchange
-(plans/osm_pipeline.py).
+Every tile flow of the engine — images (batch and streaming), zones,
+raster patches, the merge ops (merge.py) and OSM/Overture
+(plans/osm_pipeline.py) — runs on that one exchange and reduce loop,
+`tile_exchange`; each supplies only its render (which packs, or whose
+rows `pack_rows` packs) and its per-bucket encode.
 
 The frame `tile_exchange` returns remembers its shuffled input and its
 reduce (`tile_reduce_of`). `archives.write_pmtiles` runs the PMTiles part
@@ -528,163 +528,91 @@ def encode_raster_tiles(packed: DataFrame) -> DataFrame:
     return tile_exchange(packed, reduce_tiles, RASTER_SCHEMA, ["image_id"])
 
 
-def verify_patches(patches: DataFrame, images: DataFrame | None = None) -> DataFrame:
+def verify_patches(patches: DataFrame, images: DataFrame) -> DataFrame:
     """Per-row invariant (BASELINE.json input_hint): decoded patch pixels match
     the deterministic source exactly (png) / PSNR>=40dB (lossy), and the
     caption embeds the correct z14 anchor tile. Distributed verify job —
     the analog of the reference's `verify` CLI (mbtiles/Verify.java:111).
 
-    With `images` given, the lossy truth is decode(STORED bytes) — the bytes
-    the pipeline actually read (identical to decode(encode(pristine)): the
-    fixture stores exactly encode(pristine)) — joined in by image_id and
-    batch-decoded via the lockstep entropy decoder. That both strengthens the
-    check (it verifies the real input bytes, not a re-synthesis) and drops
-    the per-image re-ENCODE (~8 ms each) the legacy path pays; the legacy
-    re-derivation path remains for images=None and is asserted equal in
-    tests."""
-    if images is not None:
-        jp = images.select(F.col("image_id"),
-                           F.col("bytes").alias("src_bytes")).where(
-                               F.col("fmt") == "jpeg")
-        joined = (patches.join(jp, "image_id", "left")
-                  .repartition("image_id")
-                  .sortWithinPartitions("image_id", "tile_id"))
+    The lossy truth is decode(STORED bytes) — the bytes the pipeline
+    actually read (the fixture stores exactly encode(pristine)) — joined in
+    by image_id and batch-decoded via the lockstep entropy decoder, so the
+    check verifies the real input bytes, not a re-synthesis. With the real
+    JPEG codec (kernels/jpeg.py) cropping does not commute with the lossy
+    round trip, so each patch is compared with the decoded full image
+    sliced as the pipeline sliced it. The >=40dB contract is per IMAGE row:
+    psnr is the image-level value (a 1xN sliver crop can sit on ringing
+    pixels and dip below 40 locally while the image clears 43+)."""
+    jp = images.select(F.col("image_id"),
+                       F.col("bytes").alias("src_bytes")).where(
+                           F.col("fmt") == "jpeg")
+    joined = (patches.join(jp, "image_id", "left")
+              .repartition("image_id")
+              .sortWithinPartitions("image_id", "tile_id"))
 
-        def check_joined(batches):
-            # rows arrive sorted by image_id, so each image's patches are
-            # consecutive: decode lossy truths in bounded chunks of unique
-            # images (one decode_images call each) instead of holding every
-            # decoded image of the batch at once
-            UNIQ_CHUNK = 256
+    def check_joined(batches):
+        # rows arrive sorted by image_id, so each image's patches are
+        # consecutive: decode lossy truths in bounded chunks of unique
+        # images (one decode_images call each) instead of holding every
+        # decoded image of the batch at once
+        UNIQ_CHUNK = 256
 
-            def row_chunks(pdf):
+        def row_chunks(batches):
+            for pdf in batches:
                 ids = pdf["image_id"].to_numpy()
-                n = len(ids)
                 run_starts = np.concatenate(
-                    [[0], np.nonzero(ids[1:] != ids[:-1])[0] + 1, [n]])
+                    [[0], np.nonzero(ids[1:] != ids[:-1])[0] + 1, [len(ids)]])
                 for u0 in range(0, len(run_starts) - 1, UNIQ_CHUNK):
                     u1 = min(u0 + UNIQ_CHUNK, len(run_starts) - 1)
                     yield pdf.iloc[int(run_starts[u0]):int(run_starts[u1])]
 
-            for whole in batches:
-              for pdf in row_chunks(whole):
-                out = {k: [] for k in ("image_id", "tile_id", "psnr",
-                                       "pixels_ok", "caption_ok")}
-                # one lossy decode per unique jpeg image, batch-decoded
-                uniq: dict[str, np.ndarray | None] = {}
-                ub, uf, uk = [], [], []
-                for r in pdf.itertuples(index=False):
-                    if r.fmt == "jpeg" and r.image_id not in uniq:
-                        uniq[r.image_id] = None
-                        ub.append(bytes(r.src_bytes))
-                        uf.append("jpeg")
-                        uk.append(r.image_id)
-                if ub:
-                    for k, d in zip(uk, ik.decode_images(ub, uf)):
-                        uniq[k] = d
-                pr_cache: dict[int, np.ndarray] = {}
-                n = 1 << MAX_ZOOM
-                for r in pdf.itertuples(index=False):
-                    i = int(r.image_id[3:])
-                    got = ik.decode_png(bytes(r.patch))
-                    ph = src.phash_of(np.array([i]))
-                    wx, wy = src.anchor_world(ph)
-                    gx0 = int(round(float(wx[0]) * 256 * n))
-                    gy0 = int(round(float(wy[0]) * 256 * n))
-                    w = h = src.BIG_SIZE if i % 10 == 9 else src.DEFAULT_SIZE
-                    full = pr_cache.get(i)
-                    if full is None:
-                        if len(pr_cache) > 256:
-                            pr_cache.clear()
-                        full = pr_cache[i] = src._pixels(i, w, h)
-                    x0, y0, z0 = tm.tile_decode(np.int64(r.tile_id))
-                    worldpx = 256 * n
-                    cx0 = (int(r.px0) + int(x0) * 256 - (gx0 - w // 2)) % worldpx
-                    cy0 = int(r.py0) + int(y0) * 256 - (gy0 - h // 2)
-                    sl = np.s_[cy0:cy0 + int(r.ph), cx0:cx0 + int(r.pw)]
-                    if r.fmt == "jpeg":
-                        dec = uniq[r.image_id]
-                        want = dec[sl]
-                        p = ik.psnr(full, dec)
-                    else:
-                        want, p = full[sl], float("inf")
-                    exact = want.shape == got.shape and bool(np.array_equal(got, want))
-                    if not exact:
-                        p = 0.0
-                    tx, ty = tm.tile_of_world(wx, wy, MAX_ZOOM)
-                    cap_ok = r.caption == \
-                        f"caption for img{i} at tile 14/{int(tx[0])}/{int(ty[0])}"
-                    out["image_id"].append(r.image_id)
-                    out["tile_id"].append(int(r.tile_id))
-                    out["psnr"].append(min(p, 1e9))
-                    out["pixels_ok"].append(exact)
-                    out["caption_ok"].append(bool(cap_ok))
-                yield pd.DataFrame(out)
-
-        return joined.mapInPandas(check_joined, VERIFY_SCHEMA)
-
-    def check(batches):
-        # decode(encode(full)) truth per image, cached: with the REAL JPEG
-        # codec (kernels/jpeg.py) cropping no longer commutes with the lossy
-        # round trip (block artifacts differ on unaligned crops), so the
-        # exact-truth is the decoded full image sliced the same way the
-        # pipeline sliced it. The >=40dB input_hint contract is per IMAGE
-        # row, so psnr is the image-level value (a 1xN sliver crop can sit
-        # on ringing pixels and dip below 40 locally while the image clears
-        # 43+; judging the contract on slivers would be the wrong unit).
-        # patches of one image land consecutively (render_patches emits them
-        # together), so tiny per-image caches turn the ~2-4 patches/image into
-        # ONE source synthesis and ONE lossy round trip per image
-        full_cache: dict[int, np.ndarray] = {}
-        lossy_cache: dict[int, tuple[np.ndarray, float]] = {}
-
-        def pristine_full(i: int, w: int, h: int) -> np.ndarray:
-            hit = full_cache.get(i)
-            if hit is None:
-                if len(full_cache) > 256:
-                    full_cache.clear()
-                hit = full_cache[i] = src._pixels(i, w, h)
-            return hit
-
-        def lossy_full(i: int, w: int, h: int) -> tuple[np.ndarray, float]:
-            hit = lossy_cache.get(i)
-            if hit is None:
-                full = pristine_full(i, w, h)
-                dec = ik.decode_image(ik.encode_image(full, "jpeg"), "jpeg")
-                if len(lossy_cache) > 256:
-                    lossy_cache.clear()
-                hit = (dec, ik.psnr(full, dec))
-                lossy_cache[i] = hit
-            return hit
-
-        for pdf in batches:
-            out = {k: [] for k in ("image_id", "tile_id", "psnr", "pixels_ok", "caption_ok")}
+        for pdf in row_chunks(batches):
+            out = {k: [] for k in ("image_id", "tile_id", "psnr",
+                                   "pixels_ok", "caption_ok")}
+            # one lossy decode per unique jpeg image, batch-decoded
+            uniq: dict[str, np.ndarray | None] = {}
+            ub, uf, uk = [], [], []
+            for r in pdf.itertuples(index=False):
+                if r.fmt == "jpeg" and r.image_id not in uniq:
+                    uniq[r.image_id] = None
+                    ub.append(bytes(r.src_bytes))
+                    uf.append("jpeg")
+                    uk.append(r.image_id)
+            if ub:
+                for k, d in zip(uk, ik.decode_images(ub, uf)):
+                    uniq[k] = d
+            pr_cache: dict[int, np.ndarray] = {}
+            n = 1 << MAX_ZOOM
             for r in pdf.itertuples(index=False):
                 i = int(r.image_id[3:])
                 got = ik.decode_png(bytes(r.patch))
-                n = 1 << MAX_ZOOM
                 ph = src.phash_of(np.array([i]))
                 wx, wy = src.anchor_world(ph)
                 gx0 = int(round(float(wx[0]) * 256 * n))
                 gy0 = int(round(float(wy[0]) * 256 * n))
                 w = h = src.BIG_SIZE if i % 10 == 9 else src.DEFAULT_SIZE
-                full = pristine_full(i, w, h)
+                full = pr_cache.get(i)
+                if full is None:
+                    if len(pr_cache) > 256:
+                        pr_cache.clear()
+                    full = pr_cache[i] = src._pixels(i, w, h)
                 x0, y0, z0 = tm.tile_decode(np.int64(r.tile_id))
-                worldpx = 256 * n  # x wraps at the antimeridian (mod world pixels)
+                worldpx = 256 * n
                 cx0 = (int(r.px0) + int(x0) * 256 - (gx0 - w // 2)) % worldpx
                 cy0 = int(r.py0) + int(y0) * 256 - (gy0 - h // 2)
                 sl = np.s_[cy0:cy0 + int(r.ph), cx0:cx0 + int(r.pw)]
-                pristine = full[sl]
                 if r.fmt == "jpeg":
-                    dec, p = lossy_full(i, w, h)
+                    dec = uniq[r.image_id]
                     want = dec[sl]
+                    p = ik.psnr(full, dec)
                 else:
-                    want, p = pristine, float("inf")
+                    want, p = full[sl], float("inf")
                 exact = want.shape == got.shape and bool(np.array_equal(got, want))
                 if not exact:
                     p = 0.0
                 tx, ty = tm.tile_of_world(wx, wy, MAX_ZOOM)
-                cap_ok = r.caption == f"caption for img{i} at tile 14/{int(tx[0])}/{int(ty[0])}"
+                cap_ok = r.caption == \
+                    f"caption for img{i} at tile 14/{int(tx[0])}/{int(ty[0])}"
                 out["image_id"].append(r.image_id)
                 out["tile_id"].append(int(r.tile_id))
                 out["psnr"].append(min(p, 1e9))
@@ -692,7 +620,7 @@ def verify_patches(patches: DataFrame, images: DataFrame | None = None) -> DataF
                 out["caption_ok"].append(bool(cap_ok))
             yield pd.DataFrame(out)
 
-    return patches.mapInPandas(check, VERIFY_SCHEMA)
+    return joined.mapInPandas(check_joined, VERIFY_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

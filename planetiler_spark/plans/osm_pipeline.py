@@ -7,11 +7,17 @@ sort -> mbtiles) replayed Spark-first over this engine's own pieces:
     -> multipolygon assembly for relations       kernels/lines.py
     -> profile match (layer rules on tags)       Catalyst filters, this file
     -> per-zoom render: slice points/lines/      operators/render.py
-       polygons into tile-local fragments
-    -> shuffle on the 64-bit sort key            the external merge sort
+       polygons into tile-local fragments,
+       each with its PMTiles Hilbert id
+    -> the one tile exchange: Hilbert-id range   operators/tile_pipeline.py
+       buckets, sorted by (hilbert_id, key, fid)   tile_exchange
     -> consecutive-run MVT encode (multi-layer   kernels/mvt.py LayerBuilder
        tiles with interned attrs)
     -> MBTiles / PMTiles / files archive         sources/archives.py
+
+The tiles leave the exchange in zoom-major Hilbert order, as every other
+tileset of the engine does, so write_pmtiles writes them with no sort
+(inside the tile reduce when the frame is not cached).
 
 The built-in DEFAULT_PROFILE is a compact OpenMapTiles-flavored schema
 (water/landuse/building/road/poi) — swap in any rules of the same shape, or
@@ -51,7 +57,8 @@ DEFAULT_PROFILE = [
 ]
 
 FEATURES_SCHEMA = ("key long, tile_id long, zoom int, layer string, fid long, "
-                   "ftype int, fill boolean, parts binary, attrs string")
+                   "ftype int, fill boolean, parts binary, attrs string, "
+                   "hilbert_id long")
 _LAYER_IDX = {name: i for i, (name, *_rest) in enumerate(DEFAULT_PROFILE)}
 _AREA_KEYS = ("building", "landuse", "natural", "leisure", "amenity")
 
@@ -125,39 +132,26 @@ def _rings_world(lons, lats) -> list[np.ndarray]:
 
 
 def render_osm_features(feats: DataFrame, min_zoom: int = 0,
-                        max_zoom: int = 14,
-                        range_partitions: int | None = None) -> DataFrame:
+                        max_zoom: int = 14) -> DataFrame:
     """Matched features -> per-(tile, zoom) fragment rows in the sorted-KV
-    model (ftype = MVT geometry type; fill rows for polygon interiors).
-    Consumes the unified matched-feature schema (layer, kind, min_zoom,
-    max_zoom, attrs map, nested lons/lats) produced by either osm_features
-    (built-in rules) or osm_features_yaml (a ConfiguredProfile schema).
+    model (ftype = MVT geometry type; fill rows for polygon interiors),
+    each with its PMTiles `hilbert_id`. Consumes the unified
+    matched-feature schema (layer, kind, min_zoom, max_zoom, attrs map,
+    nested lons/lats) produced by either osm_features (built-in rules) or
+    osm_features_yaml (a ConfiguredProfile schema).
 
-    With range_partitions set, every fragment carries its analytic
-    range-exchange token (operators/partitioning.py) so encode_osm_tiles'
-    shuffle doubles as the archive-order sort — the output tiles land in
-    total zoom-major order with no extra exchange, the reference's ordered
-    TileArchiveWriter semantics."""
-    from ..operators import partitioning as pt
-
+    The result stays a row frame: vector_layers_json reads its rows, and
+    renders over different zoom ranges union into one frame before
+    encode_osm_tiles packs them for the tile exchange."""
     layer_idx = dict(_LAYER_IDX)
-    tok_name = None
-    if range_partitions is not None:
-        rp = int(range_partitions)
-        boundaries, pid = pt.tile_range_partitioning(min_zoom, max_zoom, rp)
-        bucket_tok = pt.partition_tokens(feats.sparkSession, rp)[pid]
-        tok_name = pt.token_col(rp)
 
     def gen(batches):
         for pdf in batches:
-            rows = {k: [] for k in ("key", "tile_id", "zoom", "layer", "fid",
-                                    "ftype", "fill", "parts", "attrs")}
+            rows = {k: [] for k in ("zoom", "layer", "fid", "ftype", "fill",
+                                    "parts", "attrs")}
+            txs, tys = [], []
 
             def emit(z, tx, ty, layer, fid, ftype, fill, parts, attrs):
-                tid = int(tm.tile_encode(tx, ty, z))
-                li = layer_idx.get(layer, 7)
-                rows["key"].append(int(tm.encode_sort_key(tid, li, 0, 0)))
-                rows["tile_id"].append(tid)
                 rows["zoom"].append(z)
                 rows["layer"].append(layer)
                 rows["fid"].append(int(fid))
@@ -167,6 +161,8 @@ def render_osm_features(feats: DataFrame, min_zoom: int = 0,
                                      gk.pack_parts([np.asarray(p, np.int64)
                                                     for p in parts]))
                 rows["attrs"].append(attrs)
+                txs.append(tx)
+                tys.append(ty)
 
             for r in pdf.itertuples(index=False):
                 attrs = json.dumps(
@@ -202,33 +198,32 @@ def render_osm_features(feats: DataFrame, min_zoom: int = 0,
                                 emit(z, int(tx), int(ty), r.layer, r.fid, 3,
                                      kind == "fill", parts, attrs)
             out = pd.DataFrame(rows)
-            if tok_name is not None:
-                if len(out):
-                    bk = np.searchsorted(boundaries,
-                                         out["tile_id"].to_numpy(),
-                                         side="right") - 1
-                    out[tok_name] = bucket_tok[bk]
-                else:
-                    out[tok_name] = pd.Series([], dtype="int64")
+            xyz = (np.array(txs, dtype=np.int64), np.array(tys, dtype=np.int64),
+                   np.array(rows["zoom"], dtype=np.int64))
+            out["tile_id"] = tm.tile_encode(*xyz)
+            layers = np.array([layer_idx.get(n, 7) for n in rows["layer"]],
+                              dtype=np.int64)
+            out["key"] = tm.encode_sort_key(out["tile_id"].to_numpy(), layers,
+                                            0, 0)
+            out["hilbert_id"] = tm.hilbert_encode(*xyz)
             yield out
 
-    schema = FEATURES_SCHEMA if tok_name is None else \
-        f"{FEATURES_SCHEMA}, {tok_name} long"
-    return feats.mapInPandas(gen, schema)
+    return feats.mapInPandas(gen, FEATURES_SCHEMA)
 
 
-TILES_SCHEMA = ("tile_id long, zoom int, x int, y int, n_features long, "
-                "tile_bytes binary, content_hash string")
-
-
-def encode_osm_tiles(frags: DataFrame, partitions: int | None = None,
+def encode_osm_tiles(frags: DataFrame, min_zoom: int, max_zoom: int,
                      merge_lines: bool = True,
                      feature_per_stroke: bool = False,
                      merge_min_length: float = 0.0,
                      merge_tolerance: float = -1.0,
                      merge_stub_min_length: float = 0.0,
                      merge_strokes: bool = False) -> DataFrame:
-    """Shuffle on the sort key, then consecutive-run multi-layer MVT encode.
+    """Fragments of zooms min_zoom..max_zoom (render_osm_features) ->
+    multi-layer MVT tiles (tile_pipeline.TILE_SCHEMA) through the one tile
+    exchange: pack_rows buckets them by Hilbert id, and each bucket's
+    features, sorted (hilbert_id, key, fid), are encoded in consecutive
+    same-tile runs. The tiles leave in zoom-major Hilbert order, as a frame
+    tile_exchange made, so write_pmtiles writes them without a sort.
 
     merge_lines applies the reference's per-tile line post-process
     (FeatureMerge.mergeLineStrings): within a tile, line pieces that share a
@@ -241,102 +236,93 @@ def encode_osm_tiles(frags: DataFrame, partitions: int | None = None,
     arbitrary-attr tiles at city/country scale. At planet scale the hot
     layers should route through the vectorized stream encoders instead
     (mvt.PointTileStream / polygon_geom_stream, as the images pipeline
-    does); the plumbing here (same sorted-KV shuffle) is unchanged."""
+    does); the exchange is unchanged."""
     import hashlib
 
-    from ..operators import partitioning as pt
+    from ..operators import tile_pipeline as tp
 
-    p = int(partitions or frags.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # a matching range-exchange token (render_osm_features(range_partitions=p))
-    # makes this one shuffle ALSO the archive-order sort
-    key = pt.resolve_token_col(frags.columns, p) or "tile_id"
-    shuffled = (frags.repartition(p, key)
-                .sortWithinPartitions("tile_id", "key", "fid"))
     fill_cmds = mvt.encode_fill()
 
-    def encode(batches):
-        cur_tile = None
-        layers: dict[str, mvt.LayerBuilder] = {}
-        nfeat = 0
-        line_groups: dict[tuple, list] = {}  # (layer, attrs) -> [fid0, parts]
+    def merged_lines(layers, line_groups):
+        """Add each (layer, attrs) group's merged strokes; the count."""
+        n = 0
+        for (layer, attrs_s), (fid0, parts) in line_groups.items():
+            merged = lk.merge_line_strings(
+                [np.asarray(pp, dtype=np.float64) for pp in parts],
+                min_length=merge_min_length,
+                stub_min_length=merge_stub_min_length,
+                tolerance=merge_tolerance, grid=1.0,
+                merge_strokes=merge_strokes)
+            if not merged:
+                continue
+            lb = layers.get(layer)
+            if lb is None:
+                lb = layers[layer] = mvt.LayerBuilder(layer)
+            if feature_per_stroke:
+                # FeatureMerge.mergeLineStrings emits each merged stroke
+                # as its OWN feature (merge():91-99 returns one
+                # VectorTile.Feature per merged geometry); the default
+                # multiline-per-attr-group packs tighter but examples
+                # that reproduce reference feature counts need this
+                attrs = json.loads(attrs_s)
+                for m in merged:
+                    cmds = mvt.encode_geometry(
+                        2, [np.rint(m).astype(np.int64)])
+                    lb.add_feature(fid0, 2, cmds, attrs)
+                    n += 1
+            else:
+                cmds = mvt.encode_geometry(
+                    2, [np.rint(m).astype(np.int64) for m in merged])
+                lb.add_feature(fid0, 2, cmds, json.loads(attrs_s))
+                n += 1
+        return n
 
-        def flush():
-            nonlocal layers, nfeat, line_groups
-            if cur_tile is None:
-                return None
-            for (layer, attrs_s), (fid0, parts) in line_groups.items():
-                merged = lk.merge_line_strings(
-                    [np.asarray(pp, dtype=np.float64) for pp in parts],
-                    min_length=merge_min_length,
-                    stub_min_length=merge_stub_min_length,
-                    tolerance=merge_tolerance, grid=1.0,
-                    merge_strokes=merge_strokes)
-                if not merged:
+    def reduce_tiles(t):
+        hids = t.column("hilbert_id").to_numpy()
+        starts = np.flatnonzero(np.diff(hids, prepend=hids[0] - 1))
+        ends = np.append(starts[1:], len(hids))
+        xs, ys, zs = tm.hilbert_decode(hids[starts])
+        layer_a = t.column("layer").to_pylist()
+        fid_a = t.column("fid").to_numpy().tolist()
+        ftype_a = t.column("ftype").to_numpy().tolist()
+        fill_a = t.column("fill").to_pylist()
+        parts_a = t.column("parts").to_pylist()
+        attrs_a = t.column("attrs").to_pylist()
+        out = {"tile_id": tm.tile_encode(xs, ys, zs), "zoom": zs, "x": xs,
+               "y": ys, "hilbert_id": hids[starts], "n_features": [],
+               "tile_bytes": [], "content_hash": []}
+        for s, e in zip(starts.tolist(), ends.tolist()):
+            layers: dict[str, mvt.LayerBuilder] = {}
+            line_groups: dict[tuple, list] = {}  # (layer, attrs) -> [fid0, parts]
+            nfeat = 0
+            for i in range(s, e):
+                layer, ftype, fill = layer_a[i], ftype_a[i], fill_a[i]
+                if merge_lines and ftype == 2 and not fill:
+                    grp = line_groups.get((layer, attrs_a[i]))
+                    parts = gk.unpack_parts(parts_a[i])
+                    if grp is None:
+                        line_groups[(layer, attrs_a[i])] = [fid_a[i], parts]
+                    else:
+                        grp[1].extend(parts)
                     continue
                 lb = layers.get(layer)
                 if lb is None:
                     lb = layers[layer] = mvt.LayerBuilder(layer)
-                if feature_per_stroke:
-                    # FeatureMerge.mergeLineStrings emits each merged stroke
-                    # as its OWN feature (merge():91-99 returns one
-                    # VectorTile.Feature per merged geometry); the default
-                    # multiline-per-attr-group packs tighter but examples
-                    # that reproduce reference feature counts need this
-                    attrs = json.loads(attrs_s)
-                    for m in merged:
-                        cmds = mvt.encode_geometry(
-                            2, [np.rint(m).astype(np.int64)])
-                        lb.add_feature(fid0, 2, cmds, attrs)
-                        nfeat += 1
-                else:
-                    cmds = mvt.encode_geometry(
-                        2, [np.rint(m).astype(np.int64) for m in merged])
-                    lb.add_feature(fid0, 2, cmds, json.loads(attrs_s))
-                    nfeat += 1
-            line_groups = {}
-            blob = mvt.encode_tile(list(layers.values()))
-            x, y, z = tm.tile_decode(np.int64(cur_tile))
-            row = (int(cur_tile), int(z), int(x), int(y), nfeat, blob,
-                   hashlib.sha256(blob).hexdigest()[:16])
-            layers = {}
-            nfeat = 0
-            return row
-
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                if r.tile_id != cur_tile:
-                    row = flush()
-                    if row:
-                        out.append(row)
-                    cur_tile = r.tile_id
-                if merge_lines and int(r.ftype) == 2 and not r.fill:
-                    g = line_groups.get((r.layer, r.attrs))
-                    parts = gk.unpack_parts(bytes(r.parts))
-                    if g is None:
-                        line_groups[(r.layer, r.attrs)] = [int(r.fid), parts]
-                    else:
-                        g[1].extend(parts)
-                    continue
-                lb = layers.get(r.layer)
-                if lb is None:
-                    lb = layers[r.layer] = mvt.LayerBuilder(r.layer)
-                cmds = fill_cmds if r.fill else mvt.encode_geometry(
-                    int(r.ftype), gk.unpack_parts(bytes(r.parts)))
-                lb.add_feature(int(r.fid), int(r.ftype), cmds,
-                               json.loads(r.attrs))
+                cmds = fill_cmds if fill else mvt.encode_geometry(
+                    ftype, gk.unpack_parts(parts_a[i]))
+                lb.add_feature(fid_a[i], ftype, cmds, json.loads(attrs_a[i]))
                 nfeat += 1
-            if out:
-                yield pd.DataFrame(out, columns=["tile_id", "zoom", "x", "y",
-                                                 "n_features", "tile_bytes",
-                                                 "content_hash"])
-        row = flush()
-        if row:
-            yield pd.DataFrame([row], columns=["tile_id", "zoom", "x", "y",
-                                               "n_features", "tile_bytes",
-                                               "content_hash"])
+            nfeat += merged_lines(layers, line_groups)
+            blob = mvt.encode_tile(list(layers.values()))
+            out["n_features"].append(nfeat)
+            out["tile_bytes"].append(blob)
+            out["content_hash"].append(hashlib.sha256(blob).hexdigest()[:16])
+        return tp._record_batch(out, tp.TILE_SCHEMA)
 
-    return shuffled.mapInPandas(encode, TILES_SCHEMA)
+    # tile_id and zoom follow from hilbert_id: the reduce derives them
+    packed = tp.pack_rows(frags.drop("tile_id", "zoom"), min_zoom, max_zoom)
+    return tp.tile_exchange(packed, reduce_tiles, tp.TILE_SCHEMA,
+                            ["key", "fid"])
 
 
 def osm_features_yaml(spark: SparkSession, pbf: str, schema) -> DataFrame:
@@ -439,20 +425,15 @@ def vector_layers_json(frags: DataFrame) -> str:
 
 def osm_tileset(spark: SparkSession, pbf: str, min_zoom: int = 0,
                 max_zoom: int = 14, profile=DEFAULT_PROFILE,
-                schema=None, partitions: int | None = None,
-                with_metadata: bool = False):
+                schema=None, with_metadata: bool = False):
     if schema is not None:
         feats = osm_features_yaml(spark, pbf, schema)
     else:
         feats = osm_features(spark, pbf, profile)
-    p = int(partitions
-            or spark.conf.get("spark.sql.shuffle.partitions"))
-    partitions = p
-    frags = render_osm_features(feats, min_zoom, max_zoom,
-                                range_partitions=p)
+    frags = render_osm_features(feats, min_zoom, max_zoom)
     if not with_metadata:
-        return encode_osm_tiles(frags, partitions)
+        return encode_osm_tiles(frags, min_zoom, max_zoom)
     frags = frags.persist()
     meta = {"json": vector_layers_json(frags),
             "minzoom": str(min_zoom), "maxzoom": str(max_zoom)}
-    return encode_osm_tiles(frags, partitions), meta
+    return encode_osm_tiles(frags, min_zoom, max_zoom), meta

@@ -99,8 +99,8 @@ def main(argv=None):
         t0 = time.time()
         os.makedirs(args.out, exist_ok=True)
         tiles, meta = op.osm_tileset(spark, args.osm, args.minzoom,
-                                     args.maxzoom, partitions=sp,
-                                     schema=schema, with_metadata=True)
+                                     args.maxzoom, schema=schema,
+                                     with_metadata=True)
         tiles = tiles.cache()
         mb = os.path.join(args.out, "tiles.mbtiles")
         ar.write_mbtiles(tiles, mb, metadata=meta)
@@ -162,7 +162,7 @@ def main(argv=None):
         summary["n_raster_tiles"] = spark.read.parquet(
             os.path.join(args.out, "raster")).count()
     if args.verify and args.buckets <= 0:
-        checks = tp.verify_patches(tp.render_patches(images)).agg(
+        checks = tp.verify_patches(tp.render_patches(images), images).agg(
             F.min("psnr").alias("p"),
             F.min(F.col("pixels_ok").cast("int")).alias("ok")).collect()[0]
         summary["psnr_min"] = float(checks.p)

@@ -673,18 +673,18 @@ def write_pmtiles(tiles_df, path: str, metadata: dict | None = None,
     index to part files under `<path>.parts/` (`_pm_part_writer`); a single
     collect() runs all partitions in parallel. Which job writes them:
       - a frame straight from the tile exchange (`tileset`,
-        `zones_tileset`; tile_pipeline.tile_reduce_of) and not cached: the
-        part writer runs inside the tile reduce, one mapInArrow over the
-        exchange's shuffled rows (`_pm_write_fused`), so finished tiles
-        never return to the JVM;
+        `zones_tileset`, `encode_osm_tiles`; tile_pipeline.tile_reduce_of)
+        and not cached: the part writer runs inside the tile reduce, one
+        mapInArrow over the exchange's shuffled rows (`_pm_write_fused`),
+        so finished tiles never return to the JVM;
       - a cached frame (cache() and persist() return the frame itself;
         fusing would run the render, the exchange and the reduce again
         and ignore the cache), or any other frame with a `hilbert_id`
         column, such as one derived from a tileset by select or filter:
         the part writer over the frame's own partitions, with no exchange
         and no sort;
-      - a frame without the column (OSM, Overture, synthetic): the part
-        writer after `_pm_sorted`, an analytic range exchange.
+      - a frame without the column (a foreign or synthetic frame): the
+        part writer after `_pm_sorted`, an analytic range exchange.
     The part writer computes every tile's id from (zoom, x, y) and reports
     whether its partition increases; if the partitions of the first two
     kinds are not in total Hilbert order after all, the parts are

@@ -217,6 +217,9 @@ RECORDED_SHA256 = {
     # _edge_frame: a 12-tile identical run across a partition edge
     "edge": "02bddf8d010321b45b5e1bb52ade32cd514308aebeef40a34983b89aaf7d9cd4",
     "empty": "60427d1f5cf22c8e816417a82b16a1acf868d0cd1bea093193d4271591a2b408",
+    # test_osm_encode's synthetic matched features, z8-14: 15 tiles
+    # (recorded from the row-exchange OSM encoder and the writer's range sort)
+    "osm": "a0a6ad2f8612493f4467795c1ec05f8cf32d57a202db55ebb02e138b1d9c45d7",
 }
 
 
@@ -543,26 +546,63 @@ print(json.dumps({"tiles": stats["tiles"]}))
 """
 
 
-def test_pmtiles_spark_task_retry(tmp_path):
-    """A real Spark task retry: one tile reduce partition raises on its
-    first attempt, inside the fused part-writer job. The retried write
-    gives the recorded archive and leaves no part files behind."""
+def _run_spark_script(script, *args):
+    """Run `script` in a fresh Python process (its own Spark) with the repo
+    and the test modules importable; fails the test if it fails."""
     import subprocess
     import sys
     from pathlib import Path
 
-    repo = str(Path(__file__).parent.parent)
-    out, marker = tmp_path / "retry.pmtiles", tmp_path / "failed-once"
+    repo = Path(__file__).parent.parent
     env = dict(os.environ, PYTHONPATH=os.pathsep.join(
-        [repo, os.environ.get("PYTHONPATH", "")]))
+        [str(repo), str(repo / "tests"), os.environ.get("PYTHONPATH", "")]))
     res = subprocess.run(
-        [sys.executable, "-c", _RETRY_SCRIPT, str(out), str(marker)],
+        [sys.executable, "-c", script, *map(str, args)],
         capture_output=True, text=True, timeout=600, cwd=repo, env=env)
     assert res.returncode == 0, res.stderr[-3000:]
+    return res
+
+
+def test_pmtiles_spark_task_retry(tmp_path):
+    """A real Spark task retry: one tile reduce partition raises on its
+    first attempt, inside the fused part-writer job. The retried write
+    gives the recorded archive and leaves no part files behind."""
+    out, marker = tmp_path / "retry.pmtiles", tmp_path / "failed-once"
+    res = _run_spark_script(_RETRY_SCRIPT, out, marker)
     assert marker.exists()            # the first attempt did fail
     assert json.loads(res.stdout.strip().splitlines()[-1])["tiles"] == 1417
     assert _sha256(str(out)) == RECORDED_SHA256["images"]
     assert sorted(os.listdir(tmp_path)) == ["failed-once", "retry.pmtiles"]
+
+
+_CORES_SCRIPT = """
+import sys
+from pyspark.sql import SparkSession
+from planetiler_spark.operators import tile_pipeline as tp
+from planetiler_spark.sources import archives as ar
+from planetiler_spark.sources import images as src
+from test_osm_encode import osm_tileset
+
+cores, out = int(sys.argv[1]), sys.argv[2]
+spark = (SparkSession.builder.master(f"local[{cores}]")
+         .config("spark.sql.shuffle.partitions", str(2 * cores))
+         .config("spark.ui.enabled", "false").getOrCreate())
+spark.sparkContext.setLogLevel("OFF")
+imgs = src.images_df(spark, 200, partitions=4, with_bytes=False)
+ar.write_pmtiles(tp.tileset(spark, imgs, min_zoom=0, max_zoom=11),
+                 f"{out}/images.pmtiles")
+ar.write_pmtiles(osm_tileset(spark), f"{out}/osm.pmtiles")
+"""
+
+
+@pytest.mark.parametrize("cores", [1, 4])
+def test_pmtiles_bytes_independent_of_core_count(tmp_path, cores):
+    """A fresh Spark at local[1] and at local[4], with twice as many
+    shuffle partitions as cores (as the CLIs set them), writes the
+    recorded images archive and the recorded synthetic OSM archive."""
+    _run_spark_script(_CORES_SCRIPT, cores, tmp_path)
+    assert _sha256(str(tmp_path / "images.pmtiles")) == RECORDED_SHA256["images"]
+    assert _sha256(str(tmp_path / "osm.pmtiles")) == RECORDED_SHA256["osm"]
 
 
 @pytest.mark.parametrize("frame", ["cached", "derived"])

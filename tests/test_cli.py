@@ -188,14 +188,15 @@ MONACO = ("/root/reference/planetiler-core/src/test/resources/"
 
 @pytest.mark.skipif(not __import__("os").path.exists(MONACO),
                     reason="reference monaco fixture absent")
-def test_verify_monaco_on_default_build(spark, tmp_path, capsys):
+def test_verify_monaco_on_default_build(spark, tmp_path, capsys,
+                                        shuffle_partitions):
     """verify-monaco (VerifyMonaco.java:24-35 analog): a full built-in
     profile monaco build clears every per-layer minimum."""
     from planetiler_spark.plans import osm_pipeline as op
     from planetiler_spark.sources import archives as ar
 
-    tiles, meta = op.osm_tileset(spark, MONACO, 0, 14, partitions=8,
-                                 with_metadata=True)
+    shuffle_partitions(8)
+    tiles, meta = op.osm_tileset(spark, MONACO, 0, 14, with_metadata=True)
     mb = str(tmp_path / "monaco.mbtiles")
     ar.write_mbtiles(tiles, mb, meta)
     assert main(["verify-monaco", mb]) == 0

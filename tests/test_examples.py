@@ -10,11 +10,13 @@ import pytest
 MONACO = ("/root/reference/planetiler-core/src/test/resources/"
           "monaco-latest.osm.pbf")
 
-pytestmark = pytest.mark.skipif(not os.path.exists(MONACO),
-                                reason="reference monaco fixture absent")
+needs_monaco = pytest.mark.skipif(not os.path.exists(MONACO),
+                                  reason="reference monaco fixture absent")
 
 
-def test_toilets_overlay_matches_reference_integration(spark, tmp_path):
+@needs_monaco
+def test_toilets_overlay_matches_reference_integration(spark, tmp_path,
+                                                       shuffle_partitions):
     """ToiletsProfileTest:68-69 asserts the monaco build yields 34 point
     features in the toilets layer at z14 (29 nodes + tile-buffer
     duplicates). The label-grid thin must cap low zooms at 4 per 32px cell
@@ -23,7 +25,8 @@ def test_toilets_overlay_matches_reference_integration(spark, tmp_path):
     from planetiler_spark.kernels import mvt
     from planetiler_spark.sources import archives as ar
 
-    out = ex.build(spark, MONACO, str(tmp_path), partitions=8)
+    shuffle_partitions(8)
+    out = ex.build(spark, MONACO, str(tmp_path))
     assert out["n_tiles"] > 0
     tiles = ar.read_mbtiles(out["archive"])
     per_zoom: dict[int, int] = {}
@@ -42,7 +45,8 @@ def test_toilets_overlay_matches_reference_integration(spark, tmp_path):
                for a, b in zip(zooms[:-1], zooms[1:]))
 
 
-def test_bike_route_overlay_on_monaco(spark, tmp_path):
+@needs_monaco
+def test_bike_route_overlay_on_monaco(spark, tmp_path, shuffle_partitions):
     """BikeRouteOverlay semantics on the reference's monaco fixture: one
     relation (EuroVelo 8, icn -> international), 81 member ways, per-tile
     mergeLineStrings with junction stroke-pairing. The reference's own
@@ -57,7 +61,8 @@ def test_bike_route_overlay_on_monaco(spark, tmp_path):
     from planetiler_spark.kernels import mvt
     from planetiler_spark.sources import archives as ar
 
-    out = ex.build(spark, MONACO, str(tmp_path), partitions=8)
+    shuffle_partitions(8)
+    out = ex.build(spark, MONACO, str(tmp_path))
     tiles = ar.read_mbtiles(out["archive"])
     per_zoom: dict[int, int] = {}
     layers = set()
@@ -102,7 +107,8 @@ def test_stroke_merge_pairs_straightest():
     assert len(out) == 1 and len(out[0]) == 4
 
 
-def test_osm_qa_tiles_golden_element(spark, tmp_path):
+@needs_monaco
+def test_osm_qa_tiles_golden_element(spark, tmp_path, shuffle_partitions):
     """OsmQaTilesTest:100-110: the monaco build carries node 1699777833
     (bus stop Crémaillère) at z12 exactly once, as a point, with all its
     tags plus @id/@type/@version metadata (@version=4 comes from the PBF
@@ -112,7 +118,8 @@ def test_osm_qa_tiles_golden_element(spark, tmp_path):
     from planetiler_spark.kernels import mvt
     from planetiler_spark.sources import archives as ar
 
-    out = ex.build(spark, MONACO, str(tmp_path), partitions=8)
+    shuffle_partitions(8)
+    out = ex.build(spark, MONACO, str(tmp_path))
     tiles = ar.read_mbtiles(out["archive"])
     found = []
     for (z, x, y), blob in tiles.items():
@@ -129,7 +136,7 @@ def test_osm_qa_tiles_golden_element(spark, tmp_path):
     assert out["n_features"] > 4000  # every tagged monaco element present
 
 
-def test_overture_basemap_buildings(spark, tmp_path):
+def test_overture_basemap_buildings(spark, tmp_path, shuffle_partitions):
     """OvertureBasemap semantics (OvertureBasemap.java:16-26): buildings
     GeoParquet -> polygon layer `building` z13-14 with inherited
     height/roof_color attrs, PMTiles output. A donut building keeps its
@@ -175,7 +182,8 @@ def test_overture_basemap_buildings(spark, tmp_path):
     src = str(tmp_path / "buildings.parquet")
     pdf.to_parquet(src)
 
-    out = ex.build(spark, src, str(tmp_path), partitions=8)
+    shuffle_partitions(8)
+    out = ex.build(spark, src, str(tmp_path))
     tiles = ar.read_pmtiles(out["archive"])
     total, max_rings, heights = 0, 0, set()
     for (z, x, y), blob in tiles.items():

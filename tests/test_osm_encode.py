@@ -7,6 +7,8 @@ import hashlib
 
 import pandas as pd
 import pytest
+from conftest import (_packed_exchanges, _python_maps_above, _written_job,
+                      assert_hilbert_order)
 
 from planetiler_spark.plans import osm_pipeline as op
 
@@ -49,31 +51,44 @@ def matched_features():
 
 
 # Per-tile (tile_id, n_features, sha256(tile_bytes)) of the frame above,
-# rendered z8-14 and encoded at 4 and at 9 shuffle partitions.
+# rendered z8-14 and encoded at 4 and at 9 shuffle partitions, hashed in
+# tile_id order.
 OSM_TILES = 15
 OSM_SHA256 = \
     "5fcf34c0edfca96f995d0bf0b5f7324d3db1756c16405ef3c25197bc38746049"
 
 
-def osm_tiles(spark, partitions):
-    feats = spark.createDataFrame(matched_features(), MATCHED_SCHEMA)
-    frags = op.render_osm_features(feats, 8, 14, range_partitions=partitions)
-    return op.encode_osm_tiles(frags, partitions).collect()
+def matched_frame(spark, permuted=False):
+    pdf = matched_features()
+    if not permuted:
+        return spark.createDataFrame(pdf, MATCHED_SCHEMA)
+    pdf = pdf.sample(frac=1.0, random_state=7).reset_index(drop=True)
+    return spark.createDataFrame(pdf, MATCHED_SCHEMA).repartition(3)
+
+
+def osm_tileset(spark, permuted=False):
+    frags = op.render_osm_features(matched_frame(spark, permuted), 8, 14)
+    return op.encode_osm_tiles(frags, 8, 14)
 
 
 def tiles_digest(rows):
     h = hashlib.sha256()
-    for r in rows:
+    for r in sorted(rows, key=lambda r: r.tile_id):
         h.update(f"{r.tile_id} {r.n_features} "
                  f"{hashlib.sha256(bytes(r.tile_bytes)).hexdigest()}\n".encode())
     return len(rows), h.hexdigest()
 
 
-@pytest.mark.parametrize("partitions", [4, 9])
-def test_osm_encode_bytes_pinned(spark, partitions):
-    rows = osm_tiles(spark, partitions)
-    ids = [r.tile_id for r in rows]
-    assert ids == sorted(ids)  # the range-token exchange's total order
+@pytest.mark.parametrize("partitions,permuted",
+                         [(4, False), (9, False), (4, True), (9, True)],
+                         ids=["4", "9", "4-permuted", "9-permuted"])
+def test_osm_encode_bytes_pinned(spark, shuffle_partitions, partitions,
+                                 permuted):
+    """The recorded tiles, in archive (zoom-major Hilbert) order, whatever
+    the shuffle partition count and the input rows' order and partitioning."""
+    shuffle_partitions(partitions)
+    rows = osm_tileset(spark, permuted).collect()
+    assert_hilbert_order(rows)
     assert {r.zoom for r in rows} == set(range(8, 15))
     assert tiles_digest(rows) == (OSM_TILES, OSM_SHA256)
 
@@ -82,7 +97,25 @@ def test_osm_encode_covers_every_layer(spark):
     from planetiler_spark.kernels import mvt
 
     layers = {}
-    for r in osm_tiles(spark, 4):
+    for r in osm_tileset(spark).collect():
         for name, feats in mvt.decode_tile(bytes(r.tile_bytes)).items():
             layers[name] = layers.get(name, 0) + len(feats)
     assert set(layers) == {"poi", "road", "building", "water", "landuse"}
+
+
+def test_osm_tileset_to_pmtiles_runs_one_tile_exchange(spark, tmp_path,
+                                                       monkeypatch):
+    """write_pmtiles runs its part writer inside the OSM tile reduce: the
+    job holds the one packed tile exchange and no other, one Python map
+    above it, and no range sort of its own."""
+    from planetiler_spark.sources import archives as ar
+
+    tiles = osm_tileset(spark)
+    path = str(tmp_path / "osm.pmtiles")
+    stats, job = _written_job(monkeypatch, tiles, path)
+    exs, packed = _packed_exchanges(job)
+    assert len(packed) == 1 and len(exs) == 1
+    assert _python_maps_above(job, packed[0]) == 1
+    assert stats["tiles"] == OSM_TILES
+    assert ar.read_pmtiles(path) == {
+        (r.zoom, r.x, r.y): bytes(r.tile_bytes) for r in tiles.collect()}

@@ -123,8 +123,8 @@ def test_line_merge_post_process(spark):
     length conserved (endpoint snap only; no stub/min-length dropping)."""
     feats = op.osm_features(spark, MONACO)
     frags = op.render_osm_features(feats, 13, 13).cache()
-    plain = op.encode_osm_tiles(frags, merge_lines=False).collect()
-    merged = op.encode_osm_tiles(frags, merge_lines=True).collect()
+    plain = op.encode_osm_tiles(frags, 13, 13, merge_lines=False).collect()
+    merged = op.encode_osm_tiles(frags, 13, 13, merge_lines=True).collect()
 
     def road_stats(rows):
         n = 0

@@ -4,6 +4,8 @@ pipeline -> exact expected tile map + per-row raster/caption invariants."""
 
 import numpy as np
 import pytest
+from conftest import (_packed_exchanges, _python_maps_above,
+                      _shuffle_exchanges, _written_job, assert_hilbert_order)
 
 from planetiler_spark.kernels import image as ik
 from planetiler_spark.kernels import mvt
@@ -63,17 +65,6 @@ def test_vector_tiles_exact_assignment(spark, images):
         assert got.get(z, {}) == want[z], f"zoom {z} tile map mismatch"
 
 
-def assert_hilbert_order(rows):
-    """Archive order: hilbert_id strictly ascends over the rows as the
-    partitions hand them out, and is each tile's PMTiles id."""
-    hid = np.array([r.hilbert_id for r in rows], dtype=np.int64)
-    assert len(hid) and np.all(np.diff(hid) > 0)
-    xyz = (np.array([r.x for r in rows]), np.array([r.y for r in rows]),
-           np.array([r.zoom for r in rows]))
-    assert hid.tolist() == tm.hilbert_encode(*xyz).tolist()
-    assert [r.tile_id for r in rows] == tm.tile_encode(*xyz).tolist()
-
-
 def test_tiles_sorted_zoom_major(spark, images):
     tiles = tp.tileset(spark, images, min_zoom=0, max_zoom=4)
     assert_hilbert_order(list(tiles.select("hilbert_id", "tile_id", "zoom",
@@ -114,7 +105,7 @@ def test_z0_tile_has_all_points(spark, images):
 
 def test_raster_patches_invariants(spark, images):
     patches = tp.render_patches(images)
-    checks = tp.verify_patches(patches).collect()
+    checks = tp.verify_patches(patches, images).collect()
     assert len(checks) > 0
     bad = [c for c in checks if not (c.pixels_ok and c.caption_ok)]
     assert bad == [], f"{len(bad)} failing patches, e.g. {bad[:3]}"
@@ -211,26 +202,6 @@ def test_tileset_has_one_transport(spark, images):
         tp.tileset(spark, images, 0, 2, **{"packed": True})
 
 
-def _plan_children(node):
-    """A physical plan node's children, looking through adaptive plans and
-    query stages."""
-    name = node.getClass().getSimpleName()
-    if name == "AdaptiveSparkPlanExec":
-        return [node.executedPlan()]
-    if name.endswith("QueryStageExec"):
-        return [node.plan()]
-    kids = node.children()
-    return [kids.apply(i) for i in range(kids.size())]
-
-
-def _shuffle_exchanges(node):
-    """ShuffleExchangeExec nodes of an executed (possibly adaptive) plan."""
-    found = [node] if node.getClass().getSimpleName() == "ShuffleExchangeExec" else []
-    for kid in _plan_children(node):
-        found += _shuffle_exchanges(kid)
-    return found
-
-
 def test_tile_exchange_carries_packed_buckets(spark, images):
     """The one tile exchange moves bucket-packed blobs, not per-feature
     rows: its input schema is (bucket, token, blob) and it writes far
@@ -246,63 +217,6 @@ def test_tile_exchange_carries_packed_buckets(spark, images):
         ["bucket", pt.token_col(4), "blob"]
     records = ex.metrics().apply("shuffleRecordsWritten").value()
     assert 0 < records < n_features / 4
-
-
-def _packed_exchanges(df, p=4):
-    """(every ShuffleExchangeExec of df's plan, those whose input is
-    bucket-packed (bucket, tok_p{p}, blob) rows)."""
-    from planetiler_spark.operators import partitioning as pt
-
-    exs = _shuffle_exchanges(df._jdf.queryExecution().executedPlan())
-
-    def names(ex):
-        out = ex.child().output()
-        return [out.apply(i).name() for i in range(out.size())]
-
-    return exs, [ex for ex in exs
-                 if names(ex) == ["bucket", pt.token_col(p), "blob"]]
-
-
-def _python_maps_above(df, node):
-    """How many MapInArrow nodes of df's executed plan lie on the path from
-    its root down to `node`."""
-    def path(n):
-        if n.equals(node):
-            return [n]
-        for kid in _plan_children(n):
-            found = path(kid)
-            if found is not None:
-                return [n] + found
-        return None
-
-    nodes = path(df._jdf.queryExecution().executedPlan())
-    assert nodes is not None, "node is not in the plan"
-    return sum("MapInArrow" in n.getClass().getSimpleName() for n in nodes)
-
-
-def _written_job(monkeypatch, tiles, path):
-    """write_pmtiles(tiles, path) with its range sort forbidden; (stats,
-    the one frame the write collected: its part-writer job)."""
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    from planetiler_spark.sources import archives as ar
-
-    def no_sort(df):
-        raise AssertionError("write_pmtiles re-sorted an ordered tileset")
-
-    jobs = []
-    collect = DataFrame.collect
-
-    def spy(self):
-        jobs.append(self)
-        return collect(self)
-
-    with monkeypatch.context() as m:
-        m.setattr(ar, "_pm_sorted", no_sort)
-        m.setattr(DataFrame, "collect", spy)
-        stats = ar.write_pmtiles(tiles, path)
-    assert len(jobs) == 1
-    return stats, jobs[0]
 
 
 @pytest.mark.parametrize("flow", ["zones", "raster", "merge_polygons"])
@@ -427,17 +341,28 @@ def test_pack_rejects_ids_outside_the_buckets():
 
 def test_verify_stored_bytes_path_equals_legacy(spark, images):
     """verify_patches(patches, images) — lossy truth from the STORED bytes,
-    batch-decoded — must agree row-for-row with the legacy re-derivation
-    path (the fixture stores exactly encode(pristine), so both decode the
-    same bitstream)."""
-    patches = tp.render_patches(images).cache()
-    legacy = {(r.image_id, r.tile_id): (round(r.psnr, 9), r.pixels_ok, r.caption_ok)
-              for r in tp.verify_patches(patches).collect()}
-    joined = {(r.image_id, r.tile_id): (round(r.psnr, 9), r.pixels_ok, r.caption_ok)
-              for r in tp.verify_patches(patches, images).collect()}
-    patches.unpersist()
-    assert legacy == joined
-    assert all(ok for _, ok, _ in joined.values())
+    batch-decoded — must give every jpeg row the psnr of the re-derived
+    truth decode(encode(pristine)) (the fixture stores exactly
+    encode(pristine), so both decode the same bitstream), and pass every
+    pixel and caption check."""
+    import functools
+
+    rows = tp.verify_patches(tp.render_patches(images), images).collect()
+    fmts = {r.image_id: r.fmt for r in images.select("image_id", "fmt").collect()}
+
+    @functools.cache
+    def lossy_psnr(image_id):
+        i = int(image_id[3:])
+        w = h = src.BIG_SIZE if i % 10 == 9 else src.DEFAULT_SIZE
+        full = src._pixels(i, w, h)
+        dec = ik.decode_image(ik.encode_image(full, "jpeg"), "jpeg")
+        return round(ik.psnr(full, dec), 9)
+
+    jpeg = [r for r in rows if fmts[r.image_id] == "jpeg"]
+    assert jpeg and all(r.pixels_ok and r.caption_ok for r in rows)
+    assert [round(r.psnr, 9) for r in jpeg] == \
+        [lossy_psnr(r.image_id) for r in jpeg]
+    assert all(r.psnr == 1e9 for r in rows if fmts[r.image_id] != "jpeg")
 
 
 def test_decode_images_batch_equals_serial():
