@@ -548,13 +548,30 @@ def _chunks(counts: np.ndarray, limit: int):
         lo = hi
 
 
-def _expand(pts: np.ndarray, slots: np.ndarray, off: np.ndarray, vals: np.ndarray):
-    """(point, val) pairs for every val listed under each point's slot,
-    point-major, vals in stored order."""
+def _expand(pts: np.ndarray, slots: np.ndarray, off: np.ndarray):
+    """(point, position) pairs for every position that the CSR offsets
+    `off` list under each point's slot, point-major, positions ascending."""
     start = off[slots].astype(np.int64)
     n = off[slots + 1] - start
     pos = np.arange(int(n.sum())) - np.repeat(np.cumsum(n) - n - start, n)
-    return np.repeat(pts, n), vals[pos]
+    return np.repeat(pts, n), pos
+
+
+def _starts(a: np.ndarray) -> np.ndarray:
+    """Indices where a run of equal values begins in `a`."""
+    return np.flatnonzero(np.r_[True, a[1:] != a[:-1]][:len(a)])
+
+
+def _runs(start: np.ndarray, n: np.ndarray):
+    """The flat positions of the runs start[i] .. start[i] + n[i] (each
+    n[i] >= 1), in chunks of about _EDGE_CHUNK positions: (lo, hi, n,
+    starts, pos) gives the chunk's runs lo..hi, their lengths, their
+    starts within the chunk and the positions."""
+    for lo, hi in _chunks(n, _EDGE_CHUNK):
+        c = n[lo:hi]
+        starts = np.cumsum(c) - c
+        yield lo, hi, c, starts, (np.arange(int(starts[-1] + c[-1]))
+                                  + np.repeat(start[lo:hi].astype(np.int64) - starts, c))
 
 
 @dataclass
@@ -580,11 +597,27 @@ class PolygonIndex:
     offsets, int32 polygon ids ascending per cell) hold the full and the
     partial (cell, polygon) pairs, so the index grows with those pairs, not
     with the extent. A probe finds each point's cell by binary search; its
-    full polygons contain it with no edge test, and only its partial
-    polygons run the crossing test, over flat (pair, edge) arrays with one
-    add.reduceat parity per pair. Parity of the TOTAL crossings across all
-    of a polygon's rings equals the XOR of per-ring parities, so one
-    segment per polygon is exact.
+    full polygons contain it with no edge test, and only its partial pairs
+    run the crossing test. Each partial pair carries its own edge list (an
+    int32 CSR of edge ids) and a base parity bit: the probe XORs the bit
+    with the crossings of the listed edges, over flat (pair, edge) arrays
+    with one add.reduceat per pair. Parity of the TOTAL crossings across
+    all of a polygon's rings equals the XOR of per-ring parities, so one
+    list per pair is exact.
+
+    A pair's list holds the polygon's edges within `m` of the cell's row
+    band (the band dilated by `m`), minus two kinds:
+      - dropped: the cell lies right of every column the edge comes within
+        `m` of inside the dilated band. For any point of the row, the
+        crossing x lies within the edge's part inside the band, more than
+        `m` left of the cell, so `px < xi` is false;
+      - folded: the cell lies left of every such column and the edge spans
+        the dilated band. Every point of the row then lies strictly inside
+        the edge's y-span and more than `m` left of its crossing, so the
+        edge always crosses; the base bit counts these edges.
+    Edges outside the dilated band have both ends above or both below any
+    point of the row, and never cross. The edge that made a cell partial
+    is never dropped or folded, so every list holds at least one edge.
 
     Why a full cell is exact, bit for bit: `m = 1e-9 * max(1, max|coord|)`.
     A point in a full cell lies at least `m` from every edge (the float
@@ -596,10 +629,16 @@ class PolygonIndex:
     flip: the float test gives the exact even-odd answer, which is the same
     for every point of the cell (no edge enters it) as for its centre.
     Points within `m` of an edge fall in partial cells and get the float
-    test itself, so every answer equals the per-polygon kernel's.
+    test itself, so every answer equals the per-polygon kernel's. The same
+    margin makes the dropped and folded edges exact for every point the
+    float lookup can place in the cell: each such edge's float test has the
+    one answer the bullets above give.
 
     The nearest fallback uses a coarse grid (`cell` = median bbox extent):
     a CSR of the polygons whose bbox, padded by one cell, meets each cell.
+
+    Only the driver's object keeps `polys`: the probe reads the pooled
+    edges, so a pickled index (the broadcast) leaves them out.
     """
 
     ids: list
@@ -619,16 +658,17 @@ class PolygonIndex:
         first = np.ones(len(xy), dtype=bool)  # vertices that start an edge
         first[(np.cumsum(rlen) - 1)[rlen > 0]] = False
         e = np.flatnonzero(first)
-        self._ex0, self._ey0 = xy[e, 0], xy[e, 1]
-        self._ex1, self._ey1 = xy[e + 1, 0], xy[e + 1, 1]
+        # every edge once, as one row x0, y0, x1, y1: probes gather rows
+        self._edges = np.concatenate([xy[e], xy[e + 1]], axis=1)
+        x0, y0, x1, y1 = self._edges.T
         bb = np.full((n, 4), np.nan)
         has = self._nedges > 0
         if has.any():
             at = self._estart[:-1][has]
-            bb[has, 0] = np.minimum.reduceat(np.minimum(self._ex0, self._ex1), at)
-            bb[has, 1] = np.minimum.reduceat(np.minimum(self._ey0, self._ey1), at)
-            bb[has, 2] = np.maximum.reduceat(np.maximum(self._ex0, self._ex1), at)
-            bb[has, 3] = np.maximum.reduceat(np.maximum(self._ey0, self._ey1), at)
+            bb[has, 0] = np.minimum.reduceat(np.minimum(x0, x1), at)
+            bb[has, 1] = np.minimum.reduceat(np.minimum(y0, y1), at)
+            bb[has, 2] = np.maximum.reduceat(np.maximum(x0, x1), at)
+            bb[has, 3] = np.maximum.reduceat(np.maximum(y0, y1), at)
         self.bboxes = bb
         # cell ~ median bbox extent: ~1-4 covered cells per polygon
         spans = np.maximum(bb[has, 2] - bb[has, 0], bb[has, 3] - bb[has, 1])
@@ -638,10 +678,18 @@ class PolygonIndex:
         self._keys = self._pad_keys = np.empty(0, dtype=np.int64)
         self._full_off = self._part_off = self._pad_off = np.zeros(1, dtype=np.int32)
         self._full_poly = self._part_poly = self._pad_poly = np.empty(0, dtype=np.int32)
+        self._part_edge_off = np.zeros(1, dtype=np.int32)
+        self._part_edge = np.empty(0, dtype=np.int32)
+        self._part_base = np.empty(0, dtype=bool)
         if has.any():
             lo, hi = bb[has, :2].min(axis=0), bb[has, 2:].max(axis=0)
             self._build_fine(has, lo, hi)
             self._build_pad(has, lo, hi)
+
+    def __getstate__(self):
+        state = dict(self.__dict__)
+        del state["polys"]
+        return state
 
     # -- build (driver-side, once; the whole object is broadcast) --------------
 
@@ -666,31 +714,42 @@ class PolygonIndex:
             size = c * 1.01 * np.sqrt(total / budget)
 
     def _build_fine(self, has, lo, hi):
-        """Classify each polygon's fine cells as full or partial, in polygon
-        chunks of at most _BUILD_CELLS bbox cells."""
+        """Classify each polygon's fine cells as full or partial, and list
+        each partial pair's edges, in polygon chunks of at most _BUILD_CELLS
+        bbox cells."""
         n = len(self.polys)
         self._fine, gx0, gy0, ncx, ncy = self._cover(
             has, lo, hi, max(self.cell / _FINE, 8 * self._m), 1, 0)
         cells = np.cumsum(ncx * ncy)
-        full, part = [], []
+        chunks = []
         p0 = 0
         while p0 < n:
             p1 = max(int(np.searchsorted(cells, cells[p0] - ncx[p0] * ncy[p0] + _BUILD_CELLS,
                                          side="right")), p0 + 1)
-            f, p = self._classify(p0, p1, gx0, gy0, ncx, ncy)
-            full.append(f)
-            part.append(p)
+            chunks.append(self._classify(p0, p1, gx0, gy0, ncx, ncy))
             p0 = p1
-        full, part = np.concatenate(full), np.concatenate(part)
+        full, code, edge, base = (np.concatenate(a) for a in zip(*chunks))
+        del chunks
         full.sort()
-        part.sort()
-        self._keys = np.union1d(full // n, part // n)
+        # list entries sorted by their pair's code: each run is one partial
+        # pair's edge list
+        order = np.argsort(code)
+        code = code[order]
+        first = _starts(code)
+        part = code[first]
+        self._part_edge = edge[order].astype(np.int32 if len(self._edges) < 1 << 31 else np.int64)
+        self._part_edge_off = np.append(first, len(code)).astype(
+            np.int32 if len(code) < 1 << 31 else np.int64)
+        self._part_base = base[order[first]]
+        fk, pk = full // n, part // n
+        self._keys = np.union1d(fk[_starts(fk)], pk[_starts(pk)])
         self._full_off, self._full_poly = _csr(full, self._keys, n)
         self._part_off, self._part_poly = _csr(part, self._keys, n)
 
     def _classify(self, p0, p1, gx0, gy0, ncx, ncy):
-        """Codes `key * P + poly` of the full and of the partial fine cells of
-        polygons p0..p1."""
+        """For polygons p0..p1: the codes `key * P + poly` of the full fine
+        cells, and the partial cells' edge lists as one entry per listed
+        edge: the cell's code, the edge id and the cell's base bit."""
         m, n = self._m, len(self.polys)
         ox, oy, fc, nx, _ = self._fine
         gx0, gy0, ncx, ncy = gx0[p0:p1], gy0[p0:p1], ncx[p0:p1], ncy[p0:p1]
@@ -701,8 +760,7 @@ class PolygonIndex:
         rfirst = np.cumsum(ncy) - ncy
         e0, e1 = self._estart[p0], self._estart[p1]
         ep, _ = _segments(self._nedges[p0:p1])
-        x0, y0 = self._ex0[e0:e1], self._ey0[e0:e1]
-        x1, y1 = self._ex1[e0:e1], self._ey1[e0:e1]
+        x0, y0, x1, y1 = self._edges[e0:e1].T
         # (edge, row) pairs: the fine rows each edge comes within m of
         r0 = np.maximum(np.floor((np.minimum(y0, y1) - m - oy) / fc).astype(np.int64), gy0[ep])
         r1 = np.minimum(np.floor((np.maximum(y0, y1) + m - oy) / fc).astype(np.int64),
@@ -710,7 +768,8 @@ class PolygonIndex:
         er, k = _segments(np.maximum(r1 - r0 + 1, 0))
         row = r0[er] + k
         x0, y0, x1, y1, ep = x0[er], y0[er], x1[er], y1[er], ep[er]
-        base = rstart[rfirst[ep] + row - gy0[ep]] - gx0[ep]  # raster index of column 0
+        start = rstart[rfirst[ep] + row - gy0[ep]]  # raster index of the row's first cell
+        base = start - gx0[ep]  # raster index of column 0
         dx, dy = x1 - x0, y1 - y0
         # partial: the cells within m of the edge's x-range inside the row's
         # band, the band itself dilated by m
@@ -724,27 +783,46 @@ class PolygonIndex:
         c1 = np.minimum(np.floor((np.maximum(xa, xb) + m - ox) / fc).astype(np.int64),
                         gx0[ep] + ncx[ep] - 1)
         rc, k = _segments(np.maximum(c1 - c0 + 1, 0))
+        touch = base[rc] + c0[rc] + k  # raster index of each cell an edge touches
         partial = np.zeros(int((ncx * ncy).sum()), dtype=bool)
-        partial[base[rc] + c0[rc] + k] = True
+        partial[touch] = True
         # even-odd at each cell centre: the row's centre line crossings,
         # counted into their columns; a cell is inside when an odd number lie
-        # right of its column (its own column holds one only if it is partial)
+        # right of its column (its own column holds one only if it is partial).
+        # The high 32 bits count the edges that span the dilated band into
+        # their first column c0: those right of a cell always cross its ray
         yc = oy + (row + 0.5) * fc
         hit = (y0 > yc) != (y1 > yc)
         with np.errstate(divide="ignore", invalid="ignore"):
             xi = x0[hit] + (yc[hit] - y0[hit]) * dx[hit] / dy[hit]
         col = np.clip(np.floor((xi - ox) / fc).astype(np.int64),
                       gx0[ep[hit]], gx0[ep[hit]] + ncx[ep[hit]] - 1)
-        cs = np.cumsum(np.bincount(base[hit] + col, minlength=len(partial)))
-        rs, lcol = _segments(ncx[rp])
-        full = ((cs[(rstart + ncx[rp] - 1)[rs]] - cs) & 1).astype(bool) & ~partial
-        rowcode = ((gy0[rp] + lrow) * nx + gx0[rp]) * n + rp + p0
+        span = (np.minimum(y0, y1) < ylo) & (np.maximum(y0, y1) > ylo + fc + 2 * m)
+        cs = np.cumsum(np.bincount(base[hit] + col, minlength=len(partial))
+                       + (np.bincount((base + c0)[span], minlength=len(partial)) << 32))
+        rs = np.repeat(np.arange(len(rp)), ncx[rp])  # each cell's raster row
+        right = cs[(rstart + ncx[rp] - 1)[rs]] - cs
+        full = (right & 1).astype(bool) & ~partial
+        # a cell's code is its row's, plus n per raster index
+        rowcode = ((gy0[rp] + lrow) * nx + gx0[rp] - rstart) * n + rp + p0
 
         def codes(sel):
-            sel = np.flatnonzero(sel)
-            return rowcode[rs[sel]] + lcol[sel] * n
+            return rowcode[rs[sel]] + sel * n
 
-        return codes(full), codes(partial)
+        # a partial cell lists the edges that touch it, and each edge that
+        # lies right of it (c0 beyond its column) but ends inside the
+        # dilated band; the spanning ones fold into its base bit, and the
+        # edges left of it (c1 before its column) drop out
+        part = np.flatnonzero(partial)
+        upto = np.cumsum(partial, dtype=np.int32 if len(partial) < 1 << 31 else np.int64)
+        end = np.flatnonzero(~span)
+        lo, hi = start[end], (base + c0)[end]  # raster indices: the row's first cell, c0
+        lo, hi = upto[lo] - partial[lo], upto[hi] - partial[hi]  # partial cells before them
+        seg, k = _segments(hi - lo)
+        cell = np.concatenate([touch, part[lo[seg] + k]])
+        edge = e0 + er[np.concatenate([rc, end[seg]])]
+        return (codes(np.flatnonzero(full)), codes(cell), edge,
+                ((right[cell] >> 32) & 1).astype(bool))
 
     def _build_pad(self, has, lo, hi):
         """Coarse cell -> ascending ids of the polygons whose bbox, padded by
@@ -769,32 +847,22 @@ class PolygonIndex:
         pos = np.minimum(np.searchsorted(keys, q), len(keys) - 1)
         return np.where(ok & (keys[pos] == q), pos, -1)
 
-    def _pair_edges(self, poly):
-        """The flat (pair, edge) arrays for pairs with polygons `poly`, in
-        chunks of about _EDGE_CHUNK edges: (lo, hi, n, starts, e) gives the
-        chunk's pairs lo..hi, their edge counts, their segment starts within
-        the chunk and the pooled edge ids."""
-        ne = self._nedges[poly]
-        for lo, hi in _chunks(ne, _EDGE_CHUNK):
-            n = ne[lo:hi]
-            starts = np.cumsum(n) - n
-            e = np.arange(int(starts[-1] + n[-1])) + np.repeat(self._estart[poly[lo:hi]] - starts, n)
-            yield lo, hi, n, starts, e
-
-    def _parity(self, px, py, pt, poly):
-        """Even-odd containment of point pt[i] in polygon poly[i]: the
-        crossing test of points_in_ring over flat (pair, edge) arrays."""
+    def _parity(self, px, py, pt, pair):
+        """Even-odd containment of point pt[i] in the polygon of partial pair
+        pair[i]: the pair's base bit XOR the crossings of its listed edges,
+        by the crossing test of points_in_ring over flat (pair, edge)
+        arrays."""
         out = np.empty(len(pt), dtype=bool)
-        for lo, hi, n, starts, e in self._pair_edges(poly):
+        start = self._part_edge_off[pair]
+        for lo, hi, n, starts, pos in _runs(start, self._part_edge_off[pair + 1] - start):
+            x0, y0, x1, y1 = np.take(self._edges, self._part_edge[pos], axis=0).T
             x = np.repeat(px[pt[lo:hi]], n)
             y = np.repeat(py[pt[lo:hi]], n)
-            x0, y0 = self._ex0[e], self._ey0[e]
-            x1, y1 = self._ex1[e], self._ey1[e]
             cond = (y0 > y) != (y1 > y)
             with np.errstate(divide="ignore", invalid="ignore"):
                 xi = x0 + (y - y0) * (x1 - x0) / (y1 - y0)
             crossings = (cond & (x < xi)).view(np.uint8)
-            out[lo:hi] = np.add.reduceat(crossings, starts) & 1
+            out[lo:hi] = (np.add.reduceat(crossings, starts) ^ self._part_base[pair[lo:hi]]) & 1
         return out
 
     def get_containing(self, px: np.ndarray, py: np.ndarray):
@@ -802,17 +870,18 @@ class PolygonIndex:
         ordered by (point, polygon)."""
         px = np.asarray(px, dtype=np.float64)
         py = np.asarray(py, dtype=np.float64)
-        npoly = np.int64(max(len(self.polys), 1))
+        npoly = np.int64(max(len(self.bboxes), 1))
         out = [np.empty(0, dtype=np.int64)]
         for lo in range(0, len(px), _BLOCK):
             bx, by = px[lo:lo + _BLOCK], py[lo:lo + _BLOCK]
             slot = self._slots(self._keys, *_cell_keys(self._fine, bx, by))
             pts = np.flatnonzero(slot >= 0)
             slot = slot[pts]
-            fpt, fpoly = _expand(pts, slot, self._full_off, self._full_poly)
-            ppt, ppoly = _expand(pts, slot, self._part_off, self._part_poly)
-            keep = self._parity(bx, by, ppt, ppoly)
-            key = np.concatenate([fpt * npoly + fpoly, ppt[keep] * npoly + ppoly[keep]])
+            fpt, fpos = _expand(pts, slot, self._full_off)
+            ppt, ppos = _expand(pts, slot, self._part_off)
+            keep = self._parity(bx, by, ppt, ppos)
+            key = np.concatenate([fpt * npoly + self._full_poly[fpos],
+                                  ppt[keep] * npoly + self._part_poly[ppos[keep]]])
             key.sort(kind="stable")
             out.append(key + lo * npoly)
         key = np.concatenate(out)
@@ -830,100 +899,71 @@ class PolygonIndex:
         contained = np.zeros(len(px), dtype=bool)
         contained[pt] = True
         miss = np.flatnonzero(~contained & np.isfinite(px) & np.isfinite(py))
-        if within <= self.cell:
-            fb_i, fb_poly = self._nearest_narrow(px[miss], py[miss], within)
-        else:
-            fb_i, fb_poly = self._nearest_wide(px[miss], py[miss], within)
+        fb_i, fb_poly = self._nearest(px[miss], py[miss], within)
         fb_pt = miss[fb_i]
         return (np.concatenate([pt, fb_pt]),
                 np.concatenate([poly, fb_poly]),
                 np.concatenate([np.zeros(len(pt), dtype=bool), np.ones(len(fb_pt), dtype=bool)]))
 
-    def _nearest_narrow(self, mx, my, within):
-        """Nearest polygon within `within` <= cell: (miss, candidate) pairs
-        from the padded coarse cell, in chunks of about _EDGE_CHUNK pairs,
-        minus pairs whose bbox is farther than `within` (they can never
-        win), then one flat distance pass with a minimum.reduceat per pair."""
-        slot = self._slots(self._pad_keys, *_cell_keys(self._pad, mx, my))
-        pts = np.flatnonzero(slot >= 0)
-        slot = slot[pts]
+    def _nearest(self, mx, my, within):
+        """Nearest polygon within `within` of each (finite) miss: the pad
+        cells within `reach` cells of the miss's own give (miss, candidate)
+        pairs; pairs listed twice count once, and pairs whose bbox, dilated
+        by `within` plus the margin, misses the point go (they can never
+        win). Then one flat distance pass with a minimum.reduceat per pair,
+        in chunks of misses that list about _EDGE_CHUNK candidates.
+
+        The pad lists reach one cell `c` past each bbox, so a polygon within
+        `within` of a point is listed in some cell at most
+        ceil(within / c) - 1 cells from the point's own (plus the margin);
+        for `within` <= `c`, in its own."""
+        ox, oy, c, nx, ny = self._pad
+        reach = max(np.ceil(within / c) - 1, 0.0)  # a float: `within` may be inf
+        fx, fy = np.floor((mx - ox) / c), np.floor((my - oy) / c)
+        cx0 = np.clip(fx - reach, 0, nx).astype(np.int64)
+        cx1 = np.clip(fx + reach + 1, 0, nx).astype(np.int64)
+        cy0 = np.clip(fy - reach, 0, ny).astype(np.int64)
+        cy1 = np.clip(fy + reach + 1, 0, ny).astype(np.int64)
+        # each miss's rows of the window, then the occupied cells of each row
+        # as one run of slots in the sorted keys
+        pts, k = _segments(np.where(cx1 > cx0, cy1 - cy0, 0))
+        rowkey = (cy0[pts] + k) * nx
+        a = np.searchsorted(self._pad_keys, rowkey + cx0[pts])
+        b = np.searchsorted(self._pad_keys, rowkey + cx1[pts])
+        seg, k = _segments(b - a)
+        pts, slot = pts[seg], a[seg] + k
+        listed = np.bincount(pts, weights=self._pad_off[slot + 1] - self._pad_off[slot],
+                             minlength=len(mx))
+        npoly = np.int64(len(self.bboxes))
+        box = self.bboxes + np.array([-1.0, -1.0, 1.0, 1.0]) * (within + self._m)
         out_i, out_poly = [np.empty(0, dtype=np.int64)], [np.empty(0, dtype=np.int64)]
-        for lo, hi in _chunks(self._pad_off[slot + 1] - self._pad_off[slot], _EDGE_CHUNK):
-            pi, cand = _expand(pts[lo:hi], slot[lo:hi], self._pad_off, self._pad_poly)
+        for lo, hi in _chunks(listed, _EDGE_CHUNK):
+            a, b = np.searchsorted(pts, [lo, hi])
+            pi, pos = _expand(pts[a:b], slot[a:b], self._pad_off)
+            cand = self._pad_poly[pos]
             x, y = mx[pi], my[pi]
-            bb = self.bboxes
-            gx = np.maximum(np.maximum(bb[cand, 0] - x, x - bb[cand, 2]), 0.0)
-            gy = np.maximum(np.maximum(bb[cand, 1] - y, y - bb[cand, 3]), 0.0)
-            near = np.flatnonzero(gx * gx + gy * gy <= (within + self._m) ** 2)
-            if not len(near):
+            x0, y0, x1, y1 = np.take(box, cand, axis=0).T
+            near = (x0 <= x) & (x <= x1) & (y0 <= y) & (y <= y1)
+            # sorted unique codes: point-major, ascending polygon ids
+            pi, cand = np.divmod(np.unique(pi[near] * npoly + cand[near]), npoly)
+            if not len(pi):
                 continue
-            pi, cand = pi[near], cand[near]
             d = np.empty(len(pi))
-            for elo, ehi, n, starts, e in self._pair_edges(cand):
-                d2 = point_segment_dist_sq(np.repeat(mx[pi[elo:ehi]], n), np.repeat(my[pi[elo:ehi]], n),
-                                           self._ex0[e], self._ey0[e], self._ex1[e], self._ey1[e])
+            for elo, ehi, n, starts, pos in _runs(self._estart[cand], self._nedges[cand]):
+                x0, y0, x1, y1 = np.take(self._edges, pos, axis=0).T
+                d2 = point_segment_dist_sq(np.repeat(mx[pi[elo:ehi]], n),
+                                           np.repeat(my[pi[elo:ehi]], n), x0, y0, x1, y1)
                 d[elo:ehi] = np.sqrt(np.minimum.reduceat(d2, starts))
-            # pairs run point-major with ascending polygon ids: per point, the
-            # first pair at the minimum distance is the lowest-id nearest polygon
-            run = np.flatnonzero(np.r_[True, pi[1:] != pi[:-1]])
+            # per point, the first pair at the minimum distance is the
+            # lowest-id nearest polygon
+            run = _starts(pi)
             best = np.repeat(np.minimum.reduceat(d, run), np.diff(np.r_[run, len(d)]))
             w = np.flatnonzero(d == best)
-            w = w[np.r_[True, pi[w[1:]] != pi[w[:-1]]]]
+            w = w[_starts(pi[w])]
             w = w[d[w] <= within]
             out_i.append(pi[w])
-            out_poly.append(cand[w].astype(np.int64))
+            out_poly.append(cand[w])
         return np.concatenate(out_i), np.concatenate(out_poly)
-
-    def _nearest_wide(self, mx, my, within):
-        """Nearest polygon within `within` > cell: polygon-major scan over the
-        points whose cells meet each polygon's bbox padded by `within`."""
-        best_d = np.full(len(mx), np.inf)
-        best_i = np.full(len(mx), -1, dtype=np.int64)
-        order, keys_sorted = self._sorted_cells(mx, my)
-        for i in np.flatnonzero(self._nedges):
-            minx, miny, maxx, maxy = self.bboxes[i]
-            cand = self._candidates(order, keys_sorted,
-                                    minx - within, miny - within,
-                                    maxx + within, maxy + within)
-            if len(cand) == 0:
-                continue
-            cx, cy = mx[cand], my[cand]
-            m = ((cx >= minx - within) & (cx <= maxx + within) &
-                 (cy >= miny - within) & (cy <= maxy + within))
-            cand = cand[m]
-            if len(cand) == 0:
-                continue
-            d = dist_to_polygon(mx[cand], my[cand], self.polys[i])
-            upd = d < best_d[cand]
-            best_d[cand] = np.where(upd, d, best_d[cand])
-            best_i[cand] = np.where(upd, i, best_i[cand])
-        ok = np.flatnonzero((best_i >= 0) & (best_d <= within))
-        return ok, best_i[ok]
-
-    def _sorted_cells(self, px, py):
-        """Sort point indices by coarse cell key; return (order, keys_sorted)."""
-        c = self.cell
-        cx = np.floor(px / c).astype(np.int64)
-        cy = np.floor(py / c).astype(np.int64)
-        key = cx * np.int64(1 << 31) + cy
-        order = np.argsort(key, kind="mergesort")
-        return order, key[order]
-
-    def _candidates(self, order, keys_sorted, minx, miny, maxx, maxy):
-        """Point indices whose cell intersects the bbox's covered cell rect."""
-        c = self.cell
-        cx0, cx1 = int(np.floor(minx / c)), int(np.floor(maxx / c))
-        cy0, cy1 = int(np.floor(miny / c)), int(np.floor(maxy / c))
-        parts = []
-        for cx in range(cx0, cx1 + 1):
-            base = np.int64(cx) * np.int64(1 << 31)
-            lo = np.searchsorted(keys_sorted, base + cy0, side="left")
-            hi = np.searchsorted(keys_sorted, base + cy1, side="right")
-            if hi > lo:
-                parts.append(order[lo:hi])
-        if not parts:
-            return np.empty(0, dtype=np.int64)
-        return np.concatenate(parts)
 
 
 # --- Douglas-Peucker simplification (DouglasPeuckerSimplifier.java:33-100) ------

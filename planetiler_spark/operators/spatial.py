@@ -10,7 +10,9 @@ Reference semantics:
     analog of the reference's per-worker shared index. The probe is a
     raster-interval grid (`kernels/geom.py PolygonIndex`): points in a cell
     wholly inside a zone take it with no edge test, and only cells crossed
-    by a zone's boundary run the even-odd crossing test.
+    by a zone's boundary run the even-odd crossing test, over the few
+    edges listed for that (cell, zone) pair. The broadcast carries the
+    pooled edges and lists, not the zones' ring arrays.
   - kNN: geo/PointIndex.java:22-106 — envelope query expanded by radius,
     post-filter by true distance. Here the probe side is billions of rows and
     the target side (zone sites) is broadcastable, so each Arrow batch

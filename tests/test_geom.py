@@ -164,6 +164,7 @@ def test_polygon_index_chunk_edges_match_brute_force(monkeypatch):
     monkeypatch.setattr(g, "_BLOCK", 97)
     monkeypatch.setattr(g, "_EDGE_CHUNK", 7)
     test_polygon_index_matches_brute_force(1.0)
+    test_polygon_index_edge_lists_match_brute_force(21)
 
 
 def test_polygon_index_wide_fallback_matches_brute_force():
@@ -171,10 +172,11 @@ def test_polygon_index_wide_fallback_matches_brute_force():
     polys.append(polys[5])
     idx = g.PolygonIndex(ids=list(range(len(polys))), polys=polys)
     px, py = probe_points(np.random.default_rng(12), idx, polys, 3000)
-    within = 2.5 * idx.cell  # wider than the grid cell: the polygon-major path
-    want = brute_nearest(px, py, polys, within)
-    assert want[2].sum() > 100
-    assert_same(idx.get_containing_or_nearest(px, py, within), want)
+    for cells in (2.5, 5.0):  # wider than the grid cell: pad cells around each miss
+        within = cells * idx.cell
+        want = brute_nearest(px, py, polys, within)
+        assert want[2].sum() > 100
+        assert_same(idx.get_containing_or_nearest(px, py, within), want)
 
 
 def test_polygon_index_empty_and_single():
@@ -218,6 +220,149 @@ def test_polygon_index_outsized_polygon_coarsens_the_grid():
     assert len(pickle.dumps(idx)) < 16 << 20
     px, py = probe_points(np.random.default_rng(16), idx, polys, 3000)
     assert_same(idx.get_containing(px, py), brute_containing(px, py, polys))
+
+
+def comb(rng, cx, cy, r, teeth, angle=0.0):
+    """A closed ring whose left and right sides zig-zag in `teeth` teeth of
+    random depth, joined by a horizontal top and bottom edge, turned by
+    `angle`. Its long side edges span several fine rows: in the rows they
+    span, the cells along the other side lie wholly left of them (folded
+    into the base bit); in the rows where they end, the edges must be
+    tested; and each side lies wholly left of the other side's cells."""
+    ys = np.linspace(cy - r, cy + r, 2 * teeth + 1)
+    dent = np.where(np.arange(len(ys)) % 2, rng.uniform(0.1, 0.5, len(ys)) * r, 0.0)
+    xy = np.concatenate([np.column_stack([cx + r - dent, ys]),
+                         np.column_stack([cx - r + dent, ys])[::-1]])
+    c, s = np.cos(angle), np.sin(angle)
+    xy = (xy - [cx, cy]) @ np.array([[c, s], [-s, c]]) + [cx, cy]
+    return np.vstack([xy, xy[:1]])
+
+
+def comb_polygons(seed):
+    """Upright and turned combs, some with a comb-shaped hole, among stars."""
+    rng = np.random.default_rng(seed)
+    polys = []
+    for i in range(24):
+        c = rng.uniform(0, 4, 2)
+        r = rng.uniform(0.5, 1.0)
+        angle = 0.0 if i % 3 == 0 else rng.uniform(0, np.pi)
+        rings = [comb(rng, c[0], c[1], r, int(rng.integers(1, 4)), angle)]
+        if i % 4 == 1:
+            rings.append(comb(rng, c[0], c[1], 0.4 * r, 2, angle))
+        polys.append(rings)
+    return polys + random_polygons(seed + 1, 8, 1.0)
+
+
+def near_edge_points(polys, m):
+    """Points off each edge's midpoint, across the edge, by fractions and
+    multiples of the margin `m`."""
+    rings = [r for rs in polys for r in rs]
+    a = np.concatenate([r[:-1] for r in rings])
+    b = np.concatenate([r[1:] for r in rings])
+    d = b - a
+    normal = np.column_stack([-d[:, 1], d[:, 0]]) / np.maximum(np.hypot(*d.T), 1e-300)[:, None]
+    xy = np.concatenate([(a + b) / 2 + f * m * normal for f in (-2, -1, -0.5, 0.5, 1, 2)])
+    return xy[:, 0], xy[:, 1]
+
+
+@pytest.mark.parametrize("seed", [21, 22])
+def test_polygon_index_edge_lists_match_brute_force(seed):
+    polys = comb_polygons(seed)
+    idx = g.PolygonIndex(ids=list(range(len(polys))), polys=polys)
+    assert idx._part_base.any()  # some partial pairs fold edges into the bit
+    px, py = probe_points(np.random.default_rng(seed), idx, polys, 20000)
+    qx, qy = near_edge_points(polys, idx._m)
+    px, py = np.concatenate([px, qx]), np.concatenate([py, qy])
+    assert_same(idx.get_containing(px, py), brute_containing(px, py, polys))
+    within = 0.5 * idx.cell
+    assert_same(idx.get_containing_or_nearest(px, py, within),
+                brute_nearest(px, py, polys, within))
+
+
+def pair_lists(idx):
+    """Each partial pair's (cell column, cell row, polygon) and its edge ids."""
+    nx = idx._fine[3]
+    key = np.repeat(idx._keys, np.diff(idx._part_off))
+    lists = np.split(idx._part_edge, idx._part_edge_off[1:-1])
+    return key % nx, key // nx, idx._part_poly, lists
+
+
+def test_polygon_index_edge_lists_keep_edges_within_the_margin():
+    # interior vertices moved to half a margin beside the fine grid lines,
+    # which leaves every bbox and so the grid as it was: an edge that ends
+    # there comes within the margin of the next cell, and a cell's list
+    # must hold every edge within the margin of it
+    polys = comb_polygons(23)
+    idx0 = g.PolygonIndex(ids=list(range(len(polys))), polys=polys)
+    ox, oy, fc = idx0._fine[:3]
+    m = idx0._m
+    moved = []
+    for rings in polys:
+        lo = np.min([r.min(axis=0) for r in rings], axis=0)
+        hi = np.max([r.max(axis=0) for r in rings], axis=0)
+        out = []
+        for r in rings:
+            r = r.copy()
+            side = np.where(np.arange(len(r)) % 2, 0.5, -0.5) * m
+            snap = np.column_stack([ox + np.round((r[:, 0] - ox) / fc) * fc,
+                                    oy + np.round((r[:, 1] - oy) / fc) * fc]) + side[:, None]
+            ok = ((snap > lo) & (snap < hi) & (r > lo) & (r < hi)).all(axis=1)
+            ok[-1] = ok[0]
+            r[ok] = snap[ok]
+            r[-1] = r[0]
+            out.append(r)
+        moved.append(out)
+    idx = g.PolygonIndex(ids=list(range(len(moved))), polys=moved)
+    assert idx._fine == idx0._fine and idx._m == m
+    gx, gy, poly, lists = pair_lists(idx)
+    assert min(len(e) for e in lists) >= 1
+    x0, y0, x1, y1 = idx._edges.T
+    near = 0
+    for cx, cy, p, listed, base in zip(gx, gy, poly, lists, idx._part_base):
+        e = np.arange(idx._estart[p], idx._estart[p + 1])
+        # each edge's x-range within the row band dilated by 0.9 m
+        ylo, yhi = oy + cy * fc - 0.9 * m, oy + (cy + 1) * fc + 0.9 * m
+        dy = y1[e] - y0[e]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            ta, tb = (ylo - y0[e]) / dy, (yhi - y0[e]) / dy
+        flat = dy == 0
+        t0 = np.where(flat, 0.0, np.clip(np.minimum(ta, tb), 0, 1))
+        t1 = np.where(flat, 1.0, np.clip(np.maximum(ta, tb), 0, 1))
+        inband = np.where(flat, (y0[e] >= ylo) & (y0[e] <= yhi), t1 > t0)
+        xa = x0[e] + t0 * (x1[e] - x0[e])
+        xb = x0[e] + t1 * (x1[e] - x0[e])
+        xlo, xhi = ox + cx * fc - 0.9 * m, ox + (cx + 1) * fc + 0.9 * m
+        within = inband & (np.maximum(xa, xb) >= xlo) & (np.minimum(xa, xb) <= xhi)
+        assert np.isin(e[within], listed).all()
+        # the unlisted edges right of the cell are folded into the base bit:
+        # each spans the dilated band
+        folded = inband & ~np.isin(e, listed) & (np.minimum(xa, xb) > xhi)
+        assert ((np.minimum(y0[e], y1[e]) < ylo) & (np.maximum(y0[e], y1[e]) > yhi))[folded].all()
+        assert base == folded.sum() % 2
+        near += int((within & ((np.maximum(xa, xb) < xlo + m) | (np.minimum(xa, xb) > xhi - m))).sum())
+    assert near > 50  # the moved vertices put edges inside the margin
+
+
+def test_polygon_index_edge_lists_do_less_work():
+    # a count, not a timing: every partial pair lists at least one edge, and
+    # on average under half of its polygon's edges
+    from planetiler_spark.sources import images as src
+    idx = src.zones_index()
+    n = np.diff(idx._part_edge_off)
+    assert len(n) == len(idx._part_poly) and n.min() >= 1
+    assert n.mean() < 0.5 * idx._nedges[idx._part_poly].mean()
+
+
+def test_polygon_index_pickle_drops_polys():
+    import pickle
+    polys = random_polygons(17, 30, 1.0)
+    idx = g.PolygonIndex(ids=list(range(len(polys))), polys=polys)
+    sent = pickle.loads(pickle.dumps(idx))
+    assert not hasattr(sent, "polys") and hasattr(idx, "polys")
+    px, py = probe_points(np.random.default_rng(18), idx, polys, 3000)
+    for within in (0.5 * idx.cell, 3 * idx.cell):
+        assert_same(sent.get_containing_or_nearest(px, py, within),
+                    idx.get_containing_or_nearest(px, py, within))
 
 
 def test_dist_to_polygon():
